@@ -1,150 +1,28 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Benchmark main: times each headline query at SPARK_GRAFT_SF_DIR and
-  * prints ONE JSON line for the driver's BENCH_r{N}.json.
-  *
-  * Each query is forced end-to-end with a noop-format write (count() would
-  * let Catalyst prune the expensive projections away and fake the timing).
+/** Benchmark main: times each [[BenchEntry.all]] entry at
+  * SPARK_GRAFT_SF_DIR and prints ONE JSON line, the BENCH_r{N}.json
+  * record. Probes run against ONE standing index built (untimed) per
+  * scale factor; builds land in a fresh scratch dir per pass.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Sessions.withAdaptiveShuffle(
-      Sessions.withCodegenDefaults(SparkSession.builder())
-        .master(s"local[$cpus]"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    def noopWrite(df: org.apache.spark.sql.DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
-
-    // ---- bench entry list: catalog headlines, with the two serving-path
-    // entries SPLIT into build vs probe. Fused, a 2.5 s number can hide a
-    // 10x probe-latency regression behind build noise; split, the probe —
-    // the metric a standing index actually serves — regresses observably.
-    // Probes run against ONE standing index built (untimed) per scale
-    // factor; builds land in a fresh temp dir per pass, like the catalog.
-    case class E(name: String, run: (SparkSession, String) => Unit,
-        afterPass: () => Unit = () => (),
-        frame: Option[(SparkSession, String) => org.apache.spark.sql.DataFrame] = None)
-    val servingSplit = Set(
-      "q84_text_index_search", "q65b_ann_index_dedup_pq", "q106_dsir_importance")
-    // ONE builders map feeds the standing-index getters AND the untimed
-    // pre-build loop below (BenchProbe's indexBuilders discipline): a
-    // fifth standing index added here is pre-built automatically — it
-    // cannot be silently omitted from the pre-build line and re-time its
-    // build inside pass 1
-    val indexBuilders: Map[String, (SparkSession, String) => String] = Map(
-      "text" -> ((s, d) => Queries.buildTextIndexBatches(s, d)),
-      "ann" -> ((s, d) => Queries.buildAnnPqIndex(s, d)),
-      "annauto" -> ((s, d) => Queries.buildAnnPqAutoIndex(s, d)),
-      "annimi" -> ((s, d) => Queries.buildAnnPqImiIndex(s, d)),
-      "annbulk" -> ((s, d) => Queries.buildAnnBulkIndex(s, d)),
-      "dsir" -> ((s, d) => Queries.buildDsirModels(s, d)))
-    val standingIdx = scala.collection.mutable.Map.empty[(String, String), String]
-    def idxFor(kind: String, dir: String): String =
-      standingIdx.getOrElseUpdate((kind, dir), indexBuilders(kind)(spark, dir))
-    def textIdxFor(dir: String): String = idxFor("text", dir)
-    def annIdxFor(dir: String): String = idxFor("ann", dir)
-    def annAutoIdxFor(dir: String): String = idxFor("annauto", dir)
-    def annImiIdxFor(dir: String): String = idxFor("annimi", dir)
-    def annBulkIdxFor(dir: String): String = idxFor("annbulk", dir)
-    def modelsFor(dir: String): String = idxFor("dsir", dir)
-    // Build-entry scratch indexes are deleted AFTER each timing sample
-    // (cleanup excluded from build time): 3 cold + 3 warm passes per SF
-    // previously left 8+ full index copies in java.io.tmpdir, enough to
-    // exhaust tmp space at larger SFs. The STANDING probe indexes above
-    // are never registered here and survive the whole run by design.
-    val scratch = scala.collection.mutable.ListBuffer.empty[String]
-    def rmrf(root: String): Unit = {
-      import java.nio.file.{Files, Paths}
-      val p = Paths.get(root)
-      if (Files.exists(p)) {
-        // Files.walk holds a directory stream open until closed — an
-        // unclosed walk leaks one fd per cleanup for the JVM's life
-        val walk = Files.walk(p)
-        try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-          .forEach(f => Files.deleteIfExists(f))
-        finally walk.close()
-      }
-    }
-    def dropScratch(): Unit = { scratch.foreach(rmrf); scratch.clear() }
-    val entries: Seq[E] =
-      Queries.headlines.filterNot(q => servingSplit(q.name))
-        .map(q => E(q.name, (s, d) => noopWrite(q.fn(s, d)),
-          frame = Some((s, d) => q.fn(s, d)))) ++ Seq(
-        E("q84_build", (s, d) => { scratch += Queries.buildTextIndexBatches(s, d); () },
-          dropScratch _),
-        E("q84_probe", (s, d) => noopWrite(Queries.textIndexProbe(s, textIdxFor(d))),
-          frame = Some((s, d) => Queries.textIndexProbe(s, textIdxFor(d)))),
-        E("q65b_build", (s, d) => { scratch += Queries.buildAnnPqIndex(s, d); () },
-          dropScratch _),
-        E("q65b_probe", (s, d) => noopWrite(Queries.annPqProbe(s, d, annIdxFor(d))),
-          frame = Some((s, d) => Queries.annPqProbe(s, d, annIdxFor(d)))),
-        // round 15: the same serving workload at buildPqAuto's corpus-
-        // scaled geometry — the production default path gets its own
-        // regression guard; q65b_* keeps the pinned nlist = 16 for
-        // cross-round comparability
-        E("q65b_auto_build", (s, d) => { scratch += Queries.buildAnnPqAutoIndex(s, d); () },
-          dropScratch _),
-        E("q65b_auto_probe", (s, d) => noopWrite(Queries.annPqAutoProbe(s, d, annAutoIdxFor(d))),
-          frame = Some((s, d) => Queries.annPqAutoProbe(s, d, annAutoIdxFor(d)))),
-        // round 16: the same workload with the coarse router on the
-        // two-level product grid — the IMI quantizer's constant factor
-        // gets its own guard next to the flat-auto baseline it replaces
-        // at production cell counts (the probe helper is shared, so the
-        // entries differ ONLY in the quantizer)
-        E("q65b_imi_build", (s, d) => { scratch += Queries.buildAnnPqImiIndex(s, d); () },
-          dropScratch _),
-        E("q65b_imi_probe", (s, d) => noopWrite(Queries.annPqAutoProbe(s, d, annImiIdxFor(d))),
-          frame = Some((s, d) => Queries.annPqAutoProbe(s, d, annImiIdxFor(d)))),
-        // round 18 (VERDICT r17 item 4): the q65k-shaped BULK serving
-        // pair — the probes side SHUFFLES by cell instead of
-        // broadcasting, the shape that removes the batch-size broadcast
-        // ceiling. Standing next to the broadcast-shape probes above so
-        // the shuffle shape gets the same cross-round min_cold audit.
-        E("q65k_bulk_build", (s, d) => { scratch += Queries.buildAnnBulkIndex(s, d); () },
-          dropScratch _),
-        E("q65k_bulk_probe", (s, d) => noopWrite(Queries.annBulkProbe(s, d, annBulkIdxFor(d))),
-          frame = Some((s, d) => Queries.annBulkProbe(s, d, annBulkIdxFor(d)))),
-        E("q106_build", (s, d) => { scratch += Queries.buildDsirModels(s, d); () },
-          dropScratch _),
-        E("q106_probe", (s, d) => noopWrite(Queries.dsirScore(s, d, modelsFor(d))),
-          frame = Some((s, d) => Queries.dsirScore(s, d, modelsFor(d)))),
-        // codec-bound workload class (round 13): full-corpus PNG encode →
-        // real decode → dHash → banded near-dup pairs — none of the
-        // relational headlines exercise a media decode path
-        E("q123_media_near_dup", (s, d) => noopWrite(Queries.mediaNearDupFull(s, d)),
-          frame = Some((s, d) => Queries.mediaNearDupFull(s, d))))
-
-    // Drop operator-pinned prep tables and everything else in the cache
-    // manager: leftover storage memory from a previous query (the dedup
-    // sketch tables especially) pressures execution memory and skews later
-    // timings. blocking = true — async eviction would overlap the next
-    // timed pass, which is the exact interference being eliminated.
-    def clear(): Unit = {
-      graft.operators.Caches.release(blocking = true)
-      spark.catalog.clearCache()
-    }
+    val spark = Sessions.local("graft-bench")
+    val bench = new BenchRun(spark)
+    val entries = BenchEntry.all
 
     // JVM/codegen warmup on the smallest scale factor (also builds the
     // sf0.001 standing indexes, so the bench-SF standing-index build below
     // runs with a warmed JVM).
     entries.foreach { e =>
-      try e.run(spark, "/root/testdata/sf0.001")
+      try bench.warmUp(e)
       catch { case _: Throwable => () }
-      e.afterPass()
     }
     // standing indexes for the probe entries, built once at the bench SF
     // OUTSIDE any timed pass
-    indexBuilders.keys.foreach(idxFor(_, sfDir))
-    clear()
+    BenchEntry.standingIndexes.foreach(bench.standingPath(_, sfDir))
+    bench.clearCaches()
 
     // Three timed passes per query, cold cache each, MEDIAN of the three: a
     // single pass conflates the query with GC/scheduling noise (the round-2
@@ -156,9 +34,9 @@ object Bench {
     // median) separate steady-state query cost from first-touch overhead
     // (scan/codegen/JIT): a cold-warm gap with a small warm number means
     // fixed overhead, not a plan problem — the round-3 q30 question.
-    def timed(e: E): Double = {
+    def timed(e: BenchEntry): Double = {
       val t0 = System.nanoTime()
-      try e.run(spark, sfDir)
+      try bench.run(e, sfDir)
       catch { case ex: Throwable => System.err.println(s"[bench] ${e.name}: ${ex.getMessage}") }
       (System.nanoTime() - t0) / 1e9
     }
@@ -168,8 +46,8 @@ object Bench {
       def warm: Double = median(warmPasses)
     }
     val results = entries.map { e =>
-      val passes = (1 to 3).map { _ => clear(); val t = timed(e); e.afterPass(); t }
-      val warmPasses = (1 to 3).map { _ => val t = timed(e); e.afterPass(); t }
+      val passes = (1 to 3).map { _ => bench.clearCaches(); val t = timed(e); bench.dropScratch(); t }
+      val warmPasses = (1 to 3).map { _ => val t = timed(e); bench.dropScratch(); t }
       R(e.name, passes, warmPasses)
     }
     def json(f: R => Double) =
@@ -195,16 +73,14 @@ object Bench {
     // rounds whose plans are gone by the time the result frame exists.
     def sumKnown(xs: Seq[Long]): Long = if (xs.contains(-1L)) -1L else xs.sum
     val scanIoJson = entries.flatMap { e =>
-      e.frame.map { f =>
-        clear()
-        val df = f(spark, sfDir)
+      bench.clearCaches()
+      bench.frame(e, sfDir).map { df =>
         // execute the frame's OWN QueryExecution (a noop write plans a new
         // one, leaving these scan metrics at zero); toRdd keeps it
         // distributed — nothing deserializes to the driver
         try df.queryExecution.toRdd.foreach(_ => ())
         catch { case ex: Throwable => System.err.println(s"[bench] scan_io ${e.name}: ${ex.getMessage}") }
         val scans = graft.operators.Metrics.scanReport(df)
-        e.afterPass()
         "\"" + e.name + "\":{\"scans\":" + scans.size +
           ",\"files\":" + sumKnown(scans.map(_.filesRead)) +
           ",\"bytes\":" + sumKnown(scans.map(_.bytesRead)) +

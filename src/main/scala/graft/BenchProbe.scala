@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 
 /** Single-query bench prober — the attribution tool the round-11 verdict
@@ -8,7 +7,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
   * (q05: 0.36 s → 1.21 s between r10 and r11).
   *
   * Replicates Bench.scala's exact session + cache discipline for ONE
-  * catalog query, then reports what the headline number cannot: per-pass
+  * entry, then reports what the headline number cannot: per-pass
   * wall time, per-stage executor-side task time (a SparkListener sums
   * stage task metrics — the split between "the plan costs this" and "the
   * driver/codegen/JVM costs this"), the executed-IO scan report
@@ -17,15 +16,11 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
   * query names whose containment relationship makes a timing impossible
   * (q05 inside q06) — and diff the output.
   *
-  * Usage: runMain graft.BenchProbe <queryName> [passes=5] [sfDir]
+  * Usage: runMain graft.BenchProbe <name> [passes=5] [sfDir]
   *
-  * Besides catalog names, the bench-only SPLIT entries resolve too
-  * (q84_probe / q65b_probe / q65b_auto_probe / q65b_imi_probe /
-  * q106_probe / q84_build / q65b_build / q65b_auto_build /
-  * q65b_imi_build / q106_build / q123_media_near_dup) —
-  * round 14 hit a q84_probe blip the prober could not then attribute.
-  * Probe entries run against one standing index built untimed before
-  * the passes, exactly like Bench.
+  * `name` is any [[BenchEntry.all]] entry or catalog query; an unknown
+  * name prints the registry's names. Probe entries run against one
+  * standing index built untimed before the passes, exactly like Bench.
   */
 object BenchProbe {
   def main(args: Array[String]): Unit = {
@@ -33,91 +28,13 @@ object BenchProbe {
     val passes = args.lift(1).map(_.toInt).getOrElse(5)
     val sfDir = args.lift(2).orElse(sys.env.get("SPARK_GRAFT_SF_DIR"))
       .getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Sessions.withAdaptiveShuffle(
-      Sessions.withCodegenDefaults(SparkSession.builder())
-        .master(s"local[$cpus]"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    // bench-only split entries: (build fn per sfDir) or (probe fn against a
-    // standing index built once, untimed — the Bench discipline)
-    val standing = scala.collection.mutable.Map.empty[(String, String), String]
-    def idx(kind: String, dir: String, build: => String): String =
-      standing.getOrElseUpdate((kind, dir), build)
-    // ONE source of truth for probe entries' standing indexes: the probe
-    // composition in `split` and the untimed pre-build both resolve
-    // through `standingFor`, and `prebuild` is DERIVED from this map —
-    // a future probe entry added here gets its pre-build for free, and
-    // one added to `split` without a row here fails loudly at
-    // standingFor instead of silently re-timing the index build inside
-    // pass 1 (the round-15 advice bug class, closed structurally).
-    val indexBuilders: Map[String, (String, (SparkSession, String) => String)] = Map(
-      "q84_probe" -> (("text", (s, d) => Queries.buildTextIndexBatches(s, d))),
-      "q65b_probe" -> (("ann", (s, d) => Queries.buildAnnPqIndex(s, d))),
-      "q65b_auto_probe" -> (("annauto", (s, d) => Queries.buildAnnPqAutoIndex(s, d))),
-      "q65b_imi_probe" -> (("annimi", (s, d) => Queries.buildAnnPqImiIndex(s, d))),
-      "q65k_bulk_probe" -> (("annbulk", (s, d) => Queries.buildAnnBulkIndex(s, d))),
-      "q106_probe" -> (("dsir", (s, d) => Queries.buildDsirModels(s, d))))
-    def standingFor(entry: String, s: SparkSession, d: String): String = {
-      val (kind, build) = indexBuilders.getOrElse(entry, sys.error(
-        s"probe entry $entry has no indexBuilders row — wire its standing index there"))
-      idx(kind, d, build(s, d))
-    }
-    val split: Map[String, (SparkSession, String) => org.apache.spark.sql.DataFrame] = Map(
-      "q84_probe" -> ((s, d) => Queries.textIndexProbe(s, standingFor("q84_probe", s, d))),
-      "q65b_probe" -> ((s, d) => Queries.annPqProbe(s, d, standingFor("q65b_probe", s, d))),
-      "q65b_auto_probe" -> ((s, d) => Queries.annPqAutoProbe(s, d, standingFor("q65b_auto_probe", s, d))),
-      "q65b_imi_probe" -> ((s, d) => Queries.annPqAutoProbe(s, d, standingFor("q65b_imi_probe", s, d))),
-      "q65k_bulk_probe" -> ((s, d) => Queries.annBulkProbe(s, d, standingFor("q65k_bulk_probe", s, d))),
-      "q106_probe" -> ((s, d) => Queries.dsirScore(s, d, standingFor("q106_probe", s, d))),
-      "q123_media_near_dup" -> ((s, d) => Queries.mediaNearDupFull(s, d)))
-    // invoked UNTIMED against the real sfDir before the pass loop, so pass 1
-    // never pays the index build inside its wall/stage window (the warmup
-    // only populates the sf0.001 slot)
-    val prebuild: Map[String, (SparkSession, String) => Unit] =
-      indexBuilders.map { case (entry, _) =>
-        entry -> ((s: SparkSession, d: String) => { standingFor(entry, s, d); () })
-      }
-    // build entries dispatch THROUGH this map (no second name match with
-    // a silent default — an entry registered here but mismatched there
-    // used to time buildDsirModels under the new entry's name)
-    val buildOnly: Map[String, (SparkSession, String) => String] = Map(
-      "q84_build" -> ((s, d) => Queries.buildTextIndexBatches(s, d)),
-      "q65b_build" -> ((s, d) => Queries.buildAnnPqIndex(s, d)),
-      "q65b_auto_build" -> ((s, d) => Queries.buildAnnPqAutoIndex(s, d)),
-      "q65b_imi_build" -> ((s, d) => Queries.buildAnnPqImiIndex(s, d)),
-      "q65k_bulk_build" -> ((s, d) => Queries.buildAnnBulkIndex(s, d)),
-      "q106_build" -> ((s, d) => Queries.buildDsirModels(s, d)))
-
-    val fn: (SparkSession, String) => org.apache.spark.sql.DataFrame =
-      Queries.all.find(_.name == name).map(_.fn)
-        .orElse(split.get(name))
-        .getOrElse {
-          if (buildOnly.contains(name)) {
-            // builds return paths, not frames: time them via a 1-row frame
-            // carrying the built path so the pass/report machinery is
-            // shared. Scratch builds must not accrete across passes
-            // (Bench's rule) — the previous pass's index is deleted at the
-            // start of the next build (ms-scale local deletes against a
-            // seconds-scale build; a probe tolerates that noise).
-            var prev: Option[String] = None
-            (s: SparkSession, d: String) => {
-              prev.foreach { p =>
-                val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(p))
-                try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-                  .forEach(f => java.nio.file.Files.deleteIfExists(f))
-                finally walk.close()
-              }
-              val path = buildOnly(name)(s, d)
-              prev = Some(path)
-              s.range(1).selectExpr(s"'$path' AS built_index")
-            }
-          } else sys.error(s"unknown query: $name (catalog + bench-split names accepted)")
-        }
+    val entry = BenchEntry.all.find(_.name == name)
+      .orElse(Queries.all.find(_.name == name).map(q => BenchEntry.Frame(q.name, q.fn)))
+      .getOrElse(sys.error(s"unknown entry: $name (any catalog query, or one of " +
+        s"${BenchEntry.all.map(_.name).mkString(", ")})"))
+    val cpus = Sessions.cpus
+    val spark = Sessions.local("graft-benchprobe")
+    val bench = new BenchRun(spark)
 
     // stage-level executor attribution: task time that actually ran on the
     // pool vs the wall clock the bench reports — a gap between the two is
@@ -137,27 +54,24 @@ object BenchProbe {
       }
     })
 
-    def noopWrite(df: org.apache.spark.sql.DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
-    def clear(): Unit = {
-      graft.operators.Caches.release(blocking = true)
-      spark.catalog.clearCache()
-    }
-
     // same warmup the bench gives every entry
-    noopWrite(fn(spark, "/root/testdata/sf0.001"))
-    clear()
+    bench.warmUp(entry)
+    bench.clearCaches()
     // Bench discipline for probe entries: the sfDir standing index exists
-    // BEFORE any timed pass (round-15 advice — pass 1 was paying the build)
-    prebuild.get(name).foreach { pb => pb(spark, sfDir); clear() }
+    // BEFORE any timed pass, so pass 1 never pays the index build
+    entry match {
+      case p: BenchEntry.Probe => bench.standingPath(p.index, sfDir); bench.clearCaches()
+      case _ => ()
+    }
 
     println(s"== $name @ $sfDir  (cold passes, cache cleared each) ==")
     val times = (1 to passes).map { i =>
-      clear()
+      bench.clearCaches()
       stageTaskMs.set(0L); stageCount.set(0L); stageLog.clear()
       val t0 = System.nanoTime()
-      noopWrite(fn(spark, sfDir))
+      bench.run(entry, sfDir)
       val wall = (System.nanoTime() - t0) / 1e9
+      bench.dropScratch()
       // listener events drain asynchronously; give them a beat
       Thread.sleep(300)
       println(f"pass $i: wall=$wall%.3f s  stages=${stageCount.get}  executorTaskTime=${stageTaskMs.get / 1000.0}%.3f s (sum across $cpus threads)")
@@ -170,16 +84,20 @@ object BenchProbe {
       println(f"  $ms%7d ms  tasks=$n%4d  $nm")
     }
 
-    val df = fn(spark, sfDir)
-    noopWrite(df)
-    println("\n== scanReport (executed IO) ==")
-    graft.operators.Metrics.scanReport(df).foreach { s =>
-      println(s"  files=${s.filesRead} bytes=${s.bytesRead} rows=${s.rowsOutput} " +
-        s"schema=${s.readSchema} pushed=${s.pushedFilters} paths=${s.rootPaths.mkString(",")}")
+    bench.frame(entry, sfDir) match {
+      case Some(df) =>
+        BenchRun.noopWrite(df)
+        println("\n== scanReport (executed IO) ==")
+        graft.operators.Metrics.scanReport(df).foreach { s =>
+          println(s"  files=${s.filesRead} bytes=${s.bytesRead} rows=${s.rowsOutput} " +
+            s"schema=${s.readSchema} pushed=${s.pushedFilters} paths=${s.rootPaths.mkString(",")}")
+        }
+        println("\n== physical plan ==")
+        println(df.queryExecution.explainString(
+          org.apache.spark.sql.execution.FormattedMode))
+      case None =>
+        println("\n== build entry: writes an index, no single frame to report ==")
     }
-    println("\n== physical plan ==")
-    println(df.queryExecution.explainString(
-      org.apache.spark.sql.execution.FormattedMode))
     spark.stop()
   }
 }

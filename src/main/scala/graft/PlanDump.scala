@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Optimization-round measurement tool: dumps the EXECUTED (AQE-final)
   * `explain("formatted")` plan of every frame-shaped bench entry to
   * `<outDir>/<entry>_<suffix>.txt` — the before/after plan evidence the
@@ -29,57 +27,25 @@ object PlanDump {
     val suffix = args(0)
     val outDir = args(1)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Sessions.withAdaptiveShuffle(
-      Sessions.withCodegenDefaults(SparkSession.builder())
-        .master(s"local[$cpus]"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    val standing = scala.collection.mutable.Map.empty[String, String]
-    def idx(kind: String, build: => String): String =
-      standing.getOrElseUpdate(kind, build)
-
-    val servingSplit = Set(
-      "q84_text_index_search", "q65b_ann_index_dedup_pq", "q106_dsir_importance")
-    val entries: Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)] =
-      Queries.headlines.filterNot(q => servingSplit(q.name)).map(q => (q.name, q.fn)) ++ Seq(
-        ("q84_probe", (s: SparkSession, d: String) =>
-          Queries.textIndexProbe(s, idx("text", Queries.buildTextIndexBatches(s, d)))),
-        ("q65b_probe", (s: SparkSession, d: String) =>
-          Queries.annPqProbe(s, d, idx("ann", Queries.buildAnnPqIndex(s, d)))),
-        ("q65b_auto_probe", (s: SparkSession, d: String) =>
-          Queries.annPqAutoProbe(s, d, idx("annauto", Queries.buildAnnPqAutoIndex(s, d)))),
-        ("q65b_imi_probe", (s: SparkSession, d: String) =>
-          Queries.annPqAutoProbe(s, d, idx("annimi", Queries.buildAnnPqImiIndex(s, d)))),
-        ("q65k_bulk_probe", (s: SparkSession, d: String) =>
-          Queries.annBulkProbe(s, d, idx("annbulk", Queries.buildAnnBulkIndex(s, d)))),
-        ("q106_probe", (s: SparkSession, d: String) =>
-          Queries.dsirScore(s, d, idx("dsir", Queries.buildDsirModels(s, d)))),
-        ("q123_media_near_dup", (s: SparkSession, d: String) =>
-          Queries.mediaNearDupFull(s, d)))
+    val spark = Sessions.local("graft-plandump")
+    val bench = new BenchRun(spark)
 
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     var failed = List.empty[String]
-    entries.foreach { case (name, fn) =>
-      graft.operators.Caches.release(blocking = true)
-      spark.catalog.clearCache()
-      try {
-        val df = fn(spark, sfDir)
+    BenchEntry.all.foreach { e =>
+      bench.clearCaches()
+      try bench.frame(e, sfDir).foreach { df =>
         df.queryExecution.toRdd.foreach(_ => ())
         val plan = df.queryExecution.explainString(
           org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
         java.nio.file.Files.write(
-          java.nio.file.Paths.get(s"$outDir/${name}_$suffix.txt"),
+          java.nio.file.Paths.get(s"$outDir/${e.name}_$suffix.txt"),
           plan.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        println(s"[plandump] wrote $outDir/${name}_$suffix.txt")
+        println(s"[plandump] wrote $outDir/${e.name}_$suffix.txt")
       } catch {
         case ex: Throwable =>
-          failed ::= name
-          System.err.println(s"[plandump] $name FAILED: ${ex.getMessage}")
+          failed ::= e.name
+          System.err.println(s"[plandump] ${e.name} FAILED: ${ex.getMessage}")
       }
     }
     spark.stop()

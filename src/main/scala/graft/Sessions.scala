@@ -2,7 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Central SparkSession factory.
+/** The one SparkSession factory: the CLI session, Bench, BenchProbe,
+  * PlanDump, Verify, MakeScale and the test harness all build through
+  * [[build]], so every entry point runs the same session.
   *
   * Mirrors the session tuning the reference applies in both of its drivers
   * (reference: bronze_to_silver.py:7-18, gold_sql_to_postgres.py:8-17):
@@ -14,12 +16,7 @@ import org.apache.spark.sql.SparkSession
 object Sessions {
   def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
 
-  /** The codegen stability configs EVERY graft entry point (CLI session,
-    * bench, verify dump, test harness) must share — one definition, so a
-    * tuning change cannot leave one entry point silently running a
-    * different cache geometry than the one the bench notes record
-    * (round 11 had to edit four copy-pasted blocks in lockstep; never
-    * again).
+  /** Codegen stability configs.
     *
     * - `useIdInClassName=false`: do NOT embed the per-query
     *   codegenStageId in generated class names (SPARK-23032's debugging
@@ -27,91 +24,72 @@ object Sessions {
     *   runtime stage-completion ORDER, so re-running the same query
     *   produces byte-identical generated code under a NEW class name →
     *   codegen-cache miss → janino recompile + a fresh interpreter→C2
-    *   warmup for every large generated class, every run. For graft's
-    *   biggest plans (the dedup sketch pipeline) that was 2-13 s of JIT
-    *   per invocation and the intermittent 2x "warm slower than cold"
-    *   bench anomaly (rounds 4-6).
+    *   warmup for every large generated class, every run.
     * - `codegen.cache.maxEntries=4000` (static conf — set before the
     *   first session): the default 100-entry cache thrashes for a
     *   long-lived session serving this catalog (Guava's segmented LRU
     *   evicts recently-used entries once near capacity), re-paying
-    *   janino+JIT on queries that ran minutes ago. Raised 1000→4000 in
-    *   round 11: the full-suite class population (~3.5k) churned the
-    *   smaller caches; size this above the distinct generated classes a
-    *   long-lived session will serve.
+    *   janino+JIT on queries that ran minutes ago. Size it above the
+    *   distinct generated classes a long-lived session will serve
+    *   (~3.5k for the full test suite).
     */
-  def withCodegenDefaults(b: SparkSession.Builder): SparkSession.Builder =
-    b.config("spark.sql.codegen.useIdInClassName", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "4000")
+  private val codegenDefaults = Map(
+    "spark.sql.codegen.useIdInClassName" -> "false",
+    "spark.sql.codegen.cache.maxEntries" -> "4000")
 
-  /** Scale-adaptive shuffle partitioning, shared by EVERY graft entry
-    * point (CLI session, Bench, PlanDump, BenchProbe, Verify) — one
-    * definition, like [[withCodegenDefaults]].
+  /** Scale-adaptive shuffle partitioning.
     *
-    * Partition counts must track shuffle BYTES, not a fixed core-count
-    * constant (guide §2.2). AQE's default coalescing already does that —
-    * `parallelismFirst = true` targets max(bytes/parallelism,
-    * minPartitionSize), i.e. byte-sized partitions WITH a parallelism
-    * floor — and the r20 10x-fixture measurement showed why the floor
-    * matters: `parallelismFirst = false` (pure advisory-size coalescing)
-    * collapsed the LSH candidate joins — compute-DENSE per byte — to one
-    * partition and made q25 at 10x ~20% slower, while buying nothing at
-    * sf0.1 that the cache fix below didn't already buy.
+    * Partition counts track shuffle BYTES, not a fixed core-count
+    * constant: AQE coalescing with `parallelismFirst = true` targets
+    * max(bytes/parallelism, minPartitionSize), i.e. byte-sized partitions
+    * WITH a parallelism floor. The floor matters for compute-dense joins
+    * (the LSH candidate joins), which pure advisory-size coalescing
+    * collapses to one partition. `initialPartitionNum` stays at the core
+    * count: a wider map side costs per-stage bucket and AQE bookkeeping
+    * with nothing to amortize it at bench scale.
     *
-    * What was actually broken (and is fixed here):
-    * `canChangeCachedPlanOutputPartitioning` defaults to FALSE, which
-    * suppresses AQE entirely inside CACHED plans — every operator pin
-    * (dedup prep, pagerank edges+ids, probe postings subsets) was
-    * materializing with un-coalesced `shuffle.partitions`-wide exchanges
-    * and every cache read paid that many tasks regardless of bytes. The
-    * r19 8c-faster-than-32c inversion lived exactly there: the pinned
-    * paths (q25/q102/probes, the worst inverters) paid 32 fixed task
-    * overheads per cached exchange at 32 cores and 8 at 8. Letting AQE
-    * coalesce cached plans closed it (final r20 bench: 8c/32c totals at
-    * parity, both below the r19 numbers). No graft operator relies on a
-    * cache's physical partitioning.
+    * `canChangeCachedPlanOutputPartitioning` lets AQE coalesce inside
+    * CACHED plans; without it every operator pin (dedup prep, pagerank
+    * edges+ids, probe postings subsets) materializes and is read back
+    * through un-coalesced `shuffle.partitions`-wide exchanges. No graft
+    * operator relies on a cache's physical partitioning.
     *
-    * All three knobs are env-overridable for cluster deployments
-    * (`SPARK_GRAFT_SHUFFLE_INIT` ~2-3x total cores there;
-    * `SPARK_GRAFT_ADVISORY_PARTITION_BYTES`;
-    * `SPARK_GRAFT_PARALLELISM_FIRST=false` for pure byte-sizing on
-    * I/O-bound pipelines). `spark.sql.shuffle.partitions` stays at
-    * `cpus` as the non-AQE fallback so explicit `repartition(conf)`
-    * call sites keep their parallelism.
+    * `spark.sql.shuffle.partitions` stays at `cpus` as the non-AQE
+    * fallback so explicit `repartition(conf)` call sites keep their
+    * parallelism.
     */
-  def withAdaptiveShuffle(b: SparkSession.Builder): SparkSession.Builder = {
-    // initialPartitionNum stays at the core count by DEFAULT: raising it
-    // to 4x was measured (r20 probes, q114/q102) to cost ~2x executor
-    // time per stage at bench SFs — per-stage map-side bucket and AQE
-    // bookkeeping overhead with nothing to amortize it.
-    val initial = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_INIT", cpus)
-    val advisory = sys.env.getOrElse("SPARK_GRAFT_ADVISORY_PARTITION_BYTES", "67108864")
-    val parFirst = sys.env.getOrElse("SPARK_GRAFT_PARALLELISM_FIRST", "true")
-    b.config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", parFirst)
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", initial)
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", advisory)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-  }
+  private def adaptiveShuffle(cpus: String) = Map(
+    "spark.sql.shuffle.partitions" -> cpus,
+    "spark.sql.adaptive.enabled" -> "true",
+    "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
+    "spark.sql.adaptive.coalescePartitions.parallelismFirst" -> "true",
+    "spark.sql.adaptive.coalescePartitions.initialPartitionNum" -> cpus,
+    "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "67108864",
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" -> "true",
+    "spark.sql.adaptive.skewJoin.enabled" -> "true")
 
-  def local(appName: String = "graft"): SparkSession = {
-    val spark = withAdaptiveShuffle(withCodegenDefaults(SparkSession
-      .builder()
-      .master(s"local[$cpus]")
-      .appName(appName)
-      .withExtensions(new graft.expressions.GraftExtensions))
-      .config("spark.sql.files.maxPartitionBytes", "134217728"))
-      .config("spark.sql.session.timeZone", "UTC")
+  /** Every conf a graft session sets for `cpus` local worker threads. */
+  private[graft] def settings(cpus: String): Map[String, String] =
+    codegenDefaults ++ adaptiveShuffle(cpus) ++ Map(
+      "spark.sql.files.maxPartitionBytes" -> "134217728",
+      "spark.sql.session.timeZone" -> "UTC",
       // The driver's `events` table carries TIMESTAMP(NANOS) parquet values,
       // which Spark 4 rejects outright; read them as raw nanos longs instead
       // (Tables.load derives a micros timestamp column from them).
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
+      "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+      "spark.ui.enabled" -> "false")
+
+  /** A `local[cpus]` session with [[settings]] and GraftExtensions. */
+  def build(cpus: String, app: String): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .appName(app)
+      .withExtensions(new graft.expressions.GraftExtensions)
+      .config(settings(cpus))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
+
+  def local(appName: String = "graft"): SparkSession = build(cpus, appName)
 }

@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types.{BooleanType, DateType, DoubleType, IntegerType, LongType, StringType, StructType}
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
@@ -75,21 +75,10 @@ object Verify {
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // the same adaptive-shuffle tuning every other entry point runs with
-    // (one definition — Sessions), so the oracle gate validates results
-    // under the session the bench and CLI actually use; shuffle.partitions
-    // re-set AFTER it because Verify's own cpus default (4) differs from
-    // Sessions' (32)
-    val spark = Sessions.withAdaptiveShuffle(
-      Sessions.withCodegenDefaults(SparkSession.builder())
-        .master(s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the session every other entry point runs, so the oracle gate
+    // validates results under the session the bench and CLI actually use;
+    // only the default core count (4) is Verify's own
+    val spark = Sessions.build(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"), "graft-verify")
     new java.io.File(outDir).mkdirs()
     // Local-iteration filter: GRAFT_VERIFY_ONLY=q138_x,q139_y dumps (and
     // lists oracle SQL for) just those queries. The driver never sets it.

@@ -167,10 +167,10 @@ object Dedup {
 
   /** Banded candidate self-join over the cold (under-cap) band rows:
     * distinct (id_a < id_b) pairs sharing a (band, bucket). Buckets over
-    * the cap are excluded upstream (see [[candidatesFromSketch]] /
-    * [[lshVerifiedPairs]]) — boilerplate corpora (all-identical docs,
-    * empty strings, templated pages) otherwise put millions of rows in
-    * ONE bucket and a single reducer pays (n choose 2). Callers route the
+    * the cap are excluded upstream (see [[lshVerifiedPairs]]) —
+    * boilerplate corpora (all-identical docs, empty strings, templated
+    * pages) otherwise put millions of rows in ONE bucket and a single
+    * reducer pays (n choose 2). Callers route the
     * over-cap members through the linear identical-content path instead
     * ([[Blocking.keeperStarPairs]]); AQE skew-split cannot help here
     * because it splits input, not the joined output. Only
@@ -185,24 +185,6 @@ object Dedup {
       .distinct()
   }
 
-  /** Attach the minhash agreement fraction to DISTINCT candidate pairs
-    * from the pinned prep table. est_jaccard is a function of the two
-    * sketches alone (band-independent), so joining the sketches back to
-    * the distinct pairs shuffles each sketch at most once per pair side —
-    * the previous shape carried `bands` copies of every 64-long sketch
-    * through the banding self-join's exchanges (§2.3: shuffle fewer
-    * bytes).
-    */
-  private def withEstimates(pairs: DataFrame, prepped: DataFrame, numPerm: Int): DataFrame =
-    pairs
-      .join(prepped.select(col("id").as("id_a"), col("mh").as("mh_a")), Seq("id_a"))
-      .join(prepped.select(col("id").as("id_b"), col("mh").as("mh_b")), Seq("id_b"))
-      .select(
-        col("id_a"),
-        col("id_b"),
-        (size(filter(zip_with(col("mh_a"), col("mh_b"), (x, y) => x === y), m => m))
-          .cast("double") / numPerm).as("est_jaccard"))
-
   /** Cold rows of a banded frame: everything outside the over-cap keys.
     * The hot-key list comes from ONE grouped count with partial map-side
     * aggregation ([[Blocking.hotKeys]]) — replacing the full-frame window
@@ -213,20 +195,6 @@ object Dedup {
   private def coldRows(banded: DataFrame, hotKeys: Option[DataFrame]): DataFrame =
     hotKeys.fold(banded)(hot =>
       banded.join(hot, Seq("band", "bucket"), "left_anti"))
-
-  private def candidatesFromSketch(
-      prepped: DataFrame,
-      numPerm: Int,
-      bands: Int,
-      withEstimate: Boolean,
-      maxBucket: Int): DataFrame = {
-    val banded = bandedBuckets(bandable(prepped), numPerm, bands, carryMh = false)
-    val hot =
-      if (maxBucket == Int.MaxValue) None
-      else Some(Blocking.hotKeys(banded, Seq("band", "bucket"), maxBucket))
-    val pairs = coldCandidatePairs(coldRows(banded, hot))
-    if (withEstimate) withEstimates(pairs, prepped, numPerm) else pairs
-  }
 
   /** LSH S-curve threshold for a band geometry: the Jaccard similarity at
     * which a pair has ~50% candidate probability is t ≈ (1/b)^(1/r) with
@@ -245,29 +213,6 @@ object Dedup {
       .filter(numPerm % _ == 0)
       .find(b => lshThreshold(numPerm, b) <= threshold)
       .getOrElse(numPerm)
-
-  /** Banded LSH candidate pairs: (id_a, id_b, est_jaccard) with id_a < id_b,
-    * distinct. est_jaccard = fraction of matching minhash positions.
-    *
-    * The default `maxBucket = Int.MaxValue` keeps the original full-recall
-    * candidate contract. A finite cap is the opt-in scale knob: buckets
-    * over the cap are EXCLUDED from candidate generation entirely (see
-    * [[candidatesFromSketch]]) — at that point use [[minHashDedupPairs]],
-    * which still reports boilerplate clusters through its linear keeper
-    * path, and [[hotBuckets]] to observe what the cap short-circuits.
-    */
-  def minHashCandidates(
-      df: DataFrame,
-      textCol: String,
-      idCol: String,
-      numPerm: Int = 64,
-      bands: Int = 16,
-      shingleK: Int = 3,
-      maxBucket: Int = Int.MaxValue): DataFrame = {
-    require(numPerm % bands == 0, "numPerm must divide into bands evenly")
-    candidatesFromSketch(prep(df, textCol, idCol, numPerm, shingleK), numPerm, bands,
-      withEstimate = true, maxBucket = maxBucket)
-  }
 
   /** End-to-end MinHash+LSH near-dup detection: candidate generation and
     * exact Jaccard verification share ONE persisted shingle/sketch pass.
@@ -505,25 +450,6 @@ object Dedup {
       .where(col("__rk") > 1)
       .select(col("id").as(idCol))
     docs.join(dropped, Seq(idCol), "left_anti")
-  }
-
-  /** End-to-end near-dup removal keeping the best-scoring member per
-    * group: MinHash pairs → components → [[keepBestByCluster]]. The
-    * score-agnostic twin of [[dedupByClusters]].
-    */
-  def dedupByClustersKeepBest(
-      docs: DataFrame,
-      textCol: String,
-      idCol: String,
-      scoreCol: String,
-      numPerm: Int = 64,
-      bands: Int = 16,
-      threshold: Double = 0.7,
-      shingleK: Int = 3,
-      maxBucket: Int = 256): DataFrame = {
-    val pairs = minHashDedupPairs(
-      docs, textCol, idCol, numPerm, bands, shingleK, threshold, maxBucket)
-    keepBestByCluster(docs, idCol, scoreCol, duplicateClusters(pairs))
   }
 
   /** EXACT all-pairs WEIGHTED Jaccard ≥ threshold over term frequencies —

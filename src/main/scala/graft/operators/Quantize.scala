@@ -76,13 +76,6 @@ object Quantize {
         .otherwise(floor(x.cast("double") * lit(127.0) / m + lit(0.5)))
         .cast("byte"))
 
-  /** Reconstruction `code·amax/127` as array<double> — for consumers
-    * that need vector values (re-ranking against float queries,
-    * centroid training on compressed corpora).
-    */
-  def sq8Decode(codes: Column, amax: Column): Column =
-    transform(codes, c => c.cast("double") * amax / lit(127.0))
-
   /** Top-k by cosine over an SQ8-encoded corpus against the encoded
     * query `queryId`: exact integer dot/norm² over the codes (scales
     * cancel — object doc), the q30c emission (id, dot, norm2), ranked

@@ -87,10 +87,6 @@ object Scd2 {
       .drop(cfg.trackedCols.map(c => s"__prev_$c"): _*)
   }
 
-  /** Reference-faithful SK: non-deterministic partition-encoded bigint. */
-  def withMonotonicSk(dim: DataFrame, skName: String): DataFrame =
-    dim.withColumn(skName, monotonically_increasing_id())
-
   /** Deterministic SK: hash of business key + interval start. No shuffle,
     * no global sort, stable across reruns — the scalable choice.
     */

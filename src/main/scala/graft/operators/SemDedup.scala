@@ -104,22 +104,6 @@ object SemDedup {
       .agg(max("cosine").as("cosine"))
   }
 
-  /** Per-cell occupancy audit — how work distributes across cells, and
-    * which cells took the capped linear path. Same observability contract
-    * as [[Dedup]]'s `bucketStats`: caps must be visible, never silent.
-    */
-  def cellStats(
-      emb: DataFrame,
-      idCol: String,
-      vecCol: String,
-      index: Similarity.IvfIndex): DataFrame = {
-    import org.apache.spark.sql.graft.ColumnBridge
-    val cell = ColumnBridge.column(graft.expressions.NearestCentroidsExpr(
-      ColumnBridge.eagerExpression(col(vecCol)), index.flat, index.dim, 1)).getItem(0)
-    emb.select(cell.as("cell"))
-      .groupBy("cell").agg(count(lit(1)).as("members"))
-  }
-
   /** SemDeDup proper: drop every within-cell near-dup that is not its
     * group's min-id representative; return the KEPT frame with the
     * original columns. Group = connected component of the verified pair

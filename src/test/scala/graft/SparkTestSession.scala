@@ -2,18 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared local session for every suite (sbt forks a single test JVM). */
+/** One shared local session for every suite (sbt forks a single test JVM),
+  * built by the same factory as every shipped entry point.
+  */
 object SparkTestSession {
-  lazy val spark: SparkSession = {
-    val s = graft.Sessions.withCodegenDefaults(SparkSession.builder())
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = graft.Sessions.build("4", "graft-test")
 }
