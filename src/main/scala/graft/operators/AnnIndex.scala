@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.vectors
 import graft.operators.Similarity.IvfIndex
+import graft.sources.BatchTable
 
 /** Persistable IVF embedding index — the production shape of similarity
   * search, and the vector twin of [[DedupIndex]]. [[Similarity.ivfSearch]]
@@ -44,11 +45,10 @@ import graft.operators.Similarity.IvfIndex
   *                         norm: double]) — postings, range-clustered by
   *                         cell; code+norm present iff the index has PQ
   * }}}
-  * Batch partitions are staged under a dot-prefixed directory (invisible
-  * to Spark's file listing) and renamed into place — [[DedupIndex]]'s
-  * protocol, shared via [[DedupIndex.appendDir]]. With a single postings
-  * table the rename itself is the commit marker, so retry loops need no
-  * two-table repair: [[appendIdempotent]] is "skip if the label exists".
+  * Batches commit through [[graft.sources.BatchTable]] with `vectors/`
+  * as the marker and no companion: the rename itself is the commit, so
+  * retry loops need no two-table repair — [[appendIdempotent]] is "skip
+  * if the label exists".
   *
   * Scale notes (100 TB corpus, ~10⁹ vectors):
   *  - postings are written `repartitionByRange(cell)` and sorted within
@@ -103,6 +103,7 @@ object AnnIndex {
   private def vectorsDir(path: String) = s"$path/vectors"
   private def pqDir(path: String) = s"$path/pq"
   private def imiDir(path: String) = s"$path/imi"
+  private def table(spark: SparkSession, path: String) = BatchTable(spark, vectorsDir(path))
 
   private def nearestCells(index: IvfIndex, v: Column, n: Int): Column = {
     import org.apache.spark.sql.graft.ColumnBridge
@@ -277,30 +278,13 @@ object AnnIndex {
   def quantizer(spark: SparkSession, path: String): IvfIndex =
     IvfIndex.load(spark, centroidsDir(path))
 
-  /** Labels of the batches currently in the index, sorted. A directory
-    * listing of `vectors/` — O(batches), never touches data files.
-    */
-  def batches(spark: SparkSession, path: String): Seq[String] = {
-    val dir = new Path(vectorsDir(path))
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dir)) Seq.empty
-    else fs.listStatus(dir).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("batch="))
-      .map(_.getPath.getName.stripPrefix("batch="))
-      .sorted
-  }
+  /** Labels of the committed batches, sorted — a listing of `vectors/`. */
+  def batches(spark: SparkSession, path: String): Seq[String] =
+    table(spark, path).committed
 
-  /** Next zero-padded numeric batch label (`00000001`, …).
-    *
-    * SINGLE-WRITER contract (see [[TextIndex.nextBatchLabel]] for the
-    * full rationale): allocation is read-max-then-increment, so two
-    * concurrent manual writers can draw the same label. The collision
-    * is LOUD and corruption-free — the postings table is the ONLY table
-    * an [[append]] writes, and [[DedupIndex.appendDir]]'s promote
-    * refuses an existing `batch=` directory (AnnIndexSpec pins it) —
-    * but the losing append is lost work. A live stream (`s`-prefixed
-    * labels) plus one manual backfill never collide; two manual writers
-    * must serialize label allocation.
+  /** Next zero-padded numeric batch label (`00000001`, …). SINGLE-WRITER
+    * allocation: see [[graft.sources.BatchTable]] (AnnIndexSpec pins the
+    * loud, corruption-free collision).
     *
     * Label VALUES carry no serving order here (VERDICT r18 item 7):
     * batches union ADDITIVELY — probes read all committed batches and
@@ -310,18 +294,16 @@ object AnnIndex {
     * [[TextIndex.append]], where versionKey RANKS labels and free-form
     * shapes are refused without an opt-in.
     */
-  def nextBatchLabel(spark: SparkSession, path: String): String = {
-    val used = batches(spark, path).flatMap(_.toLongOption)
-    f"${used.foldLeft(0L)(math.max) + 1}%08d"
-  }
+  def nextBatchLabel(spark: SparkSession, path: String): String =
+    table(spark, path).nextLabel
 
   /** Assign `emb`'s vectors to their coarse cell with the index's
     * quantizer and land the result as batch partition `batch` of the
     * postings table. The batch becomes visible to probes atomically
-    * (staging + rename) and is immutable afterwards. Vectors must have
-    * the quantizer's dimension (a shorter vector scores over its prefix —
-    * the expression contract — so mixed-dim corpora belong in separate
-    * indexes). Callers dedup BEFORE appending ([[dedupBatch]] does) — the
+    * (staging + rename) and is immutable afterwards; an existing label is
+    * refused. Vectors must have the quantizer's dimension (a shorter
+    * vector scores over its prefix — the expression contract — so
+    * mixed-dim corpora belong in separate indexes). Callers dedup BEFORE appending ([[dedupBatch]] does) — the
     * index stores what the pipeline accepted, it does not re-judge it.
     */
   def append(
@@ -329,9 +311,10 @@ object AnnIndex {
       idCol: String,
       vecCol: String,
       path: String,
-      batch: String): Unit = {
-    require(batch.nonEmpty && !batch.contains('/') && !batch.startsWith("."),
-      s"invalid batch label '$batch'")
+      batch: String): Unit =
+    table(emb.sparkSession, path).commit(batch, postings(emb, idCol, vecCol, path))
+
+  private def postings(emb: DataFrame, idCol: String, vecCol: String, path: String): DataFrame = {
     val spark = emb.sparkSession
     val index = coarse(spark, path)
     val base = emb.select(
@@ -347,11 +330,9 @@ object AnnIndex {
           pqEncode(cb, col("vec")).as("code"),
           vectors.norm(col("vec")).as("norm"))
       } else base
-    DedupIndex.appendDir(
-      rows
-        .repartitionByRange(col("cell"))
-        .sortWithinPartitions("cell", "id"),
-      vectorsDir(path), batch)
+    rows
+      .repartitionByRange(col("cell"))
+      .sortWithinPartitions("cell", "id")
   }
 
   /** Retry-safe [[append]] for exactly-once ingestion loops (streaming
@@ -365,8 +346,7 @@ object AnnIndex {
       vecCol: String,
       path: String,
       batch: String): Unit =
-    if (!batches(emb.sparkSession, path).contains(batch))
-      append(emb, idCol, vecCol, path, batch)
+    table(emb.sparkSession, path).commitOnce(batch, postings(emb, idCol, vecCol, path))
 
   /** Train + [[init]] + [[append]] the first batch in one call. */
   def build(
@@ -612,20 +592,12 @@ object AnnIndex {
     * file-not-found — retry it. Do NOT run concurrently with [[append]]
     * or another compact.
     */
-  def compact(spark: SparkSession, path: String): String = {
-    val old = batches(spark, path)
-    require(old.nonEmpty, s"nothing to compact at $path")
-    if (old.size == 1) return old.head
-    val label = nextBatchLabel(spark, path)
-    DedupIndex.appendDir(
-      spark.read.parquet(old.map(b => s"${vectorsDir(path)}/batch=$b"): _*)
+  def compact(spark: SparkSession, path: String): String =
+    table(spark, path).compact { old =>
+      (spark.read.parquet(old.map(b => s"${vectorsDir(path)}/batch=$b"): _*)
         .repartitionByRange(col("cell"))
-        .sortWithinPartitions("cell", "id"),
-      vectorsDir(path), label)
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    old.foreach(b => fs.delete(new Path(s"${vectorsDir(path)}/batch=$b"), true))
-    label
-  }
+        .sortWithinPartitions("cell", "id"), _ => Nil)
+    }
 
   /** Geometry health, one row: has continuous ingestion outgrown the cell
     * count this index was built with? `(nlist, corpus_rows,
@@ -919,14 +891,7 @@ object AnnIndex {
     * readers are active; do NOT run concurrently with an in-flight
     * [[append]] to the same index.
     */
-  def vacuum(spark: SparkSession, path: String): Unit = {
-    val root = new Path(vectorsDir(path))
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(root))
-      fs.listStatus(root).toSeq
-        .filter(st => st.isDirectory && st.getPath.getName.startsWith(".staging_"))
-        .foreach(st => fs.delete(st.getPath, true))
-  }
+  def vacuum(spark: SparkSession, path: String): Unit = table(spark, path).vacuum()
 
   /** Near-neighbor pairs between a new batch and the indexed corpus:
     * (batch_id, corpus_id, cosine) with cosine ≥ threshold, one row per
@@ -1016,33 +981,18 @@ object AnnIndex {
     * timescales, so a serving loop pays the aggregate once per interval,
     * not per call. Knobs are module-wide (a diagnostics parameter on
     * every serving face would churn a dozen signatures); `onWarn` is the
-    * spec hook and defaults to the slf4j warn. Disable entirely with
-    * `enabled = false` — the check forces the probes-side pin one
-    * aggregate early, never changes an answer.
+    * spec hook and defaults to the slf4j warn ([[StaleGuard]]'s shell;
+    * the check costs ~0.2–0.4 s per probe at sf0.1, ~zero after the
+    * per-interval memo). Disable entirely with `enabled = false` — the
+    * check forces the probes-side pin one aggregate early, never changes
+    * an answer.
     */
-  private[graft] object staleGuard {
-    @volatile var enabled: Boolean = true
+  private[graft] object staleGuard extends StaleGuard("graft.AnnIndex") {
     @volatile var targetCellRows: Long = 4096L
     @volatile var slack: Double = 8.0
-    /** Re-check cadence per index path. Geometry staleness changes on
-      * append/compact timescales, not per probe, so a serving loop pays
-      * the check's aggregate once per interval instead of per call
-      * (measured ~0.2–0.4 s fixed cost per probe at sf0.1 — ~zero after
-      * memoization). 0 forces every probe (the spec setting). Rebuilds
-      * land at fresh paths, so the memo never caches a stale verdict
-      * across a geometry change.
-      */
-    @volatile var checkIntervalNanos: Long = 300L * 1000 * 1000 * 1000
-    @volatile var onWarn: String => Unit =
-      msg => org.slf4j.LoggerFactory.getLogger("graft.AnnIndex").warn(msg)
-    // LRU-capped (r18 ADVICE): a serving JVM that cycles index paths
-    // (rebuilds land at fresh paths by design) must not grow this map
-    // for its whole life
-    private[operators] val lastChecked = new GuardMemo(1024)
 
     private[operators] def check(path: String, matched: DataFrame): Unit = {
-      if (!enabled) return
-      if (!lastChecked.shouldCheck(path, checkIntervalNanos)) return
+      if (!due(path)) return
       val r = matched.agg(
         count(lit(1)).as("rows"),
         count_distinct(col("cell")).as("cells")).head()

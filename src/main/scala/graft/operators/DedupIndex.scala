@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.sources.BatchTable
 
 /** Persistable MinHash+LSH dedup index — the production shape of corpus
   * dedup. [[Dedup.minHashDedupPairs]] answers "which pairs inside THIS
@@ -35,11 +36,11 @@ import org.apache.spark.sql.functions._
   *   bands/batch=<b>/      (band, bucket, id) — LSH postings
   * }}}
   * `params/` is written by [[init]] through the atomic staging swap and
-  * doubles as the index's existence marker. Batch partitions are staged
-  * under a dot-prefixed directory (invisible to Spark's file listing) and
-  * renamed into place, so concurrent readers never observe a partial
-  * batch; a crashed append leaves only invisible staging residue, removed
-  * by [[vacuum]].
+  * doubles as the index's existence marker. Batches commit through
+  * [[graft.sources.BatchTable]] with `bands/` as the marker and
+  * `sketches/` as its companion, so concurrent readers never observe a
+  * partial batch; a crashed append leaves only staging residue or an
+  * uncommitted sketches half, removed by [[vacuum]].
   *
   * Scale notes (100 TB corpus, ~10⁹ postings rows of three longs):
   *  - postings are written `repartitionByRange(band, bucket)` and sorted
@@ -71,6 +72,8 @@ object DedupIndex {
   private def paramsDir(path: String) = s"$path/params"
   private def sketchesDir(path: String) = s"$path/sketches"
   private def bandsDir(path: String) = s"$path/bands"
+  private def table(spark: SparkSession, path: String) =
+    BatchTable(spark, bandsDir(path), Seq(sketchesDir(path)))
 
   /** Create an empty index (params only) at `path`. Idempotent in the
     * atomic-swap sense: re-init replaces params via staging rename. An
@@ -94,31 +97,14 @@ object DedupIndex {
       r.getAs[Int]("shingle_k"))
   }
 
-  /** Labels of the batches currently in the index, sorted. Listing is a
-    * directory read of `bands/` — O(batches), never touches data files.
-    */
-  def batches(spark: SparkSession, path: String): Seq[String] = {
-    val dir = new Path(bandsDir(path))
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dir)) Seq.empty
-    else fs.listStatus(dir).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("batch="))
-      .map(_.getPath.getName.stripPrefix("batch="))
-      .sorted
-  }
+  /** Labels of the committed batches, sorted — a listing of `bands/`. */
+  def batches(spark: SparkSession, path: String): Seq[String] =
+    table(spark, path).committed
 
   /** Next zero-padded numeric batch label (`00000001`, …) — convenience
-    * for callers without their own batch identifiers.
-    *
-    * SINGLE-WRITER contract (see [[TextIndex.nextBatchLabel]] for the
-    * full rationale): allocation is read-max-then-increment, so two
-    * concurrent manual writers can draw the same label. The collision is
-    * LOUD and corruption-free — [[append]] writes sketches then bands
-    * and aborts at the first `batch=` directory that already exists
-    * ([[appendDir]]'s promote refuses; DedupIndexSpec pins it) — but the
-    * losing append is lost work. A live stream (`s`-prefixed labels)
-    * plus one manual backfill never collide; two manual writers must
-    * serialize label allocation.
+    * for callers without their own batch identifiers. SINGLE-WRITER
+    * allocation: see [[graft.sources.BatchTable]] (DedupIndexSpec pins
+    * the loud, corruption-free collision).
     *
     * Label VALUES carry no serving order here (VERDICT r18 item 7):
     * batches union ADDITIVELY — probes read all committed batches and
@@ -128,46 +114,48 @@ object DedupIndex {
     * deliberate contrast with [[TextIndex.append]], where versionKey
     * RANKS labels and free-form shapes are refused without an opt-in.
     */
-  def nextBatchLabel(spark: SparkSession, path: String): String = {
-    val used = batches(spark, path).flatMap(_.toLongOption)
-    f"${used.foldLeft(0L)(math.max) + 1}%08d"
-  }
+  def nextBatchLabel(spark: SparkSession, path: String): String =
+    table(spark, path).nextLabel
 
   /** Sketch `docs` with the index's geometry and land the result as batch
     * partition `batch` of both index tables. The batch becomes visible to
-    * probes atomically per table (staging + rename) and is immutable
-    * afterwards. Callers are responsible for deduping `docs` BEFORE
-    * appending ([[dedupBatch]] does exactly that) — the index stores what
-    * the pipeline accepted, it does not re-judge it.
+    * probes atomically (bands promoted last) and is immutable afterwards;
+    * an existing label is refused. Callers are responsible for deduping
+    * `docs` BEFORE appending ([[dedupBatch]] does exactly that) — the
+    * index stores what the pipeline accepted, it does not re-judge it.
     */
   def append(
       docs: DataFrame,
       textCol: String,
       idCol: String,
       path: String,
-      batch: String): Unit = {
-    require(batch.nonEmpty && !batch.contains('/') && !batch.startsWith("."),
-      s"invalid batch label '$batch'")
+      batch: String): Unit = commitBatch(docs, textCol, idCol, path, batch, once = false)
+
+  private def commitBatch(
+      docs: DataFrame,
+      textCol: String,
+      idCol: String,
+      path: String,
+      batch: String,
+      once: Boolean): Unit = {
     val spark = docs.sparkSession
-    val p = params(spark, path)
     val scope = Caches.newScope()
     try {
-      val prepped = Caches.inScope(scope) {
+      lazy val p = params(spark, path)
+      lazy val prepped = Caches.inScope(scope) {
         Dedup.prep(docs, textCol, idCol, p.numPerm, p.shingleK)
       }
       // Range-cluster each table so files/row groups carry disjoint key
       // ranges (columnar skip on the probe side). The sketch pass runs
       // once (prep is pinned) and feeds both writes.
-      appendDir(
-        prepped.select(col("id"), col("sh"))
-          .repartitionByRange(col("id"))
-          .sortWithinPartitions("id"),
-        sketchesDir(path), batch)
-      appendDir(
-        Dedup.bandedBuckets(Dedup.bandable(prepped), p.numPerm, p.bands, carryMh = false)
-          .repartitionByRange(col("band"), col("bucket"))
-          .sortWithinPartitions("band", "bucket"),
-        bandsDir(path), batch)
+      def bands = Dedup.bandedBuckets(Dedup.bandable(prepped), p.numPerm, p.bands, carryMh = false)
+        .repartitionByRange(col("band"), col("bucket"))
+        .sortWithinPartitions("band", "bucket")
+      val sketches = (_: String) => Seq(prepped.select(col("id"), col("sh"))
+        .repartitionByRange(col("id"))
+        .sortWithinPartitions("id"))
+      if (once) table(spark, path).commitOnce(batch, bands, sketches)
+      else table(spark, path).commit(batch, bands, sketches)
     } finally scope.release()
   }
 
@@ -185,52 +173,18 @@ object DedupIndex {
     append(docs, textCol, idCol, path, batch)
   }
 
-  /** Write `df` as `<dir>/batch=<batch>/` via an invisible staging
-    * directory + atomic rename: Spark's file listing skips dot-prefixed
-    * directories, so concurrent readers of `<dir>` see the batch only
-    * once the rename lands — whole or not at all. Appending an existing
-    * batch label fails (batches are immutable; use a new label).
-    */
-  private[graft] def appendDir(df: DataFrame, dir: String, batch: String): Unit = {
-    val root = new Path(dir)
-    val fs = root.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
-    val token = java.util.UUID.randomUUID().toString.take(8)
-    val staging = new Path(root, s".staging_${batch}_$token")
-    val dst = new Path(root, s"batch=$batch")
-    if (fs.exists(dst))
-      throw new java.io.IOException(s"index batch already exists: $dst")
-    df.write.mode("overwrite").parquet(staging.toString)
-    try {
-      if (fs.exists(dst) || !fs.rename(staging, dst))
-        throw new java.io.IOException(s"could not promote index batch $dst")
-    } finally {
-      if (fs.exists(staging)) fs.delete(staging, true)
-    }
-  }
-
   /** Retry-safe [[append]] for exactly-once ingestion loops (streaming
     * foreachBatch re-executes a micro-batch after a crash, with the SAME
-    * batch id and — from a replayable source — the same rows). The bands
-    * table is appended LAST in [[append]], so its `batch=` directory is
-    * the append's commit marker:
-    *  - bands present  → the previous attempt completed; no-op.
-    *  - only sketches present → the previous attempt died between the two
-    *    renames; the stale sketches partition is dropped and the append
-    *    re-runs (batch content is deterministic, so the redo is identical).
+    * batch id and — from a replayable source — the same rows): bands
+    * present → no-op; only sketches present → the stale half is dropped
+    * and the append re-runs ([[graft.sources.BatchTable.commitOnce]]).
     */
   private[graft] def appendIdempotent(
       docs: DataFrame,
       textCol: String,
       idCol: String,
       path: String,
-      batch: String): Unit = {
-    val spark = docs.sparkSession
-    if (batches(spark, path).contains(batch)) return
-    val stale = new Path(s"${sketchesDir(path)}/batch=$batch")
-    val fs = stale.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(stale)) fs.delete(stale, true)
-    append(docs, textCol, idCol, path, batch)
-  }
+      batch: String): Unit = commitBatch(docs, textCol, idCol, path, batch, once = true)
 
   /** Per-batch row counts — the maintenance signal for [[compact]]:
     * (batch, postings, docs). Reading only footers-level metadata would
@@ -430,45 +384,27 @@ object DedupIndex {
     * claimed by rename (collisions fail cleanly, nothing corrupts, but
     * one caller aborts).
     *
-    * Crash windows: before promote — invisible staging residue
-    * ([[vacuum]]); after promote, before/among deletes — leftover source
-    * batches coexist with the merge, results unchanged (idempotence
-    * again), and the next compact folds them in.
+    * Crash windows: before promote — staging residue or a sketches half
+    * under the merged label, which the retry drops before re-committing
+    * ([[graft.sources.BatchTable.commitOnce]]) and [[vacuum]] removes;
+    * after promote, before/among deletes — leftover source batches
+    * coexist with the merge, results unchanged (idempotence again), and
+    * the next compact folds them in.
     */
-  def compact(spark: SparkSession, path: String): String = {
-    val old = batches(spark, path)
-    require(old.nonEmpty, s"nothing to compact at $path")
-    if (old.size == 1) return old.head
-    val label = nextBatchLabel(spark, path)
-    def oldDirs(dir: String): Seq[String] = old.map(b => s"$dir/batch=$b")
-    appendDir(
-      spark.read.parquet(oldDirs(sketchesDir(path)): _*)
-        .repartitionByRange(col("id")).sortWithinPartitions("id"),
-      sketchesDir(path), label)
-    appendDir(
-      spark.read.parquet(oldDirs(bandsDir(path)): _*)
+  def compact(spark: SparkSession, path: String): String =
+    table(spark, path).compact { old =>
+      def oldDirs(dir: String): Seq[String] = old.map(b => s"$dir/batch=$b")
+      (spark.read.parquet(oldDirs(bandsDir(path)): _*)
         .repartitionByRange(col("band"), col("bucket"))
         .sortWithinPartitions("band", "bucket"),
-      bandsDir(path), label)
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    (oldDirs(sketchesDir(path)) ++ oldDirs(bandsDir(path)))
-      .foreach(d => fs.delete(new Path(d), true))
-    label
-  }
-
-  /** Delete invisible staging residue left by crashed appends. Safe while
-    * readers are active (they never list dot-prefixed directories); do NOT
-    * run concurrently with an in-flight [[append]] to the same index.
-    */
-  def vacuum(spark: SparkSession, path: String): Unit =
-    Seq(sketchesDir(path), bandsDir(path)).foreach { d =>
-      val root = new Path(d)
-      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(root))
-        fs.listStatus(root).toSeq
-          .filter(st => st.isDirectory && st.getPath.getName.startsWith(".staging_"))
-          .foreach(st => fs.delete(st.getPath, true))
+        _ => Seq(spark.read.parquet(oldDirs(sketchesDir(path)): _*)
+          .repartitionByRange(col("id")).sortWithinPartitions("id")))
     }
+
+  /** Delete staging residue and uncommitted sketches halves left by
+    * crashed appends ([[graft.sources.BatchTable.vacuum]]).
+    */
+  def vacuum(spark: SparkSession, path: String): Unit = table(spark, path).vacuum()
 
   private def hasBatches(spark: SparkSession, path: String): Boolean =
     batches(spark, path).nonEmpty
@@ -482,31 +418,20 @@ object DedupIndex {
     * of the pinned matched-postings table — a narrow re-read of a cache
     * the candidate join reads anyway). When it exceeds
     * `slack × targetBucketRows`, one loud warning names the remedy
-    * ([[maintenanceReport]] — reband or dedup upstream). Memoized per
-    * index path through the shared LRU-capped [[GuardMemo]]; knobs are
-    * module-wide and `onWarn` is the spec hook, exactly the ANN guard's
-    * shape. Same design note as there: an eager aggregate inside an
-    * otherwise lazy API, paid once per interval per path —
-    * `enabled = false` disables it entirely; it never changes an answer.
+    * ([[maintenanceReport]] — reband or dedup upstream). The shell
+    * (knobs, memo, `onWarn`) is [[StaleGuard]]'s. Same design note as the
+    * ANN guard: an eager aggregate inside an otherwise lazy API, paid
+    * once per interval per path.
     */
-  private[graft] object staleGuard {
-    @volatile var enabled: Boolean = true
+  private[graft] object staleGuard extends StaleGuard("graft.DedupIndex") {
     /** Healthy-bucket size reference: the [[crossPairs]] `maxBucket`
       * default — occupancy is EXPECTED to sit far below it.
       */
     @volatile var targetBucketRows: Long = 256L
     @volatile var slack: Double = 2.0
-    /** Re-check cadence per index path; staleness changes on
-      * append/compact timescales. 0 forces every probe (specs).
-      */
-    @volatile var checkIntervalNanos: Long = 300L * 1000 * 1000 * 1000
-    @volatile var onWarn: String => Unit =
-      msg => org.slf4j.LoggerFactory.getLogger("graft.DedupIndex").warn(msg)
-    private[operators] val lastChecked = new GuardMemo(1024)
 
     private[operators] def check(path: String, matched: DataFrame): Unit = {
-      if (!enabled) return
-      if (!lastChecked.shouldCheck(path, checkIntervalNanos)) return
+      if (!due(path)) return
       val r = matched.agg(
         count(lit(1)).as("rows"),
         count_distinct(col("band"), col("bucket")).as("buckets")).head()

@@ -34,3 +34,29 @@ private[graft] final class GuardMemo(maxEntries: Int = 1024) {
   /** Entries currently memoized — the LRU-bound spec hook. */
   def size: Int = m.synchronized(m.size())
 }
+
+/** The shared shell of the probe-time staleness guards
+  * ([[AnnIndex.staleGuard]], [[DedupIndex.staleGuard]],
+  * [[TextIndex.staleGuard]]): module-wide knobs, the per-path
+  * [[GuardMemo]], and `onWarn` (the spec hook, defaulting to an slf4j
+  * warn on `logger`). Each guard adds its threshold and its `check`,
+  * which runs only when [[due]] — never changing an answer;
+  * `enabled = false` disables it entirely.
+  */
+private[graft] abstract class StaleGuard(logger: String) {
+  @volatile var enabled: Boolean = true
+  /** Re-check cadence per index path: staleness changes on
+    * append/compact timescales, so a serving loop pays the check once per
+    * interval, not per probe. 0 forces every probe (the spec setting).
+    * Rebuilds land at fresh paths, so the memo never caches a stale
+    * verdict across a geometry change.
+    */
+  @volatile var checkIntervalNanos: Long = 300L * 1000 * 1000 * 1000
+  @volatile var onWarn: String => Unit =
+    msg => org.slf4j.LoggerFactory.getLogger(logger).warn(msg)
+  private[operators] val lastChecked = new GuardMemo(1024)
+
+  /** The guard is on and `path` is due a check (recorded as checked). */
+  protected def due(path: String): Boolean =
+    enabled && lastChecked.shouldCheck(path, checkIntervalNanos)
+}

@@ -1,10 +1,10 @@
 package graft.operators
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.text
+import graft.sources.BatchTable
 
 /** Persisted inverted keyword index — the serving shape of corpus text
   * search, completing the index triad: [[DedupIndex]] (near-dup probes),
@@ -49,8 +49,9 @@ import graft.functions.text
   * on disk — delta-friendly sorted ints that parquet encodes compactly,
   * and no non-phrase read path ever loads them.
   * Corpus-level N and Σdl are the SUM of the per-batch stats rows
-  * (append-only, O(batches) to read); `postings/` is written LAST by
-  * [[append]] and is the commit marker [[appendIdempotent]] checks.
+  * (append-only, O(batches) to read). Batches commit through
+  * [[graft.sources.BatchTable]]: `postings/` is the marker, promoted LAST
+  * by [[append]], with `stats/` and `versions/` as its companions.
   * Caller contract, as with [[DedupIndex]]: doc ids are unique ACROSS
   * batches (each document is indexed once — dedup runs upstream).
   *
@@ -75,6 +76,8 @@ object TextIndex {
   private def statsDir(path: String) = s"$path/stats"
   private def postingsDir(path: String) = s"$path/postings"
   private def versionsDir(path: String) = s"$path/versions"
+  private def table(spark: SparkSession, path: String) =
+    BatchTable(spark, postingsDir(path), Seq(statsDir(path), versionsDir(path)))
 
   /** Total version order over batch labels, as a sortable string key.
     * The repo produces TWO label namespaces — zero-padded numeric labels
@@ -136,45 +139,25 @@ object TextIndex {
   def tokenizer(spark: SparkSession, path: String): String =
     spark.read.parquet(paramsDir(path)).head().getAs[String]("tokenizer")
 
-  /** Labels of committed batches, sorted — a directory listing of
-    * `postings/` (the commit marker), never a data read.
-    */
-  def batches(spark: SparkSession, path: String): Seq[String] = {
-    val dir = new Path(postingsDir(path))
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dir)) Seq.empty
-    else fs.listStatus(dir).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("batch="))
-      .map(_.getPath.getName.stripPrefix("batch="))
-      .sorted
-  }
+  /** Labels of committed batches, sorted — a listing of `postings/`. */
+  def batches(spark: SparkSession, path: String): Seq[String] =
+    table(spark, path).committed
 
-  /** Next zero-padded numeric batch label (`00000001`, …).
+  /** Next zero-padded numeric batch label (`00000001`, …). SINGLE-WRITER
+    * allocation: see [[graft.sources.BatchTable]] (TextIndexSpec pins the
+    * refusal and that the winner's data is untouched).
+    */
+  def nextBatchLabel(spark: SparkSession, path: String): String =
+    table(spark, path).nextLabel
+
+  /** Tokenize `docs` and land its postings, stats and doc manifest as
+    * batch `batch`, in one corpus-scale pass; an existing label is
+    * refused. Stats and manifest land first, postings last — postings
+    * presence IS the batch's commit marker.
     *
-    * SINGLE-WRITER contract (shared with [[DedupIndex.nextBatchLabel]]
-    * and [[AnnIndex.nextBatchLabel]]): allocation is read-max-then-
-    * increment, so two concurrent manual writers can draw the SAME
-    * label. The collision is LOUD and corruption-free — [[append]]
-    * writes its tables in a fixed order and aborts at the first
-    * `batch=` directory that already exists (the promote rename refuses;
-    * TextIndexSpec pins the refusal and that the winner's data is
-    * untouched) — but the losing append is LOST work: re-draw a fresh
-    * label and retry, or give each writer its own namespace (the
-    * streaming ingest's `s`-prefix is exactly that). One live stream
-    * plus one manual backfill never collide (disjoint namespaces); two
-    * manual writers on one index must serialize label allocation.
-    */
-  def nextBatchLabel(spark: SparkSession, path: String): String = {
-    val used = batches(spark, path).flatMap(_.toLongOption)
-    f"${used.foldLeft(0L)(math.max) + 1}%08d"
-  }
-
-  /** Tokenize `docs` and land its postings + stats as batch `batch`.
-    * One corpus-scale pass: the tokenized frame is pinned, feeds the
-    * (doc, term) aggregation (map-side combine collapses token instances
-    * before the exchange) and the one-row stats aggregate, and is
-    * released. Stats land first, postings last — postings presence IS
-    * the batch's commit marker.
+    * Assumes `docs` is not modified while the append runs: a
+    * [[replayStable]] source is read once for the postings and once for
+    * the manifest ids, and both reads must see the same rows.
     */
   def append(
       docs: DataFrame,
@@ -182,9 +165,18 @@ object TextIndex {
       textCol: String,
       path: String,
       batch: String,
-      allowFreeFormLabel: Boolean = false): Unit = {
-    require(batch.nonEmpty && !batch.contains('/') && !batch.startsWith("."),
-      s"invalid batch label '$batch'")
+      allowFreeFormLabel: Boolean = false): Unit =
+    commitBatch(docs, idCol, textCol, path, batch, allowFreeFormLabel, once = false)
+
+  private def commitBatch(
+      docs: DataFrame,
+      idCol: String,
+      textCol: String,
+      path: String,
+      batch: String,
+      allowFreeFormLabel: Boolean,
+      once: Boolean): Unit = {
+    BatchTable.requireLabel(batch)
     // Label-shape gate (VERDICT r18 item 7): [[versionKey]] ranks
     // free-form labels ABOVE both managed namespaces, so one stray label
     // (a UUID, a date string, a 19+-digit overflow) permanently
@@ -199,7 +191,6 @@ object TextIndex {
         "docs until compact — pass allowFreeFormLabel = true only if that " +
         "supersession is intended")
     val spark = docs.sparkSession
-    tokenizer(spark, path) // existence check, fails loudly
     import spark.implicits._
     // ONE corpus scan: the doc-level stats (n_docs, Σdl) ride the SAME
     // job that shuffles and stages the postings, observed at the
@@ -207,44 +198,28 @@ object TextIndex {
     // retry/AQE-safe query-metrics channel). A separate stats action
     // would re-scan and re-tokenize the whole corpus; pinning the
     // tokenized frame instead would cache a corpus-sized intermediate.
-    // The stats-THEN-postings commit protocol is preserved by staging
-    // the postings first (which populates the observation), committing
-    // the tiny stats batch, and only then promoting the staged
-    // postings — the postings rename stays the append's commit marker,
-    // and every crash window matches [[appendIdempotent]]'s contract.
+    // BatchTable stages the postings (the marker) first, which populates
+    // the observation, then lands the tiny stats batch and the manifest,
+    // and only then promotes the staged postings.
     val obs = new org.apache.spark.sql.Observation(
       s"graft_text_stats_${batch}_${java.util.UUID.randomUUID().toString.take(8)}")
-    val postings = docs
-      .select(col(idCol).as("doc_id"), text.tokens(lower(col(textCol))).as("toks"))
-      .observe(obs,
-        count(lit(1)).as("n_docs"),
-        coalesce(sum(size(col("toks")).cast("long")), lit(0L)).as("sum_dl"))
-      .select(col("doc_id"), size(col("toks")).cast("long").as("dl"),
-        posexplode(col("toks")).as(Seq("pos", "term")))
-      .groupBy("term", "doc_id", "dl")
-      // sort_array: collect_list order is partition-nondeterministic;
-      // sorted offsets make the posting row a pure function of the doc
-      .agg(count(lit(1)).as("tf"), sort_array(collect_list(col("pos"))).as("positions"))
-      .repartitionByRange(col("term"))
-      .sortWithinPartitions("term", "doc_id")
-    val root = new Path(postingsDir(path))
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dst = new Path(root, s"batch=$batch")
-    if (fs.exists(dst))
-      throw new java.io.IOException(s"index batch already exists: $dst")
-    // fail BEFORE the corpus-scale staging write, not after: a stale
-    // stats partition (the stats-committed/postings-unpromoted crash
-    // window) would otherwise be discovered only when the tiny stats
-    // append throws — wasting the whole staged postings job. Retry that
-    // window through [[appendIdempotent]], which clears the stale stats.
-    if (fs.exists(new Path(statsDir(path) + s"/batch=$batch")) ||
-        fs.exists(new Path(versionsDir(path) + s"/batch=$batch")))
-      throw new java.io.IOException(
-        s"stale stats/versions batch=$batch exists (crashed append?) — use appendIdempotent")
-    val staging = new Path(root,
-      s".staging_${batch}_${java.util.UUID.randomUUID().toString.take(8)}")
-    try {
-      postings.write.mode("overwrite").parquet(staging.toString)
+    def postings = {
+      tokenizer(spark, path) // existence check, fails loudly
+      docs
+        .select(col(idCol).as("doc_id"), text.tokens(lower(col(textCol))).as("toks"))
+        .observe(obs,
+          count(lit(1)).as("n_docs"),
+          coalesce(sum(size(col("toks")).cast("long")), lit(0L)).as("sum_dl"))
+        .select(col("doc_id"), size(col("toks")).cast("long").as("dl"),
+          posexplode(col("toks")).as(Seq("pos", "term")))
+        .groupBy("term", "doc_id", "dl")
+        // sort_array: collect_list order is partition-nondeterministic;
+        // sorted offsets make the posting row a pure function of the doc
+        .agg(count(lit(1)).as("tf"), sort_array(collect_list(col("pos"))).as("positions"))
+        .repartitionByRange(col("term"))
+        .sortWithinPartitions("term", "doc_id")
+    }
+    val companions = (staging: String) => {
       val m = obs.get
       // an EMPTY metrics map means the optimizer PROVED the postings
       // empty (a literal batch whose every text tokenizes to nothing)
@@ -254,10 +229,8 @@ object TextIndex {
       val (nDocs, sumDl) =
         if (m.isEmpty) (docs.count(), 0L)
         else (m("n_docs").asInstanceOf[Long], m("sum_dl").asInstanceOf[Long])
-      DedupIndex.appendDir(
-        Seq((nDocs, sumDl, Seq.empty[String]))
-          .toDF("n_docs", "sum_dl", "folds").coalesce(1),
-        statsDir(path), batch)
+      val stats = Seq((nDocs, sumDl, Seq.empty[String]))
+        .toDF("n_docs", "sum_dl", "folds").coalesce(1)
       // the per-batch doc manifest ([[versionsDir]]): which doc_ids this
       // batch VERSIONS — the STAGED postings' ids unioned with the input
       // frame's ids. The staged side makes the manifest a superset of the
@@ -291,23 +264,19 @@ object TextIndex {
             .schema(org.apache.spark.sql.types.StructType(
               docs.select(col(idCol).as("doc_id")).schema.fields.toSeq
                 .map(_.copy(nullable = true))))
-            .parquet(staging.toString)
+            .parquet(staging)
             .select("doc_id")
           inputIds.unionByName(stagedIds).distinct()
         }
       // lands BEFORE the postings promote so the commit marker still
       // covers everything (stats/versions without postings = the
       // crashed-append window [[appendIdempotent]] clears)
-      DedupIndex.appendDir(
-        manifestIds
-          .repartitionByRange(col("doc_id"))
-          .sortWithinPartitions("doc_id"),
-        versionsDir(path), batch)
-      if (fs.exists(dst) || !fs.rename(staging, dst))
-        throw new java.io.IOException(s"could not promote index batch $dst")
-    } finally {
-      if (fs.exists(staging)) fs.delete(staging, true)
+      Seq(stats, manifestIds.repartitionByRange(col("doc_id")).sortWithinPartitions("doc_id"))
     }
+    // a stale stats/versions half (the crashed-append window) is refused
+    // BEFORE the corpus-scale staging write; [[appendIdempotent]] clears it
+    if (once) table(spark, path).commitOnce(batch, postings, companions)
+    else table(spark, path).commit(batch, postings, companions)
   }
 
   /** Conservative replay-stability check for [[append]]'s manifest
@@ -350,10 +319,12 @@ object TextIndex {
   }
 
   /** Retry-safe [[append]] for exactly-once ingestion loops: postings
-    * present → the previous attempt committed, no-op; only stats present
-    * → the attempt died between renames, the stale stats partition is
+    * present → the previous attempt committed, no-op; only stats/versions
+    * present → the attempt died before the promote, the stale halves are
     * dropped and the append re-runs (deterministic content → identical
-    * redo). Same protocol as [[DedupIndex.appendIdempotent]].
+    * redo; [[graft.sources.BatchTable.commitOnce]]). The same
+    * immutable-source assumption as [[append]]: `docs` must not change
+    * during the append, nor between a crashed attempt and its retry.
     */
   def appendIdempotent(
       docs: DataFrame,
@@ -361,16 +332,8 @@ object TextIndex {
       textCol: String,
       path: String,
       batch: String,
-      allowFreeFormLabel: Boolean = false): Unit = {
-    val spark = docs.sparkSession
-    if (batches(spark, path).contains(batch)) return
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    Seq(statsDir(path), versionsDir(path)).foreach { d =>
-      val stale = new Path(s"$d/batch=$batch")
-      if (fs.exists(stale)) fs.delete(stale, true)
-    }
-    append(docs, idCol, textCol, path, batch, allowFreeFormLabel)
-  }
+      allowFreeFormLabel: Boolean = false): Unit =
+    commitBatch(docs, idCol, textCol, path, batch, allowFreeFormLabel, once = true)
 
   /** Postings restricted to each doc's LATEST batch *within the frame
     * given* — the version-coherent degrade for a doc_id re-appended with
@@ -434,14 +397,9 @@ object TextIndex {
     * A directory listing per table — O(batches), no data read.
     */
   private def manifestCovers(spark: SparkSession, path: String): Boolean = {
-    val dir = new Path(versionsDir(path))
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dir)) return false
-    val have = fs.listStatus(dir).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("batch="))
-      .map(_.getPath.getName.stripPrefix("batch="))
-      .toSet
-    batches(spark, path).forall(have.contains)
+    val t = table(spark, path)
+    val have = t.labels(versionsDir(path)).toSet
+    have.nonEmpty && t.committed.forall(have.contains)
   }
 
   /** Write the missing `versions/` doc manifests for an index built
@@ -468,22 +426,15 @@ object TextIndex {
     * single-maintenance-writer contract of [[compact]].
     */
   def backfillManifest(spark: SparkSession, path: String): Seq[String] = {
-    val vroot = new Path(versionsDir(path))
-    val fs = vroot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val have: Set[String] =
-      if (!fs.exists(vroot)) Set.empty
-      else fs.listStatus(vroot).toSeq
-        .filter(st => st.isDirectory && st.getPath.getName.startsWith("batch="))
-        .map(_.getPath.getName.stripPrefix("batch="))
-        .toSet
-    val missing = batches(spark, path).filterNot(have.contains)
+    val t = table(spark, path)
+    val have = t.labels(versionsDir(path)).toSet
+    val missing = t.committed.filterNot(have.contains)
     missing.foreach { b =>
-      DedupIndex.appendDir(
+      BatchTable(spark, versionsDir(path)).commit(b,
         spark.read.parquet(s"${postingsDir(path)}/batch=$b")
           .select("doc_id").where(col("doc_id").isNotNull).distinct()
           .repartitionByRange(col("doc_id"))
-          .sortWithinPartitions("doc_id"),
-        versionsDir(path), b)
+          .sortWithinPartitions("doc_id"))
     }
     missing
   }
@@ -633,22 +584,12 @@ object TextIndex {
     * `enabled = false` the escape hatch. Unlike the other two guards
     * this one runs NO Spark job at all — the cost is the listing.
     */
-  private[graft] object staleGuard {
-    @volatile var enabled: Boolean = true
+  private[graft] object staleGuard extends StaleGuard("graft.TextIndex") {
     /** Batch-count threshold; the [[maintenanceReport]] default. */
     @volatile var maxBatches: Int = 64
-    /** Re-check cadence per index path; batch counts change on
-      * append/compact timescales. 0 forces every probe (specs).
-      */
-    @volatile var checkIntervalNanos: Long = 300L * 1000 * 1000 * 1000
-    @volatile var onWarn: String => Unit =
-      msg => org.slf4j.LoggerFactory.getLogger("graft.TextIndex").warn(msg)
-    private[operators] val lastChecked = new GuardMemo(1024)
 
     private[operators] def check(path: String, committedBatches: Int): Unit = {
-      if (!enabled) return
-      if (!lastChecked.shouldCheck(path, checkIntervalNanos)) return
-      if (committedBatches > maxBatches)
+      if (due(path) && committedBatches > maxBatches)
         onWarn(
           s"graft text probe against a fragmented index $path: " +
             s"$committedBatches committed batches exceed $maxBatches — run " +
@@ -881,26 +822,14 @@ object TextIndex {
   /** Fold every committed batch into ONE re-clustered batch and drop the
     * sources. Same contracts as [[DedupIndex.compact]]: probe-safe in
     * the overlap window (hence searchTopK's `distinct()`), not
-    * append-safe; crash residue is either invisible staging ([[vacuum]])
-    * or coexisting sources the next compact folds in. Returns the merged
-    * label.
+    * append-safe; crash residue is either staging or stats/versions
+    * halves under the merged label — which the retry, re-picking the same
+    * label, drops before re-committing
+    * ([[graft.sources.BatchTable.commitOnce]]) — or coexisting sources
+    * the next compact folds in. Returns the merged label.
     */
   def compact(spark: SparkSession, path: String): String = {
-    val old = batches(spark, path)
-    require(old.nonEmpty, s"nothing to compact at $path")
-    if (old.size == 1) return old.head
-    val label = nextBatchLabel(spark, path)
     import spark.implicits._
-    // a compact that crashed between its own stats and postings renames
-    // left an uncommitted stats/batch=<label> — nextBatchLabel derives
-    // from postings (the commit marker), so the retry re-picks the SAME
-    // label and appendDir would refuse it forever; drop the stale half
-    // first (the appendIdempotent self-heal, applied to compaction)
-    val staleFs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    Seq(statsDir(path), versionsDir(path)).foreach { d =>
-      val stale = new Path(s"$d/batch=$label")
-      if (staleFs.exists(stale)) staleFs.delete(stale, true)
-    }
     // CANONICALIZE to each doc's latest version while folding:
     // [[versionKey]] is the version order, and a merge that kept both
     // versions of a re-appended doc would erase that order forever —
@@ -913,7 +842,7 @@ object TextIndex {
     // which the old distinct() handled. Compact also re-bases all
     // surviving content into the numeric namespace — see [[versionKey]].
     val scope = Caches.newScope()
-    try {
+    try table(spark, path).compact { old =>
       val canonical = scope.pin(
         anchorLatest(spark, path,
           spark.read.parquet(old.map(b => s"${postingsDir(path)}/batch=$b"): _*))
@@ -931,64 +860,31 @@ object TextIndex {
       // degrades. A doc that only ever held empty text has no postings
       // and drops from N too — exactly how the manifest already serves
       // it (as deleted). The aggregate is one action on the pinned frame
-      // the merge rewrites anyway; commit order is unchanged (stats,
-      // then manifest, then the postings promote).
-      val stRow = canonical
-        .groupBy("doc_id").agg(max(col("dl")).as("__dl"))
-        .agg(count(lit(1)).as("n"),
-          coalesce(sum(col("__dl")), lit(0L)).as("d")).head()
-      DedupIndex.appendDir(
-        Seq((stRow.getAs[Long]("n"), stRow.getAs[Long]("d"), old))
-          .toDF("n_docs", "sum_dl", "folds").coalesce(1),
-        statsDir(path), label)
-      // the merge's manifest = the docs it actually carries; written
-      // BEFORE the postings promote, the append commit order. Tombstoned
-      // docs are absent — their deletion is complete once sources drop.
-      DedupIndex.appendDir(
-        canonical.select("doc_id").distinct()
-          .repartitionByRange(col("doc_id"))
-          .sortWithinPartitions("doc_id"),
-        versionsDir(path), label)
-      DedupIndex.appendDir(
-        canonical
-          .repartitionByRange(col("term"))
-          .sortWithinPartitions("term", "doc_id"),
-        postingsDir(path), label)
+      // the merge rewrites anyway. The merge's manifest = the docs it
+      // actually carries; tombstoned docs are absent — their deletion is
+      // complete once sources drop.
+      (canonical
+        .repartitionByRange(col("term"))
+        .sortWithinPartitions("term", "doc_id"),
+        _ => {
+          val stRow = canonical
+            .groupBy("doc_id").agg(max(col("dl")).as("__dl"))
+            .agg(count(lit(1)).as("n"),
+              coalesce(sum(col("__dl")), lit(0L)).as("d")).head()
+          Seq(
+            Seq((stRow.getAs[Long]("n"), stRow.getAs[Long]("d"), old))
+              .toDF("n_docs", "sum_dl", "folds").coalesce(1),
+            canonical.select("doc_id").distinct()
+              .repartitionByRange(col("doc_id"))
+              .sortWithinPartitions("doc_id"))
+        })
     } finally scope.release()
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    old.foreach { b =>
-      fs.delete(new Path(s"${statsDir(path)}/batch=$b"), true)
-      fs.delete(new Path(s"${versionsDir(path)}/batch=$b"), true)
-      fs.delete(new Path(s"${postingsDir(path)}/batch=$b"), true)
-    }
-    label
   }
 
-  /** Delete invisible staging residue AND uncommitted stats/versions
-    * partitions (halves without matching postings — a crashed append's
-    * residue). Safe while probes are active; not concurrently with an
-    * in-flight append.
+  /** Delete staging residue AND uncommitted stats/versions partitions
+    * (halves without matching postings — a crashed append's residue).
+    * Safe while probes are active; not concurrently with an in-flight
+    * append.
     */
-  def vacuum(spark: SparkSession, path: String): Unit = {
-    Seq(statsDir(path), versionsDir(path), postingsDir(path)).foreach { d =>
-      val root = new Path(d)
-      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(root))
-        fs.listStatus(root).toSeq
-          .filter(st => st.isDirectory && st.getPath.getName.startsWith(".staging_"))
-          .foreach(st => fs.delete(st.getPath, true))
-    }
-    val committed = batches(spark, path).toSet
-    Seq(statsDir(path), versionsDir(path)).foreach { d =>
-      val root = new Path(d)
-      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(root))
-        fs.listStatus(root).toSeq
-          .filter { st =>
-            st.isDirectory && st.getPath.getName.startsWith("batch=") &&
-              !committed.contains(st.getPath.getName.stripPrefix("batch="))
-          }
-          .foreach(st => fs.delete(st.getPath, true))
-    }
-  }
+  def vacuum(spark: SparkSession, path: String): Unit = table(spark, path).vacuum()
 }

@@ -6,6 +6,8 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.sources.BatchTable
+
 /** Structured Streaming operators.
   *
   * The reference is batch-only (SURVEY.md §2.9 — its "CDC" is re-merge on
@@ -343,16 +345,11 @@ object Streams {
     val writer = stream.writeStream
       .outputMode("append")
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        // "s"-prefixed label namespace: purely-numeric labels belong to
-        // manual build()/append() calls and to compact()'s merged output
-        // (nextBatchLabel numbers over numeric labels only), so a
-        // streaming label can never collide with either — an unprefixed
-        // f"$batchId%08d" collides with build's default "00000001" on
+        // "s"-prefixed label ([[BatchTable.streamLabel]]): an unprefixed
+        // label would collide with build's default "00000001" on
         // micro-batch 1 and with every post-compact label, and
         // appendIdempotent would silently skip the index append,
         // permanently excluding that batch's docs from future dedup.
-        // CONTRACT: one checkpoint per index — restarting with a FRESH
-        // checkpoint resets batchId to 0 and replays into used labels.
         // MIGRATION (pre-"s"-prefix indexes): an index built by the old
         // numeric-label code will, on restart from the same checkpoint,
         // re-append its replayed micro-batch under the new "s" label
@@ -360,18 +357,15 @@ object Streams {
         // are unaffected (postings dedup + distinct occupancy), but run
         // compact() once after upgrading a live streaming index to fold
         // the duplicated postings away.
-        val label = f"s$batchId%08d"
+        val label = BatchTable.streamLabel(batchId)
         val scope = Caches.newScope()
         try Caches.inScope(scope) {
           // consumed twice (output land + index append) → pinned so the
           // probe/cluster dataflow runs once
           val accepted = Caches.pin(
             DedupIndex.dedupBatch(batch.toDF(), textCol, idCol, indexPath, threshold, maxBucket))
-          val outRoot = new org.apache.hadoop.fs.Path(outputPath)
-          val fs = outRoot.getFileSystem(batch.sparkSession.sparkContext.hadoopConfiguration)
           // batch already landed by a pre-crash attempt → skip (idempotent)
-          if (!fs.exists(new org.apache.hadoop.fs.Path(outRoot, s"batch=$label")))
-            DedupIndex.appendDir(accepted, outputPath, label)
+          BatchTable(batch.sparkSession, outputPath).commitOnce(label, accepted)
           DedupIndex.appendIdempotent(accepted, textCol, idCol, indexPath, label)
         } finally scope.release()
       }
@@ -433,11 +427,11 @@ object Streams {
       dim: Int,
       checkpoint: Option[String],
       pqMargin: Double): org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.operators.{AnnIndex, Caches, DedupIndex}
+    import graft.operators.{AnnIndex, Caches}
     val writer = stream.writeStream
       .outputMode("append")
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val label = f"s$batchId%08d"
+        val label = BatchTable.streamLabel(batchId)
         val scope = Caches.newScope()
         try Caches.inScope(scope) {
           // consumed twice (output land + index append) → pinned so the
@@ -452,10 +446,7 @@ object Streams {
             else
               AnnIndex.dedupBatch(
                 batch.toDF(), idCol, vecCol, indexPath, threshold, probe, maxCell, dim))
-          val outRoot = new org.apache.hadoop.fs.Path(outputPath)
-          val fs = outRoot.getFileSystem(batch.sparkSession.sparkContext.hadoopConfiguration)
-          if (!fs.exists(new org.apache.hadoop.fs.Path(outRoot, s"batch=$label")))
-            DedupIndex.appendDir(accepted, outputPath, label)
+          BatchTable(batch.sparkSession, outputPath).commitOnce(label, accepted)
           AnnIndex.appendIdempotent(accepted, idCol, vecCol, indexPath, label)
         } finally scope.release()
       }
@@ -484,18 +475,15 @@ object Streams {
       indexPath: String,
       outputPath: String,
       checkpoint: Option[String] = None): org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.operators.{Caches, DedupIndex, TextIndex}
+    import graft.operators.{Caches, TextIndex}
     val writer = stream.writeStream
       .outputMode("append")
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val label = f"s$batchId%08d"
+        val label = BatchTable.streamLabel(batchId)
         val scope = Caches.newScope()
         try Caches.inScope(scope) {
           val pinned = Caches.pin(batch.toDF())
-          val outRoot = new org.apache.hadoop.fs.Path(outputPath)
-          val fs = outRoot.getFileSystem(batch.sparkSession.sparkContext.hadoopConfiguration)
-          if (!fs.exists(new org.apache.hadoop.fs.Path(outRoot, s"batch=$label")))
-            DedupIndex.appendDir(pinned, outputPath, label)
+          BatchTable(batch.sparkSession, outputPath).commitOnce(label, pinned)
           TextIndex.appendIdempotent(pinned, idCol, textCol, indexPath, label)
         } finally scope.release()
       }
@@ -557,7 +545,7 @@ object Streams {
       threshold: Double = 1.0,
       checkpoint: Option[String] = None): org.apache.spark.sql.streaming.StreamingQuery = {
     import org.apache.spark.sql.functions._
-    import graft.operators.{Caches, DedupIndex, Importance}
+    import graft.operators.{Caches, Importance}
     // validate at START, not in the first micro-batch: stream.schema is
     // already known here, and a misconfigured stream should be rejected
     // before .start() rather than killing the running query at runtime
@@ -569,7 +557,7 @@ object Streams {
     val writer = stream.writeStream
       .outputMode("append")
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val label = f"s$batchId%08d"
+        val label = BatchTable.streamLabel(batchId)
         val spark = batch.sparkSession
         val scope = Caches.newScope()
         try Caches.inScope(scope) {
@@ -582,13 +570,9 @@ object Streams {
                 pinned, idCol, textCol, target, source, buckets, threshold)
                 .select(col("doc_id").as(idCol), col("importance"), col("selected")),
               Seq(idCol)))
-          val outRoot = new org.apache.hadoop.fs.Path(outputPath)
-          val fs = outRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          for ((name, keep) <- Seq("selected" -> true, "rejected" -> false)) {
-            val dir = s"$outputPath/$name"
-            if (!fs.exists(new org.apache.hadoop.fs.Path(dir + s"/batch=$label")))
-              DedupIndex.appendDir(scored.where(col("selected") === keep), dir, label)
-          }
+          for ((name, keep) <- Seq("selected" -> true, "rejected" -> false))
+            BatchTable(spark, s"$outputPath/$name")
+              .commitOnce(label, scored.where(col("selected") === keep))
         } finally scope.release()
       }
     checkpoint.fold(writer)(writer.option("checkpointLocation", _)).start()
@@ -618,12 +602,12 @@ object Streams {
       outputPath: String,
       checkpoint: Option[String] = None): org.apache.spark.sql.streaming.StreamingQuery = {
     import org.apache.spark.sql.functions._
-    import graft.operators.{Caches, DedupIndex, Importance}
+    import graft.operators.{Caches, Importance}
     val baseline = Caches.pin(baselineModel)
     val writer = stream.writeStream
       .outputMode("append")
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val label = f"s$batchId%08d"
+        val label = BatchTable.streamLabel(batchId)
         val spark = batch.sparkSession
         val scope = Caches.newScope()
         try Caches.inScope(scope) {
@@ -631,10 +615,7 @@ object Streams {
             baseline,
             Importance.hashedBucketCounts(batch.toDF(), textCol, buckets),
             k)
-          val outRoot = new org.apache.hadoop.fs.Path(outputPath)
-          val fs = outRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          if (!fs.exists(new org.apache.hadoop.fs.Path(outRoot, s"batch=$label")))
-            DedupIndex.appendDir(report, outputPath, label)
+          BatchTable(spark, outputPath).commitOnce(label, report)
         } finally scope.release()
       }
     checkpoint.fold(writer)(writer.option("checkpointLocation", _)).start()
@@ -667,7 +648,7 @@ object Streams {
       checkpoint: Option[String] = None,
       tools: Boolean = false): org.apache.spark.sql.streaming.StreamingQuery = {
     import org.apache.spark.sql.functions._
-    import graft.operators.{Caches, Conversations, DedupIndex}
+    import graft.operators.{Caches, Conversations}
     val flagCols =
       if (tools) Seq("n_turns", "parse_ok", "starts_ok", "role_legal",
         "transitions_ok", "no_empty", "ends_assistant", "valid")
@@ -680,7 +661,7 @@ object Streams {
     val writer = stream.writeStream
       .outputMode("append")
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val label = f"s$batchId%08d"
+        val label = BatchTable.streamLabel(batchId)
         val spark = batch.sparkSession
         val scope = Caches.newScope()
         try Caches.inScope(scope) {
@@ -691,13 +672,9 @@ object Streams {
             if (tools) Conversations.validateWithTools(turns, idCol)
             else Conversations.validate(turns, idCol)
           val routed = Caches.pin(pinned.join(audit, Seq(idCol)))
-          val outRoot = new org.apache.hadoop.fs.Path(outputPath)
-          val fs = outRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          for ((name, keep) <- Seq("valid" -> true, "quarantine" -> false)) {
-            val dir = s"$outputPath/$name"
-            if (!fs.exists(new org.apache.hadoop.fs.Path(dir + s"/batch=$label")))
-              DedupIndex.appendDir(routed.where(col("valid") === keep), dir, label)
-          }
+          for ((name, keep) <- Seq("valid" -> true, "quarantine" -> false))
+            BatchTable(spark, s"$outputPath/$name")
+              .commitOnce(label, routed.where(col("valid") === keep))
         } finally scope.release()
       }
     checkpoint.fold(writer)(writer.option("checkpointLocation", _)).start()
@@ -714,11 +691,11 @@ object Streams {
       bloomExpectedItems: Long = 1000000L,
       bloomNumBits: Long = 8388608L): org.apache.spark.sql.streaming.StreamingQuery = {
     import org.apache.spark.sql.functions._
-    import graft.operators.{BloomJoin, Caches, DedupIndex, Urls}
+    import graft.operators.{BloomJoin, Caches, Urls}
     val writer = stream.writeStream
       .outputMode("append")
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val label = f"s$batchId%08d"
+        val label = BatchTable.streamLabel(batchId)
         val spark = batch.sparkSession
         val scope = Caches.newScope()
         try Caches.inScope(scope) {
@@ -740,15 +717,13 @@ object Streams {
             .groupBy("canonical_url")
             .agg(min_by(struct(payload.map(col): _*), col(idCol)).as("__r"))
             .select(col("canonical_url") +: payload.map(c => col(s"__r.$c").as(c)): _*))
-          val idxRoot = new org.apache.hadoop.fs.Path(indexPath)
-          val idxFs = idxRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
+          val seenSet = BatchTable(spark, indexPath)
           // "seen-set exists" means a COMMITTED batch= child, not a bare
           // directory: a crashed first append leaves staging debris (or
           // nothing visible) behind, and reading that as a parquet table
           // throws on every replay — wedging the stream permanently on
-          // its own crash window (review, round 11)
-          val hasSeen = idxFs.exists(idxRoot) &&
-            idxFs.listStatus(idxRoot).exists(_.getPath.getName.startsWith("batch="))
+          // its own crash window
+          val hasSeen = seenSet.committed.nonEmpty
           val accepted = Caches.pin(
             if (!hasSeen) keepers
             else {
@@ -771,17 +746,10 @@ object Streams {
                 else seen
               keepers.join(probed, Seq("canonical_url"), "left_anti")
             })
-          // each guard resolves ITS OWN FileSystem — index and output may
-          // live on different schemes (the sibling ingests' convention)
-          val outRoot = new org.apache.hadoop.fs.Path(outputPath)
-          val outFs = outRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          if (!outFs.exists(new org.apache.hadoop.fs.Path(outRoot, s"batch=$label")))
-            DedupIndex.appendDir(accepted, outputPath, label)
+          BatchTable(spark, outputPath).commitOnce(label, accepted)
           // seen-set append LAST = the commit marker (nearDupIngest order)
-          if (!idxFs.exists(new org.apache.hadoop.fs.Path(idxRoot, s"batch=$label")))
-            DedupIndex.appendDir(
-              accepted.select(col("canonical_url"), col(idCol).as("keeper_id")),
-              indexPath, label)
+          seenSet.commitOnce(label,
+            accepted.select(col("canonical_url"), col(idCol).as("keeper_id")))
         } finally scope.release()
       }
     checkpoint.fold(writer)(writer.option("checkpointLocation", _)).start()
@@ -868,7 +836,7 @@ object Streams {
       bloomExpectedItems: Long = 1000000L,
       bloomNumBits: Long = 8388608L): org.apache.spark.sql.streaming.StreamingQuery = {
     import org.apache.spark.sql.functions._
-    import graft.operators.{BloomJoin, Caches, Dedup, DedupIndex, Multimodal}
+    import graft.operators.{BloomJoin, Caches, Dedup, Multimodal}
     require(maxHamming >= 0 && maxHamming <= 3,
       "4x16-bit banding guarantees exact recall only for maxHamming <= 3")
     // start-time validation (the importanceRoutedIngest lesson): the
@@ -896,7 +864,7 @@ object Streams {
     val writer = stream.writeStream
       .outputMode("append")
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val label = f"s$batchId%08d"
+        val label = BatchTable.streamLabel(batchId)
         val spark = batch.sparkSession
         val scope = Caches.newScope()
         try Caches.inScope(scope) {
@@ -926,10 +894,8 @@ object Streams {
           val batchKeepers = Caches.pin(
             exactKeepers.join(nearDupIds, Seq(idCol), "left_anti"))
           // cross-batch near probe against the COMMITTED band index
-          val idxRoot = new org.apache.hadoop.fs.Path(indexPath)
-          val idxFs = idxRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          val hasSeen = idxFs.exists(idxRoot) &&
-            idxFs.listStatus(idxRoot).exists(_.getPath.getName.startsWith("batch="))
+          val seenIndex = BatchTable(spark, indexPath)
+          val hasSeen = seenIndex.committed.nonEmpty
           val accepted = Caches.pin(
             if (!hasSeen) batchKeepers
             else {
@@ -956,17 +922,12 @@ object Streams {
               batchKeepers.join(hits, Seq(idCol), "left_anti")
             })
           val landed = accepted.unionByName(quarantined)
-          val outRoot = new org.apache.hadoop.fs.Path(outputPath)
-          val outFs = outRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          if (!outFs.exists(new org.apache.hadoop.fs.Path(outRoot, s"batch=$label")))
-            DedupIndex.appendDir(landed, outputPath, label)
+          BatchTable(spark, outputPath).commitOnce(label, landed)
           // index append LAST = the commit marker (nearDupIngest order);
           // quarantined rows have no fingerprint and never enter the index
-          if (!idxFs.exists(new org.apache.hadoop.fs.Path(idxRoot, s"batch=$label")))
-            DedupIndex.appendDir(
-              bandRows(accepted).select(
-                col("band"), col("bucket"), col("dhash"), col(idCol).as("keeper_id")),
-              indexPath, label)
+          seenIndex.commitOnce(label,
+            bandRows(accepted).select(
+              col("band"), col("bucket"), col("dhash"), col(idCol).as("keeper_id")))
         } finally scope.release()
       }
     checkpoint.fold(writer)(writer.option("checkpointLocation", _)).start()
@@ -1077,7 +1038,7 @@ object Streams {
       shortTokens: Long = 10L,
       highPunct: Double = 0.05,
       checkpoint: Option[String] = None): org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.operators.{Caches, DedupIndex, Quality}
+    import graft.operators.{Caches, Quality}
     // start-time schema validation (round-12 advice): a stream missing a
     // card column must be rejected before .start(), not at first batch
     Seq(idCol, textCol, sourceCol).foreach { c =>
@@ -1087,7 +1048,7 @@ object Streams {
     val writer = stream.writeStream
       .outputMode("append")
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val label = f"s$batchId%08d"
+        val label = BatchTable.streamLabel(batchId)
         val spark = batch.sparkSession
         val scope = Caches.newScope()
         try Caches.inScope(scope) {
@@ -1108,12 +1069,10 @@ object Streams {
                  'flags', 'high_punct_docs', high_punct_docs,
                  'flags', 'no_stopword_docs', no_stopword_docs,
                  'flags', 'short_docs', short_docs) AS (section, metric, value)""")
-          val fpRoot = new org.apache.hadoop.fs.Path(fpIndexPath)
-          val fpFs = fpRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
+          val fpIndex = BatchTable(spark, fpIndexPath)
           // committed batch= child, not a bare directory (urlDedupIngest's
           // crash-window lesson)
-          val hasSeen = fpFs.exists(fpRoot) &&
-            fpFs.listStatus(fpRoot).exists(_.getPath.getName.startsWith("batch="))
+          val hasSeen = fpIndex.committed.nonEmpty
           val batchFps = prep.select("fp").distinct()
           val newFps = Caches.pin(
             if (!hasSeen) batchFps
@@ -1132,13 +1091,9 @@ object Streams {
             .unionByName(mix("lang", "lang"))
             .unionByName(mix("script", "script"))
             .unionByName(mix("source", "source"))
-          val cardRoot = new org.apache.hadoop.fs.Path(cardPath)
-          val cardFs = cardRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          if (!cardFs.exists(new org.apache.hadoop.fs.Path(cardRoot, s"batch=$label")))
-            DedupIndex.appendDir(delta, cardPath, label)
+          BatchTable(spark, cardPath).commitOnce(label, delta)
           // seen-set append LAST = the commit marker
-          if (!fpFs.exists(new org.apache.hadoop.fs.Path(fpRoot, s"batch=$label")))
-            DedupIndex.appendDir(newFps, fpIndexPath, label)
+          fpIndex.commitOnce(label, newFps)
         } finally scope.release()
       }
     checkpoint.fold(writer)(writer.option("checkpointLocation", _)).start()
@@ -1190,16 +1145,11 @@ object Streams {
     val writer = stream.writeStream
       .outputMode("append")
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val label = f"s$batchId%08d"
-        val spark = batch.sparkSession
-        val root = new org.apache.hadoop.fs.Path(storePath)
-        val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (!fs.exists(new org.apache.hadoop.fs.Path(root, s"batch=$label"))) {
-          val delta = graft.operators.JoinAdvisor.cmSketch(batch.toDF(), keyCol, params)
+        val label = BatchTable.streamLabel(batchId)
+        BatchTable(batch.sparkSession, storePath).commitOnce(label,
+          graft.operators.JoinAdvisor.cmSketch(batch.toDF(), keyCol, params)
             .withColumn("width", lit(params.width))
-            .withColumn("depth", lit(params.depth))
-          graft.operators.DedupIndex.appendDir(delta, storePath, label)
-        }
+            .withColumn("depth", lit(params.depth)))
       }
     checkpoint.fold(writer)(writer.option("checkpointLocation", _)).start()
   }

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{Caches, Dedup, DedupIndex}
+import graft.sources.BatchTable
 
 class DedupIndexSpec extends AnyFunSuite {
   private val spark = SparkTestSession.spark
@@ -172,6 +173,28 @@ class DedupIndexSpec extends AnyFunSuite {
     Caches.release()
   }
 
+  test("compact retries through its own sketches-then-bands crash window") {
+    val path = tmp()
+    DedupIndex.build(corpus.limit(2), "text", "id", path, batch = "00000001")
+    DedupIndex.append(corpus.where(col("id") > 2L), "text", "id", path, "00000002")
+    def pairs() = DedupIndex.crossPairs(batch, "text", "id", path, threshold = 0.5)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    val before = pairs()
+    // a compact that landed its merged sketches under the next label and
+    // crashed before the bands rename: 00000003 is uncommitted, and every
+    // retry re-picks that same label from bands/
+    BatchTable(spark, s"$path/sketches").commit("00000003",
+      spark.read.parquet(s"$path/sketches/batch=00000001", s"$path/sketches/batch=00000002"))
+    assert(DedupIndex.batches(spark, path) == Seq("00000001", "00000002"))
+    val merged = DedupIndex.compact(spark, path)
+    assert(merged == "00000003")
+    assert(DedupIndex.batches(spark, path) == Seq(merged), "sources dropped, one batch left")
+    assert(DedupIndex.stats(spark, path).collect().map(_.getAs[Long]("docs")).toSeq == Seq(4L),
+      "the stale sketches half must not double the merged batch")
+    assert(pairs() == before, "the retried compact must not change probe answers")
+    Caches.release()
+  }
+
   test("duplicated postings cannot flip an under-cap bucket onto the keeper path") {
     // compact's promote-then-delete window doubles every posting row; the
     // occupancy cap must count DISTINCT members, or a bucket of 8 real
@@ -306,13 +329,11 @@ class DedupIndexSpec extends AnyFunSuite {
     // can split what identical sketches cannot.
     val bPath = tmp()
     DedupIndex.init(spark, bPath, DedupIndex.Params(numPerm = 8, bands = 2, shingleK = 3))
-    DedupIndex.appendDir(
-      (1L to 5L).map(i => (i, Seq(i, i + 10L))).toDF("id", "sh"),
-      s"$bPath/sketches", "00000001")
-    DedupIndex.appendDir(
+    BatchTable(spark, s"$bPath/sketches").commit("00000001",
+      (1L to 5L).map(i => (i, Seq(i, i + 10L))).toDF("id", "sh"))
+    BatchTable(spark, s"$bPath/bands").commit("00000001",
       ((1L to 5L).map(i => (0, 99L, i)) ++ Seq((1, 1L, 1L), (1, 2L, 2L)))
-        .toDF("band", "bucket", "id"),
-      s"$bPath/bands", "00000001")
+        .toDF("band", "bucket", "id"))
     val rb = report(bPath, maxBucket = 2, hotFracMax = 0.2)
     assert(rec(rb) == "rebuild_stricter_bands",
       s"distinct sketches colliding in one band must recommend rebanding: $rb")
@@ -327,13 +348,11 @@ class DedupIndexSpec extends AnyFunSuite {
 
     // compact's promote-then-delete window: doubled postings move nothing
     // (distinct ids per bucket, distinct (id, sh) on the sketch side)
-    DedupIndex.appendDir(
-      (1L to 5L).map(i => (i, Seq(i, i + 10L))).toDF("id", "sh"),
-      s"$bPath/sketches", "00000002")
-    DedupIndex.appendDir(
+    BatchTable(spark, s"$bPath/sketches").commit("00000002",
+      (1L to 5L).map(i => (i, Seq(i, i + 10L))).toDF("id", "sh"))
+    BatchTable(spark, s"$bPath/bands").commit("00000002",
       ((1L to 5L).map(i => (0, 99L, i)) ++ Seq((1, 1L, 1L), (1, 2L, 2L)))
-        .toDF("band", "bucket", "id"),
-      s"$bPath/bands", "00000002")
+        .toDF("band", "bucket", "id"))
     val rb2 = report(bPath, maxBucket = 2, hotFracMax = 0.2)
     assert(rb2 == rb, "doubled postings must be invisible to the verdict")
     Caches.release()

@@ -97,10 +97,9 @@ class TextIndexSpec extends AnyFunSuite {
     val dup = spark.read.parquet(
       s"$path/postings/batch=00000001", s"$path/postings/batch=00000002")
       .select("term", "doc_id", "tf", "dl")
-    graft.operators.DedupIndex.appendDir(
-      Seq((n0, d0, Seq("00000001", "00000002"))).toDF("n_docs", "sum_dl", "folds").coalesce(1),
-      s"$path/stats", "00000003")
-    graft.operators.DedupIndex.appendDir(dup, s"$path/postings", "00000003")
+    graft.sources.BatchTable(spark, s"$path/stats").commit("00000003",
+      Seq((n0, d0, Seq("00000001", "00000002"))).toDF("n_docs", "sum_dl", "folds").coalesce(1))
+    graft.sources.BatchTable(spark, s"$path/postings").commit("00000003", dup)
     assert(TextIndex.batches(spark, path).size === 3)
     assert(TextIndex.corpusStats(spark, path) === ((n0, d0)),
       "folded sources must not double corpus totals")
@@ -121,10 +120,9 @@ class TextIndexSpec extends AnyFunSuite {
     TextIndex.append(docs.where(col("doc_id") > 3), "doc_id", "text", path, "00000002")
     // simulate a compact that wrote merged STATS under the next label and
     // crashed before the postings rename: label 00000003 is uncommitted
-    graft.operators.DedupIndex.appendDir(
+    graft.sources.BatchTable(spark, s"$path/stats").commit("00000003",
       Seq((99L, 9999L, Seq("00000001", "00000002")))
-        .toDF("n_docs", "sum_dl", "folds").coalesce(1),
-      s"$path/stats", "00000003")
+        .toDF("n_docs", "sum_dl", "folds").coalesce(1))
     // the retry must not collide with the stale stats partition
     val label = TextIndex.compact(spark, path)
     assert(label === "00000003")
@@ -150,9 +148,8 @@ class TextIndexSpec extends AnyFunSuite {
     // committed → no-op (a second call must not throw or duplicate)
     TextIndex.appendIdempotent(docs.where(col("doc_id") <= 3), "doc_id", "text", path, "00000001")
     // simulate a crash between the two renames: stats landed, postings did not
-    graft.operators.DedupIndex.appendDir(
-      Seq((99L, 999L, Seq.empty[String])).toDF("n_docs", "sum_dl", "folds").coalesce(1),
-      s"$path/stats", "00000002")
+    graft.sources.BatchTable(spark, s"$path/stats").commit("00000002",
+      Seq((99L, 999L, Seq.empty[String])).toDF("n_docs", "sum_dl", "folds").coalesce(1))
     assert(TextIndex.batches(spark, path) === Seq("00000001"),
       "postings are the commit marker; stats alone must not count")
     TextIndex.appendIdempotent(rest, "doc_id", "text", path, "00000002")
@@ -164,9 +161,8 @@ class TextIndexSpec extends AnyFunSuite {
     val path = tmp()
     TextIndex.build(docs, "doc_id", "text", path)
     val (n0, d0) = TextIndex.corpusStats(spark, path)
-    graft.operators.DedupIndex.appendDir(
-      Seq((1000L, 100000L, Seq.empty[String])).toDF("n_docs", "sum_dl", "folds").coalesce(1),
-      s"$path/stats", "00000099")
+    graft.sources.BatchTable(spark, s"$path/stats").commit("00000099",
+      Seq((1000L, 100000L, Seq.empty[String])).toDF("n_docs", "sum_dl", "folds").coalesce(1))
     assert(TextIndex.corpusStats(spark, path) === ((n0, d0)))
     TextIndex.vacuum(spark, path)
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -341,7 +337,7 @@ class TextIndexSpec extends AnyFunSuite {
     // compact's promote-then-delete window: identical duplicated postings
     // must not inflate df or token counts (the distinct() contract)
     val postings = spark.read.parquet(s"$path/postings/batch=00000001")
-    graft.operators.DedupIndex.appendDir(postings, s"$path/postings", "00000009")
+    graft.sources.BatchTable(spark, s"$path/postings").commit("00000009", postings)
     val again = TextIndex.dfReport(spark, path, k = 3).collect()
       .map(r => (r.getAs[String]("term"), r.getAs[Long]("df"), r.getAs[Long]("tokens")))
     assert(again.toSeq == top3.toSeq, "doubled postings moved the report")
