@@ -26,7 +26,11 @@ object GoldPipeline {
     Ingest.entities.foreach { e =>
       val fresh = Ingest.readBronze(spark, bronzeDir, e)
       val existing = CdcMerge.readIfExists(spark, s"$silverDir/${e.name}")
-      val merged = CdcMerge.mergeFullHistory(existing, fresh, e.mergeKeys)
+      // Each partition column is a function of the merge keys (p_ym =
+      // ym(date), date a key), so the merge clusters on the partition
+      // columns and the sink's own repartition is already satisfied: one
+      // exchange per table.
+      val merged = CdcMerge.mergeFullHistory(existing, fresh, e.mergeKeys, e.partitionCols)
       Sinks.writePartitionedAtomic(merged, s"$silverDir/${e.name}", e.partitionCols)
     }
 
@@ -147,25 +151,25 @@ object GoldPipeline {
     * truncate-preserving overwrite (see [[Sinks.writeJdbc]]), so DDL the
     * DBA added out-of-band (indexes, grants) survives the nightly reload.
     *
-    * The SCD2 dims are window-heavy plans that would otherwise recompute
-    * once per JDBC partition writer; persist each table for the duration
-    * of its load and release before the next so peak storage is one table.
+    * Each table's plan runs once per load: [[Sinks.writeJdbc]]
+    * repartitions, so the JDBC writers read one shuffle. The one plan read
+    * twice is dim_account — loaded itself, then the fact's range join
+    * reads it — so it alone is pinned, for the whole load, and released on
+    * every exit path.
     */
   def loadToDwh(
       gold: GoldTables,
       cfg: Sinks.JdbcConfig,
-      numPartitions: Int = 0): Unit =
-    dwhTables(gold).foreach { case (name, df) =>
-      val scope = graft.operators.Caches.newScope()
-      graft.operators.Caches.inScope(scope) { graft.operators.Caches.pin(df) }
+      numPartitions: Int = 0): Unit = {
+    val scope = graft.operators.Caches.newScope()
+    scope.pin(gold.dimAccount)
+    try dwhTables(gold).foreach { case (name, df) =>
       // numPartitions <= 0 → the reference's per-table parallelism
       // ([[DwhPartitions]]); a positive override applies to every table
       // (tests size it to the local session).
       val parts = if (numPartitions > 0) numPartitions else DwhPartitions(name)
-      // blocking: the next table's pin must not start materializing while
-      // this one's blocks are still draining, or two tables are
-      // transiently resident — exactly the peak the per-table scope caps.
-      try Sinks.writeJdbc(df, cfg, name, parts)
-      finally scope.release(blocking = true)
+      Sinks.writeJdbc(df, cfg, name, parts)
     }
+    finally scope.release(blocking = true)
+  }
 }

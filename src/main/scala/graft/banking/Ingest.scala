@@ -12,6 +12,10 @@ import graft.sources.CsvSource
   */
 object Ingest {
 
+  /** One bronze entity's silver contract. Each of `partitionCols` is a
+    * function of `mergeKeys`, which lets the CDC merge cluster on the
+    * partition columns (see [[graft.operators.CdcMerge.mergeFullHistory]]).
+    */
   final case class Entity(
       name: String,
       schema: org.apache.spark.sql.types.StructType,
@@ -48,18 +52,13 @@ object Ingest {
     "person", Schemas.person,
     df => clean(df, Seq("Acc no" -> "acc_no", "Person" -> "person"),
       None, Seq("acc_no", "person"), withYm = false)
-      .select("acc_no", "person")
-      // The reference partitions this table BY acc_no "to prune joins"
-      // (reference: bronze_to_silver.py:148-149,194) — viable for its
-      // 2-account fixture, catastrophic at real cardinality: 20k accounts
-      // = 20k hive directories per write plus 20k-partition discovery on
-      // every read (measured: a 200k-row volume run never finished).
-      // Same pruning intent, bounded layout: a 64-way hash bucket
-      // directory prunes point lookups to 1/64 of the data with a fixed
-      // file count regardless of key cardinality.
-      .withColumn("p_bucket", pmod(xxhash64(col("acc_no")), lit(64))),
+      .select("acc_no", "person"),
+    // Unpartitioned: gold reads the link table whole (the bridge's
+    // distinct pairs), so no read prunes on a partition column, and hive
+    // directories would only multiply the files a write makes and a read
+    // lists.
     mergeKeys = Seq("acc_no", "person"),
-    partitionCols = Seq("p_bucket"))
+    partitionCols = Nil)
 
   val personProfile: Entity = Entity(
     "person_profile", Schemas.personProfile,

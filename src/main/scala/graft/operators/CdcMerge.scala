@@ -14,10 +14,12 @@ import org.apache.spark.sql.functions.col
   * keys cover all columns so the choice is benign. For the general case
   * `mergeDeterministic` pins the winner with an explicit tiebreak order.
   *
-  * Scale note: dropDuplicates is a hash aggregate — partial (map-side)
-  * dedup happens before the single shuffle on the key columns, so the
-  * exchange only carries surviving candidates. At 100 TB prefer writing
-  * silver bucketed by the merge key so repeated merges reuse partitioning.
+  * Scale note: unclustered, dropDuplicates is a hash aggregate — partial
+  * (map-side) dedup happens before the single shuffle on the key columns.
+  * Clustered on the partition columns, the one shuffle is the partitioned
+  * sink's and carries every candidate row; the dedup then runs inside each
+  * partition. At 100 TB prefer writing silver bucketed by the merge key so
+  * repeated merges reuse partitioning.
   */
 object CdcMerge {
 
@@ -44,17 +46,30 @@ object CdcMerge {
     }: _*)
   }
 
+  private def withHistory(existing: Option[DataFrame], fresh: DataFrame): DataFrame =
+    existing.fold(fresh)(old => alignTo(old, fresh).unionByName(fresh))
+
+  /** existing ∪ fresh, one row per key. With `partitionCols` the merge is
+    * clustered on them: the union is hash-partitioned by the partition
+    * columns and deduplicated on `keys ++ partitionCols` inside each
+    * partition, so a sink that repartitions by the same columns
+    * ([[graft.sources.Sinks.writePartitioned]]) finds its distribution
+    * already satisfied — one exchange for merge and write together.
+    *
+    * Invariant: every partition column is a function of the keys (e.g.
+    * `p_ym = ym(date)` with `date` a key). Then equal keys imply equal
+    * partition values, and the answer is the same as deduplicating on
+    * `keys` alone.
+    */
   def mergeFullHistory(
       existing: Option[DataFrame],
       fresh: DataFrame,
-      keys: Seq[String]): DataFrame =
-    existing match {
-      case None => fresh.dropDuplicates(keys)
-      case Some(old) =>
-        alignTo(old, fresh)
-          .unionByName(fresh)
-          .dropDuplicates(keys)
-    }
+      keys: Seq[String],
+      partitionCols: Seq[String] = Nil): DataFrame = {
+    val all = withHistory(existing, fresh)
+    if (partitionCols.isEmpty) all.dropDuplicates(keys)
+    else all.repartition(partitionCols.map(col): _*).dropDuplicates((keys ++ partitionCols).distinct)
+  }
 
   /** Deterministic winner: smallest tiebreak tuple per key via min-struct
     * aggregation (one shuffle, no window sort).
@@ -65,10 +80,7 @@ object CdcMerge {
       keys: Seq[String],
       tieBreak: Seq[String]): DataFrame = {
     import org.apache.spark.sql.functions._
-    val unioned = existing match {
-      case None      => fresh
-      case Some(old) => alignTo(old, fresh).unionByName(fresh)
-    }
+    val unioned = withHistory(existing, fresh)
     val others = fresh.columns.filterNot(keys.contains)
     val packed = struct((tieBreak ++ others.filterNot(tieBreak.contains)).map(col): _*)
     unioned
@@ -86,7 +98,9 @@ object CdcMerge {
     *
     * Contract: a merge key must not move between partition values across
     * deliveries, or the old copy in the untouched partition survives (the
-    * same contract hive-partitioned upserts have everywhere).
+    * same contract hive-partitioned upserts have everywhere). The merge is
+    * clustered on the partition columns ([[mergeFullHistory]]'s
+    * invariant), so a key that moves keeps one copy per partition value.
     */
   def mergeIntoPartitioned(
       silverPath: String,
@@ -115,7 +129,7 @@ object CdcMerge {
         val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
         if (!fs.exists(p)) {
           graft.sources.Sinks.writePartitionsAtomic(
-            observed(mergeFullHistory(None, b, keys)), silverPath, partitionCols)
+            observed(mergeFullHistory(None, b, keys, partitionCols)), silverPath, partitionCols)
         } else {
           // Schema evolution must not go through the scoped path: rewriting
           // only touched partitions would leave partition files with
@@ -131,7 +145,7 @@ object CdcMerge {
           val freshCols = b.schema.fieldNames.map(_.toLowerCase).toSet
           if (freshCols != existCols) {
             val existing = Some(spark.read.option("mergeSchema", "true").parquet(silverPath))
-            val merged = observed(mergeFullHistory(existing, b, keys))
+            val merged = observed(mergeFullHistory(existing, b, keys, partitionCols))
             graft.sources.Sinks.writePartitionedAtomic(merged, silverPath, partitionCols)
           } else {
             // Read the existing table with the FRESH frame's schema
@@ -147,7 +161,7 @@ object CdcMerge {
             }.reduce(_ || _)
             val existingScoped =
               Some(spark.read.schema(b.schema).parquet(silverPath).where(pred))
-            val merged = observed(mergeFullHistory(existingScoped, b, keys))
+            val merged = observed(mergeFullHistory(existingScoped, b, keys, partitionCols))
             graft.sources.Sinks.writePartitionsAtomic(merged, silverPath, partitionCols)
           }
         }

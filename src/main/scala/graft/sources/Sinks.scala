@@ -26,20 +26,29 @@ object Sinks {
     */
   val RowsWrittenMetric = "graft.sink.rows_written"
 
-  private def parquetFileCount(
-      fs: org.apache.hadoop.fs.FileSystem, root: org.apache.hadoop.fs.Path): Long = {
-    if (!fs.exists(root)) 0L
-    else {
-      val it = fs.listFiles(root, true)
-      var n = 0L
-      while (it.hasNext) if (it.next().getPath.getName.endsWith(".parquet")) n += 1
-      n
-    }
+  /** (count, total bytes) of the parquet files under `root`, by a
+    * `listStatus` walk. `listFiles` would build a `LocatedFileStatus` per
+    * file, and on a local filesystem without native Hadoop each one forks
+    * an `ls` for its permissions.
+    */
+  private def parquetFiles(
+      fs: org.apache.hadoop.fs.FileSystem, root: org.apache.hadoop.fs.Path): (Long, Long) = {
+    var n = 0L
+    var bytes = 0L
+    def walk(dir: org.apache.hadoop.fs.Path): Unit =
+      fs.listStatus(dir).foreach { st =>
+        if (st.isDirectory) walk(st.getPath)
+        else if (st.getPath.getName.endsWith(".parquet")) { n += 1; bytes += st.getLen }
+      }
+    if (fs.exists(root)) walk(root)
+    (n, bytes)
   }
 
   def writePartitioned(df: DataFrame, path: String, partitionCols: Seq[String]): Unit = {
     import org.apache.spark.sql.functions.{col, count, lit}
     graft.operators.Metrics.register(df.sparkSession)
+    // On a frame already hash-clustered by partitionCols (the clustered CDC
+    // merge) Spark drops this repartition as satisfied: no second exchange.
     val out =
       if (partitionCols.nonEmpty) df.repartition(partitionCols.map(col): _*) else df
     val observed = out.observe(RowsWrittenMetric, count(lit(1)).as("rows"))
@@ -242,7 +251,7 @@ object Sinks {
           .foreach(old => fs.delete(new Path(old), true))
       } else fs.delete(retired, true)
       graft.operators.Metrics.put("graft.sink.write",
-        "path" -> path, "files" -> parquetFileCount(fs, target))
+        "path" -> path, "files" -> parquetFiles(fs, target)._1)
     } finally {
       // A successful promote renamed staging away; on any failure path the
       // recomputable staging copy must not accrete on disk (streaming
@@ -296,7 +305,7 @@ object Sinks {
           throw new java.io.IOException(s"could not promote $leaf to $dst (rolled back)")
         }
         fs.delete(retired, true)
-        promotedFiles += parquetFileCount(fs, dst)
+        promotedFiles += parquetFiles(fs, dst)._1
       }
       graft.operators.Metrics.put("graft.sink.write",
         "path" -> path, "files" -> promotedFiles)
@@ -531,16 +540,7 @@ object Sinks {
     // ONE pre-walk serves both the before-count metric and the flat-table
     // byte total (compact targets many-small-file tables — the listings
     // are exactly what must not be repeated).
-    val (filesBefore, bytesBefore) = {
-      val it = fs.listFiles(root, true)
-      var n = 0L
-      var sum = 0L
-      while (it.hasNext) {
-        val st = it.next()
-        if (st.getPath.getName.endsWith(".parquet")) { n += 1; sum += st.getLen }
-      }
-      (n, sum)
-    }
+    val (filesBefore, bytesBefore) = parquetFiles(fs, root)
 
     @scala.annotation.tailrec
     def partitionChain(p: Path, acc: Seq[String]): Seq[String] = {
@@ -576,7 +576,7 @@ object Sinks {
     // that last-value metric is really ours: the registry is JVM-global,
     // so a concurrent sink to another path may have overwritten it between
     // our swap and this read. Path mismatch → fall back to a fresh count.
-    val filesAfter = writeMetricFilesFor(path).getOrElse(parquetFileCount(fs, root))
+    val filesAfter = writeMetricFilesFor(path).getOrElse(parquetFiles(fs, root)._1)
     graft.operators.Metrics.put("graft.sink.compact",
       "path" -> path, "files_before" -> filesBefore, "files_after" -> filesAfter)
   }

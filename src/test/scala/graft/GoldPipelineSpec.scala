@@ -2,10 +2,19 @@ package graft
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
+import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
+import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.banking.GoldPipeline
+import graft.banking.{GoldPipeline, Ingest}
+import graft.operators.CdcMerge
 
 /** End-to-end medallion run over the reference's bronze fixtures
   * (FIXTURES.md §1), including the second-run CDC merge that reads and
@@ -28,6 +37,36 @@ class GoldPipelineSpec extends AnyFunSuite {
     put("person_iden.csv",
       "Person,Id,Date\nX,ID1,01-jan-22\nY,ID2,01-feb-22\nZ,ID3,01-feb-22\nZ,ID4,01-apr-22\n")
   }
+
+  /** The query executions `body` ran, in the order the session's listeners
+    * saw them. Delivery is asynchronous but ordered, so waiting for a
+    * marker query run after `body` waits for all of them.
+    */
+  private def executionsOf(body: => Unit): Seq[QueryExecution] = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = seen.add(qe)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = seen.add(qe)
+    }
+    val marker = "__executions_of_marker"
+    spark.listenerManager.register(listener)
+    try {
+      body
+      spark.range(1).toDF(marker).collect()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!seen.asScala.exists(_.analyzed.output.exists(_.name == marker)) &&
+        System.nanoTime() < deadline) Thread.sleep(25L)
+    } finally spark.listenerManager.unregister(listener)
+    seen.asScala.toSeq
+  }
+
+  private def derbyConfig(prefix: String): graft.sources.Sinks.JdbcConfig =
+    graft.sources.Sinks.JdbcConfig(
+      url = s"jdbc:derby:${Files.createTempDirectory(prefix)}/db;create=true",
+      user = "app",
+      password = "",
+      driver = "org.apache.derby.jdbc.EmbeddedDriver",
+      batchSize = 100)
 
   test("bronze→silver is idempotent: the second run merges over its own output") {
     val bronze = Files.createTempDirectory("graft-bronze")
@@ -225,5 +264,106 @@ class GoldPipelineSpec extends AnyFunSuite {
     val fact = ddl("fact_account_snapshot")
     Seq("\"snapshot_date\" DATE", "\"acc_no\" TEXT", "\"account_sk\" BIGINT")
       .foreach(f => assert(fact.contains(f), s"fact DDL missing `$f`:\n$fact"))
+  }
+
+  /** Each parquet write `body` makes under `dir`: its output directory
+    * name and the shuffles its executed plan ran.
+    */
+  private def writeShuffles(dir: java.nio.file.Path)(body: => Unit): Seq[(String, Int)] = {
+    def shufflesIn(p: org.apache.spark.sql.execution.SparkPlan): Int =
+      (if (p.isInstanceOf[ShuffleExchangeExec]) 1 else 0) +
+        graft.operators.Metrics.planChildren(p).map(shufflesIn).sum
+    executionsOf(body).flatMap { qe =>
+      qe.logical match {
+        case c: InsertIntoHadoopFsRelationCommand
+            if c.outputPath.toString.contains(dir.getFileName.toString) =>
+          Seq(c.outputPath.getName -> shufflesIn(qe.executedPlan))
+        case _ => Nil
+      }
+    }
+  }
+
+  test("each silver table's write runs one shuffle, into an empty and an existing silver") {
+    val bronze = Files.createTempDirectory("graft-bronze-plan")
+    val silver = Files.createTempDirectory("graft-silver-plan")
+    writeFixtures(bronze)
+    // the sink's own repartition by the partition columns must be satisfied
+    // by the merge's clustering, not planned as a second exchange
+    Seq("empty", "existing").foreach { state =>
+      val writes = writeShuffles(silver)(
+        GoldPipeline.bronzeToSilver(spark, bronze.toString, silver.toString))
+      assert(writes.size == Ingest.entities.size, s"$state silver: writes seen $writes")
+      writes.foreach { case (out, shuffles) =>
+        assert(shuffles == 1, s"$state silver: $out planned $shuffles shuffles")
+      }
+    }
+    // the partition-scoped merge: into a new table, then into its own output
+    val accounts = Ingest.readBronze(spark, bronze.toString, Ingest.accounts)
+    Seq("new", "existing").foreach { state =>
+      val writes = writeShuffles(silver)(CdcMerge.mergeIntoPartitioned(
+        s"$silver/accounts_scoped", accounts, Ingest.accounts.mergeKeys, Ingest.accounts.partitionCols))
+      assert(writes.size == 1 && writes.head._2 == 1,
+        s"mergeIntoPartitioned into a $state table: $writes")
+    }
+  }
+
+  test("a p_bucket-partitioned person silver migrates to the flat layout on the next merge") {
+    val bronze = Files.createTempDirectory("graft-bronze-legacy")
+    val silver = Files.createTempDirectory("graft-silver-legacy")
+    writeFixtures(bronze)
+    GoldPipeline.bronzeToSilver(spark, bronze.toString, silver.toString)
+    // the person table as the 64-way hash-bucketed layout wrote it
+    val personDir = s"$silver/person"
+    Ingest.readBronze(spark, bronze.toString, Ingest.person)
+      .dropDuplicates("acc_no", "person")
+      .withColumn("p_bucket", pmod(xxhash64(col("acc_no")), lit(64)))
+      .write.mode("overwrite").partitionBy("p_bucket").parquet(personDir)
+    def links(): Set[(String, String)] = spark.read.parquet(personDir)
+      .select("acc_no", "person").collect().map(r => (r.getString(0), r.getString(1))).toSet
+    def bridge(): Set[Seq[Any]] = GoldPipeline.silverToGold(spark, silver.toString)
+      .bridgeAccountPerson.collect().map(_.toSeq).toSet
+    val legacyLinks = links()
+    val legacyBridge = bridge()
+    assert(new java.io.File(personDir).listFiles().exists(_.getName.startsWith("p_bucket=")))
+
+    GoldPipeline.bronzeToSilver(spark, bronze.toString, silver.toString)
+    assert(spark.read.parquet(personDir).columns.toSeq == Seq("acc_no", "person"))
+    assert(!new java.io.File(personDir).listFiles().exists(_.isDirectory),
+      "the migrated person table must have no hive directories")
+    assert(links() == legacyLinks)
+    assert(bridge() == legacyBridge)
+  }
+
+  test("loadToDwh pins dim_account for the fact's range join and releases it on every exit") {
+    val bronze = Files.createTempDirectory("graft-bronze-pin")
+    val silver = Files.createTempDirectory("graft-silver-pin")
+    writeFixtures(bronze)
+    GoldPipeline.bronzeToSilver(spark, bronze.toString, silver.toString)
+    val gold = GoldPipeline.silverToGold(spark, silver.toString)
+    def nothingCached(): Unit = GoldPipeline.dwhTables(gold).foreach { case (name, df) =>
+      assert(df.storageLevel == StorageLevel.NONE, s"$name still cached")
+    }
+
+    val qes = executionsOf(GoldPipeline.loadToDwh(gold, derbyConfig("graft-dwh-pin"), numPartitions = 2))
+    val factRuns = qes.filter(_.optimizedPlan.exists(_.output.exists(_.name == "snapshot_date")))
+    assert(factRuns.nonEmpty, "the fact load's execution must be seen")
+    factRuns.foreach { qe =>
+      val dimFromCache = qe.optimizedPlan.exists {
+        case r: InMemoryRelation => r.output.exists(_.name == "effective_start_date")
+        case _ => false
+      }
+      assert(dimFromCache, s"the fact must read dim_account from the pin:\n${qe.optimizedPlan}")
+    }
+    nothingCached()
+
+    // a fact table the load cannot write into: the load throws after
+    // dim_account is pinned and loaded, and the pin is still released
+    val failing = derbyConfig("graft-dwh-pin-fail")
+    Class.forName(failing.driver)
+    val conn = java.sql.DriverManager.getConnection(failing.url)
+    try conn.createStatement().execute("CREATE TABLE fact_account_snapshot (unrelated INT)")
+    finally conn.close()
+    intercept[Exception](GoldPipeline.loadToDwh(gold, failing, numPartitions = 2))
+    nothingCached()
   }
 }

@@ -64,6 +64,24 @@ class MetricsSpec extends AnyFunSuite {
     assert(spark.read.parquet(path).count() == 6L, "compaction must not change rows")
   }
 
+  test("compact of a partitioned table counts the files under every partition directory") {
+    Metrics.reset()
+    val path = Files.createTempDirectory("metrics-compact-part").toString + "/t"
+    // three increments, each landing one file in each of two partitions
+    (1 to 3).foreach { i =>
+      Seq((i.toLong, "a"), (i + 100L, "b")).toDF("k", "p")
+        .coalesce(1).write.mode("append").partitionBy("p").parquet(path)
+    }
+    graft.sources.Sinks.compact(spark, path)
+    val c = Metrics.get("graft.sink.compact").get
+    assert(c.getAs[String](0) == path)
+    assert(c.getAs[Long](1) == 6L, s"files_before must count both partitions' files, saw ${c.getAs[Long](1)}")
+    assert(c.getAs[Long](2) == 2L, s"one file per partition after compaction, saw ${c.getAs[Long](2)}")
+    val w = Metrics.get("graft.sink.write").get
+    assert(w.getAs[String](0) == path && w.getAs[Long](1) == 2L)
+    assert(spark.read.parquet(path).count() == 6L, "compaction must not change rows")
+  }
+
   test("compact files_after ignores a concurrent sink's write metric (path-scoped)") {
     Metrics.reset()
     val a = Files.createTempDirectory("metrics-compact-a").toString + "/t"
