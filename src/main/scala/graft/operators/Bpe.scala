@@ -23,11 +23,9 @@ import graft.functions.text
   * word-frequency aggregation ([[wordFrequencies]] — map-side combine,
   * vocabulary-scale output); each merge round is one pair-keyed
   * aggregation over the vocabulary plus an O(1)-row argmax action, and
-  * the symbol table is re-persisted per round with the previous round
-  * unpersisted (every `checkpointEvery` rounds a localCheckpoint cuts
-  * logical-plan lineage — on a real cluster, point
-  * `spark.sparkContext.setCheckpointDir` at durable storage and swap in
-  * `checkpoint()` if executor loss during training matters). The number
+  * the symbol table is cut per round with the previous round released
+  * ([[mergeLoop]]; executor loss mid-training is what
+  * [[trainMergesCheckpointed]]'s durable state is for). The number
   * of Spark jobs is O(numMerges) by construction — that is BPE's
   * sequential nature, not an implementation artifact; each job is a
   * vocabulary-scale (not corpus-scale) shuffle. [[encode]] is a pure
@@ -131,27 +129,14 @@ object Bpe {
     * in training order — the model IS this O(numMerges) list, so it lives
     * on the driver by design (the [[Similarity]] centroid precedent).
     * Rounds stop early when no pair reaches `minPairCount`.
-    *
-    * Memory note: `unpersist` releases the persist()-ed rounds eagerly,
-    * but a localCheckpoint's backing blocks are only reclaimed when the
-    * ContextCleaner GCs the orphaned RDD, so a long driver session holds
-    * ~numMerges/checkpointEvery superseded snapshots. The arithmetic at a
-    * production 10⁴-merge run: a 10⁶-word vocabulary table is tens of MB;
-    * at the old default of 10 that was ~10³ orphans (tens of GB of
-    * MEMORY_AND_DISK blocks racing the ContextCleaner), at 100 it is
-    * ~10² (single-digit GB, eviction-safe) while lineage depth between
-    * cuts stays a cheap 100 narrow projections. Raise further for tighter
-    * drivers; the live working set is always the ONE current table.
     */
   def trainMerges(
       docs: DataFrame,
       textCol: String,
       numMerges: Int,
-      minPairCount: Long = 1L,
-      checkpointEvery: Int = 100): Seq[(String, String)] =
-    trainMergesCore(
-      initialSymbolTable(wordFrequencies(docs, textCol)),
-      numMerges, minPairCount, checkpointEvery)
+      minPairCount: Long = 1L): Seq[(String, String)] =
+    mergeLoop(initialSymbolTable(wordFrequencies(docs, textCol)), Vector.empty,
+      numMerges, minPairCount)((_, _, _) => ())
 
   /** [[trainMerges]] over the byte alphabet: merges are strings of
     * Latin-1 byte chars. Pair with [[encodeFastBytes]]/[[encodeBytes]];
@@ -161,26 +146,36 @@ object Bpe {
       docs: DataFrame,
       textCol: String,
       numMerges: Int,
-      minPairCount: Long = 1L,
-      checkpointEvery: Int = 100): Seq[(String, String)] =
-    trainMergesCore(
-      initialSymbolTable(wordFrequenciesBytes(docs, textCol)),
-      numMerges, minPairCount, checkpointEvery)
+      minPairCount: Long = 1L): Seq[(String, String)] =
+    mergeLoop(initialSymbolTable(wordFrequenciesBytes(docs, textCol)), Vector.empty,
+      numMerges, minPairCount)((_, _, _) => ())
 
-  private def trainMergesCore(
+  /** The one BPE merge loop, from symbol table `initial` with `stored`
+    * merges already applied, until `numMerges` merges or no pair reaches
+    * `minPairCount`. A round is: the argmax pair (highest weighted
+    * count, ties to the lexicographically smaller (a, b)), one greedy
+    * merge projection of the table, an [[Iterate.cut]] of the result
+    * and an [[Iterate.release]] of the previous table — only ONE table
+    * is live, and every round plans over a constant-size LogicalRDD. (A
+    * persisted table would instead carry its predecessor's cached plan,
+    * and an adaptive cached plan renders its child twice — initial and
+    * final plan — so the plan string each round's jobs build would
+    * double per round.) `onRound(merges, table, end)` runs after every
+    * round with `end = false` and once more, with `end = true`, before
+    * the last table is released. Returns every merge, `stored` first.
+    */
+  private def mergeLoop(
       initial: DataFrame,
+      stored: Vector[(String, String)],
       numMerges: Int,
-      minPairCount: Long,
-      checkpointEvery: Int): Seq[(String, String)] = {
+      minPairCount: Long)(
+      onRound: (Vector[(String, String)], DataFrame, Boolean) => Unit): Vector[(String, String)] = {
     require(numMerges >= 1, "numMerges must be at least 1")
     require(minPairCount >= 1L, "minPairCount must be at least 1")
-    require(checkpointEvery >= 1, "checkpointEvery must be at least 1")
-    var table = initial.persist()
-    table.count()
-    val merges = Seq.newBuilder[(String, String)]
-    var round = 0
+    var table = Iterate.cut(initial)
+    var merges = stored
     var exhausted = false
-    while (round < numMerges && !exhausted) {
+    while (merges.size < numMerges && !exhausted) {
       val top = pairCounts(table)
         .where(col("pair_wf") >= minPairCount)
         .orderBy(col("pair_wf").desc, col("a").asc, col("b").asc)
@@ -189,18 +184,16 @@ object Bpe {
       if (top.isEmpty) exhausted = true
       else {
         val (a, b) = (top(0).getAs[String]("a"), top(0).getAs[String]("b"))
-        merges += ((a, b))
+        merges = merges :+ ((a, b))
         val prev = table
-        val merged = prev.select(mergeOnce(col("syms"), a, b).as("syms"), col("wf"))
-        table =
-          if ((round + 1) % checkpointEvery == 0) merged.localCheckpoint(true)
-          else { val t = merged.persist(); t.count(); t }
-        prev.unpersist()
-        round += 1
+        table = Iterate.cut(prev.select(mergeOnce(col("syms"), a, b).as("syms"), col("wf")))
+        Iterate.release(prev)
+        onRound(merges, table, false)
       }
     }
-    table.unpersist()
-    merges.result()
+    onRound(merges, table, true)
+    Iterate.release(table)
+    merges
   }
 
   // --- checkpointed (resumable) training -----------------------------
@@ -221,9 +214,7 @@ object Bpe {
     * `checkpointEvery` rounds, vocabulary-scale; crash redo is at most
     * `checkpointEvery` rounds of the JVM replay (not Spark jobs). If the
     * stored model already has ≥ `numMerges` merges, its prefix is
-    * returned without touching the corpus. Default 100 for the same
-    * driver-memory arithmetic as [[trainMerges]] — 10 at 10⁴ merges
-    * meant ~10³ orphaned localCheckpoint snapshots in one session.
+    * returned without touching the corpus.
     */
   def trainMergesCheckpointed(
       docs: DataFrame,
@@ -285,38 +276,14 @@ object Bpe {
         (replay(initialSymbolTable(wordFrequencies(docs, textCol)), stored), false)
     if (exhausted0) return stored
 
-    var table = startTable.persist()
-    table.count()
-    var done: Vector[(String, String)] = stored
-    var round = done.size
-    var exhausted = false
-    def checkpoint(): Unit = {
-      writeMerges(done)
-      writeTable(table, if (exhausted) -(done.size + 1L) else done.size.toLong)
-    }
-    while (round < numMerges && !exhausted) {
-      val top = pairCounts(table)
-        .where(col("pair_wf") >= minPairCount)
-        .orderBy(col("pair_wf").desc, col("a").asc, col("b").asc)
-        .limit(1)
-        .collect()
-      if (top.isEmpty) exhausted = true
-      else {
-        val (a, b) = (top(0).getAs[String]("a"), top(0).getAs[String]("b"))
-        done = done :+ ((a, b))
-        val prev = table
-        val next = prev.select(mergeOnce(col("syms"), a, b).as("syms"), col("wf"))
-        table =
-          if ((round + 1) % checkpointEvery == 0) next.localCheckpoint(true)
-          else { val t = next.persist(); t.count(); t }
-        prev.unpersist()
-        round += 1
-        if (round % checkpointEvery == 0) checkpoint()
+    mergeLoop(startTable, stored, numMerges, minPairCount) { (merges, table, end) =>
+      if (end || merges.size % checkpointEvery == 0) {
+        // the loop ends short of numMerges only when no pair qualifies
+        val exhausted = end && merges.size < numMerges
+        writeMerges(merges)
+        writeTable(table, if (exhausted) -(merges.size + 1L) else merges.size.toLong)
       }
     }
-    checkpoint()
-    table.unpersist()
-    done
   }
 
   /** Tokenize `textCol` with a trained merge list: one subword-array

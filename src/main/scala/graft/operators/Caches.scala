@@ -25,8 +25,7 @@ object Caches {
     private[Caches] def add(df: DataFrame): Unit = synchronized { frames += df }
 
     /** Persist `df` and track it in THIS scope, regardless of the calling
-      * thread's active scope — the explicit-attribution face for operators
-      * that accept a scope parameter (e.g. [[Graphs.pageRankInt]]).
+      * thread's active scope.
       */
     def pin(df: DataFrame): DataFrame = { add(df); df.persist() }
 
@@ -63,6 +62,16 @@ object Caches {
     current.set(scope)
     try body
     finally current.set(prev)
+  }
+
+  /** Run `body` with its pins in a fresh scope that is released (blocking)
+    * on every exit — for operators that consume their own pinned frames
+    * and return driver-side values, so no pin outlives the call.
+    */
+  def scoped[T](body: => T): T = {
+    val scope = newScope()
+    try inScope(scope)(body)
+    finally scope.release(blocking = true)
   }
 
   /** Persist `df` and track it in the calling thread's active scope. */

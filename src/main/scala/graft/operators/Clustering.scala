@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ColumnBridge
 
-import graft.expressions.{NearestCentroidsExpr, VectorSumAgg}
+import graft.expressions.NearestCentroidsExpr
 
 /** INTEGER Lloyd training (k-means) over embedding columns — the
   * oracle-gateable twin of [[Similarity.trainIvfFull]] (the production
@@ -20,7 +20,7 @@ import graft.expressions.{NearestCentroidsExpr, VectorSumAgg}
   * Determinism construction:
   *   - vectors quantize to integer grids (`floor(x·scale + 0.5)`), held
   *     as integer-VALUED doubles: IEEE addition on integers ≤ 2⁵³ is
-  *     exact and order-independent, so [[VectorSumAgg]]'s partial/final
+  *     exact and order-independent, so [[graft.expressions.VectorSumAgg]]'s partial/final
   *     tree yields identical sums under any aggregation order;
   *   - initial centroids are the `k` smallest-id vectors (ids are unique
   *     by contract), not a seeded sample — trivially replayable;
@@ -32,7 +32,7 @@ import graft.expressions.{NearestCentroidsExpr, VectorSumAgg}
   *   - a cluster that loses all members keeps its previous centroid.
   *
   * Scale shape: training never shuffles the corpus. Each round is ONE
-  * scan of the pinned quantized frame + a k-group [[VectorSumAgg]]
+  * scan of the pinned quantized frame + a k-group [[graft.expressions.VectorSumAgg]]
   * aggregate (k·dim partial state per task, map-side combined) whose k
   * result rows collect to the driver; assignment is a stateless
   * projection against centroid CONSTANTS baked into the expression (they
@@ -44,16 +44,16 @@ import graft.expressions.{NearestCentroidsExpr, VectorSumAgg}
 object Clustering {
 
   /** floor(x·scale + 0.5) per component, kept as exact integer-valued
-    * DOUBLES — the one array representation both [[VectorSumAgg]] and
+    * DOUBLES — the one array representation both [[graft.expressions.VectorSumAgg]] and
     * [[NearestCentroidsExpr]] accept.
     */
   private def quantInt(c: Column, scale: Int): Column =
     transform(c, x => floor(x.cast("double") * scale + lit(0.5)).cast("double"))
 
-  /** `iters` Lloyd rounds from the k smallest-id seeds; returns the
-    * trained centroids as k rows of integer components (row i = centroid
-    * i). Consumes its own pin — the quantized corpus is released before
-    * returning.
+  /** `iters` [[Similarity.lloydRound]]s from the k smallest-id seeds,
+    * with truncating long means; returns the trained centroids as k rows
+    * of integer components (row i = centroid i). Consumes its own pin —
+    * the quantized corpus is released before returning.
     */
   def trainKmeansInt(
       emb: DataFrame,
@@ -64,47 +64,25 @@ object Clustering {
       scale: Int = 1000): IndexedSeq[Array[Long]] = {
     require(k >= 1, "k must be at least 1")
     require(iters >= 0, "iters must be non-negative")
-    val scope = Caches.newScope()
-    try {
-      val q = scope.pin(
+    Caches.scoped {
+      val q = Caches.pin(
         emb.select(col(idCol).as("__id"), quantInt(col(vecCol), scale).as("__qv")))
       val seeds = q.orderBy("__id").limit(k).collect()
       require(seeds.length == k, s"need at least k=$k vectors, got ${seeds.length}")
-      var cents: IndexedSeq[Array[Long]] = seeds.map { r =>
+      var cents: Array[Array[Double]] = seeds.map { r =>
         require(!r.isNullAt(1),
           s"trainKmeansInt: NULL $vecCol on seed id ${r.get(0)} — filter or impute upstream")
-        r.getSeq[Double](1).map(_.toLong).toArray
-      }.toIndexedSeq
+        r.getSeq[Double](1).map(_.toLong.toDouble).toArray
+      }
       val dim = cents.head.length
       require(cents.forall(_.length == dim), "seed vectors must share one dimension")
-      for (_ <- 1 to iters) {
-        val cellCol = ColumnBridge.column(NearestCentroidsExpr(
-          ColumnBridge.eagerExpression(col("__qv")),
-          cents.flatMap(_.map(_.toDouble)), dim, 1)).getItem(0)
-        val sumCol = ColumnBridge.column(
-          VectorSumAgg(ColumnBridge.eagerExpression(col("__qv"))).toAggregateExpression())
-        val stats = q.groupBy(cellCol.as("__c"))
-          .agg(sumCol.as("__s"))
-          .collect()
-          .map { r =>
-            // a NULL cell key means a NULL vector slipped into the corpus
-            // (NearestCentroidsExpr maps NULL → NULL); name the cause
-            // instead of NPE-ing on getInt
-            require(!r.isNullAt(0),
-              s"trainKmeansInt: NULL $vecCol rows in the corpus — filter or impute upstream")
-            r.getInt(0) -> r.getStruct(1)
-          }.toMap
-        cents = cents.indices.map { c =>
-          stats.get(c).fold(cents(c)) { s =>
-            val n = s.getLong(0)
-            // sums are integer-valued doubles, exact below 2^53; divide
-            // as longs so "truncate toward zero" is unambiguous
-            s.getSeq[Double](1).map(x => x.toLong / n).toArray
-          }
-        }
-      }
-      cents
-    } finally scope.release(blocking = true)
+      // sums are integer-valued doubles, exact below 2^53; divide as longs
+      // so "truncate toward zero" is unambiguous
+      for (_ <- 1 to iters)
+        cents = Similarity.lloydRound(q, "__qv", cents, vecCol)(
+          (sums, n) => sums.map(x => (x.toLong / n).toDouble))
+      cents.map(_.map(_.toLong)).toIndexedSeq
+    }
   }
 
   /** Assign every vector to its nearest trained centroid; output

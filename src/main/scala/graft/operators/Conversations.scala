@@ -301,27 +301,24 @@ object Conversations {
     * branch would re-run the upstream parse); all key-shaped
     * exchanges hash by conversation, and all arithmetic is integer,
     * so the cut replays exactly on any engine and partitioning. Pin
-    * lifetime: pass `scope` and release after consuming the result
-    * (the pageRankInt convention).
+    * lifetime: the [[Graphs.pageRankInt]] convention.
     */
   def truncateToBudget(
       turns: DataFrame,
       idCol: String,
-      maxTokens: Long,
-      scope: Option[Caches.Scope] = None): DataFrame = {
+      maxTokens: Long): DataFrame = {
     require(maxTokens >= 1, s"maxTokens must be positive, got $maxTokens")
     // loud on collision (the ingest-family convention): carried caller
     // columns must not silently clobber — or be clobbered by — the
     // internal working columns
     for (c <- Seq("__tok", "__sfx", "__stok", "__first_user"))
       require(!turns.columns.contains(c), s"input already has a '$c' column")
-    def pin(df: DataFrame): DataFrame = scope.fold(Caches.pin(df))(_.pin(df))
     val tok = coalesce(size(text.tokens(col("content"))), lit(0)).cast("long")
     // "unchanged schema" is the contract: carry EVERY caller column
     // through (e.g. splitReasoning's visible/reasoning), not a fixed
     // 4-column projection.
     val origCols = turns.columns.toSeq
-    val tt = pin(turns
+    val tt = Caches.pin(turns
       .where(col("turn_idx").isNotNull)
       .select(origCols.map(col) :+ tok.as("__tok"): _*))
     val isSys = col("turn_idx") === 0 && col("role") <=> lit("system")
@@ -332,7 +329,7 @@ object Conversations {
       .partitionBy(col(idCol))
       .orderBy(col("turn_idx").desc)
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
-    val kept = pin(tt.where(!isSys)
+    val kept = Caches.pin(tt.where(!isSys)
       .withColumn("__sfx", sum(col("__tok")).over(w))
       .join(sysTok, Seq(idCol), "left")
       .where(col("__sfx") <= lit(maxTokens) - coalesce(col("__stok"), lit(0L))))
@@ -363,18 +360,13 @@ object Conversations {
     * (three consumers: the audit, the render, the span aggregation —
     * unpinned, each would re-run the JSON parse over the scan); the
     * three branches are hash aggregations by conversation joined on
-    * the id. Pin lifetime: pass `scope` and release after consuming
-    * the result (the pageRankInt convention).
+    * the id. Pin lifetime: the [[Graphs.pageRankInt]] convention.
     */
   def sftDataset(
       chats: DataFrame,
       idCol: String,
-      jsonCol: String,
-      scope: Option[Caches.Scope] = None): DataFrame = {
-    val turns = {
-      val t = parseTurns(chats, idCol, jsonCol)
-      scope.fold(Caches.pin(t))(_.pin(t))
-    }
+      jsonCol: String): DataFrame = {
+    val turns = Caches.pin(parseTurns(chats, idCol, jsonCol))
     val valid = validate(turns, idCol).where(col("valid")).select(col(idCol))
     val rendered = render(turns, idCol)
     val spanAgg = lossMaskSpans(turns, idCol)

@@ -110,10 +110,9 @@ object Decontaminate {
     * gram-keyed self-join whose per-gram output is ≤ |groups|² rows —
     * bounded by contract (groups are sources/slices, a small set), so
     * even a gram present everywhere cannot blow up. The inventory is
-    * pinned: totals and the pair join both read it — pass `scope` and
-    * release after consuming the result (the [[Graphs.pageRankInt]]
-    * lifetime convention; the returned frame references the pin lazily,
-    * so this operator cannot release it before returning). String grams
+    * pinned: totals and the pair join both read it, with the
+    * [[Graphs.pageRankInt]] pin lifetime (the returned frame references
+    * the pin lazily, so this operator cannot release it). String grams
     * keep the audit oracle-exact; swap in
     * [[graft.expressions.ShingleHashesExpr]] 64-bit grams at production
     * scale (the [[overlap]] note — collisions are negligible and the
@@ -129,18 +128,16 @@ object Decontaminate {
       docs: DataFrame,
       textCol: String,
       groupCol: String,
-      n: Int = 8,
-      scope: Option[Caches.Scope] = None): DataFrame = {
+      n: Int = 8): DataFrame = {
     require(n > 0, "n-gram size must be positive")
-    val inventory = Partitioning.spread(docs)
+    val grams = Caches.pin(Partitioning.spread(docs)
       .where(col(textCol).isNotNull)
       .select(
         col(groupCol).as("grp"),
         explode(array_distinct(graft.functions.text.shingles(lower(col(textCol)), n)))
           .as("gram"))
       .where(col("gram") =!= "")
-      .distinct()
-    val grams = scope.fold(Caches.pin(inventory))(_.pin(inventory))
+      .distinct())
     val totals = grams.groupBy("grp").agg(count(lit(1)).as("n_grams"))
     val pairs = grams.select(col("grp").as("group_a"), col("gram"))
       .join(grams.select(col("grp").as("group_b"), col("gram")), Seq("gram"))

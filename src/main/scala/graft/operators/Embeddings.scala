@@ -117,8 +117,8 @@ object Embeddings {
     * sort-fallback threshold (default 128) — the silent perf cliff a
     * single all-cells pass would hit exactly in the large-d regime.
     * When more than one pass will run, the quantized projection is
-    * pinned automatically (memory-and-disk, released with `scope` or
-    * at `Caches.release()`), so quantization is paid once and repeat
+    * pinned automatically (memory-and-disk, the [[Graphs.pageRankInt]]
+    * pin lifetime), so quantization is paid once and repeat
     * passes re-read cached columnar batches instead of re-deriving
     * them from the source scan.
     *
@@ -134,12 +134,10 @@ object Embeddings {
       vecCol: String,
       scale: Int = 64,
       blockSize: Int = 1024,
-      maxCellsPerPass: Int = 16,
-      scope: Option[Caches.Scope] = None): DataFrame = {
+      maxCellsPerPass: Int = 16): DataFrame = {
     require(scale > 0, "quantization scale must be positive")
     require(blockSize >= 1, s"blockSize must be positive, got $blockSize")
     require(maxCellsPerPass >= 1, s"maxCellsPerPass must be positive, got $maxCellsPerPass")
-    def pinned(df: DataFrame): DataFrame = scope.fold(Caches.pin(df))(_.pin(df))
     val spark = emb.sparkSession
     val clean = emb.where(cleanVec(col(vecCol)))
     val probe = clean.select(size(col(vecCol)).as("d")).limit(1).collect()
@@ -180,7 +178,7 @@ object Embeddings {
     val nCells = nBlocks * (nBlocks + 1) / 2 + nBlocks
     val nPasses = (nCells + maxCellsPerPass - 1) / maxCellsPerPass
     val qFrameRaw = clean.select(q.as("__q"))
-    val qFrame = if (nPasses > 1) pinned(qFrameRaw) else qFrameRaw
+    val qFrame = if (nPasses > 1) Caches.pin(qFrameRaw) else qFrameRaw
     val crossCol = ColumnBridge.column(
       graft.expressions.CrossSumAgg(
         ColumnBridge.eagerExpression(col("a")),
@@ -198,7 +196,7 @@ object Embeddings {
     // mirror, count) — pinned so the pass scans run once. Pin lifetime:
     // pass `scope` and release after consuming (the pageRankInt
     // convention); the default unscoped pin drains at Caches.release().
-    val agged = pinned(aggedParts.reduce(_ unionAll _))
+    val agged = Caches.pin(aggedParts.reduce(_ unionAll _))
     val nj = when(col("bj") === -1, lit(1))
       .otherwise(least(lit(bs), lit(d) - col("bj") * bs))
     val ex = agged.select(

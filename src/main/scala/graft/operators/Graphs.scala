@@ -37,20 +37,21 @@ object Graphs {
     * the minimal two exchanges a message round needs; ranks are a
     * 2-column frame, the narrowest possible shuffle payload. (The pin is
     * load-bearing: the rounds reference the prep frame `iters` times and
-    * exchange reuse does NOT collapse them — measured round 12, 0
-    * ReusedExchange nodes in the unpinned 5-round plan, i.e. the
-    * edges+outdeg join would recompute per round.) Iterations are a
-    * driver-side loop over lazy plans — nothing materializes until the
-    * caller acts, and `iters` is small by contract (PageRank converges
-    * in tens of rounds; the plan stays linear in `iters`).
+    * exchange reuse does NOT collapse them — 0 ReusedExchange nodes in
+    * the unpinned 5-round plan, i.e. the edges+outdeg join would
+    * recompute per round.) Rounds are lazy plans; every
+    * [[RankCutEvery]]th round except the last takes an [[Iterate.cut]],
+    * so a run of up to that many rounds stays fully lazy and a longer
+    * one keeps its plan bounded at that many rounds' joins.
     *
     * Pin lifetime: the returned frame references the pinned prep table
     * LAZILY, so this operator cannot release it before returning
     * (unlike [[Packing.writeEpochShards]], which consumes its own
-    * frames). Pass `scope` and call `scope.release()` after fully
-    * consuming the result — the pattern for long-lived sessions that
-    * rank repeatedly; without it the pin lands in the calling thread's
-    * active scope and lives until [[Caches.release]] drains it.
+    * frames). Call it under [[Caches.inScope]] and release that scope
+    * after fully consuming the result — the pattern for long-lived
+    * sessions that rank repeatedly; otherwise the pin lands in the
+    * calling thread's active scope and lives until [[Caches.release]]
+    * drains it.
     */
   def pageRankInt(
       edges: DataFrame,
@@ -59,68 +60,18 @@ object Graphs {
       nodes: DataFrame,
       idCol: String,
       iters: Int,
-      scale: Long = 1000000L,
-      scope: Option[Caches.Scope] = None): DataFrame =
-    rankRounds(edges, srcCol, dstCol, nodes, idCol, iters, scale, scope,
-      checkpointEvery = Int.MaxValue)
-
-  /** [[pageRankInt]] for CONVERGENCE-SCALE runs (tens to hundreds of
-    * rounds): every `checkpointEvery` rounds the rank frame takes an
-    * eager localCheckpoint, so the logical plan stays bounded at
-    * ~checkpointEvery rounds' worth of joins instead of growing linearly
-    * in `iters` (at 100+ rounds the linear plan makes the OPTIMIZER the
-    * bottleneck — the [[connectedComponents]] lesson, where lineage
-    * growth OOMed the analyzer). The arithmetic is the SAME code path as
-    * [[pageRankInt]], so the two faces are bit-for-bit equal at any
-    * iteration count by construction.
-    *
-    * Trade-offs vs the linear face: checkpoint rounds EXECUTE during
-    * this call (the operator is no longer fully lazy), and each
-    * checkpoint materializes the 2-column rank frame to executor-local
-    * storage — the narrowest frame in the job, so the cost is one extra
-    * narrow job per `checkpointEvery` rounds. Superseded checkpoints'
-    * blocks are reclaimed by the ContextCleaner once unreferenced.
-    * The prep pin contract is unchanged: pass `scope` and release after
-    * consuming the result.
-    */
-  def pageRankIntCheckpointed(
-      edges: DataFrame,
-      srcCol: String,
-      dstCol: String,
-      nodes: DataFrame,
-      idCol: String,
-      iters: Int,
-      scale: Long = 1000000L,
-      checkpointEvery: Int = 10,
-      scope: Option[Caches.Scope] = None): DataFrame = {
-    require(checkpointEvery >= 1, "checkpointEvery must be at least 1")
-    rankRounds(edges, srcCol, dstCol, nodes, idCol, iters, scale, scope,
-      checkpointEvery)
-  }
-
-  private def rankRounds(
-      edges: DataFrame,
-      srcCol: String,
-      dstCol: String,
-      nodes: DataFrame,
-      idCol: String,
-      iters: Int,
-      scale: Long,
-      scope: Option[Caches.Scope],
-      checkpointEvery: Int): DataFrame = {
+      scale: Long = 1000000L): DataFrame = {
     require(iters >= 1, "pageRankInt needs at least one iteration")
     require(scale >= 1000L, "scale under 1000 makes integer damping too lossy")
-    val prep = edges.select(col(srcCol).as("__src"), col(dstCol).as("__dst"))
+    val e = Caches.pin(edges.select(col(srcCol).as("__src"), col(dstCol).as("__dst"))
       .join(
         edges.groupBy(col(srcCol).as("__osrc")).agg(count(lit(1)).as("__outdeg")),
         col("__src") === col("__osrc"))
-      .select("__src", "__dst", "__outdeg")
-    val e = scope.fold(Caches.pin(prep))(_.pin(prep))
+      .select("__src", "__dst", "__outdeg"))
     // pinned like `e`: every round's rebase join references the node list,
     // and without the pin each round re-plans and re-scans the nodes
-    // source (iters + 1 scans measured in the r20 probe — §1.4/§5)
-    val idsPrep = nodes.select(col(idCol).as("__id"))
-    val ids = scope.fold(Caches.pin(idsPrep))(_.pin(idsPrep))
+    // source (iters + 1 scans)
+    val ids = Caches.pin(nodes.select(col(idCol).as("__id")))
     var rank = ids.select(col("__id"), lit(scale).as("__rank"))
     for (round <- 1 to iters) {
       // `div`, not `/`: Column./ is DOUBLE division, which stops being
@@ -137,13 +88,13 @@ object Graphs {
           col("__id"),
           (lit(15L * scale / 100L) +
             expr(s"(85 * coalesce(__agg, 0L)) div 100")).as("__rank"))
-      // the FINAL round never checkpoints: the caller gets a lazy tail
-      // (at most checkpointEvery-1 rounds deep) exactly like pageRankInt
-      if (round % checkpointEvery == 0 && round < iters)
-        rank = rank.localCheckpoint(true)
+      if (round % RankCutEvery == 0 && round < iters) rank = Iterate.cut(rank)
     }
     rank.select(col("__id").as(idCol), col("__rank").as("rank"))
   }
+
+  /** Rounds between [[pageRankInt]]'s lineage cuts. */
+  private val RankCutEvery = 10
 
   /** Connected components over a DataFrame edge list by alternating
     * LARGE-STAR / SMALL-STAR rounds (Kiveris et al., "Connected
@@ -172,20 +123,14 @@ object Graphs {
     * (ONE fused aggregation probe on the pinned round result — see the
     * loop body for why the no-chain probe alone is one round too eager).
     *
-    * Iteration state: every round ends in an EAGER localCheckpoint, not
-    * a persist. A star round references its input ~12 times (symmetric
-    * union, the min-aggregate, and the re-point join each replay the
-    * subtree), so lineage grows 12× PER ROUND — persist dedups execution
-    * but not the analyzed plan, and by round 5 the plan tops 10⁵ nodes
-    * (measured: the AQE explain-string alone OOMed the test JVM on a
-    * 2000-node path). Checkpointing each round keeps every plan ~a dozen
-    * nodes over a LogicalRDD; superseded rounds' blocks are reclaimed by
-    * the ContextCleaner once unreferenced (the [[Bpe]] caveat — bounded
-    * here by `maxIters` 2-column frames, each at most edge-sized). The
-    * result therefore needs NO cache-manager pin and survives a global
-    * [[Caches.release]]. Throws if `maxIters` rounds pass without
-    * convergence — a silently-partial clustering would merge nothing
-    * visibly wrong and dedup would quietly keep duplicates.
+    * Iteration state: every round ends in an [[Iterate.cut]] (a star
+    * round reads its input ~12 times — symmetric union, min-aggregate,
+    * re-point join), at most `maxIters` 2-column frames, each at most
+    * edge-sized. The result therefore needs NO cache-manager pin and
+    * survives a global [[Caches.release]]. Throws if `maxIters` rounds
+    * pass without convergence ([[Iterate.fixpoint]]) — a silently-
+    * partial clustering would merge nothing visibly wrong and dedup
+    * would quietly keep duplicates.
     */
   def connectedComponents(
       edges: DataFrame,
@@ -224,20 +169,18 @@ object Graphs {
         .distinct()
     }
 
-    var e = edges
+    val start = edges
       .select(col(srcCol).cast("long").as("__u"), col(dstCol).cast("long").as("__v"))
       .where(col("__u").isNotNull && col("__v").isNotNull && col("__u") =!= col("__v"))
       .distinct()
-    var converged = false
-    var round = 0
-    while (round < maxIters && !converged) {
-      val next = smallStar(largeStar(e)).localCheckpoint(true)
+    val e = Iterate.fixpoint(start, maxIters,
+      s"connectedComponents did not converge in $maxIters rounds " +
+        "(bound is O(log² n); raise maxIters only after checking the input)") { prev =>
+      val next = Iterate.cut(smallStar(largeStar(prev)))
       // Fixpoint ⇔ the relation is a PROPER star forest — two conditions,
-      // probed in ONE aggregation job over the freshly checkpointed 2-col
-      // frame (fused from a groupBy probe + a self-semi-join probe, which
-      // cost a separate job each; the fused shape is also the better one
-      // at scale — a map-side-combinable groupBy over 2|E| role rows
-      // instead of an |E|×|E| join):
+      // probed in ONE aggregation job over the freshly cut 2-col frame (a
+      // map-side-combinable groupBy over 2|E| role rows, not an |E|×|E|
+      // self-join):
       //   1. every child has ONE parent — a node still listed under two
       //      roots ({(v,r1),(v,r2)}) has no chain yet is mid-merge, so
       //      the no-chain probe alone would declare victory one round
@@ -250,23 +193,64 @@ object Graphs {
       val roles = next
         .select(col("__u").as("__n"), col("__v").as("__p"))
         .union(next.select(col("__v").as("__n"), lit(null).cast("long").as("__p")))
-      converged = roles.groupBy("__n")
+      val converged = roles.groupBy("__n")
         .agg(min("__p").as("__p1"), max("__p").as("__p2"),
           count(col("__p")).as("__asChild"), count(lit(1)).as("__rows"))
         .where(col("__p1") =!= col("__p2") ||
           (col("__asChild") > 0L && col("__rows") > col("__asChild")))
         .isEmpty
-      e = next
-      round += 1
+      (next, converged)
     }
-    if (!converged)
-      throw new IllegalStateException(
-        s"connectedComponents did not converge in $maxIters rounds " +
-          "(bound is O(log² n); raise maxIters only after checking the input)")
     // the star forest lists every non-root once; roots re-enter as their
     // own component so the output covers every incident node
     e.select(col("__u").as("id"), col("__v").as("component"))
       .union(e.select(col("__v"), col("__v")).distinct())
+  }
+
+  /** The k-CORE of the undirected simple graph induced by `edges`: the
+    * maximal subgraph in which every vertex keeps degree ≥ k, found by
+    * the standard peeling fixpoint (drop all sub-k vertices, recompute
+    * degrees, repeat). Output: `(id, core_degree)` for every core
+    * vertex — the degree WITHIN the core, the coreness-style robustness
+    * signal (a link farm's mutual-citation cluster survives high-k
+    * peels that organic link neighborhoods do not).
+    *
+    * Convergence is exact (edge count reaches a fixpoint) and
+    * non-convergence within `maxRounds` throws rather than returning a
+    * half-peeled subgraph. Peeling is IDEMPOTENT past the fixpoint —
+    * extra rounds are no-ops — which is what lets an external engine
+    * replay it as a FIXED unroll (q149) while this face stops early.
+    *
+    * Scale contract: each round is one degree aggregation + two
+    * semi-joins on the shrinking edge set, ending in an [[Iterate.cut]];
+    * rounds needed equal the longest peel chain, typically a handful on
+    * web graphs.
+    */
+  def kCore(
+      edges: DataFrame, srcCol: String, dstCol: String,
+      k: Int, maxRounds: Int = 20): DataFrame = {
+    require(k >= 1, "k must be positive")
+    require(maxRounds >= 1, "maxRounds must be positive")
+    val start = Iterate.cut(edges
+      .select(col(srcCol).cast("long").as("u"), col(dstCol).cast("long").as("v"))
+      .filter(col("u").isNotNull && col("v").isNotNull && col("u") =!= col("v"))
+      .select(least(col("u"), col("v")).as("a"), greatest(col("u"), col("v")).as("b"))
+      .distinct())
+    val (e, _) = Iterate.fixpoint((start, start.count()), maxRounds,
+      s"kCore(k=$k) still peeling after $maxRounds rounds — raise maxRounds") {
+      case (prev, edgeCount) =>
+        val deg = prev.select(explode(array(col("a"), col("b"))).as("id"))
+          .groupBy("id").agg(count(lit(1)).as("deg"))
+        val keep = deg.filter(col("deg") >= k).select("id")
+        val next = Iterate.cut(prev
+          .join(keep.withColumnRenamed("id", "a"), Seq("a"), "left_semi")
+          .join(keep.withColumnRenamed("id", "b"), Seq("b"), "left_semi")
+          .select("a", "b"))
+        val n = next.count()
+        ((next, n), n == edgeCount)
+    }
+    e.select(explode(array(col("a"), col("b"))).as("id"))
+      .groupBy("id").agg(count(lit(1)).as("core_degree"))
   }
 
   /** EXACT per-vertex triangle counts over the undirected simple graph
@@ -288,62 +272,6 @@ object Graphs {
     * close), one exchange each, integer arithmetic throughout — an ANSI
     * engine reproduces every count exactly (q147).
     */
-  /** The k-CORE of the undirected simple graph induced by `edges`: the
-    * maximal subgraph in which every vertex keeps degree ≥ k, found by
-    * the standard peeling fixpoint (drop all sub-k vertices, recompute
-    * degrees, repeat). Output: `(id, core_degree)` for every core
-    * vertex — the degree WITHIN the core, the coreness-style robustness
-    * signal (a link farm's mutual-citation cluster survives high-k
-    * peels that organic link neighborhoods do not).
-    *
-    * Convergence is exact (edge count reaches a fixpoint) and
-    * non-convergence within `maxRounds` throws rather than returning a
-    * half-peeled subgraph. Peeling is IDEMPOTENT past the fixpoint —
-    * extra rounds are no-ops — which is what lets an external engine
-    * replay it as a FIXED unroll (q149) while this face stops early.
-    *
-    * Scale contract: each round is one degree aggregation + two
-    * semi-joins on the shrinking edge set, eagerly localCheckpointed
-    * (the connectedComponents lineage lesson: a loop that re-references
-    * its input grows the plan per round); rounds needed equal the
-    * longest peel chain, typically a handful on web graphs.
-    */
-  def kCore(
-      edges: DataFrame, srcCol: String, dstCol: String,
-      k: Int, maxRounds: Int = 20): DataFrame = {
-    require(k >= 1, "k must be positive")
-    require(maxRounds >= 1, "maxRounds must be positive")
-    var e = edges
-      .select(col(srcCol).cast("long").as("u"), col(dstCol).cast("long").as("v"))
-      .filter(col("u").isNotNull && col("v").isNotNull && col("u") =!= col("v"))
-      .select(least(col("u"), col("v")).as("a"), greatest(col("u"), col("v")).as("b"))
-      .distinct()
-      .localCheckpoint(true)
-    var edgeCount = e.count()
-    var converged = false
-    var round = 0
-    while (!converged && round < maxRounds) {
-      round += 1
-      val deg = e.select(explode(array(col("a"), col("b"))).as("id"))
-        .groupBy("id").agg(count(lit(1)).as("deg"))
-      val keep = deg.filter(col("deg") >= k).select("id")
-      val ne = e
-        .join(keep.withColumnRenamed("id", "a"), Seq("a"), "left_semi")
-        .join(keep.withColumnRenamed("id", "b"), Seq("b"), "left_semi")
-        .select("a", "b")
-        .localCheckpoint(true)
-      val n = ne.count()
-      converged = n == edgeCount
-      edgeCount = n
-      e = ne
-    }
-    if (!converged)
-      throw new IllegalStateException(
-        s"kCore(k=$k) still peeling after $maxRounds rounds — raise maxRounds")
-    e.select(explode(array(col("a"), col("b"))).as("id"))
-      .groupBy("id").agg(count(lit(1)).as("core_degree"))
-  }
-
   def triangleCounts(edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
     val und = edges
       .select(col(srcCol).cast("long").as("u"), col(dstCol).cast("long").as("v"))
@@ -400,15 +328,10 @@ object Graphs {
     * resolution degrades gracefully).
     *
     * Scale shape: each half-round is ONE join (scores → edge endpoint)
-    * + ONE aggregate (sum by the other endpoint) + a scalar max
-    * broadcast back over the 2-column score frame. Each raw score
-    * frame takes an eager `localCheckpoint` — the max probe EXECUTES
-    * it anyway, and without the cut the normalize step would replay
-    * the subtree and lineage would double per reference (the
-    * [[connectedComponents]] lesson). So the operator is NOT lazy;
-    * superseded rounds' blocks are reclaimed by the ContextCleaner.
-    * Edges are pinned once ([[Caches.pin]]); pass `scope` and release
-    * after consuming the result, as with [[pageRankInt]].
+    * + ONE aggregate (sum by the other endpoint) + an
+    * [[Iterate.maxNormalize]] over the 2-column score frame, so the
+    * operator is NOT lazy. Edges and the node list are pinned once
+    * ([[Caches.pin]]), with [[pageRankInt]]'s pin lifetime.
     */
   def hitsInt(
       edges: DataFrame,
@@ -417,16 +340,13 @@ object Graphs {
       nodes: DataFrame,
       idCol: String,
       iters: Int,
-      scale: Long = 1000000L,
-      scope: Option[Caches.Scope] = None): DataFrame = {
+      scale: Long = 1000000L): DataFrame = {
     require(iters >= 1, "hitsInt needs at least one iteration")
     require(scale >= 1000L, "scale under 1000 makes integer normalization too lossy")
-    val prep = edges.select(col(srcCol).as("__src"), col(dstCol).as("__dst"))
-    val e = scope.fold(Caches.pin(prep))(_.pin(prep))
+    val e = Caches.pin(edges.select(col(srcCol).as("__src"), col(dstCol).as("__dst")))
     // pinned like `e`: every half-round re-bases against the node list
-    // (2·iters references — the pageRankInt lesson, §1.4/§5)
-    val idsPrep = nodes.select(col(idCol).as("__id"))
-    val ids = scope.fold(Caches.pin(idsPrep))(_.pin(idsPrep))
+    // (2·iters references)
+    val ids = Caches.pin(nodes.select(col(idCol).as("__id")))
     var hub = ids.select(col("__id"), lit(scale).as("__s"))
     var auth: DataFrame = hub
     // one half-round: sum the counterpart score over `joinOn` edges,
@@ -437,13 +357,11 @@ object Graphs {
         .select(col(emitFrom).as("__node"), col("__s"))
         .groupBy(col("__node"))
         .agg(sum(col("__s")).as("__sum"))
-      val raw = ids
-        .join(summed, col("__id") === col("__node"), "left")
-        .select(col("__id"), coalesce(col("__sum"), lit(0L)).as("__raw"))
-        .localCheckpoint(true)
-      val mx = raw.agg(greatest(max(col("__raw")), lit(1L)).as("__mx"))
-      raw.crossJoin(broadcast(mx))
-        .select(col("__id"), expr(s"(__raw * ${scale}L) div __mx").as("__s"))
+      Iterate.maxNormalize(
+        ids
+          .join(summed, col("__id") === col("__node"), "left")
+          .select(col("__id"), coalesce(col("__sum"), lit(0L)).as("__raw")),
+        scale)
     }
     for (_ <- 1 to iters) {
       auth = halfRound(hub, joinOn = "__src", emitFrom = "__dst")

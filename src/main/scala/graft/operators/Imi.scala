@@ -123,19 +123,7 @@ object Imi {
     val dim1 = (dim + 1) / 2
     val dim2 = dim - dim1
     if (kPerHalf <= fullTrainAbove) {
-      // finiteVec quarantine, same as every driver-side training draw: a
-      // null vector in the hash-ordered head NPEs the collect, and a
-      // NaN/Inf element poisons a half-centroid whose distances rank
-      // +inf forever (r16 review — this branch serves corpora up to
-      // ~1e9 rows, exactly where the replaced flat path was already safe
-      // via seedKMeansPar's quarantine)
-      val sample: Array[Array[Double]] = emb
-        .where(Similarity.finiteVec(col(vecCol)))
-        .orderBy(xxhash64(col(idCol)))
-        .select(col(vecCol).cast("array<double>"))
-        .limit(math.max(512, 32 * kPerHalf))
-        .collect()
-        .map(_.getSeq[Double](0).toArray)
+      val sample = Similarity.trainingSample(emb, idCol, vecCol, math.max(512, 32 * kPerHalf))
       require(sample.nonEmpty, "cannot train an IMI quantizer: no finite vectors")
       def half(off: Int, w: Int): Array[Array[Double]] =
         Similarity.kmeans(

@@ -164,20 +164,17 @@ object JoinAdvisor {
     * CM sketch buckets the SAME md5 key image weighted by the counts,
     * which lands counter-for-counter where the raw-scan sketch lands
     * (spec-pinned). The per-key tables pin for reuse across those
-    * reads — route `scope` in long-lived sessions.
+    * reads — call under [[Caches.inScope]] in long-lived sessions.
     */
   def advise(
       left: DataFrame, leftKey: String,
       right: DataFrame, rightKey: String,
       params: CmParams = defaultParams,
       broadcastRowsMax: Long = 10000000L,
-      saltProductMin: Long = 100000000L,
-      scope: Option[Caches.Scope] = None): DataFrame = {
-    def keyCounts(df: DataFrame, k: String): DataFrame = {
-      val kc = df.filter(col(k).isNotNull)
-        .groupBy(col(k).cast("string").as("key")).agg(count(lit(1)).as("cnt"))
-      scope.fold(Caches.pin(kc))(_.pin(kc))
-    }
+      saltProductMin: Long = 100000000L): DataFrame = {
+    def keyCounts(df: DataFrame, k: String): DataFrame =
+      Caches.pin(df.filter(col(k).isNotNull)
+        .groupBy(col(k).cast("string").as("key")).agg(count(lit(1)).as("cnt")))
     val lkc = keyCounts(left, leftKey)
     val rkc = keyCounts(right, rightKey)
     def sideStats(kc: DataFrame, rows: String, keys: String): DataFrame =
@@ -267,9 +264,10 @@ object JoinAdvisor {
     // lesson: an operator that pins must not outlive its own read)
     val adviseScope = Caches.newScope()
     val strategy =
-      try advise(left, leftKey, right, rightKey, params,
-        broadcastRowsMax, saltProductMin, scope = Some(adviseScope))
-        .select("recommended").collect()(0).getString(0)
+      try Caches.inScope(adviseScope) {
+        advise(left, leftKey, right, rightKey, params, broadcastRowsMax, saltProductMin)
+          .select("recommended").collect()(0).getString(0)
+      }
       finally adviseScope.release()
     val cond = left(leftKey) === right(rightKey)
     val outCols = (left.columns.map(left(_)) ++ right.columns.map(right(_))).toIndexedSeq

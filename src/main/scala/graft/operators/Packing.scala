@@ -513,20 +513,10 @@ object Packing {
     * positions are contiguous by construction; the per-bucket start
     * offsets are a ≤64-row broadcast. One range exchange + one tiny
     * aggregate, regardless of corpus size. The prefix sum pins an
-    * internal frame the result references lazily — pass `scope` and
-    * release after consuming (the [[Graphs.pageRankInt]] lifetime
-    * convention).
+    * internal frame the result references lazily (the
+    * [[Graphs.pageRankInt]] pin lifetime).
     */
   def lengthBucketedBatches(
-      df: DataFrame,
-      idCol: String,
-      lenCol: String,
-      batchSize: Int,
-      scope: Option[Caches.Scope] = None): DataFrame =
-    scope.fold(lengthBucketedBatchesImpl(df, idCol, lenCol, batchSize))(s =>
-      Caches.inScope(s)(lengthBucketedBatchesImpl(df, idCol, lenCol, batchSize)))
-
-  private def lengthBucketedBatchesImpl(
       df: DataFrame,
       idCol: String,
       lenCol: String,
@@ -606,7 +596,7 @@ object Packing {
     * schedule (q141), epochs included.
     *
     * Scale contract: ONE range exchange for the global rank (pinned and
-    * reused by every epoch — route through `scope` in long-lived
+    * reused by every epoch — [[Caches.inScope]] in long-lived
     * sessions), one range exchange per epoch over its eligible subset;
     * driver traffic is the prefix-sum offset rows plus a single scalar
     * count (the competence cut needs |corpus|). NULL difficulty fails
@@ -620,8 +610,7 @@ object Packing {
       epochs: Int,
       startCompetence: Double,
       rampEpochs: Int,
-      shardSize: Long,
-      scope: Option[Caches.Scope] = None): DataFrame = {
+      shardSize: Long): DataFrame = {
     require(epochs >= 1, "need at least one epoch")
     require(rampEpochs >= 1, "rampEpochs must be positive")
     require(startCompetence > 0.0 && startCompetence <= 1.0,
@@ -640,10 +629,9 @@ object Packing {
     val ordered = df
       .withColumn("__cord", struct(checked.as("d"), col(idCol).as("i")))
       .withColumn("__one", lit(1L))
-    val ranked0 = Partitioning
+    val ranked = Caches.pin(Partitioning
       .runningSum(ordered, "__cord", "__one", "difficulty_rank")
-      .drop("__cord", "__one")
-    val ranked = scope.fold(Caches.pin(ranked0))(_.pin(ranked0))
+      .drop("__cord", "__one"))
     val n = ranked.count() // bounded: ONE scalar — the competence cut needs |corpus|
     val c0sq = startCompetence * startCompetence
     (0 until epochs).map { e =>

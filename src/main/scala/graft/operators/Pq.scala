@@ -70,9 +70,8 @@ object Pq {
   }
 
   /** Train a codebook: per subspace, k-means over the sub-slices of a
-    * `sampleRows`-point deterministic sample (xxhash64 order of the id —
-    * the [[Similarity.trainIvf]] draw: no prior count, plans as
-    * TakeOrderedAndProject). `dim` must split evenly into `m` subspaces.
+    * `sampleRows`-point [[Similarity.trainingSample]]. `dim` must split
+    * evenly into `m` subspaces.
     *
     * The sample must be REPRESENTATIVE of what the index will hold: the
     * ADC screen's `margin` bounds quantization error only over regions
@@ -105,21 +104,11 @@ object Pq {
       sampleRows: Int = 2048,
       iters: Int = 10): Codebook = {
     require(m > 0, "m must be positive")
-    // cast in-plan so array<float> and array<double> corpora both train
-    // (the PQ expressions accept either; the sampler must too).
-    // finiteVec quarantine, same as every driver-side training draw
-    // (r16 advice): a null vector in the hash-ordered sample head NPEs
-    // the collect, and a NaN/Inf element poisons a sub-centroid whose
-    // ADC distances then rank NaN/Inf — recall degrades silently (the
-    // exact verify keeps precision; it cannot recover candidates the
-    // screen never surfaced)
-    val sample: Array[Array[Double]] = emb
-      .where(Similarity.finiteVec(col(vecCol)))
-      .orderBy(xxhash64(col(idCol)))
-      .select(col(vecCol).cast("array<double>"))
-      .limit(math.max(sampleRows, 32 * ksub))
-      .collect()
-      .map(_.getSeq[Double](0).toArray)
+    // the sample casts in-plan, so array<float> and array<double> corpora
+    // both train; its finiteVec quarantine keeps a NaN/Inf element from
+    // poisoning a sub-centroid whose ADC distances would then rank
+    // NaN/Inf and silently starve recall
+    val sample = Similarity.trainingSample(emb, idCol, vecCol, math.max(sampleRows, 32 * ksub))
     require(sample.nonEmpty, "cannot train a PQ codebook: no finite vectors in the corpus")
     val dim = sample.head.length
     require(dim % m == 0, s"dim=$dim does not split into m=$m subspaces")

@@ -371,10 +371,9 @@ object Preferences {
     * pair) and the win counts are built ONCE and pinned — each round
     * pays two broadcast-or-shuffle hash joins (strengths are a 2-column
     * frame, the narrowest shuffle payload) plus one aggregate keyed by
-    * item; the max probe is a scalar broadcast. Rounds localCheckpoint
-    * eagerly (the max aggregation executes them anyway), so the plan
-    * stays bounded in `iters`. Pin lifetime: pass `scope` and release
-    * after consuming the result (the pageRankInt convention).
+    * item; each round ends in an [[Iterate.maxNormalize]], so the plan
+    * stays bounded in `iters`. Pin lifetime: the
+    * [[graft.operators.Graphs.pageRankInt]] convention.
     *
     * Output: `(item_id, wins, games, strength)` — wins/games are the
     * exact per-item tallies, strength the round-`iters` scaled long.
@@ -384,23 +383,21 @@ object Preferences {
       winnerCol: String,
       loserCol: String,
       iters: Int,
-      scale: Long = 1000000L,
-      scope: Option[Caches.Scope] = None): DataFrame = {
+      scale: Long = 1000000L): DataFrame = {
     require(iters >= 1, "bradleyTerryInt needs at least one iteration")
     require(scale >= 1000L, "scale under 1000 makes integer division too lossy")
     val g = games.select(col(winnerCol).as("__w"), col(loserCol).as("__l"))
     // symmetric per-ordered-pair game counts: one (a, b, n) row per
     // direction, so each item's denominator is one groupBy over its rows
-    val prep = g.select(col("__w").as("__a"), col("__l").as("__b"))
+    val pairs = Caches.pin(g.select(col("__w").as("__a"), col("__l").as("__b"))
       .unionAll(g.select(col("__l").as("__a"), col("__w").as("__b")))
       .groupBy(col("__a"), col("__b"))
-      .agg(count(lit(1)).as("__n"))
-    val pairs = scope.fold(Caches.pin(prep))(_.pin(prep))
+      .agg(count(lit(1)).as("__n")))
     val wins = g.groupBy(col("__w").as("__wid")).agg(count(lit(1)).as("__wins"))
     val ids = pairs.select(col("__a").as("__id")).distinct()
       .join(wins, col("__id") === col("__wid"), "left")
       .select(col("__id"), coalesce(col("__wins"), lit(0L)).as("__W"))
-      .localCheckpoint(true) // small (one row per item); pins wins/ids once
+      .transform(Iterate.cut) // small (one row per item); pins wins/ids once
     var v = ids.select(col("__id"), lit(scale).as("__s"))
     for (_ <- 1 to iters) {
       val den = pairs
@@ -413,16 +410,14 @@ object Preferences {
             .otherwise(lit(0L)).as("__t"))
         .groupBy(col("__a"))
         .agg(sum(col("__t")).as("__den"))
-      val raw = ids
-        .join(den, col("__id") === col("__a"), "left")
-        .select(
-          col("__id"),
-          when(col("__W") === 0 || coalesce(col("__den"), lit(0L)) === 0, lit(0L))
-            .otherwise(expr(s"(__W * ${scale}L * ${scale}L) div __den")).as("__raw"))
-        .localCheckpoint(true)
-      val mx = raw.agg(greatest(max(col("__raw")), lit(1L)).as("__mx"))
-      v = raw.crossJoin(broadcast(mx))
-        .select(col("__id"), expr(s"(__raw * ${scale}L) div __mx").as("__s"))
+      v = Iterate.maxNormalize(
+        ids
+          .join(den, col("__id") === col("__a"), "left")
+          .select(
+            col("__id"),
+            when(col("__W") === 0 || coalesce(col("__den"), lit(0L)) === 0, lit(0L))
+              .otherwise(expr(s"(__W * ${scale}L * ${scale}L) div __den")).as("__raw")),
+        scale)
     }
     val tally = pairs.groupBy(col("__a")).agg(sum(col("__n")).as("games"))
     ids

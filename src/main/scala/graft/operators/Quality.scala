@@ -71,16 +71,14 @@ object Quality {
     * quality score with a billion distinct values is noise, not a
     * distribution). Rows with NULL score or NULL source are EXCLUDED —
     * a null quality score has no quantile; filter or impute upstream.
-    * The scored frame is pinned (read four times); pass `scope` and call
-    * `scope.release()` after fully consuming the result, else the pin
-    * joins the active scope and lives until [[Caches.release]].
+    * The scored frame is pinned (read four times), with the
+    * [[Graphs.pageRankInt]] pin lifetime.
     */
   def quantileNormalize(
       docs: DataFrame,
       idCol: String,
       sourceCol: String,
-      scoreCol: String,
-      scope: Option[Caches.Scope] = None): DataFrame = {
+      scoreCol: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // refuse fractional scores rather than silently truncating them to
     // long (a [0,1] classifier score would collapse to {0, 1} and the
@@ -96,10 +94,8 @@ object Quality {
     val scored = docs
       .select(col(idCol), col(sourceCol).as("source"), col(scoreCol).cast("long").as("score"))
       .where(col("score").isNotNull && col("source").isNotNull)
-      // read by ranks, source counts, totals, pooled; routed through the
-      // caller's scope (the pageRankInt lifetime convention) so a
-      // long-lived session can release it after consuming the result
-      .transform(df => scope.fold(Caches.pin(df))(_.pin(df)))
+      // read by ranks, source counts, totals, pooled
+      .transform(Caches.pin)
     val srcN = scored.groupBy("source").agg(count(lit(1)).as("__ns"))
     val totals = scored.agg(count(lit(1)).as("__N"))
     val w = Window.partitionBy("source").orderBy(col("score"), col(idCol))
@@ -205,7 +201,7 @@ object Quality {
     *
     * Scale shape: one (item, label) hash aggregation — map-side combined,
     * the wire carries distinct pairs — feeding two key-bounded rollups
-    * off the pinned counts (route `scope` in long-lived sessions); the
+    * off the pinned counts ([[Caches.inScope]] in long-lived sessions); the
     * kappa row itself is a 1×1 cross of two scalar aggregates.
     */
   /** Per-ITEM disagreement report — the routing face of the corpus-
@@ -265,13 +261,11 @@ object Quality {
   def fleissKappa(
       df: DataFrame,
       itemCol: String,
-      labelCol: String,
-      scope: Option[Caches.Scope] = None): DataFrame = {
-    val cnt0 = df
+      labelCol: String): DataFrame = {
+    val cnt = Caches.pin(df
       .filter(col(itemCol).isNotNull && col(labelCol).isNotNull)
       .groupBy(col(itemCol).as("__i"), col(labelCol).as("__l"))
-      .agg(count(lit(1)).as("__c"))
-    val cnt = scope.fold(Caches.pin(cnt0))(_.pin(cnt0))
+      .agg(count(lit(1)).as("__c")))
     val items = cnt
       .groupBy("__i")
       .agg(sum("__c").as("__n"), sum(col("__c") * col("__c")).as("__s2"))
@@ -339,8 +333,7 @@ object Quality {
       df: DataFrame,
       itemCol: String,
       raterCol: String,
-      labelCol: String,
-      scope: Option[Caches.Scope] = None): DataFrame = {
+      labelCol: String): DataFrame = {
     val clean = df.filter(
       col(itemCol).isNotNull && col(raterCol).isNotNull && col(labelCol).isNotNull)
     // LIMIT 3 bounds the collect even against a garbage rater column (a
@@ -354,7 +347,7 @@ object Quality {
         raters.mkString(", "))
     val Array(r1, r2) = raters
     val rc = col(raterCol).cast("string")
-    val perItem0 = clean
+    val perItem = Caches.pin(clean
       .groupBy(col(itemCol).as("__i"))
       .agg(
         sum(when(rc === r1, 1L).otherwise(0L)).as("__c1"),
@@ -369,11 +362,10 @@ object Quality {
             col("__c2").cast("string"),
             lit(" ratings from the two raters — every item needs exactly one from each"))))
           .otherwise(lit(true)))
-      .filter(col("__ok"))
+      .filter(col("__ok")))
     // PINNED: agg + both marginals read it (the fleissKappa shape) — an
     // unpinned perItem would rescan the raw annotation frame three times
     // and re-run the raise_error validation per scan
-    val perItem = scope.fold(Caches.pin(perItem0))(_.pin(perItem0))
     val agg = perItem.agg(
       count(lit(1)).as("n_items"),
       sum(when(col("__l1") === col("__l2"), 1L).otherwise(0L)).as("__agree"))
@@ -452,8 +444,8 @@ object Quality {
     * comparisons on identical operands.
     *
     * Scale shape: ONE corpus scan materializes the per-doc projection
-    * (pinned — pass `scope` and release after consuming, the
-    * quantileNormalize convention); the five sections are cheap
+    * (pinned, with the [[Graphs.pageRankInt]] pin lifetime); the five
+    * sections are cheap
     * aggregations over that projection (a global aggregate melted via
     * `stack`, three low-cardinality group-bys, one distinct count).
     */
@@ -482,10 +474,8 @@ object Quality {
       textCol: String,
       sourceCol: String,
       shortTokens: Long = 10L,
-      highPunct: Double = 0.05,
-      scope: Option[Caches.Scope] = None): DataFrame = {
-    val prep = cardPrep(docs, textCol, sourceCol)
-      .transform(df => scope.fold(Caches.pin(df))(_.pin(df)))
+      highPunct: Double = 0.05): DataFrame = {
+    val prep = Caches.pin(cardPrep(docs, textCol, sourceCol))
     def cnt(pred: org.apache.spark.sql.Column) = sum(when(pred, 1L).otherwise(0L))
     val corpus = prep.agg(
       count(lit(1)).as("n_docs"),

@@ -410,70 +410,148 @@ object Similarity {
     * whose every element is finite. !(|x| < inf) is false only for
     * finite elements, and a null ELEMENT nulls the `exists`, which
     * `where` drops — one predicate covers null vectors, null elements,
-    * NaN and ±Inf. Every driver-side training draw filters through
-    * this (seedKMeansPar's round-15 rationale, promoted round 16 to the
-    * sampled trainers too): a null vector NPEs the collect, and a
-    * NaN/Inf element poisons a centroid whose distances then rank +inf
-    * forever. Lloyd still ASSIGNS corrupt rows at index build time —
-    * they just never define a centroid.
+    * NaN and ±Inf. Every training read filters through this
+    * ([[trainingSample]], k-means|| seeding, the Lloyd scans): a null
+    * vector NPEs the collect, and a NaN/Inf element poisons a centroid
+    * whose distances then rank +inf forever. Lloyd still ASSIGNS
+    * corrupt rows at index build time — they just never define a
+    * centroid.
     */
-  private[operators] def finiteVec(c: Column): Column =
+  private def finiteVec(c: Column): Column =
     c.isNotNull && !exists(c, x => !(abs(x.cast("double")) < lit(Double.PositiveInfinity)))
+
+  /** The deterministic training draw every sampled trainer shares: the
+    * first `n` vectors passing [[finiteVec]] in xxhash64 order of
+    * `idCol`, as double arrays on the driver. A pseudo-random draw that
+    * needs no prior count() of the corpus, and `orderBy().limit()` plans
+    * as TakeOrderedAndProject (per-partition bounded heaps, no global
+    * sort), so the pass is scan-bound at any scale. Empty on a corpus
+    * with no finite vector; each caller refuses that with its own words.
+    */
+  private[operators] def trainingSample(
+      emb: DataFrame,
+      idCol: String,
+      vecCol: String,
+      n: Int): Array[Array[Double]] =
+    emb
+      .where(finiteVec(col(vecCol)))
+      .orderBy(xxhash64(col(idCol)))
+      .select(col(vecCol).cast("array<double>"))
+      .limit(n)
+      .collect()
+      .map(_.getSeq[Double](0).toArray)
 
   /** Lloyd's k-means over an in-driver sample — IVF coarse-quantizer
     * training. A few iterations over O(k·32) points is microseconds on the
     * driver; the win over seeding alone is representative cells on
-    * clustered corpora. Empty clusters keep their previous centroid.
+    * clustered corpora. Seeds are the first `k` content-distinct points
+    * (Array equality is reference identity, so a plain .distinct would
+    * seed duplicate centroids that ties then starve forever), then
+    * [[lloyd]] with unit weights.
     */
-  private[operators] def kmeans(
+  private[graft] def kmeans(
       points: Array[Array[Double]],
       k: Int,
       iters: Int): Array[Array[Double]] = {
     require(points.nonEmpty, "k-means needs at least one training point")
+    lloyd(points, Array.fill(points.length)(1L), points.distinctBy(_.toSeq).take(k), iters)
+  }
+
+  /** Squared L2 over the first `dim` components. */
+  private def d2(a: Array[Double], b: Array[Double], dim: Int): Double = {
+    var s = 0.0; var i = 0
+    while (i < dim) { val d = a(i) - b(i); s += d * d; i += 1 }
+    s
+  }
+
+  /** The driver-side Lloyd loop: `iters` rounds from `seeds`, each
+    * assigning every point to its nearest centroid (squared L2, ties to
+    * the lower index) and moving each centroid to the weighted mean
+    * Σ w·p / Σ w of its members. Points with weight ≤ 0 or a non-finite
+    * element exert no pull (d²(NaN, c) is NaN and d²(Inf, c) is Inf, so
+    * either would silently land on centroid 0 and poison it); a centroid
+    * that loses all its members keeps its previous position. With unit
+    * weights `1L · x == x` and the counts are member counts, so this IS
+    * the unweighted rule, bit for bit.
+    */
+  private def lloyd(
+      points: Array[Array[Double]],
+      weights: Array[Long],
+      seeds: Array[Array[Double]],
+      iters: Int): Array[Array[Double]] = {
     val dim = points.head.length
-    def d2(a: Array[Double], b: Array[Double]): Double = {
-      var s = 0.0; var i = 0
-      while (i < dim) { val d = a(i) - b(i); s += d * d; i += 1 }
-      s
-    }
-    // distinctBy content: Array equality is reference identity, so a plain
-    // .distinct would keep duplicate vectors and seed duplicate centroids
-    // that ties then starve forever (effective k collapses).
-    var centroids = points.distinctBy(_.toSeq).take(k)
+    val live = points.indices.map(i =>
+      weights(i) > 0L && points(i).forall(java.lang.Double.isFinite)).toArray
+    var centroids = seeds
     for (_ <- 0 until iters) {
       val sums = Array.fill(centroids.length)(new Array[Double](dim))
       val counts = new Array[Long](centroids.length)
-      points.foreach { p =>
-        var best = 0; var bestD = Double.MaxValue; var c = 0
-        while (c < centroids.length) {
-          val d = d2(p, centroids(c)); if (d < bestD) { bestD = d; best = c }; c += 1
+      var pi = 0
+      while (pi < points.length) {
+        if (live(pi)) {
+          val w = weights(pi)
+          val p = points(pi)
+          var best = 0; var bestD = Double.MaxValue; var c = 0
+          while (c < centroids.length) {
+            val d = d2(p, centroids(c), dim); if (d < bestD) { bestD = d; best = c }; c += 1
+          }
+          counts(best) += w
+          var i = 0
+          while (i < dim) { sums(best)(i) += w * p(i); i += 1 }
         }
-        counts(best) += 1
-        var i = 0
-        while (i < dim) { sums(best)(i) += p(i); i += 1 }
+        pi += 1
       }
       centroids = centroids.zipWithIndex.map { case (old, c) =>
-        if (counts(c) == 0) old else sums(c).map(_ / counts(c))
+        if (counts(c) == 0L) old else sums(c).map(_ / counts(c))
       }
     }
     centroids
   }
 
-  /** IVF-style ANN: corpus vectors are assigned to the nearest of `nlist`
-    * coarse centroids; a query probes only its `nprobe` nearest cells and
-    * brute-forces within them — the classic inverted-file scale path
-    * (search cost ≈ corpus × nprobe/nlist instead of the full corpus).
-    *
-    * Training: k-means over a `sampleRows`-point sample taken in xxhash64
-    * order of the id — a deterministic pseudo-random draw that needs no
-    * prior count() of the corpus, and `orderBy().limit()` plans as
-    * TakeOrderedAndProject (per-partition bounded heaps, no global sort
-    * materialization), so the training pass is scan-bound at any scale.
-    * The trained centroids are baked into the assignment expression as
-    * literals (the table is tiny; shipping it as plan literals broadcasts
-    * it for free). Cell assignment, probe selection, and the in-cell scan
-    * are all plain expressions — no shuffle beyond the final top-k.
+  /** One distributed Lloyd round over the pinned frame `vecs`: every
+    * `vecCol` row is assigned through the codegen'd
+    * [[graft.expressions.NearestCentroidsExpr]] (exact squared L2, ties
+    * to the lower centroid index), and ONE cell-keyed exchange carries a
+    * single (dim)-sized [[graft.expressions.VectorSumAgg]] state per
+    * cell per task (the partial/final tree reduces; nothing dimensional
+    * explodes). The ≤ k cell rows — the centroid table itself, the
+    * minimum any k-means must move — come to the driver, where each
+    * populated cell moves to `mean(sums, count)` and an emptied cell
+    * keeps its previous centroid. On integer-valued vectors the sums are
+    * exact, so the round is bit-identical under any partitioning. A NULL
+    * vector assigns to a NULL cell and fails loudly, naming `source`.
     */
+  private[operators] def lloydRound(
+      vecs: DataFrame,
+      vecCol: String,
+      centroids: Array[Array[Double]],
+      source: String)(
+      mean: (Array[Double], Long) => Array[Double]): Array[Array[Double]] = {
+    import org.apache.spark.sql.graft.ColumnBridge
+    val cell = ColumnBridge.column(graft.expressions.NearestCentroidsExpr(
+      ColumnBridge.eagerExpression(col(vecCol)), centroids.flatten.toIndexedSeq,
+      centroids.head.length, 1)).getItem(0)
+    val sumCol = ColumnBridge.column(
+      graft.expressions.VectorSumAgg(ColumnBridge.eagerExpression(col(vecCol)))
+        .toAggregateExpression())
+    val stats = vecs
+      .groupBy(cell.as("__cell"))
+      .agg(sumCol.as("__s"))
+      .select(col("__cell"), col("__s.cnt").as("__n"), col("__s.sums").as("__sums"))
+      .collect()
+      .map { r =>
+        require(!r.isNullAt(0), s"NULL $source rows in the corpus — filter or impute upstream")
+        r.getInt(0) -> ((r.getLong(1), r.getSeq[Double](2).toArray))
+      }
+      .toMap
+    centroids.zipWithIndex.map { case (old, c) =>
+      stats.get(c) match {
+        case Some((n, sums)) if n > 0L => mean(sums, n)
+        case _ => old
+      }
+    }
+  }
+
   /** A trained IVF coarse quantizer: the tiny driver-side artifact the
     * index workflow revolves around — train ONCE over the corpus, then
     * serve any number of queries (and re-serve after a restart via
@@ -530,12 +608,8 @@ object Similarity {
       }
   }
 
-  /** Train an IVF coarse quantizer: k-means over a `sampleRows`-point
-    * sample taken in xxhash64 order of the id — a deterministic
-    * pseudo-random draw that needs no prior count() of the corpus, and
-    * `orderBy().limit()` plans as TakeOrderedAndProject (per-partition
-    * bounded heaps, no global sort materialization), so the training pass
-    * is scan-bound at any scale.
+  /** Train an IVF coarse quantizer: [[kmeans]] over a `sampleRows`-point
+    * [[trainingSample]] (at least `nlist` rows).
     */
   def trainIvf(
       emb: DataFrame,
@@ -544,13 +618,7 @@ object Similarity {
       nlist: Int = 16,
       sampleRows: Int = 512,
       kmeansIters: Int = 5): IvfIndex = {
-    val trainSample: Array[Array[Double]] = emb
-      .where(finiteVec(col(vecCol)))
-      .orderBy(xxhash64(col(idCol)))
-      .select(col(vecCol).cast("array<double>"))
-      .limit(math.max(sampleRows, nlist))
-      .collect()
-      .map(_.getSeq[Double](0).toArray)
+    val trainSample = trainingSample(emb, idCol, vecCol, math.max(sampleRows, nlist))
     require(trainSample.nonEmpty, "cannot train IVF centroids on an empty corpus")
     IvfIndex(kmeans(trainSample, nlist, kmeansIters))
   }
@@ -558,28 +626,22 @@ object Similarity {
   /** Full-corpus Lloyd training: the distributed complement of
     * [[trainIvf]] for corpora where a driver-side sample under-represents
     * the distribution (multi-modal embedding spaces at production scale).
-    * Each iteration is one corpus scan — cell assignment through the
-    * codegen'd [[graft.expressions.NearestCentroidsExpr]] — plus one
-    * nlist-keyed exchange whose payload is ONE (dim)-sized
-    * [[graft.expressions.VectorSumAgg]] state per cell per task (the
-    * partial/final tree does the reduction; nothing dimensional ever
-    * explodes). Driver traffic is nlist × dim doubles per iteration —
-    * the centroid table itself, which is the minimum any k-means must
-    * move.
+    * Each iteration is one [[lloydRound]] over the pinned corpus
+    * projection, with float means.
     *
-    * Seeding is the same deterministic xxhash64 draw as [[trainIvf]]
-    * (first `4·nlist` rows in hash order, content-distinct, take nlist) —
-    * effectively a uniform sample, fine for tens of centroids. With
-    * `scalableSeed = true` it switches to distributed k-means||
-    * ([[seedKMeansPar]]): at the large-nlist regime this trainer exists
-    * for, a uniform draw routinely seeds two centroids in one dense blob
-    * and none in a sparse one, and Lloyd cannot un-starve a cell it
-    * never seeded — unbalanced cells are probe-cost skew forever.
-    * Iterations are deterministic bit-for-bit on integer-valued vectors
-    * (exact FP addition — pinned by KmeansSpec against a single-threaded
-    * reference); real-valued corpora converge within standard FP
-    * reduction tolerance, and the ARTIFACT is exact either way: probes
-    * replay the saved centroids, not the training run.
+    * Seeding is [[kmeans]]'s rule over the first `4·nlist` rows of the
+    * [[trainingSample]] draw — effectively a uniform sample, fine for
+    * tens of centroids. With `scalableSeed = true` it switches to
+    * distributed k-means|| ([[seedKMeansPar]]): at the large-nlist regime
+    * this trainer exists for, a uniform draw routinely seeds two
+    * centroids in one dense blob and none in a sparse one, and Lloyd
+    * cannot un-starve a cell it never seeded — unbalanced cells are
+    * probe-cost skew forever. Iterations are deterministic bit-for-bit on
+    * integer-valued vectors (pinned by KmeansSpec against a
+    * single-threaded reference); real-valued corpora converge within
+    * standard FP reduction tolerance, and the ARTIFACT is exact either
+    * way: probes replay the saved centroids, not the training run. Every
+    * pin this makes is released before it returns.
     */
   def trainIvfFull(
       emb: DataFrame,
@@ -589,23 +651,20 @@ object Similarity {
       iters: Int = 5,
       scalableSeed: Boolean = false,
       maxFlatPayload: Long = 1L << 19): IvfIndex = {
-    import org.apache.spark.sql.graft.ColumnBridge
-    // The flat-quantizer wall, guarded LOUDLY (VERDICT r18 item 4):
-    // assignment work is rows × nlist × dim per Lloyd scan, and the flat
-    // centroid table — nlist × dim doubles — ships in every task binary,
-    // MULTIPLIED under k-means|| seeding, whose candidate set oversamples
-    // to several × nlist before the final reduction. BENCH_NOTES r18
-    // measured the failure mode this refuses: 12,500 centroids at dim 64
-    // (800k payload entries) inflated assignment task binaries to 73 MiB
-    // and was killed after 8 minutes — silently attempted, diagnosable
-    // only by autopsy. Past `maxFlatPayload` entries (default 2¹⁹ ≈ 4 MiB
-    // of doubles — under the measured wall) the flat form is the wrong
-    // quantizer, not a tuning problem: the IMI product grid delivers the
-    // same cell count from ~2·√nlist trained centroids (payload grows
-    // with √nlist) — lower `imiAbove` on the auto builders so they cross
-    // to IMI at this geometry, or pass a smaller nlist. One
-    // degenerate-sized job to learn dim; an empty corpus falls through
-    // to seeding's own loud refusal.
+    // The flat-quantizer wall, guarded LOUDLY: assignment work is
+    // rows × nlist × dim per Lloyd scan, and the flat centroid table —
+    // nlist × dim doubles — ships in every task binary, MULTIPLIED under
+    // k-means|| seeding, whose candidate set oversamples to several ×
+    // nlist before the final reduction. 12,500 centroids at dim 64 (800k
+    // payload entries) inflated assignment task binaries to 73 MiB and
+    // ran for 8 minutes before it was killed. Past `maxFlatPayload`
+    // entries (default 2¹⁹ ≈ 4 MiB of doubles — under that wall) the flat
+    // form is the wrong quantizer, not a tuning problem: the IMI product
+    // grid delivers the same cell count from ~2·√nlist trained centroids
+    // — lower `imiAbove` on the auto builders so they cross to IMI at
+    // this geometry, or pass a smaller nlist. One degenerate-sized job
+    // to learn dim; an empty corpus falls through to seeding's own loud
+    // refusal.
     emb.where(finiteVec(col(vecCol)))
       .select(size(col(vecCol)).as("__d")).limit(1).collect()
       .headOption.foreach { r =>
@@ -620,57 +679,29 @@ object Similarity {
             f"$nlist so buildAuto/buildPqAuto/rebuildAuto cross to IMI), " +
             "or train a smaller nlist")
       }
-    var centroids =
+    val seeds =
       if (scalableSeed) seedKMeansPar(emb, idCol, vecCol, nlist)
       else {
-        val seedRows = emb
-          .where(finiteVec(col(vecCol)))
-          .orderBy(xxhash64(col(idCol)))
-          .select(col(vecCol).cast("array<double>"))
-          .limit(4 * nlist)
-          .collect()
-          .map(_.getSeq[Double](0).toArray)
+        val seedRows = trainingSample(emb, idCol, vecCol, 4 * nlist)
         require(seedRows.nonEmpty, "cannot train IVF centroids on an empty corpus")
         seedRows.distinctBy(_.toSeq).take(nlist)
       }
-    // finiteVec on the LLOYD scans too, not just seeding (r16 third
-    // review pass): an unfiltered NaN-element vector deterministically
-    // assigns to cell 0 (NearestCentroidsExpr ranks NaN +inf), its NaN
-    // elements flow through VectorSumAgg, and centroid 0 goes all-NaN
-    // after one iteration — then no finite row ever re-assigns there and
-    // the saved index loses the cell forever. Corrupt rows still get
-    // ASSIGNED at index build time; they just never pull a centroid.
-    // PINNED: every Lloyd iteration is one full pass over this frame —
-    // without the pin each of the `iters` scans re-reads the source and
-    // re-checks finiteVec (guide §5: reused + expensive to recompute is
-    // exactly when to cache; the projected vector column is the narrow
-    // form of the corpus and spills to disk when it outgrows memory).
-    // Released with every other operator pin via Caches.release.
-    val vecs = Caches.pin(
-      emb.where(finiteVec(col(vecCol))).select(col(vecCol).as("__vec")))
-    for (_ <- 0 until iters) {
-      val idx = IvfIndex(centroids)
-      val cell = ColumnBridge.column(graft.expressions.NearestCentroidsExpr(
-        ColumnBridge.eagerExpression(col("__vec")), idx.flat, idx.dim, 1)).getItem(0)
-      val sumCol = ColumnBridge.column(
-        graft.expressions.VectorSumAgg(ColumnBridge.eagerExpression(col("__vec")))
-          .toAggregateExpression())
-      val stats = vecs
-        .groupBy(cell.as("__cell"))
-        .agg(sumCol.as("__s"))
-        .select(col("__cell"), col("__s.cnt").as("__n"), col("__s.sums").as("__sums"))
-        .collect()
-        .map(r => r.getAs[Int]("__cell") ->
-          ((r.getAs[Long]("__n"), r.getSeq[Double](r.fieldIndex("__sums")).toArray)))
-        .toMap
-      centroids = centroids.zipWithIndex.map { case (old, c) =>
-        stats.get(c) match {
-          case Some((n, sums)) if n > 0L => sums.map(_ / n)
-          case _ => old // empty cells keep their previous centroid
-        }
-      }
+    // finiteVec on the Lloyd scans too, not just seeding: a NaN-element
+    // vector deterministically assigns to cell 0 (NearestCentroidsExpr
+    // ranks NaN +inf), its NaN elements flow through VectorSumAgg, and
+    // centroid 0 goes all-NaN after one iteration — then no finite row
+    // ever re-assigns there and the saved index loses the cell forever.
+    // Corrupt rows still get ASSIGNED at index build time; they just
+    // never pull a centroid. PINNED: every round is one full pass over
+    // this narrow projection, which spills to disk when it outgrows
+    // memory.
+    Caches.scoped {
+      val vecs = Caches.pin(emb.where(finiteVec(col(vecCol))).select(col(vecCol).as("__vec")))
+      var centroids = seeds
+      for (_ <- 0 until iters)
+        centroids = lloydRound(vecs, "__vec", centroids, vecCol)((sums, n) => sums.map(_ / n))
+      IvfIndex(centroids)
     }
-    IvfIndex(centroids)
   }
 
   /** Distributed k-means|| seeding (Bahmani, Moseley, Vattani, Kumar —
@@ -731,48 +762,51 @@ object Similarity {
     // PINNED: seeding makes 2 passes per round (the φ aggregate and the
     // sample) plus the first-row draw and the final weighting scan —
     // ~2·rounds + 3 evaluations of the same filter+projection without
-    // the pin (guide §5). Released via Caches.release like every
-    // operator pin.
-    val vecs = Caches.pin(emb
-      .where(finiteVec(col(vecCol)))
-      .select(col(idCol).as("__id"), col(vecCol).cast("array<double>").as("__vec")))
-    val first = vecs.orderBy(xxhash64(col("__id"))).limit(1).collect()
-    require(first.nonEmpty, "cannot seed k-means|| on an empty corpus")
-    val dim = first(0).getSeq[Double](1).size
-    val cands = scala.collection.mutable.ArrayBuffer[Array[Double]](
-      first(0).getSeq[Double](1).toArray)
-    val seen = scala.collection.mutable.HashSet[Seq[Double]](cands.head.toSeq)
-    def minD = ColumnBridge.column(graft.expressions.MinSqDistExpr(
-      ColumnBridge.eagerExpression(col("__vec")),
-      cands.toArray.flatten.toIndexedSeq, dim))
-    var r = 1
-    var done = false
-    while (r <= rounds && !done) {
-      val phi = vecs.agg(sum(minD).as("__phi")).collect()(0).getDouble(0)
-      val sampled: Array[Array[Double]] =
-        if (phi <= 0.0) { done = true; Array.empty }
-        else {
-          val u = pmod(xxhash64(col("__id"), lit(r)), lit(1000000L))
-            .cast("double") / lit(1000000.0)
-          vecs.where(u * lit(phi) < lit(l.toDouble) * minD)
-            .orderBy(xxhash64(col("__id"))).limit(8 * l)
-            .select("__vec").collect().map(_.getSeq[Double](0).toArray)
-        }
-      cands ++= sampled.filter(v => seen.add(v.toSeq))
-      r += 1
+    // the pin; released before returning.
+    Caches.scoped {
+      val vecs = Caches.pin(emb
+        .where(finiteVec(col(vecCol)))
+        .select(col(idCol).as("__id"), col(vecCol).cast("array<double>").as("__vec")))
+      val first = vecs.orderBy(xxhash64(col("__id"))).limit(1).collect()
+      require(first.nonEmpty, "cannot seed k-means|| on an empty corpus")
+      val dim = first(0).getSeq[Double](1).size
+      val cands = scala.collection.mutable.ArrayBuffer[Array[Double]](
+        first(0).getSeq[Double](1).toArray)
+      val seen = scala.collection.mutable.HashSet[Seq[Double]](cands.head.toSeq)
+      def minD = ColumnBridge.column(graft.expressions.MinSqDistExpr(
+        ColumnBridge.eagerExpression(col("__vec")),
+        cands.toArray.flatten.toIndexedSeq, dim))
+      var r = 1
+      var done = false
+      while (r <= rounds && !done) {
+        val phi = vecs.agg(sum(minD).as("__phi")).collect()(0).getDouble(0)
+        val sampled: Array[Array[Double]] =
+          if (phi <= 0.0) { done = true; Array.empty }
+          else {
+            val u = pmod(xxhash64(col("__id"), lit(r)), lit(1000000L))
+              .cast("double") / lit(1000000.0)
+            vecs.where(u * lit(phi) < lit(l.toDouble) * minD)
+              .orderBy(xxhash64(col("__id"))).limit(8 * l)
+              .select("__vec").collect().map(_.getSeq[Double](0).toArray)
+          }
+        cands ++= sampled.filter(v => seen.add(v.toSeq))
+        r += 1
+      }
+      if (cands.size < k)
+        cands ++= vecs.orderBy(xxhash64(col("__id"))).limit(4 * k)
+          .select("__vec").collect().map(_.getSeq[Double](0).toArray)
+          .filter(v => seen.add(v.toSeq))
+      if (cands.size <= k) cands.toArray
+      else {
+        val cIdx = ColumnBridge.column(graft.expressions.NearestCentroidsExpr(
+          ColumnBridge.eagerExpression(col("__vec")),
+          cands.toArray.flatten.toIndexedSeq, dim, 1)).getItem(0)
+        val wmap = vecs.groupBy(cIdx.as("__c")).agg(count(lit(1)).as("__n"))
+          .collect().map(row => row.getAs[Int]("__c") -> row.getAs[Long]("__n")).toMap
+        val weights = cands.indices.map(i => wmap.getOrElse(i, 0L)).toArray
+        kmeansWeighted(cands.toArray, weights, k, reclusterIters)
+      }
     }
-    if (cands.size < k)
-      cands ++= vecs.orderBy(xxhash64(col("__id"))).limit(4 * k)
-        .select("__vec").collect().map(_.getSeq[Double](0).toArray)
-        .filter(v => seen.add(v.toSeq))
-    if (cands.size <= k) return cands.toArray
-    val cIdx = ColumnBridge.column(graft.expressions.NearestCentroidsExpr(
-      ColumnBridge.eagerExpression(col("__vec")),
-      cands.toArray.flatten.toIndexedSeq, dim, 1)).getItem(0)
-    val wmap = vecs.groupBy(cIdx.as("__c")).agg(count(lit(1)).as("__n"))
-      .collect().map(row => row.getAs[Int]("__c") -> row.getAs[Long]("__n")).toMap
-    val weights = cands.indices.map(i => wmap.getOrElse(i, 0L)).toArray
-    kmeansWeighted(cands.toArray, weights, k, reclusterIters)
   }
 
   /** Weighted driver-side Lloyd — [[seedKMeansPar]]'s recluster step.
@@ -785,9 +819,8 @@ object Similarity {
     * top-k-by-weight would happily place two seeds inside one dense
     * blob and none in a lighter distant one — the exact starvation the
     * whole seeding pipeline exists to prevent; maximizing mass × spread
-    * covers distant weight by construction. Zero-weight points
-    * contribute no pull; an emptied centroid keeps its previous
-    * position, as in [[kmeans]].
+    * covers distant weight by construction. Then [[lloyd]] from those
+    * seeds.
     */
   private[graft] def kmeansWeighted(
       points: Array[Array[Double]],
@@ -797,23 +830,15 @@ object Similarity {
     require(points.nonEmpty && points.length == weights.length,
       "weighted k-means needs one weight per point")
     val dim = points.head.length
-    def d2(a: Array[Double], b: Array[Double]): Double = {
-      var s = 0.0; var i = 0
-      while (i < dim) { val d = a(i) - b(i); s += d * d; i += 1 }
-      s
-    }
     // Non-FINITE points (NaN or ±Inf elements) are excluded from EVERY
-    // role — seed, argmax, and Lloyd mass: d2(NaN, c) is NaN and
-    // d2(Inf, c) is Inf, so an unguarded Lloyd pass silently assigns
-    // either to centroid 0 and poisons it (NaN through the key, Inf
-    // through the weighted sum). Unreachable via seedKMeansPar's
-    // quarantine; defense in depth for any other caller.
+    // role — seed, argmax, and (in [[lloyd]]) mass. Unreachable via
+    // seedKMeansPar's quarantine; defense in depth for any other caller.
     val nanPt: Array[Boolean] =
       points.map(_.exists(x => !java.lang.Double.isFinite(x)))
     require(nanPt.exists(!_), "weighted k-means needs at least one finite point")
     val seedIdx = scala.collection.mutable.ArrayBuffer[Int](
       points.indices.minBy(i => (nanPt(i), -weights(i), i)))
-    val minD2 = points.map(p => d2(p, points(seedIdx.head)))
+    val minD2 = points.map(p => d2(p, points(seedIdx.head), dim))
     // NaN-carrying points (their d2 is NaN to everything, themselves
     // included) must never win the argmax — Ordering[Double] ranks NaN
     // ABOVE +inf, so an unguarded key would select the same corrupt
@@ -839,36 +864,13 @@ object Similarity {
         seedIdx += next
         var i = 0
         while (i < points.length) {
-          val d = d2(points(i), points(next))
+          val d = d2(points(i), points(next), dim)
           if (d < minD2(i)) minD2(i) = d
           i += 1
         }
       }
     }
-    var centroids = seedIdx.map(points(_)).toArray
-    for (_ <- 0 until iters) {
-      val sums = Array.fill(centroids.length)(new Array[Double](dim))
-      val counts = new Array[Long](centroids.length)
-      var pi = 0
-      while (pi < points.length) {
-        val w = weights(pi)
-        if (w > 0L && !nanPt(pi)) {
-          val p = points(pi)
-          var best = 0; var bestD = Double.MaxValue; var c = 0
-          while (c < centroids.length) {
-            val d = d2(p, centroids(c)); if (d < bestD) { bestD = d; best = c }; c += 1
-          }
-          counts(best) += w
-          var i = 0
-          while (i < dim) { sums(best)(i) += w * p(i); i += 1 }
-        }
-        pi += 1
-      }
-      centroids = centroids.zipWithIndex.map { case (old, c) =>
-        if (counts(c) == 0L) old else sums(c).map(_ / counts(c))
-      }
-    }
-    centroids
+    lloyd(points, weights, seedIdx.map(points(_)).toArray, iters)
   }
 
   /** IVF search against a trained index: the query probes only its

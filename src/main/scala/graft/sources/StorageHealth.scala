@@ -43,22 +43,19 @@ object StorageHealth {
     * @param smallFileBytes threshold below which a file counts as
     *   small (default 32 MiB: well under the 128 MiB split target,
     *   where per-file open/seek overhead dominates scan time).
-    * @param scope the footer sweep (the expensive part: cluster-wide
-    *   file opens) is pinned once and shared by all three views; pass a
-    *   scope and release it after consuming the report, or consume under
-    *   the global scope and let the pipeline's `Caches.release` drop it
-    *   — the [[graft.operators.Graphs.pageRankInt]] pin contract.
+    *
+    * The footer sweep (the expensive part: cluster-wide file opens) is
+    * pinned once and shared by all three views, with the
+    * [[graft.operators.Graphs.pageRankInt]] pin lifetime.
     */
   def report(
       spark: SparkSession,
       dataPath: String,
       manifestPath: Option[String] = None,
-      smallFileBytes: Long = 32L * 1024 * 1024,
-      scope: Option[graft.operators.Caches.Scope] = None): Report = {
+      smallFileBytes: Long = 32L * 1024 * 1024): Report = {
     require(smallFileBytes > 0L, "smallFileBytes must be positive")
     import graft.operators.Caches
-    val chunks = ParquetStats.chunkRows(spark, dataPath)
-    val pinned = scope.fold(Caches.pin(chunks))(_.pin(chunks))
+    val pinned = Caches.pin(ParquetStats.chunkRows(spark, dataPath))
     val columns = ParquetStats.columnFootprintFromChunks(pinned)
     // block_rows repeats across a row group's column chunks: collapse
     // to one row per (file, block) FIRST, then sum per file

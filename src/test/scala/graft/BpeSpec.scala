@@ -190,6 +190,34 @@ class BpeSpec extends AnyFunSuite {
     assert(Bpe.trainMergesCheckpointed(docs, "text", 50, p4, minPairCount = 3L) === short1)
   }
 
+  test("merge rounds plan over a constant-size table: the plan does not grow with the merge count") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.execution.QueryExecution
+    // the largest executed plan (as rendered text) among the queries one
+    // training run executes; delivery is asynchronous but ordered, so a
+    // marker query after training waits for all of them
+    def largestPlan(n: Int): Int = {
+      val marker = "__bpe_plan_marker"
+      val seen = new java.util.concurrent.ConcurrentLinkedQueue[(Boolean, Int)]()
+      val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+        override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+          seen.add((qe.analyzed.output.exists(_.name == marker), qe.executedPlan.treeString.length))
+        override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+      }
+      spark.listenerManager.register(listener)
+      try {
+        assert(Bpe.trainMerges(docs, "text", n) === refTrain(corpus, n, 1L))
+        spark.range(1).toDF(marker).collect()
+        val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+        while (!seen.asScala.exists(_._1) && System.nanoTime() < deadline) Thread.sleep(25L)
+      } finally spark.listenerManager.unregister(listener)
+      seen.asScala.filterNot(_._1).map(_._2).max
+    }
+    val at4 = largestPlan(4)
+    val at12 = largestPlan(12)
+    assert(at12 < 2 * at4, s"the largest training plan grew from $at4 to $at12 chars")
+  }
+
   test("pairCounts weights pairs by word frequency, multiplicity included") {
     val wf = Seq(("aba", 3L), ("ab", 2L)).toDF("word", "wf")
     val pc = Bpe.pairCounts(Bpe.initialSymbolTable(wf))

@@ -139,7 +139,9 @@ class ConversationsSpec extends AnyFunSuite {
       2L -> sysLed, // valid
       3L -> """[{"role":"user","content":"q"}]""", // single turn → invalid
       4L -> "[{bad").toDF("id", "j")
-    val out = graft.operators.Conversations.sftDataset(df, "id", "j", Some(scope))
+    val out = graft.operators.Caches.inScope(scope) {
+      graft.operators.Conversations.sftDataset(df, "id", "j")
+    }
     val rows = out.collect().map(r => r.getLong(0) -> r).toMap
     assert(rows.keySet === Set(1L, 2L), "only contract-valid conversations survive")
     rows.values.foreach { r =>

@@ -110,9 +110,10 @@ class EmbeddingsSpec extends AnyFunSuite {
       // maxCellsPerPass=3 → 5 passes. Each pass must read the PINNED
       // quantized projection (an InMemoryTableScan over __q), never
       // re-derive the quantization from the source per pass.
-      val multi = graft.operators.Embeddings.momentsExactIntBlocked(
-        emb, "vec_id", "embedding", scale = 1, blockSize = 16, maxCellsPerPass = 3,
-        scope = Some(scope))
+      val multi = graft.operators.Caches.inScope(scope) {
+        graft.operators.Embeddings.momentsExactIntBlocked(
+          emb, "vec_id", "embedding", scale = 1, blockSize = 16, maxCellsPerPass = 3)
+      }
       multi.write.format("noop").mode("overwrite").save()
       assert(PlanMetrics.cacheScansWith(multi, Seq("__q")).nonEmpty,
         "multi-pass blocked moments must pin the quantized projection")
@@ -123,8 +124,10 @@ class EmbeddingsSpec extends AnyFunSuite {
     // make this assertion see a cache hit the operator never asked for.
     val scope2 = graft.operators.Caches.newScope()
     try {
-      val single = graft.operators.Embeddings.momentsExactIntBlocked(
-        emb, "vec_id", "embedding", scale = 1, blockSize = 64, scope = Some(scope2))
+      val single = graft.operators.Caches.inScope(scope2) {
+        graft.operators.Embeddings.momentsExactIntBlocked(
+          emb, "vec_id", "embedding", scale = 1, blockSize = 64)
+      }
       single.write.format("noop").mode("overwrite").save()
       assert(PlanMetrics.cacheScansWith(single, Seq("__q")).isEmpty,
         "single-pass blocked moments must not pay a pin")

@@ -146,40 +146,30 @@ class GraphsSpec extends AnyFunSuite {
     assert(got === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L, 5L -> 4L))
   }
 
-  test("pageRankIntCheckpointed is bit-for-bit pageRankInt at convergence-scale rounds") {
+  test("pageRankInt at 30 rounds (past two lineage cuts) equals the integer recurrence") {
     val edgeList = (0L until 120L).flatMap(i => Seq((i, (i * 5 + 2) % 120), (i, (i * 11 + 7) % 120)))
-    val edges = edgeList.toDF("src", "dst")
-    val nodes = (0L until 120L).toDF("id")
-    def toMap(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => r.getAs[Long]("id") -> r.getAs[Long]("rank")).toMap
-    val linear = toMap(Graphs.pageRankInt(edges, "src", "dst", nodes, "id", iters = 12))
-    val ckpt = toMap(Graphs.pageRankIntCheckpointed(
-      edges, "src", "dst", nodes, "id", iters = 12, checkpointEvery = 5))
-    assert(ckpt === linear, "checkpointing must not change a single rank bit")
-    // 30 rounds — a convergence-scale run the linear face's plan growth
-    // makes painful — against the driver-side recurrence
-    val deep = toMap(Graphs.pageRankIntCheckpointed(
-      edges, "src", "dst", nodes, "id", iters = 30, checkpointEvery = 8))
-    assert(deep === reference(edgeList, 0L until 120L, iters = 30))
+    val got = Graphs.pageRankInt(
+      edgeList.toDF("src", "dst"), "src", "dst", (0L until 120L).toDF("id"), "id", iters = 30)
+      .collect().map(r => r.getAs[Long]("id") -> r.getAs[Long]("rank")).toMap
+    assert(got === reference(edgeList, 0L until 120L, iters = 30),
+      "cutting the rank frame must not change a single rank bit")
     Caches.release(blocking = true)
   }
 
-  test("pageRankIntCheckpointed's plan size is bounded by checkpointEvery, not iters") {
+  test("pageRankInt's plan size stays bounded past its cut cadence (20 vs 30 rounds)") {
     val edges = Seq((1L, 2L), (2L, 1L), (2L, 3L), (3L, 1L)).toDF("src", "dst")
     val nodes = Seq(1L, 2L, 3L).toDF("id")
     def planNodes(iters: Int): Int = {
-      val df = Graphs.pageRankIntCheckpointed(
-        edges, "src", "dst", nodes, "id", iters = iters, checkpointEvery = 5)
+      val df = Graphs.pageRankInt(edges, "src", "dst", nodes, "id", iters = iters)
       var n = 0
       df.queryExecution.analyzed.foreach(_ => n += 1)
       n
     }
-    // both end 5 rounds past their last checkpoint → identical lazy tails;
-    // the linear face would differ by 20 rounds' worth of join subtrees
-    val at10 = planNodes(10)
+    // both end 10 rounds past their last cut → identical lazy tails; an
+    // uncut plan would differ by 10 rounds' worth of join subtrees
+    val at20 = planNodes(20)
     val at30 = planNodes(30)
-    assert(at10 === at30,
-      s"plan must not grow with iters past a checkpoint boundary ($at10 vs $at30)")
+    assert(at20 === at30, s"plan must not grow with iters past a cut ($at20 vs $at30)")
     Caches.release(blocking = true)
   }
 
@@ -191,7 +181,7 @@ class GraphsSpec extends AnyFunSuite {
     // localCheckpoint blocks from earlier tests (connectedComponents
     // rounds) at its own pace, so absolute counts race
     val before = spark.sparkContext.getPersistentRDDs.keySet
-    val out = Graphs.pageRankInt(edges, "src", "dst", nodes, "id", iters = 2, scope = Some(scope))
+    val out = Caches.inScope(scope)(Graphs.pageRankInt(edges, "src", "dst", nodes, "id", iters = 2))
     out.collect()
     val pinned = spark.sparkContext.getPersistentRDDs.keySet -- before
     assert(pinned.nonEmpty,

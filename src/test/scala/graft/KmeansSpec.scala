@@ -119,6 +119,51 @@ class KmeansSpec extends AnyFunSuite {
     assert(got(4L) === None)
   }
 
+  test("kmeans (unit-weight Lloyd) equals the unweighted rule on a tie-heavy integer sample") {
+    // the unweighted rule: first k content-distinct seeds, nearest centroid
+    // with ties to the lower index, member-count means, an emptied
+    // centroid keeps its position; also counts the emptied cells
+    def unweighted(points: Array[Array[Double]], k: Int, iters: Int): (Array[Array[Double]], Int) = {
+      val dim = points.head.length
+      var centroids = points.distinctBy(_.toSeq).take(k)
+      var emptied = 0
+      for (_ <- 0 until iters) {
+        val sums = Array.fill(centroids.length)(new Array[Double](dim))
+        val counts = new Array[Long](centroids.length)
+        points.foreach { p =>
+          val best = centroids.indices.minBy(c =>
+            (p.zip(centroids(c)).map { case (a, b) => (a - b) * (a - b) }.sum, c))
+          counts(best) += 1
+          for (i <- 0 until dim) sums(best)(i) += p(i)
+        }
+        emptied += counts.count(_ == 0L)
+        centroids = centroids.indices.map { c =>
+          if (counts(c) == 0L) centroids(c) else sums(c).map(_ / counts(c))
+        }.toArray
+      }
+      (centroids, emptied)
+    }
+    // duplicates, equidistant points, and a cell that empties mid-run
+    val pts = Seq((0, 0), (0, 1), (0, 3), (0, 2), (3, 1), (4, 1), (2, 1), (0, 2), (0, 0), (3, 2),
+      (0, 0), (0, 1)).map { case (x, y) => Array(x.toDouble, y.toDouble) }.toArray
+    val (want, emptied) = unweighted(pts, k = 4, iters = 4)
+    assert(emptied > 0, "the sample must exercise an emptied cluster")
+    val got = Similarity.kmeans(pts, k = 4, iters = 4)
+    assert(got.map(_.toSeq).toSeq === want.map(_.toSeq).toSeq)
+  }
+
+  test("trainIvfFull releases every pin it makes, k-means|| seeding included") {
+    graft.operators.Caches.release(blocking = true)
+    spark.catalog.clearCache()
+    assert(spark.sharedState.cacheManager.isEmpty)
+    val emb = corpus(120).toDF("vec_id", "embedding")
+    val idx = Similarity.trainIvfFull(emb, "vec_id", "embedding", nlist = 3, iters = 2,
+      scalableSeed = true)
+    assert(idx.nlist === 3)
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "the training corpus projections must not outlive the call")
+  }
+
   test("kmeansWeighted: centroids are weighted means, greedy weighted-D² seeding") {
     // two 1-d clusters; weights pull the centroid toward the heavy point
     val pts = Array(Array(0.0), Array(6.0), Array(100.0))

@@ -193,7 +193,9 @@ class SaltQualitySpec extends AnyFunSuite {
     val docs = Seq((1L, "A", 1L), (2L, "A", 2L), (3L, "B", 5L)).toDF("id", "source", "score")
     val before = spark.sparkContext.getPersistentRDDs.keySet
     val scope = graft.operators.Caches.newScope()
-    graft.operators.Quality.quantileNormalize(docs, "id", "source", "score", Some(scope)).collect()
+    graft.operators.Caches.inScope(scope) {
+      graft.operators.Quality.quantileNormalize(docs, "id", "source", "score")
+    }.collect()
     val pinned = spark.sparkContext.getPersistentRDDs.keySet -- before
     assert(pinned.nonEmpty, "the scored frame must be pinned while the call runs")
     scope.release(blocking = true)

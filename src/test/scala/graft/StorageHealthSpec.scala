@@ -21,7 +21,7 @@ class StorageHealthSpec extends AnyFunSuite {
       when(col("id") % 5 =!= 0, concat(lit("doc-"), col("id"))).as("s"))
     df.repartition(3).write.mode(SaveMode.Overwrite).parquet(dir)
     val scope = Caches.newScope()
-    val rep = StorageHealth.report(spark, dir, scope = Some(scope))
+    val rep = Caches.inScope(scope)(StorageHealth.report(spark, dir))
 
     val summary = rep.summary.collect().head
     assert(summary.getAs[Long]("n_files") === 3L)
@@ -77,7 +77,7 @@ class StorageHealthSpec extends AnyFunSuite {
 
     // summary carries the same numbers when a manifest is configured
     val scope = Caches.newScope()
-    val s = StorageHealth.report(spark, dir, Some(manifest), scope = Some(scope))
+    val s = Caches.inScope(scope)(StorageHealth.report(spark, dir, Some(manifest)))
       .summary.collect().head
     assert(s.getAs[Long]("manifest_known") === f2.known)
     assert(s.getAs[Long]("manifest_fresh") === f2.fresh)
@@ -88,7 +88,7 @@ class StorageHealthSpec extends AnyFunSuite {
   test("report on testdata: totals agree with a real row count; one sweep job shape") {
     val dir = "/root/testdata/sf0.001"
     val scope = Caches.newScope()
-    val rep = StorageHealth.report(spark, s"$dir/documents.parquet", scope = Some(scope))
+    val rep = Caches.inScope(scope)(StorageHealth.report(spark, s"$dir/documents.parquet"))
     val summary = rep.summary.collect().head
     val rows = spark.read.parquet(s"$dir/documents.parquet").count()
     assert(summary.getAs[Long]("total_rows") === rows)
