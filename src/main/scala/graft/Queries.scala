@@ -738,18 +738,6 @@ object Queries {
         numPerm = 64, bands = 16, threshold = 0.5),
     None)
 
-  /** EXACT near-dup ground truth: inverted-index all-pairs k-shingle
-    * Jaccard at the same threshold as q25 — recall = 1 by construction
-    * (any pair with Jaccard > 0 shares a shingle), no hashing anywhere, so
-    * DuckDB reproduces it bit-for-bit. This oracle-gates the near-dup
-    * family: DedupSpec asserts q25's LSH pipeline emits a SUBSET of these
-    * pairs (precision 1.0) with bounded recall loss.
-    */
-  /** Shared DuckDB CTE prefix for the exact-Jaccard oracles (q25c, q25d):
-    * planted corpus → shingle sets → inverted index → shared counts →
-    * set sizes. One definition so the pair ground truth and the clustering
-    * oracle can never drift apart.
-    */
   /** The planted near-dup corpus, shared by every oracle that rebuilds
     * [[corpusWithPlantedDups]] (q25c/q25d/q26c/q110).
     */
@@ -761,6 +749,11 @@ object Queries {
                array_to_string(list_filter(string_split_regex(trim(text), '\s+'), x -> length(x) > 0)[2:], ' ') AS text
         FROM documents WHERE doc_id % 10 = 0 AND text IS NOT NULL)"""
 
+  /** Shared DuckDB CTE prefix for the exact-Jaccard oracles (q25c, q25d):
+    * planted corpus → shingle sets → inverted index → shared counts →
+    * set sizes. One definition so the pair ground truth and the clustering
+    * oracle can never drift apart.
+    */
   private val exactJaccardCtes = """
       d AS (
         SELECT doc_id, list_filter(string_split_regex(trim(text), '\s+'), x -> length(x) > 0) AS tk
@@ -777,6 +770,13 @@ object Queries {
         GROUP BY 1, 2),
       sz AS (SELECT doc_id, len(sh) AS n FROM sh)"""
 
+  /** EXACT near-dup ground truth: inverted-index all-pairs k-shingle
+    * Jaccard at the same threshold as q25 — recall = 1 by construction
+    * (any pair with Jaccard > 0 shares a shingle), no hashing anywhere, so
+    * DuckDB reproduces it bit-for-bit. This oracle-gates the near-dup
+    * family: DedupSpec asserts q25's LSH pipeline emits a SUBSET of these
+    * pairs (precision 1.0) with bounded recall loss.
+    */
   val q25cJaccardPairsExact: Q = Q(
     "q25c_jaccard_pairs_exact",
     (s, dir) =>
@@ -2766,17 +2766,6 @@ object Queries {
     },
     None)
 
-  /** q65 through the IVF-PQ screening path ([[AnnIndex.crossNeighborsPq]]):
-    * candidates screen on 32-byte PQ codes + stored norms (the raw vector
-    * column never enters the coarse pass), survivors re-rank by exact
-    * cosine on vectors fetched by id. Settings are sized to the corpus'
-    * measured quantization floor: synthetic uniform embeddings are PQ's
-    * WORST case (no cluster structure — self-ADC ≥ 0.95 at m=32/ksub=256,
-    * vs ≥ 0.99 typical for real embedding corpora), and margin 0.15
-    * leaves ~0.1 headroom under it. Same gating as q65: AnnIndexSpec
-    * pins result ⊆ q65c with full planted recall AND equality with the
-    * flat-probe q65 at these settings.
-    */
   /** Serving-path halves for the PQ index (same split rationale as the
     * TextIndex pair above): the catalog entry fuses build+probe for the
     * gate; the bench times each half on its own.
@@ -2803,14 +2792,6 @@ object Queries {
     path
   }
 
-  /** q65b_auto's index with the coarse router forced onto the TWO-LEVEL
-    * product grid (`imiAbove = 1` — at bench SFs the sized cell count
-    * never crosses the production 2¹⁴ threshold organically): same
-    * 16-row target cells, same PQ codebook shape, so the q65b_imi bench
-    * entries isolate exactly the quantizer swap — the product-grid
-    * assignment/probe constant factor gets its own round-over-round
-    * guard next to the flat-auto baseline.
-    */
   /** Bench helper (q65k's standing-index shape): flat auto-geometry
     * index over the raw embeddings — the index the BULK probe serves
     * from. Kept PQ-less so the bulk entry isolates the shuffle shape,
@@ -2842,6 +2823,14 @@ object Queries {
       threshold = 0.99, probe = AnnIndex.Probe.Cells(4), maxCell = Int.MaxValue)
       .select(col("corpus_id").as("id_a"), col("batch_id").as("id_b"))
 
+  /** q65b_auto's index with the coarse router forced onto the TWO-LEVEL
+    * product grid (`imiAbove = 1` — at bench SFs the sized cell count
+    * never crosses the production 2¹⁴ threshold organically): same
+    * 16-row target cells, same PQ codebook shape, so the q65b_imi bench
+    * entries isolate exactly the quantizer swap — the product-grid
+    * assignment/probe constant factor gets its own round-over-round
+    * guard next to the flat-auto baseline.
+    */
   private[graft] def buildAnnPqImiIndex(s: SparkSession, dir: String): String = {
     val corpus = t(s, dir, "embeddings").select("vec_id", "embedding")
     val path = java.nio.file.Files.createTempDirectory("graft_ann_pq_imi_index").toString
@@ -2876,6 +2865,17 @@ object Queries {
       margin = 0.15, scoreWithLut = false)
       .select(col("corpus_id").as("id_a"), col("batch_id").as("id_b"))
 
+  /** q65 through the IVF-PQ screening path ([[AnnIndex.crossNeighborsPq]]):
+    * candidates screen on 32-byte PQ codes + stored norms (the raw vector
+    * column never enters the coarse pass), survivors re-rank by exact
+    * cosine on vectors fetched by id. Settings are sized to the corpus'
+    * measured quantization floor: synthetic uniform embeddings are PQ's
+    * WORST case (no cluster structure — self-ADC ≥ 0.95 at m=32/ksub=256,
+    * vs ≥ 0.99 typical for real embedding corpora), and margin 0.15
+    * leaves ~0.1 headroom under it. Same gating as q65: AnnIndexSpec
+    * pins result ⊆ q65c with full planted recall AND equality with the
+    * flat-probe q65 at these settings.
+    */
   val q65bAnnIndexDedupPq: Q = Q(
     "q65b_ann_index_dedup_pq",
     (s, dir) => annPqProbe(s, dir, buildAnnPqIndex(s, dir)),
@@ -2909,26 +2909,6 @@ object Queries {
             (sqrt(list_dot_product(CAST(a.embedding AS DOUBLE[]), CAST(a.embedding AS DOUBLE[]))) *
              sqrt(list_dot_product(CAST(b.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])))) >= 0.99"""))
 
-  /** The STREAMING embedding ingest's batch face ([[graft.streaming
-    * .Streams.annIngest]]), driver-gated (VERDICT r14 item 5, the ANN
-    * half of the q53d/q99d pattern). Index built on the BASE embeddings;
-    * the stream carries three synthetic families — scaled copies
-    * (+1,000,000, x·1.001f: duplicate a corpus vector, must always
-    * drop), negations (+2,000,000, −x: cosine −1 to their source and
-    * |cos| ≤ ~0.6 to everything else — novel, must land), and scaled
-    * negation copies (+3,000,000, duplicate of the +2M member) — split
-    * into two micro-batches by `vec_id % 7 < 4` (the +2M/+3M offsets
-    * differ mod 7, so duplicate pairs land same-batch for some residues
-    * and straddle for others, in both orders). With `nprobe = nlist`
-    * every cell is probed, so acceptance is EXACT threshold semantics —
-    * no routing approximation in the gate — and since the corpus has no
-    * organic pair outside cosine [−0.56, 0.61] (measured both SFs), the
-    * duplicate graph is known BY CONSTRUCTION: the oracle is pure id
-    * arithmetic replaying the greedy cross-batch collapse (same batch →
-    * min id keeps; straddling → the earlier batch's member keeps,
-    * whichever family it is). Corpus collect = MemoryStream fixture;
-    * the ingest under test is the production exactly-once foreachBatch.
-    */
   /** The three synthetic ingest families q65d and q65h share — scaled
     * copies (+1M, must drop), negations (+2M, must land), scaled
     * negation copies (+3M, duplicate of the +2M member) — built ONCE so
@@ -2974,6 +2954,26 @@ object Queries {
              CASE WHEN id % 7 < 4 THEN 's00000000' ELSE 's00000001' END AS batch
       FROM acc"""
 
+  /** The STREAMING embedding ingest's batch face ([[graft.streaming
+    * .Streams.annIngest]]), driver-gated (VERDICT r14 item 5, the ANN
+    * half of the q53d/q99d pattern). Index built on the BASE embeddings;
+    * the stream carries three synthetic families — scaled copies
+    * (+1,000,000, x·1.001f: duplicate a corpus vector, must always
+    * drop), negations (+2,000,000, −x: cosine −1 to their source and
+    * |cos| ≤ ~0.6 to everything else — novel, must land), and scaled
+    * negation copies (+3,000,000, duplicate of the +2M member) — split
+    * into two micro-batches by `vec_id % 7 < 4` (the +2M/+3M offsets
+    * differ mod 7, so duplicate pairs land same-batch for some residues
+    * and straddle for others, in both orders). With `nprobe = nlist`
+    * every cell is probed, so acceptance is EXACT threshold semantics —
+    * no routing approximation in the gate — and since the corpus has no
+    * organic pair outside cosine [−0.56, 0.61] (measured both SFs), the
+    * duplicate graph is known BY CONSTRUCTION: the oracle is pure id
+    * arithmetic replaying the greedy cross-batch collapse (same batch →
+    * min id keeps; straddling → the earlier batch's member keeps,
+    * whichever family it is). Corpus collect = MemoryStream fixture;
+    * the ingest under test is the production exactly-once foreachBatch.
+    */
   val q65dAnnIngest: Q = Q(
     "q65d_ann_ingest",
     (s, dir) => {
@@ -4232,13 +4232,6 @@ object Queries {
     },
     None)
 
-  /** Deterministic JL random projection, oracle face
-    * ([[graft.operators.Projection.project]] with the linear-form sign
-    * family): every projected component is an exact integer sum over
-    * ×10⁶ floor-quantized inputs, so the whole 64→8 projection of the
-    * embeddings table hash-matches DuckDB rebuilding the same modular
-    * sign matrix. Output: (vec_id, out_dim, component).
-    */
   /** Exact phrase search through the POSITIONAL postings
     * ([[graft.operators.TextIndex.phraseTopK]]), ORACLE-GATED: the index
     * is built in two batches (phrase evidence spans the batch boundary),
@@ -4269,6 +4262,13 @@ object Queries {
       SELECT doc_id, matches FROM m WHERE matches > 0
       ORDER BY matches DESC, doc_id LIMIT 20"""))
 
+  /** Deterministic JL random projection, oracle face
+    * ([[graft.operators.Projection.project]] with the linear-form sign
+    * family): every projected component is an exact integer sum over
+    * ×10⁶ floor-quantized inputs, so the whole 64→8 projection of the
+    * embeddings table hash-matches DuckDB rebuilding the same modular
+    * sign matrix. Output: (vec_id, out_dim, component).
+    */
   val q85RandomProjection: Q = Q(
     "q85_random_projection",
     (s, dir) => {
@@ -4869,13 +4869,6 @@ object Queries {
       ORDER BY score DESC, doc_id
       LIMIT 20"""
 
-  /** Persisted inverted-index BM25 search ([[graft.operators.TextIndex]]):
-    * the corpus lands as TWO index batches (odd/even doc ids — N, Σdl and
-    * per-term df must aggregate across batch partitions), then the query
-    * runs purely against the on-disk postings. The oracle recomputes BM25
-    * from the raw corpus with the q52c exact-rational formulation — the
-    * index path and the from-scratch path must hash-match.
-    */
   /** Serving-path halves, shared by the catalog entry (which fuses them —
     * the correctness gate wants build+probe end-to-end) and the bench
     * (which times them SEPARATELY: a standing index's probe latency is
@@ -4895,6 +4888,13 @@ object Queries {
   private[graft] def textIndexProbe(s: SparkSession, path: String): DataFrame =
     graft.operators.TextIndex.searchTopK(s, path, Seq("spark", "merge", "window"), 20)
 
+  /** Persisted inverted-index BM25 search ([[graft.operators.TextIndex]]):
+    * the corpus lands as TWO index batches (odd/even doc ids — N, Σdl and
+    * per-term df must aggregate across batch partitions), then the query
+    * runs purely against the on-disk postings. The oracle recomputes BM25
+    * from the raw corpus with the q52c exact-rational formulation — the
+    * index path and the from-scratch path must hash-match.
+    */
   val q84TextIndexSearch: Q = Q(
     "q84_text_index_search",
     (s, dir) => textIndexProbe(s, buildTextIndexBatches(s, dir)),
@@ -5607,19 +5607,6 @@ object Queries {
              MIN(md5(text)) AS md5_lo, MAX(md5(text)) AS md5_hi
       FROM documents GROUP BY source"""))
 
-  /** DSIR-style importance selection ([[graft.operators.Importance]]):
-    * hashed-unigram bucket models (1024 buckets, injectable linear
-    * hash), target = the corpus's SHORT-TOKEN dialect (tokens ≤ 4
-    * chars — a stand-in for any reference corpus whose lexical
-    * distribution differs from the crawl; the driver corpus is lexically
-    * homogeneous across lang/source, so a subset target would carry no
-    * signal), source = the whole corpus. Every doc scores by the
-    * log-free pooled importance ratio and selection straddles the 1.0
-    * threshold on both sides at every SF (sf0.01: 200 of 500 selected,
-    * range 0.29–1.54). Hash-gated end to end: DuckDB rebuilds the
-    * byte-polynomial bucket hash, both smoothed models, the per-doc
-    * integer masses, and the fixed-shape double ratio.
-    */
   /** Persist the q106 bucket models as parquet artifacts (atomic-ish:
     * tiny files, fresh temp dir per call) — the train-once face the
     * bench's q106_build/q106_probe split times separately, and the
@@ -5685,6 +5672,19 @@ object Queries {
       LEFT JOIN mass m ON d.doc_id = m.doc_id
       CROSS JOIN tt CROSS JOIN st"""
 
+  /** DSIR-style importance selection ([[graft.operators.Importance]]):
+    * hashed-unigram bucket models (1024 buckets, injectable linear
+    * hash), target = the corpus's SHORT-TOKEN dialect (tokens ≤ 4
+    * chars — a stand-in for any reference corpus whose lexical
+    * distribution differs from the crawl; the driver corpus is lexically
+    * homogeneous across lang/source, so a subset target would carry no
+    * signal), source = the whole corpus. Every doc scores by the
+    * log-free pooled importance ratio and selection straddles the 1.0
+    * threshold on both sides at every SF (sf0.01: 200 of 500 selected,
+    * range 0.29–1.54). Hash-gated end to end: DuckDB rebuilds the
+    * byte-polynomial bucket hash, both smoothed models, the per-doc
+    * integer masses, and the fixed-shape double ratio.
+    */
   val q106DsirImportance: Q = Q(
     "q106_dsir_importance",
     (s, dir) => {
@@ -6350,15 +6350,6 @@ object Queries {
       JOIN mass mb ON sh.id_b = mb.doc_id
       WHERE CAST(sm AS DOUBLE) / CAST(ma.mass + mb.mass - sm AS DOUBLE) >= 0.2"""))
 
-  /** Waterfilling budget allocation
-    * ([[graft.operators.Packing.waterfillMixturePlan]]) at 97% of the
-    * corpus's total mass — a level that FUNDS the small sources whole
-    * and clips the rest to a common water level at every SF, so the
-    * funded test, the integer level, and the remainder distribution all
-    * have witnesses. The oracle replays the full window arithmetic
-    * (sort, prefix sums, funded maximality, truncating level, +1s to
-    * the first `rem` unfunded in order) over the same budget.
-    */
   /** The waterfill arithmetic as a reusable CTE chain ending in
     * `tgt(source, n_docs, actual_tokens, target_tokens)`, budget =
     * `pct`% of total mass — shared by the plan gate (q117) and the
@@ -6391,6 +6382,15 @@ object Queries {
                END AS target_tokens
         FROM f, k)"""
 
+  /** Waterfilling budget allocation
+    * ([[graft.operators.Packing.waterfillMixturePlan]]) at 97% of the
+    * corpus's total mass — a level that FUNDS the small sources whole
+    * and clips the rest to a common water level at every SF, so the
+    * funded test, the integer level, and the remainder distribution all
+    * have witnesses. The oracle replays the full window arithmetic
+    * (sort, prefix sums, funded maximality, truncating level, +1s to
+    * the first `rem` unfunded in order) over the same budget.
+    */
   val q117WaterfillPlan: Q = Q(
     "q117_waterfill_plan",
     (s, dir) => {

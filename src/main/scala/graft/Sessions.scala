@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.unsafe.array.ByteArrayMethods
 
 /** The one SparkSession factory: the CLI session, Bench, BenchProbe,
   * PlanDump, Verify, MakeScale and the test harness all build through
@@ -12,6 +13,10 @@ import org.apache.spark.sql.SparkSession
   * parallelism, bounded scan splits. Shuffle partitions default to the
   * worker-thread count (local mode) instead of the reference's 200 — on a
   * real cluster this is the knob to raise to ~2-3x total cores.
+  *
+  * Tungsten pages are sized by the page table, not the heap
+  * ([[pageSize]]): the smallest page with which one task can still
+  * address the whole unified memory region.
   */
 object Sessions {
   def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -68,9 +73,33 @@ object Sessions {
     "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" -> "true",
     "spark.sql.adaptive.skewJoin.enabled" -> "true")
 
+  private val MiB = 1L << 20
+
+  /** Tungsten page size for a JVM whose max heap is `maxHeap` bytes.
+    *
+    * Invariant: `pageSize × 8192 ≥ (maxHeap − 300 MiB) × 0.6` — with
+    * `TaskMemoryManager`'s 8192-entry page table, one task can still
+    * address the whole unified memory region. The page is the smallest
+    * power of two that keeps it, and at least Spark's 1 MiB floor: 1 MiB
+    * up to a heap of about 14 GB, larger only where the page table would
+    * otherwise cap a task.
+    *
+    * Spark's default sizes the page to the heap instead (the execution
+    * pool / cores / 16, rounded up to a power of two): 16 MiB at a 3 GB
+    * heap and 4 cores. Every sort, hash aggregate and shuffle sorter takes
+    * one whole page on its first row, so small operators held 16 MiB each.
+    * A record larger than a page still gets a page of its own size, so no
+    * plan, answer or spill path depends on this.
+    */
+  private[graft] def pageSize(maxHeap: Long): Long = {
+    val unified = ((maxHeap - 300 * MiB) * 0.6).toLong
+    math.max(MiB, ByteArrayMethods.nextPowerOf2((unified + 8191) / 8192))
+  }
+
   /** Every conf a graft session sets for `cpus` local worker threads. */
   private[graft] def settings(cpus: String): Map[String, String] =
     codegenDefaults ++ adaptiveShuffle(cpus) ++ Map(
+      "spark.buffer.pageSize" -> pageSize(Runtime.getRuntime.maxMemory).toString,
       "spark.sql.files.maxPartitionBytes" -> "134217728",
       "spark.sql.session.timeZone" -> "UTC",
       // The driver's `events` table carries TIMESTAMP(NANOS) parquet values,

@@ -3,7 +3,7 @@ package graft.banking
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.{CdcMerge, Gold, Scd2}
+import graft.operators.{Caches, CdcMerge, Gold, Scd2}
 import graft.sources.Sinks
 
 /** The full medallion pipeline of the reference, Spark-first.
@@ -160,16 +160,14 @@ object GoldPipeline {
   def loadToDwh(
       gold: GoldTables,
       cfg: Sinks.JdbcConfig,
-      numPartitions: Int = 0): Unit = {
-    val scope = graft.operators.Caches.newScope()
-    scope.pin(gold.dimAccount)
-    try dwhTables(gold).foreach { case (name, df) =>
+      numPartitions: Int = 0): Unit = Caches.scoped {
+    Caches.pin(gold.dimAccount)
+    dwhTables(gold).foreach { case (name, df) =>
       // numPartitions <= 0 → the reference's per-table parallelism
       // ([[DwhPartitions]]); a positive override applies to every table
       // (tests size it to the local session).
       val parts = if (numPartitions > 0) numPartitions else DwhPartitions(name)
       Sinks.writeJdbc(df, cfg, name, parts)
     }
-    finally scope.release(blocking = true)
   }
 }

@@ -309,15 +309,6 @@ object Bpe {
 
   // --- production-scale encoder -------------------------------------
 
-  /** JVM twin of the [[encode]] per-word pipeline, bit-compatible with
-    * the Catalyst expressions it mirrors: tokens = `text.tokens`
-    * (trim + split `\s+` + drop empties), symbols = the `.` regex of
-    * [[charSyms]], merge = the greedy left-to-right pass of [[mergeOnce]]
-    * applied in TRAINING ORDER (sequential replay, not rank-priority
-    * re-selection — re-selection would re-fire an early merge whose pair
-    * string coincidentally reappears after a later one, diverging from
-    * what training computed).
-    */
   /** Sequential (training-order) JVM replay of a merge list over a
     * symbol array — the shared core of [[encodeFast]] and the
     * checkpoint-resume repair in [[trainMergesCheckpointed]].
@@ -341,6 +332,15 @@ object Bpe {
     syms
   }
 
+  /** JVM twin of the [[encode]] per-word pipeline, bit-compatible with
+    * the Catalyst expressions it mirrors: tokens = `text.tokens`
+    * (trim + split `\s+` + drop empties), symbols = the `.` regex of
+    * [[charSyms]], merge = the greedy left-to-right pass of [[mergeOnce]]
+    * applied in TRAINING ORDER (sequential replay, not rank-priority
+    * re-selection — re-selection would re-fire an early merge whose pair
+    * string coincidentally reappears after a later one, diverging from
+    * what training computed).
+    */
   private def encodeWordJvm(word: String, merges: Seq[(String, String)]): Vector[String] =
     mergeSymsJvm("(?s).".r.findAllIn(word).toVector, merges)
 

@@ -695,6 +695,20 @@ object Dedup {
         .select(col(idCol).as("id"), simHash(col(textCol), tokenHash).as("sig")),
       "id", "sig", maxHamming, maxBucket)
 
+  /** The 4×16-bit band decomposition of a 64-bit signature — THE one
+    * definition of the banding geometry. [[hammingPairs64]]'s pair path,
+    * [[graft.streaming.Streams.mediaDedupIngest]]'s persisted band index,
+    * and its cross-batch probe all call this; two copies drifting apart
+    * would silently break the pigeonhole exact-recall claim (a persisted
+    * index banded one way probed another finds nothing, with no error).
+    */
+  private[graft] def bands64(sig: Column): Column =
+    transform(
+      sequence(lit(0), lit(3)),
+      b => struct(
+        b.as("band"),
+        call_function("shiftright", sig, b * 16).bitwiseAND(0xffffL).as("bucket")))
+
   /** Banded-Hamming near-dup pairs over ANY precomputed 64-bit signature
     * column — the [[simHashPairs]] machinery with the signature injectable,
     * so image dHash / audio fingerprints / externally computed sketches
@@ -710,20 +724,6 @@ object Dedup {
     * signature that is genuinely zero (empty token stream) is NOT null and
     * pairs normally at hamming 0.
     */
-  /** The 4×16-bit band decomposition of a 64-bit signature — THE one
-    * definition of the banding geometry. [[hammingPairs64]]'s pair path,
-    * [[graft.streaming.Streams.mediaDedupIngest]]'s persisted band index,
-    * and its cross-batch probe all call this; two copies drifting apart
-    * would silently break the pigeonhole exact-recall claim (a persisted
-    * index banded one way probed another finds nothing, with no error).
-    */
-  private[graft] def bands64(sig: Column): Column =
-    transform(
-      sequence(lit(0), lit(3)),
-      b => struct(
-        b.as("band"),
-        call_function("shiftright", sig, b * 16).bitwiseAND(0xffffL).as("bucket")))
-
   def hammingPairs64(
       sigsIn: DataFrame,
       idCol: String,

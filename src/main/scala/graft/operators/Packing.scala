@@ -436,31 +436,6 @@ object Packing {
         sum(col(tokensCol)).as("fill"))
       .withColumn("waste", lit(budget) - col("fill"))
 
-  /** Deterministic EPOCH SHUFFLE with shard assignment — the "write
-    * shuffled shards" step every training run needs: a fresh global
-    * permutation of the corpus per epoch, identical on every re-run and
-    * engine (so a resumed job reads the same byte order), with documents
-    * numbered 1..n in permuted order and cut into fixed-size shards.
-    *
-    * The permutation is `id · m(epoch) mod p` with p = 1000000007 and an
-    * epoch-dependent multiplier m(epoch) = 654321979 + epoch·2718281:
-    * any nonzero unit mod a prime is a bijection, so the draw is
-    * INJECTIVE over ids — no ties exist, the global order is a pure
-    * function of (id, epoch), and an ANSI `row_number` reproduces it
-    * exactly. The multiplier must be LARGE so the product wraps the
-    * modulus (a small multiplier like 37 never wraps small ids and the
-    * "shuffle" degenerates to identity order — caught by this spec in
-    * round 11); it must also change per epoch MULTIPLICATIVELY (an
-    * additive epoch offset only rotates one fixed circular order).
-    * Position numbering is the two-phase distributed prefix sum
-    * ([[Partitioning.runningSum]]) — never a single-partition window;
-    * shard = (pos−1) div shardSize.
-    *
-    * `idCol` must be a non-negative integral id below p (10⁹) — the
-    * injectivity domain of a mod-p permutation; pre-hash or re-number
-    * wider id spaces first. Epochs are cheap: each is one range exchange
-    * over (id, draw), nothing is materialized per epoch.
-    */
   /** Materialize an epoch's shuffled shards: [[epochShuffleShards]]
     * carries the full rows through the permutation (no join back — see
     * its duplicate-id note) and the result lands as `<path>/shard=<k>/`
@@ -537,6 +512,31 @@ object Packing {
         ((col("__pos") - col("__start")) % batchSize).cast("int").as("pos_in_batch"))
   }
 
+  /** Deterministic EPOCH SHUFFLE with shard assignment — the "write
+    * shuffled shards" step every training run needs: a fresh global
+    * permutation of the corpus per epoch, identical on every re-run and
+    * engine (so a resumed job reads the same byte order), with documents
+    * numbered 1..n in permuted order and cut into fixed-size shards.
+    *
+    * The permutation is `id · m(epoch) mod p` with p = 1000000007 and an
+    * epoch-dependent multiplier m(epoch) = 654321979 + epoch·2718281:
+    * any nonzero unit mod a prime is a bijection, so the draw is
+    * INJECTIVE over ids — no ties exist, the global order is a pure
+    * function of (id, epoch), and an ANSI `row_number` reproduces it
+    * exactly. The multiplier must be LARGE so the product wraps the
+    * modulus (a small multiplier like 37 never wraps small ids and the
+    * "shuffle" degenerates to identity order — caught by this spec in
+    * round 11); it must also change per epoch MULTIPLICATIVELY (an
+    * additive epoch offset only rotates one fixed circular order).
+    * Position numbering is the two-phase distributed prefix sum
+    * ([[Partitioning.runningSum]]) — never a single-partition window;
+    * shard = (pos−1) div shardSize.
+    *
+    * `idCol` must be a non-negative integral id below p (10⁹) — the
+    * injectivity domain of a mod-p permutation; pre-hash or re-number
+    * wider id spaces first. Epochs are cheap: each is one range exchange
+    * over (id, draw), nothing is materialized per epoch.
+    */
   def epochShuffleShards(
       df: DataFrame,
       idCol: String,

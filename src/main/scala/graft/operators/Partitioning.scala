@@ -218,8 +218,8 @@ object Partitioning {
     * full per-group sort. Growing `n` extends the sample (top-3 ⊆ top-5
     * under the same order) — per-key mixtures stay nested as caps are
     * tuned, matching [[hashSample]]'s subset discipline.
-    */
-  /** `uniform` defaults to the key-hash draw; injectable for the
+    *
+    * `uniform` defaults to the key-hash draw; injectable for the
     * systematic ANSI-reproducible form (the q48c/q60c/q88c pattern) —
     * which also puts the bounded-heap [[graft.plans.TopK]] physical
     * operator itself under an external oracle (q96b): the selected SET

@@ -9,17 +9,6 @@ import org.apache.spark.sql.functions._
   */
 object Quality {
 
-  /** Compressibility report per document — the DEFLATE quality signal
-    * ([[graft.expressions.DeflateLenExpr]]): `ratio` near 1 flags
-    * incompressible noise (random ids, base64, encrypted blobs), near 0
-    * flags repeated boilerplate, and it sees long-period repetition
-    * structure that token-level stats (type/token q21, repeated n-grams
-    * q34) miss. Pure projection inside whole-stage codegen — zero
-    * shuffle at any corpus size. NULL text rows stay in the report with
-    * NULL bytes/ratio (the caller's filter decides their fate, not this
-    * operator); empty text reports its fixed DEFLATE overhead with
-    * ratio 0 by convention (raw_bytes = 0 has no meaningful quotient).
-    */
   /** The DEFLATE ratio as a column: bytes-compressed / bytes-raw, 0.0
     * for EMPTY text by convention (a zero-byte doc has no meaningful
     * quotient), NULL only for NULL text. The ONE definition both
@@ -35,6 +24,17 @@ object Quality {
       .when(octet_length(textC).isNotNull, lit(0.0))
   }
 
+  /** Compressibility report per document — the DEFLATE quality signal
+    * ([[graft.expressions.DeflateLenExpr]]): `ratio` near 1 flags
+    * incompressible noise (random ids, base64, encrypted blobs), near 0
+    * flags repeated boilerplate, and it sees long-period repetition
+    * structure that token-level stats (type/token q21, repeated n-grams
+    * q34) miss. Pure projection inside whole-stage codegen — zero
+    * shuffle at any corpus size. NULL text rows stay in the report with
+    * NULL bytes/ratio (the caller's filter decides their fate, not this
+    * operator); empty text reports its fixed DEFLATE overhead with
+    * ratio 0 by convention (raw_bytes = 0 has no meaningful quotient).
+    */
   def compressionReport(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
     import org.apache.spark.sql.graft.ColumnBridge
     val dl = ColumnBridge.column(
@@ -176,34 +176,6 @@ object Quality {
       .select(outCols.head, outCols.tail: _*)
   }
 
-  /** FLEISS' KAPPA — chance-corrected inter-rater agreement over an
-    * annotation frame with one row per (item, rating), the label-quality
-    * audit a human- or model-annotated training set ships with (Fleiss
-    * 1971, "Measuring nominal scale agreement among many raters" —
-    * public formula, restated). One row out:
-    * `(n_items, n_raters, n_categories, p_bar, p_e, kappa)`.
-    *
-    * Exactness: every double derives from INTEGER aggregates through one
-    * fixed expression — P̄ = (Σᵢⱼ n_ij² − N·n) / (N·n·(n−1)) has an
-    * integer numerator by algebra (never a sum of per-item doubles,
-    * which would be summation-order-dependent), P̄ₑ = Σⱼ Tⱼ² / (N·n)²
-    * likewise — so the statistic replays bit-for-bit in any engine
-    * (q142). Category totals square in decimal(38,0): Tⱼ can reach
-    * N·n, whose square overflows a long at corpus scale.
-    *
-    * Contract: rater identity never enters (Fleiss needs only per-item
-    * category counts), but every item must carry the SAME number of
-    * ratings n ≥ 2 — both violations fail loudly per-run (an unbalanced
-    * panel silently biases P̄ toward its over-rated items). NULL items
-    * or labels are dropped before counting: an unlabeled row is a
-    * missing rating, not a category. Degenerate unanimity (P̄ₑ = 1
-    * forces P̄ = 1) reports κ = 1 rather than 0/0.
-    *
-    * Scale shape: one (item, label) hash aggregation — map-side combined,
-    * the wire carries distinct pairs — feeding two key-bounded rollups
-    * off the pinned counts ([[Caches.inScope]] in long-lived sessions); the
-    * kappa row itself is a 1×1 cross of two scalar aggregates.
-    */
   /** Per-ITEM disagreement report — the routing face of the corpus-
     * level kappas ([[fleissKappa]]/[[cohenKappa]] say whether the
     * PANEL is reliable; this says WHICH items to re-annotate). One
@@ -258,6 +230,34 @@ object Quality {
           .as("needs_reannotation"))
   }
 
+  /** FLEISS' KAPPA — chance-corrected inter-rater agreement over an
+    * annotation frame with one row per (item, rating), the label-quality
+    * audit a human- or model-annotated training set ships with (Fleiss
+    * 1971, "Measuring nominal scale agreement among many raters" —
+    * public formula, restated). One row out:
+    * `(n_items, n_raters, n_categories, p_bar, p_e, kappa)`.
+    *
+    * Exactness: every double derives from INTEGER aggregates through one
+    * fixed expression — P̄ = (Σᵢⱼ n_ij² − N·n) / (N·n·(n−1)) has an
+    * integer numerator by algebra (never a sum of per-item doubles,
+    * which would be summation-order-dependent), P̄ₑ = Σⱼ Tⱼ² / (N·n)²
+    * likewise — so the statistic replays bit-for-bit in any engine
+    * (q142). Category totals square in decimal(38,0): Tⱼ can reach
+    * N·n, whose square overflows a long at corpus scale.
+    *
+    * Contract: rater identity never enters (Fleiss needs only per-item
+    * category counts), but every item must carry the SAME number of
+    * ratings n ≥ 2 — both violations fail loudly per-run (an unbalanced
+    * panel silently biases P̄ toward its over-rated items). NULL items
+    * or labels are dropped before counting: an unlabeled row is a
+    * missing rating, not a category. Degenerate unanimity (P̄ₑ = 1
+    * forces P̄ = 1) reports κ = 1 rather than 0/0.
+    *
+    * Scale shape: one (item, label) hash aggregation — map-side combined,
+    * the wire carries distinct pairs — feeding two key-bounded rollups
+    * off the pinned counts ([[Caches.inScope]] in long-lived sessions); the
+    * kappa row itself is a 1×1 cross of two scalar aggregates.
+    */
   def fleissKappa(
       df: DataFrame,
       itemCol: String,
@@ -433,22 +433,6 @@ object Quality {
           .as("recall"))
   }
 
-  /** DATASET CARD: the one-call corpus audit artifact a published
-    * training set ships — long-format `(section, metric, value)` rows
-    * covering volume, exact-duplication, quality-flag counts, and the
-    * language / script / source mixes. Every value is an exact INTEGER
-    * (counts and integer sums only — a mean of per-doc doubles would
-    * make the card summation-order-dependent and unreproducible across
-    * engines; ratios are the READER's division). Quality flags count
-    * per-doc threshold exceedances, which are deterministic double
-    * comparisons on identical operands.
-    *
-    * Scale shape: ONE corpus scan materializes the per-doc projection
-    * (pinned, with the [[Graphs.pageRankInt]] pin lifetime); the five
-    * sections are cheap
-    * aggregations over that projection (a global aggregate melted via
-    * `stack`, three low-cardinality group-bys, one distinct count).
-    */
   /** The per-doc projection every dataset-card face shares — one row per
     * doc with the normalized source, integer volume stats, the exact-dup
     * fingerprint, quality ratios, and the lang/script ids. UNPINNED;
@@ -468,6 +452,22 @@ object Quality {
       text.scriptId(col(textCol)).as("script"))
   }
 
+  /** DATASET CARD: the one-call corpus audit artifact a published
+    * training set ships — long-format `(section, metric, value)` rows
+    * covering volume, exact-duplication, quality-flag counts, and the
+    * language / script / source mixes. Every value is an exact INTEGER
+    * (counts and integer sums only — a mean of per-doc doubles would
+    * make the card summation-order-dependent and unreproducible across
+    * engines; ratios are the READER's division). Quality flags count
+    * per-doc threshold exceedances, which are deterministic double
+    * comparisons on identical operands.
+    *
+    * Scale shape: ONE corpus scan materializes the per-doc projection
+    * (pinned, with the [[Graphs.pageRankInt]] pin lifetime); the five
+    * sections are cheap
+    * aggregations over that projection (a global aggregate melted via
+    * `stack`, three low-cardinality group-bys, one distinct count).
+    */
   def datasetCard(
       docs: DataFrame,
       idCol: String,

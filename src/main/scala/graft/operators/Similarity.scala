@@ -38,23 +38,6 @@ object Similarity {
       .limit(k)
   }
 
-  /** The scoring projection under [[bruteForceTopKExactInt]], exposed on
-    * its own for candidate-join consumers (hard-negative mining, re-rank
-    * feeds) that must NOT pay the global top-k sort: every corpus row's
-    * exact-int cosine to the query — a zero-shuffle map over the corpus
-    * against a 1-row broadcast. `score` is IEEE-deterministic (exact
-    * integer operands, correctly-rounded sqrt/multiply/divide in a fixed
-    * shape), so it is hash-safe to emit and to filter on; the constant
-    * qnorm² is folded ONCE on the broadcast side, not re-folded per
-    * corpus row.
-    *
-    * Overflow contract: each integer fold needs
-    * `dim · (scale·max|x| + 1)² < 2⁶³` — at the default scale 1000 that
-    * holds to |x| ≈ 3·10⁵ per component. The RANKING term multiplies
-    * √norm² · √qnorm² in DOUBLE (never norm²·qnorm² in long, whose
-    * product overflows at a merely large scale — caught by review in
-    * round 11 as an ANSI-mode crash / silent NaN-first ordering).
-    */
   /** Binary (Hamming) top-k over sign-bit codes ([[Quantize
     * .signBits]]): the 1-bit ANN face — distance = popcount of the
     * XOR of two 64-bit codes, one integer instruction per candidate
@@ -120,6 +103,23 @@ object Similarity {
       .select(col(idCol), col("dot"), col("norm2"))
   }
 
+  /** The scoring projection under [[bruteForceTopKExactInt]], exposed on
+    * its own for candidate-join consumers (hard-negative mining, re-rank
+    * feeds) that must NOT pay the global top-k sort: every corpus row's
+    * exact-int cosine to the query — a zero-shuffle map over the corpus
+    * against a 1-row broadcast. `score` is IEEE-deterministic (exact
+    * integer operands, correctly-rounded sqrt/multiply/divide in a fixed
+    * shape), so it is hash-safe to emit and to filter on; the constant
+    * qnorm² is folded ONCE on the broadcast side, not re-folded per
+    * corpus row.
+    *
+    * Overflow contract: each integer fold needs
+    * `dim · (scale·max|x| + 1)² < 2⁶³` — at the default scale 1000 that
+    * holds to |x| ≈ 3·10⁵ per component. The RANKING term multiplies
+    * √norm² · √qnorm² in DOUBLE (never norm²·qnorm² in long, whose
+    * product overflows at a merely large scale — caught by review in
+    * round 11 as an ANSI-mode crash / silent NaN-first ordering).
+    */
   def cosineToQueryExactInt(
       emb: DataFrame,
       idCol: String,

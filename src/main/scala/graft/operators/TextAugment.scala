@@ -100,26 +100,6 @@ object TextAugment {
       .withColumn("n_masked", packed.getField("n_masked"))
   }
 
-  /** FILL-IN-THE-MIDDLE transformation (Bavarian et al. 2022,
-    * "Efficient Training of Language Models to Fill in the Middle"):
-    * a hash-chosen `fimPermille`/1000 of documents split at two
-    * hash-uniform character positions into (prefix, middle, suffix)
-    * and re-serialize in PSM order —
-    *
-    *   `<fim_prefix>` prefix `<fim_suffix>` suffix `<fim_middle>` middle
-    *
-    * — so the model learns infilling while the untransformed share
-    * preserves left-to-right quality (the paper's 50/50 default).
-    * Every decision — the apply coin and both cut points — is a pure
-    * function of `(id, seed)` through the same linear-mod-P bridge as
-    * [[spanCorrupt]]: recomputation, retries, and any partitioning
-    * reproduce the identical corpus, the property loss-curve
-    * comparisons rest on. Untransformed rows emit `fim_text = text`
-    * with NULL parts; NULL text stays NULL (quarantine, not '' —
-    * a missing document must not become an empty training row).
-    * Cut points are CHARACTER offsets (`substring` semantics on both
-    * engines); zero shuffle, zero UDFs.
-    */
   /** Needle insertion — the needle-in-a-haystack long-context eval
     * prep: plant `needle` at a hash-uniform character position per
     * document and RECORD the position and depth fraction, so recall
@@ -151,6 +131,26 @@ object TextAugment {
             text.substr(col("needle_pos").cast("int") + 1, len - col("needle_pos").cast("int")))))
   }
 
+  /** FILL-IN-THE-MIDDLE transformation (Bavarian et al. 2022,
+    * "Efficient Training of Language Models to Fill in the Middle"):
+    * a hash-chosen `fimPermille`/1000 of documents split at two
+    * hash-uniform character positions into (prefix, middle, suffix)
+    * and re-serialize in PSM order —
+    *
+    *   `<fim_prefix>` prefix `<fim_suffix>` suffix `<fim_middle>` middle
+    *
+    * — so the model learns infilling while the untransformed share
+    * preserves left-to-right quality (the paper's 50/50 default).
+    * Every decision — the apply coin and both cut points — is a pure
+    * function of `(id, seed)` through the same linear-mod-P bridge as
+    * [[spanCorrupt]]: recomputation, retries, and any partitioning
+    * reproduce the identical corpus, the property loss-curve
+    * comparisons rest on. Untransformed rows emit `fim_text = text`
+    * with NULL parts; NULL text stays NULL (quarantine, not '' —
+    * a missing document must not become an empty training row).
+    * Cut points are CHARACTER offsets (`substring` semantics on both
+    * engines); zero shuffle, zero UDFs.
+    */
   def fimSplit(
       df: DataFrame, idCol: String, textCol: String,
       fimPermille: Int, seed: Long): DataFrame = {

@@ -439,6 +439,15 @@ object TextIndex {
     missing
   }
 
+  /** Candidate cap for [[anchorToManifest]]'s literal IN pushdown: at or
+    * under it the candidate doc_ids collect to the driver and prune the
+    * manifest scan as a pushed filter; above it (a boilerplate-hot term
+    * matching millions of docs) the anchor falls back to the join shape,
+    * whose cost the huge candidate set dominates anyway. 10⁴ ids ≈ 80 KB
+    * on the driver — bounded however hot the term.
+    */
+  @volatile private[graft] var manifestProbeMaxCandidates: Int = 10000
+
   /** Postings restricted to each doc's TRUE latest version, via the
     * per-batch doc manifest — the exact close of the stale-only residual
     * [[latestVersionOnly]]'s frame-scoped anchor leaves open: the
@@ -463,15 +472,6 @@ object TextIndex {
     * merge's canonical content, so answers hold (the same transient
     * file-not-found retry contract as every reader under compaction).
     */
-  /** Candidate cap for [[anchorToManifest]]'s literal IN pushdown: at or
-    * under it the candidate doc_ids collect to the driver and prune the
-    * manifest scan as a pushed filter; above it (a boilerplate-hot term
-    * matching millions of docs) the anchor falls back to the join shape,
-    * whose cost the huge candidate set dominates anyway. 10⁴ ids ≈ 80 KB
-    * on the driver — bounded however hot the term.
-    */
-  @volatile private[graft] var manifestProbeMaxCandidates: Int = 10000
-
   private def anchorToManifest(
       spark: SparkSession,
       path: String,

@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.hadoop.fs.Path
+import org.apache.spark.JobExecutionStatus
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The append-only batch-table commit protocol shared by the persisted
@@ -83,7 +84,7 @@ final case class BatchTable(spark: SparkSession, marker: String, companions: Seq
     val staging = new Path(marker,
       s".staging_${label}_${java.util.UUID.randomUUID().toString.take(8)}")
     try {
-      frame.write.mode("overwrite").parquet(staging.toString)
+      quiescedOnFailure(frame.write.mode("overwrite").parquet(staging.toString))
       val frames = companionFrames(staging.toString)
       require(frames.size == companions.size,
         s"${frames.size} companion frames for ${companions.size} companion tables")
@@ -94,6 +95,34 @@ final case class BatchTable(spark: SparkSession, marker: String, companions: Seq
     } finally {
       if (fs.exists(staging)) fs.delete(staging, true)
     }
+  }
+
+  /** Run `write` under a fresh job tag; if it throws, cancel the tag's
+    * jobs and return (rethrow) only once no task of them runs. Spark fails
+    * a job without waiting for the stage's other running tasks, and such a
+    * straggler would re-create the staging directory after [[commit]]
+    * deleted it. The tag adds to the caller's job group, never replaces it.
+    * The wait is bounded at a minute; residue of a task that outlives it
+    * is uncommitted by definition and [[vacuum]] clears it.
+    */
+  private def quiescedOnFailure(write: => Unit): Unit = {
+    val sc = spark.sparkContext
+    val tag = s"graft-batch-table-${java.util.UUID.randomUUID()}"
+    sc.addJobTag(tag)
+    try write
+    catch {
+      case e: Throwable =>
+        sc.cancelJobsWithTag(tag, "batch-table write failed")
+        val tracker = sc.statusTracker
+        def running = tracker.getJobIdsForTag(tag).iterator.flatMap(tracker.getJobInfo(_))
+          .exists { job =>
+            job.status == JobExecutionStatus.RUNNING ||
+              job.stageIds.iterator.flatMap(tracker.getStageInfo(_)).exists(_.numActiveTasks > 0)
+          }
+        val deadline = System.nanoTime() + java.util.concurrent.TimeUnit.MINUTES.toNanos(1)
+        while (running && System.nanoTime() < deadline) Thread.sleep(20)
+        throw e
+    } finally sc.removeJobTag(tag)
   }
 
   /** Retry-safe [[commit]] for exactly-once loops (a streaming

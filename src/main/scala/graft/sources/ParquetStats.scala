@@ -19,13 +19,6 @@ import org.apache.spark.sql.functions._
   */
 object ParquetStats {
 
-  /** Per-column storage totals for the table at `path`:
-    * `(column, n_chunks, n_values, n_nulls, compressed_bytes,
-    * uncompressed_bytes)`. `n_values` counts every slot (nulls
-    * included) — per parquet's chunk metadata; `n_nulls` from the chunk
-    * statistics when present (-1 aggregate when any chunk lacks them:
-    * absent stats must read as "unknown", never as zero nulls).
-    */
   /** One row per (file, row group, column chunk) from a parallelized
     * footers-only sweep — the shared substrate [[columnFootprint]] and
     * [[StorageHealth.report]] both aggregate, so a caller composing the
@@ -65,6 +58,13 @@ object ParquetStats {
         "compressed_bytes", "uncompressed_bytes")
   }
 
+  /** Per-column storage totals for the table at `path`:
+    * `(column, n_chunks, n_values, n_nulls, compressed_bytes,
+    * uncompressed_bytes)`. `n_values` counts every slot (nulls
+    * included) — per parquet's chunk metadata; `n_nulls` from the chunk
+    * statistics when present (-1 aggregate when any chunk lacks them:
+    * absent stats must read as "unknown", never as zero nulls).
+    */
   def columnFootprint(spark: SparkSession, path: String): DataFrame =
     columnFootprintFromChunks(chunkRows(spark, path))
 

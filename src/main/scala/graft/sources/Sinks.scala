@@ -138,14 +138,6 @@ object Sinks {
     }
   }
 
-  /** The whole-table staging-and-swap protocol, factored so any writer
-    * (plain partitioned, z-ordered, a future format) can be made atomic:
-    * `writeTo(stagingPath)` runs while the target is untouched, then the
-    * result swaps in via renames. Includes the crash-window recovery
-    * preamble (see the scaladoc above). With `keepVersions > 0` the
-    * displaced table is retained as a `__v_<millis>` sibling (pruned to
-    * the newest `keepVersions`) instead of deleted.
-    */
   /** Does this failure look like a reader racing [[atomicSwap]]'s
     * sub-millisecond absent-path window (old dir renamed out, new dir not
     * yet renamed in), or a scan task opening files the swap renamed away
@@ -190,6 +182,14 @@ object Sinks {
     attempt(retries)
   }
 
+  /** The whole-table staging-and-swap protocol, factored so any writer
+    * (plain partitioned, z-ordered, a future format) can be made atomic:
+    * `writeTo(stagingPath)` runs while the target is untouched, then the
+    * result swaps in via renames. Includes the crash-window recovery
+    * preamble (commented in the body). With `keepVersions > 0` the
+    * displaced table is retained as a `__v_<millis>` sibling (pruned to
+    * the newest `keepVersions`) instead of deleted.
+    */
   private def atomicSwap(
       spark: org.apache.spark.sql.SparkSession,
       path: String,

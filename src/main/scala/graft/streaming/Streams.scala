@@ -490,28 +490,6 @@ object Streams {
     checkpoint.fold(writer)(writer.option("checkpointLocation", _)).start()
   }
 
-  /** Continuous canonical-URL dedup — the crawl-frontier face of the
-    * ingestion family: each micro-batch canonicalizes its URLs
-    * ([[graft.operators.Urls.canonicalize]]; unparseable rows drop via
-    * the NULL quarantine), keeps one row per canonical identity inside
-    * the batch (minimum `idCol`), anti-joins against the persisted
-    * seen-set at `indexPath`, lands ONLY first-sightings under
-    * `outputPath/batch=s<id>/`, and appends their canonicals to the
-    * seen-set — same exactly-once composition as [[nearDupIngest]]
-    * (exists-guarded atomic renames; a crash-replayed micro-batch from a
-    * replayable source re-lands nothing and re-appends nothing, and the
-    * seen-set append is the commit marker, so the half-landed window
-    * re-runs identically).
-    *
-    * Scale shape: the anti-join is the one honest cost of EXACT identity
-    * dedup — a hash join keyed on the canonical string against a
-    * seen-set that accrues forever. The seen-set is 2 narrow columns
-    * (canonical, keeper), read pruned to just those; when it outgrows
-    * comfortable shuffle size, front it with [[graft.operators
-    * .BloomJoin]] (most URLs in a steady crawl are NEW, and a bloom
-    * pre-filter turns the common miss case into a scan-local decision)
-    * and compact the `s`-labels on a schedule like the other indexes.
-    */
   /** Continuous DSIR importance routing — the streaming face of
     * [[graft.operators.Importance]]: each micro-batch scores its
     * documents against FIXED bucket models and lands every row under
@@ -680,6 +658,28 @@ object Streams {
     checkpoint.fold(writer)(writer.option("checkpointLocation", _)).start()
   }
 
+  /** Continuous canonical-URL dedup — the crawl-frontier face of the
+    * ingestion family: each micro-batch canonicalizes its URLs
+    * ([[graft.operators.Urls.canonicalize]]; unparseable rows drop via
+    * the NULL quarantine), keeps one row per canonical identity inside
+    * the batch (minimum `idCol`), anti-joins against the persisted
+    * seen-set at `indexPath`, lands ONLY first-sightings under
+    * `outputPath/batch=s<id>/`, and appends their canonicals to the
+    * seen-set — same exactly-once composition as [[nearDupIngest]]
+    * (exists-guarded atomic renames; a crash-replayed micro-batch from a
+    * replayable source re-lands nothing and re-appends nothing, and the
+    * seen-set append is the commit marker, so the half-landed window
+    * re-runs identically).
+    *
+    * Scale shape: the anti-join is the one honest cost of EXACT identity
+    * dedup — a hash join keyed on the canonical string against a
+    * seen-set that accrues forever. The seen-set is 2 narrow columns
+    * (canonical, keeper), read pruned to just those; when it outgrows
+    * comfortable shuffle size, front it with [[graft.operators
+    * .BloomJoin]] (most URLs in a steady crawl are NEW, and a bloom
+    * pre-filter turns the common miss case into a scan-local decision)
+    * and compact the `s`-labels on a schedule like the other indexes.
+    */
   def urlDedupIngest(
       stream: DataFrame,
       urlCol: String,

@@ -93,6 +93,28 @@ class BatchTableSpec extends AnyFunSuite {
     t.commitOnce("00000001", sys.error("a committed label must not evaluate its frame"))
   }
 
+  test("a failed write returns only after its straggler tasks end; no staging survives them") {
+    // a second of work that ignores interrupts, as a task mid-write does
+    val slow = udf { (id: Long) =>
+      val end = System.nanoTime() + 1000L * 1000 * 1000
+      while (System.nanoTime() < end) try Thread.sleep(20L) catch { case _: InterruptedException => }
+      id
+    }.asNondeterministic()
+    // partition 0 raises at once; partition 1 sleeps, then writes its row
+    val straggling = spark.range(0, 2, 1, 2)
+      .select(when(col("id") === 0L, raise_error(lit("injected companion failure")))
+        .otherwise(slow(col("id"))).as("id"))
+    val t = table()
+    intercept[Exception] {
+      t.commit("00000001", frame(1L), _ => Seq(straggling))
+    }
+    Thread.sleep(2000L) // past the straggler's write, had the commit not waited for it
+    assert(t.committed.isEmpty)
+    (t.marker +: t.companions).foreach { dir =>
+      assert(entries(dir).forall(!_.startsWith(".")), s"staging residue in $dir: ${entries(dir)}")
+    }
+  }
+
   test("nextLabel numbers over numeric labels only; s-labels do not count") {
     val t = table(companions = 0)
     assert(t.nextLabel == "00000001")

@@ -1,0 +1,36 @@
+package graft
+
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Scaladoc attaches to the definition directly below it, so a doc
+  * comment followed at once by another doc comment documents nothing:
+  * the first block is dropped and the def reads only the second.
+  */
+class SourceDocsSpec extends AnyFunSuite {
+
+  /** `file:line` of every line opening a doc comment right after a line
+    * that closes one, under `root`.
+    */
+  private def stackedDocs(root: Path): Seq[String] = {
+    val files = Files.walk(root)
+    try files.iterator.asScala.filter(_.toString.endsWith(".scala")).toSeq.sorted.flatMap { f =>
+      val lines = Files.readAllLines(f).asScala.map(_.trim).toIndexedSeq
+      lines.indices.drop(1).collect {
+        case i if lines(i - 1).endsWith("*/") && lines(i).startsWith("/**") =>
+          s"${root.relativize(f)}:${i + 1}"
+      }
+    }
+    finally files.close()
+  }
+
+  test("no doc comment in src/main/scala is directly followed by another") {
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"run from the project root: ${root.toAbsolutePath}")
+    val stacked = stackedDocs(root)
+    if (stacked.nonEmpty) fail(s"${stacked.size} stacked doc comments:\n${stacked.mkString("\n")}")
+  }
+}
