@@ -844,8 +844,7 @@ object AnnIndex {
     // exchange (~15 redundant shuffles at default iters); pinning pays
     // it once, spilling to disk if the postings outgrow memory. Scoped
     // so the pin cannot leak past the rebuild.
-    val scope = Caches.newScope()
-    try Caches.inScope(scope) {
+    Caches.scoped {
       val vecs = Caches.pin(
         spark.read.parquet(vectorsDir(oldPath))
           .select(col("id"), col("vec"))
@@ -869,7 +868,7 @@ object AnnIndex {
       append(vecs, "id", "vec", newPath, "00000001")
       // trained nlist, not the autoNlist target — see [[buildAuto]]
       nlist
-    } finally scope.release()
+    }
   }
 
   /** The nprobe that preserves a recall FRACTION against this index's

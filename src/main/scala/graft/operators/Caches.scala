@@ -7,11 +7,17 @@ import org.apache.spark.sql.DataFrame
   * lazily, so an eager unpersist inside the operator would defeat it).
   *
   * Pins are attributed to a [[Scope]] so concurrent pipelines in one JVM
-  * can release only their own prep tables: wrap each batch in
-  * [[Caches.inScope]] and call `scope.release()` after fully consuming the
-  * frames that batch returned. Without an explicit scope, pins land in the
-  * global scope; the global [[release]] drains EVERY scope and remains the
-  * single-pipeline escape hatch (Verify/Bench call it between queries).
+  * can release only their own prep tables. graft code scopes its own pins
+  * one way, [[scoped]]: the body's pins land in a fresh scope that is
+  * released, blocking, on every exit. Every graft operator that pins and
+  * consumes in one call (the index appends and compacts, the `Streams`
+  * micro-batch skeleton, the k-means trainers) runs through it. A caller
+  * that must keep an operator's returned frames alive past the call holds
+  * its own scope instead: [[newScope]], run the batch in [[inScope]], and
+  * call `scope.release()` after fully consuming the frames it returned.
+  * Without an explicit scope, pins land in the global scope; the global
+  * [[release]] drains EVERY scope and remains the single-pipeline escape
+  * hatch (Verify/Bench call it between queries).
   * Releasing one scope never unpins another's frames — the failure mode the
   * all-or-nothing registry had was one caller's release silently degrading
   * a concurrent caller's persist-barriered subtrees to full recompute.
@@ -65,8 +71,11 @@ object Caches {
   }
 
   /** Run `body` with its pins in a fresh scope that is released (blocking)
-    * on every exit — for operators that consume their own pinned frames
-    * and return driver-side values, so no pin outlives the call.
+    * on every exit, a throw included. The contract: `body` consumes every
+    * frame it pins before it returns, and returns a driver-side value or
+    * a result it already wrote, never a frame that reads a pin lazily.
+    * Blocking release means the storage is drained when the call returns,
+    * not overlapping whatever runs next.
     */
   def scoped[T](body: => T): T = {
     val scope = newScope()

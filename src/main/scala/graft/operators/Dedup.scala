@@ -34,20 +34,13 @@ import graft.functions.text
   * Cache lifecycle: the persisted prep tables stay pinned for the session
   * (the returned frames reference them lazily, so the operator cannot
   * unpersist eagerly). Every pin is tracked; a long-lived session running
-  * dedup per corpus batch should call [[Dedup.release]] between batches
+  * dedup per corpus batch should call [[Caches.release]] between batches
   * (after fully consuming the returned frames), or scope each batch with
   * `SparkSession.newSession()` / `spark.catalog.clearCache()`.
   */
 object Dedup {
 
   private def pin(df: DataFrame): DataFrame = Caches.pin(df)
-
-  /** Unpersist every prep table pinned by graft operators in this JVM.
-    * Call only after the frames returned by those operators are fully
-    * consumed — they reference the caches lazily. Alias of
-    * [[Caches.release]].
-    */
-  def release(): Unit = Caches.release()
 
   /** Exact dedup on a canonical text hash. Deterministic keeper: min(id).
     * Output: one row per distinct content with its keeper id and copy count.

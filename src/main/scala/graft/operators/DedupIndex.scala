@@ -139,12 +139,9 @@ object DedupIndex {
       batch: String,
       once: Boolean): Unit = {
     val spark = docs.sparkSession
-    val scope = Caches.newScope()
-    try {
+    Caches.scoped {
       lazy val p = params(spark, path)
-      lazy val prepped = Caches.inScope(scope) {
-        Dedup.prep(docs, textCol, idCol, p.numPerm, p.shingleK)
-      }
+      lazy val prepped = Dedup.prep(docs, textCol, idCol, p.numPerm, p.shingleK)
       // Range-cluster each table so files/row groups carry disjoint key
       // ranges (columnar skip on the probe side). The sketch pass runs
       // once (prep is pinned) and feeds both writes.
@@ -156,7 +153,7 @@ object DedupIndex {
         .sortWithinPartitions("id"))
       if (once) table(spark, path).commitOnce(batch, bands, sketches)
       else table(spark, path).commit(batch, bands, sketches)
-    } finally scope.release()
+    }
   }
 
   /** [[init]] + [[append]] of the first batch in one call. */
@@ -318,9 +315,8 @@ object DedupIndex {
           "hot_buckets", "hot_postings_frac", "irreducible_frac", "recommended")
     if (!hasBatches(spark, path))
       return row(0L, 0L, 0L, 0.0, 0.0, "healthy")
-    val scope = Caches.newScope()
-    try {
-      val occ = scope.pin(
+    Caches.scoped {
+      val occ = Caches.pin(
         spark.read.parquet(bandsDir(path))
           .groupBy("band", "bucket")
           .agg(count_distinct(col("id")).as("occ")))
@@ -360,7 +356,7 @@ object DedupIndex {
           else "rebuild_stricter_bands"
         } else "healthy"
       row(buckets, postings, hotBuckets, hotFrac, irrFrac, rec)
-    } finally scope.release()
+    }
   }
 
   /** Coalesce every current batch into ONE new batch partition and drop

@@ -262,13 +262,10 @@ object JoinAdvisor {
     // fully materialized before the join plan is built, so the per-key
     // count tables release immediately (the quantileNormalize scope
     // lesson: an operator that pins must not outlive its own read)
-    val adviseScope = Caches.newScope()
-    val strategy =
-      try Caches.inScope(adviseScope) {
-        advise(left, leftKey, right, rightKey, params, broadcastRowsMax, saltProductMin)
-          .select("recommended").collect()(0).getString(0)
-      }
-      finally adviseScope.release()
+    val strategy = Caches.scoped {
+      advise(left, leftKey, right, rightKey, params, broadcastRowsMax, saltProductMin)
+        .select("recommended").collect()(0).getString(0)
+    }
     val cond = left(leftKey) === right(rightKey)
     val outCols = (left.columns.map(left(_)) ++ right.columns.map(right(_))).toIndexedSeq
     val joined = strategy match {

@@ -458,13 +458,12 @@ object Packing {
     // review, round 11), and the operator fully consumes its own frames,
     // so the runningSum pin is scoped and released HERE rather than
     // leaking one persisted frame per epoch into a caller's loop
-    val scope = Caches.newScope()
-    try Caches.inScope(scope) {
+    Caches.scoped {
       val rows = epochShuffleShards(df, idCol, epoch, shardSize)
         .repartition(col("shard"))
         .sortWithinPartitions("shard", "pos")
       graft.sources.Sinks.writePartitionedAtomic(rows, path, Seq("shard"))
-    } finally scope.release()
+    }
   }
 
   /** Length-bucketed dynamic batching (the fairseq/padded-batch shape):

@@ -841,9 +841,8 @@ object TextIndex {
     // its rows against its own merge (identical content, lower key),
     // which the old distinct() handled. Compact also re-bases all
     // surviving content into the numeric namespace — see [[versionKey]].
-    val scope = Caches.newScope()
-    try table(spark, path).compact { old =>
-      val canonical = scope.pin(
+    Caches.scoped(table(spark, path).compact { old =>
+      val canonical = Caches.pin(
         anchorLatest(spark, path,
           spark.read.parquet(old.map(b => s"${postingsDir(path)}/batch=$b"): _*))
           .select("term", "doc_id", "tf", "dl", "positions"))
@@ -878,7 +877,7 @@ object TextIndex {
               .repartitionByRange(col("doc_id"))
               .sortWithinPartitions("doc_id"))
         })
-    } finally scope.release()
+    })
   }
 
   /** Delete staging residue AND uncommitted stats/versions partitions

@@ -2,10 +2,11 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
+import graft.operators.Caches
 import graft.sources.BatchTable
 
 /** Structured Streaming operators.
@@ -137,6 +138,9 @@ object Streams {
     * Without `partitionCols` the whole table is re-merged (the reference's
     * exact semantics).
     *
+    * Replaying a crashed micro-batch re-merges the same rows into the same
+    * table, so the swap is idempotent and the batch label goes unused.
+    *
     * The returned query must be awaited/stopped by the caller.
     */
   def cdcMergeStream(
@@ -144,19 +148,54 @@ object Streams {
       silverPath: String,
       mergeKeys: Seq[String],
       partitionCols: Seq[String] = Nil,
-      checkpoint: Option[String] = None): org.apache.spark.sql.streaming.StreamingQuery = {
+      checkpoint: Option[String] = None): StreamingQuery =
+    eachBatch(stream, checkpoint) { (batch, _) =>
+      if (partitionCols.isEmpty) {
+        val existing = graft.operators.CdcMerge.readIfExists(batch.sparkSession, silverPath)
+        val merged = graft.operators.CdcMerge.mergeFullHistory(existing, batch, mergeKeys)
+        graft.sources.Sinks.writePartitionedAtomic(merged, silverPath, partitionCols)
+      } else {
+        graft.operators.CdcMerge.mergeIntoPartitioned(silverPath, batch, mergeKeys, partitionCols)
+      }
+    }
+
+  /** The one micro-batch skeleton every ingest in this object runs on: an
+    * append-mode `foreachBatch` that hands `body` the batch and its label,
+    * with the body's pins in a [[Caches.scoped]] scope, and the optional
+    * checkpoint. The exactly-once contract is stated here once:
+    *
+    *  - '''Label.''' A batch commits as [[BatchTable.streamLabel]] of its
+    *    batch id (`s00000001`). The `s` prefix keeps it clear of the
+    *    numeric labels of manual appends, `build`'s default `00000001` and
+    *    every compact output; an unprefixed label would collide and the
+    *    idempotent index appends would silently skip a batch. An index
+    *    written by the older numeric-label code re-appends its replayed
+    *    batch under the `s` label on restart; answers are unaffected, and
+    *    one `compact` folds the duplicate postings away.
+    *  - '''Commit-marker order.''' Every land is an atomic staging rename.
+    *    The output lands first, and the index or seen-set append lands
+    *    LAST: that append is the commit marker, so readers see whole
+    *    batches or nothing.
+    *  - '''Replay skip.''' A crash re-executes the batch with the same id
+    *    and, from a replayable source, the same rows.
+    *    [[BatchTable.commitOnce]] skips every land that already committed
+    *    and re-runs the half-landed rest identically.
+    *  - '''No state-store state.''' The query itself is stateless; the
+    *    tables on disk are the state, so the checkpoint stays O(source
+    *    offsets) however long the stream runs. Use one checkpoint per
+    *    table: a fresh checkpoint resets batch ids and replays into used
+    *    labels.
+    *
+    * Pins taken in `body` are released (blocking) when it returns or
+    * throws, so no batch's frames outlive it. Pins the caller takes
+    * before the stream starts (a frozen model, say) stay in its scope.
+    */
+  private def eachBatch(stream: DataFrame, checkpoint: Option[String])(
+      body: (DataFrame, String) => Unit): StreamingQuery = {
     val writer = stream.writeStream
       .outputMode("append")
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val spark = batch.sparkSession
-        if (partitionCols.isEmpty) {
-          val existing = graft.operators.CdcMerge.readIfExists(spark, silverPath)
-          val merged = graft.operators.CdcMerge.mergeFullHistory(existing, batch.toDF(), mergeKeys)
-          graft.sources.Sinks.writePartitionedAtomic(merged, silverPath, partitionCols)
-        } else {
-          graft.operators.CdcMerge.mergeIntoPartitioned(
-            silverPath, batch.toDF(), mergeKeys, partitionCols)
-        }
+      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
+        Caches.scoped(body(batch.toDF(), BatchTable.streamLabel(batchId)))
       }
     checkpoint.fold(writer)(writer.option("checkpointLocation", _)).start()
   }
@@ -321,16 +360,9 @@ object Streams {
     * the corpus. The index must be [[graft.operators.DedupIndex.init]]'d
     * (or built) before the stream starts.
     *
-    * Exactly-once: the batch label is the streaming batch id, every land
-    * is an atomic staging rename, and a crash-re-executed micro-batch
-    * (same id, same rows from a replayable source) skips what already
-    * committed and heals a half-landed index append
-    * ([[graft.operators.DedupIndex.appendIdempotent]]). Output readers
-    * see whole batches or nothing.
-    *
-    * State lives entirely in the on-disk index — the streaming query
-    * itself is stateless (no state store), so checkpoint size is O(source
-    * offsets) no matter how long the stream runs.
+    * Exactly-once as [[eachBatch]] states it; the index append is the
+    * commit marker, and [[graft.operators.DedupIndex.appendIdempotent]]
+    * heals a half-landed one on replay.
     */
   def nearDupIngest(
       stream: DataFrame,
@@ -340,36 +372,16 @@ object Streams {
       outputPath: String,
       threshold: Double = 0.7,
       maxBucket: Int = 256,
-      checkpoint: Option[String] = None): org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.operators.{Caches, DedupIndex}
-    val writer = stream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        // "s"-prefixed label ([[BatchTable.streamLabel]]): an unprefixed
-        // label would collide with build's default "00000001" on
-        // micro-batch 1 and with every post-compact label, and
-        // appendIdempotent would silently skip the index append,
-        // permanently excluding that batch's docs from future dedup.
-        // MIGRATION (pre-"s"-prefix indexes): an index built by the old
-        // numeric-label code will, on restart from the same checkpoint,
-        // re-append its replayed micro-batch under the new "s" label
-        // instead of being skipped by appendIdempotent — probe answers
-        // are unaffected (postings dedup + distinct occupancy), but run
-        // compact() once after upgrading a live streaming index to fold
-        // the duplicated postings away.
-        val label = BatchTable.streamLabel(batchId)
-        val scope = Caches.newScope()
-        try Caches.inScope(scope) {
-          // consumed twice (output land + index append) → pinned so the
-          // probe/cluster dataflow runs once
-          val accepted = Caches.pin(
-            DedupIndex.dedupBatch(batch.toDF(), textCol, idCol, indexPath, threshold, maxBucket))
-          // batch already landed by a pre-crash attempt → skip (idempotent)
-          BatchTable(batch.sparkSession, outputPath).commitOnce(label, accepted)
-          DedupIndex.appendIdempotent(accepted, textCol, idCol, indexPath, label)
-        } finally scope.release()
-      }
-    checkpoint.fold(writer)(writer.option("checkpointLocation", _)).start()
+      checkpoint: Option[String] = None): StreamingQuery = {
+    import graft.operators.DedupIndex
+    eachBatch(stream, checkpoint) { (batch, label) =>
+      // consumed twice (output land + index append) → pinned so the
+      // probe/cluster dataflow runs once
+      val accepted = Caches.pin(
+        DedupIndex.dedupBatch(batch, textCol, idCol, indexPath, threshold, maxBucket))
+      BatchTable(batch.sparkSession, outputPath).commitOnce(label, accepted)
+      DedupIndex.appendIdempotent(accepted, textCol, idCol, indexPath, label)
+    }
   }
 
   /** Continuous EMBEDDING ingestion: the streaming face of
@@ -385,12 +397,8 @@ object Streams {
     * before the stream starts (the quantizer is frozen; a stream never
     * retrains it).
     *
-    * Exactly-once, label, and state contracts are [[nearDupIngest]]'s,
-    * verbatim: "s"-prefixed labels (AnnIndex.nextBatchLabel numbers over
-    * numeric labels only, so streaming labels collide with neither manual
-    * appends nor compact output), `batch=` rename as the commit marker on
-    * both tables, idempotent re-execution after crash, one checkpoint per
-    * index, and ZERO state-store state — the index on disk is the state.
+    * Exactly-once as [[eachBatch]] states it; the index append is the
+    * commit marker.
     */
   def annIngest(
       stream: DataFrame,
@@ -403,7 +411,7 @@ object Streams {
       maxCell: Int = Int.MaxValue,
       dim: Int = 64,
       checkpoint: Option[String] = None,
-      pqMargin: Double = 0.1): org.apache.spark.sql.streaming.StreamingQuery =
+      pqMargin: Double = 0.1): StreamingQuery =
     annIngest(stream, idCol, vecCol, indexPath, outputPath, threshold,
       graft.operators.AnnIndex.Probe.Cells(nprobe), maxCell, dim, checkpoint, pqMargin)
 
@@ -426,41 +434,30 @@ object Streams {
       maxCell: Int,
       dim: Int,
       checkpoint: Option[String],
-      pqMargin: Double): org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.operators.{AnnIndex, Caches}
-    val writer = stream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val label = BatchTable.streamLabel(batchId)
-        val scope = Caches.newScope()
-        try Caches.inScope(scope) {
-          // consumed twice (output land + index append) → pinned so the
-          // probe/cluster dataflow runs once. The INDEX decides the probe
-          // path: a PQ-enabled index screens against code bytes
-          // (dedupBatchPq, `pqMargin` the recall/IO dial); a flat index
-          // probes raw postings vectors.
-          val accepted = Caches.pin(
-            if (AnnIndex.hasPq(batch.sparkSession, indexPath))
-              AnnIndex.dedupBatchPq(
-                batch.toDF(), idCol, vecCol, indexPath, threshold, probe, maxCell, pqMargin, dim)
-            else
-              AnnIndex.dedupBatch(
-                batch.toDF(), idCol, vecCol, indexPath, threshold, probe, maxCell, dim))
-          BatchTable(batch.sparkSession, outputPath).commitOnce(label, accepted)
-          AnnIndex.appendIdempotent(accepted, idCol, vecCol, indexPath, label)
-        } finally scope.release()
-      }
-    checkpoint.fold(writer)(writer.option("checkpointLocation", _)).start()
+      pqMargin: Double): StreamingQuery = {
+    import graft.operators.AnnIndex
+    eachBatch(stream, checkpoint) { (batch, label) =>
+      // consumed twice (output land + index append) → pinned so the
+      // probe/cluster dataflow runs once. The INDEX decides the probe
+      // path: a PQ-enabled index screens against code bytes
+      // (dedupBatchPq, `pqMargin` the recall/IO dial); a flat index
+      // probes raw postings vectors.
+      val accepted = Caches.pin(
+        if (AnnIndex.hasPq(batch.sparkSession, indexPath))
+          AnnIndex.dedupBatchPq(
+            batch, idCol, vecCol, indexPath, threshold, probe, maxCell, pqMargin, dim)
+        else
+          AnnIndex.dedupBatch(batch, idCol, vecCol, indexPath, threshold, probe, maxCell, dim))
+      BatchTable(batch.sparkSession, outputPath).commitOnce(label, accepted)
+      AnnIndex.appendIdempotent(accepted, idCol, vecCol, indexPath, label)
+    }
   }
 
   /** Continuous keyword-index ingestion: each micro-batch of documents
-    * lands under `outputPath/batch=s<id>/` (atomic rename, skipped on
-    * crash-replay) and its postings append to the [[graft.operators
-    * .TextIndex]] at `indexPath` via `appendIdempotent` — the same
-    * stateless exactly-once composition as [[nearDupIngest]]/
-    * [[annIngest]] (the landed output is commit-marked by the postings
-    * rename; a replayed micro-batch from a replayable source re-lands
-    * nothing and re-appends nothing). Search sees each batch atomically:
+    * lands under `outputPath/batch=s<id>/` and its postings append to the
+    * [[graft.operators.TextIndex]] at `indexPath` via `appendIdempotent`,
+    * exactly-once as [[eachBatch]] states it (the postings append is the
+    * commit marker). Search sees each batch atomically:
     * [[graft.operators.TextIndex.searchTopK]] aggregates N, Σdl and df
     * across the accrued `s`-labeled batches; run
     * [[graft.operators.TextIndex.compact]] on a schedule to fold them.
@@ -474,30 +471,20 @@ object Streams {
       textCol: String,
       indexPath: String,
       outputPath: String,
-      checkpoint: Option[String] = None): org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.operators.{Caches, TextIndex}
-    val writer = stream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val label = BatchTable.streamLabel(batchId)
-        val scope = Caches.newScope()
-        try Caches.inScope(scope) {
-          val pinned = Caches.pin(batch.toDF())
-          BatchTable(batch.sparkSession, outputPath).commitOnce(label, pinned)
-          TextIndex.appendIdempotent(pinned, idCol, textCol, indexPath, label)
-        } finally scope.release()
-      }
-    checkpoint.fold(writer)(writer.option("checkpointLocation", _)).start()
-  }
+      checkpoint: Option[String] = None): StreamingQuery =
+    eachBatch(stream, checkpoint) { (batch, label) =>
+      val pinned = Caches.pin(batch)
+      BatchTable(batch.sparkSession, outputPath).commitOnce(label, pinned)
+      graft.operators.TextIndex.appendIdempotent(pinned, idCol, textCol, indexPath, label)
+    }
 
   /** Continuous DSIR importance routing — the streaming face of
     * [[graft.operators.Importance]]: each micro-batch scores its
     * documents against FIXED bucket models and lands every row under
-    * `outputPath/<selected|rejected>/batch=s<id>/` through the same
-    * exists-guarded atomic append as the sibling ingests (a crash-
-    * replayed micro-batch re-lands nothing). Rejected rows are KEPT,
-    * not dropped: a selection stream that discards its rejects can
-    * never re-route them when the threshold moves.
+    * `outputPath/<selected|rejected>/batch=s<id>/`, exactly-once as
+    * [[eachBatch]] states it. Rejected rows are KEPT, not dropped: a
+    * selection stream that discards its rejects can never re-route them
+    * when the threshold moves.
     *
     * The models are pinned ONCE at stream start and never retrained
     * per batch — two micro-batches scoring under silently different
@@ -521,9 +508,8 @@ object Streams {
       buckets: Int,
       outputPath: String,
       threshold: Double = 1.0,
-      checkpoint: Option[String] = None): org.apache.spark.sql.streaming.StreamingQuery = {
-    import org.apache.spark.sql.functions._
-    import graft.operators.{Caches, Importance}
+      checkpoint: Option[String] = None): StreamingQuery = {
+    import graft.operators.Importance
     // validate at START, not in the first micro-batch: stream.schema is
     // already known here, and a misconfigured stream should be rejected
     // before .start() rather than killing the running query at runtime
@@ -532,35 +518,27 @@ object Streams {
         s"input stream already has a '$c' column")
     val target = Caches.pin(targetModel)
     val source = Caches.pin(sourceModel)
-    val writer = stream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val label = BatchTable.streamLabel(batchId)
-        val spark = batch.sparkSession
-        val scope = Caches.newScope()
-        try Caches.inScope(scope) {
-          // pin the batch: it feeds both the scoring pass and the join
-          // back, and both routed writes read the joined frame
-          val pinned = Caches.pin(batch.toDF())
-          val scored = Caches.pin(
-            pinned.join(
-              Importance.pooledImportance(
-                pinned, idCol, textCol, target, source, buckets, threshold)
-                .select(col("doc_id").as(idCol), col("importance"), col("selected")),
-              Seq(idCol)))
-          for ((name, keep) <- Seq("selected" -> true, "rejected" -> false))
-            BatchTable(spark, s"$outputPath/$name")
-              .commitOnce(label, scored.where(col("selected") === keep))
-        } finally scope.release()
-      }
-    checkpoint.fold(writer)(writer.option("checkpointLocation", _)).start()
+    eachBatch(stream, checkpoint) { (batch, label) =>
+      // pin the batch: it feeds both the scoring pass and the join
+      // back, and both routed writes read the joined frame
+      val pinned = Caches.pin(batch)
+      val scored = Caches.pin(
+        pinned.join(
+          Importance.pooledImportance(
+            pinned, idCol, textCol, target, source, buckets, threshold)
+            .select(col("doc_id").as(idCol), col("importance"), col("selected")),
+          Seq(idCol)))
+      for ((name, keep) <- Seq("selected" -> true, "rejected" -> false))
+        BatchTable(batch.sparkSession, s"$outputPath/$name")
+          .commitOnce(label, scored.where(col("selected") === keep))
+    }
   }
 
   /** Continuous corpus drift monitoring — the streaming face of
     * [[graft.operators.Importance.driftReportFromModels]]: each
     * micro-batch's hashed-bucket model is diffed against a FIXED
     * baseline model, and the batch's top-`k` drifted buckets land under
-    * `outputPath/batch=s<id>/` through the exists-guarded atomic append.
+    * `outputPath/batch=s<id>/` ([[eachBatch]]).
     * The landed history IS the drift time series: a dashboard reads the
     * partitioned directory and plots max |delta| per batch; a batch
     * whose report suddenly carries big deltas is the crawl-shift alarm
@@ -578,36 +556,25 @@ object Streams {
       buckets: Int,
       k: Int,
       outputPath: String,
-      checkpoint: Option[String] = None): org.apache.spark.sql.streaming.StreamingQuery = {
-    import org.apache.spark.sql.functions._
-    import graft.operators.{Caches, Importance}
+      checkpoint: Option[String] = None): StreamingQuery = {
+    import graft.operators.Importance
     val baseline = Caches.pin(baselineModel)
-    val writer = stream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val label = BatchTable.streamLabel(batchId)
-        val spark = batch.sparkSession
-        val scope = Caches.newScope()
-        try Caches.inScope(scope) {
-          val report = Importance.driftReportFromModels(
-            baseline,
-            Importance.hashedBucketCounts(batch.toDF(), textCol, buckets),
-            k)
-          BatchTable(spark, outputPath).commitOnce(label, report)
-        } finally scope.release()
-      }
-    checkpoint.fold(writer)(writer.option("checkpointLocation", _)).start()
+    eachBatch(stream, checkpoint) { (batch, label) =>
+      val report = Importance.driftReportFromModels(
+        baseline, Importance.hashedBucketCounts(batch, textCol, buckets), k)
+      BatchTable(batch.sparkSession, outputPath).commitOnce(label, report)
+    }
   }
 
   /** Continuous conversation-contract routing — the streaming face of
     * [[graft.operators.Conversations]]: each micro-batch of raw JSON
     * transcripts is parsed and audited ([[graft.operators
     * .Conversations.validate]]), and every row lands WITH its flag
-    * columns under `outputPath/<valid|quarantine>/batch=s<id>/`
-    * through the exists-guarded atomic append (a crash-replayed
-    * micro-batch re-lands nothing). Quarantined transcripts are KEPT,
-    * flags attached — the fix-and-replay loop (truncated JSON from an
-    * upstream exporter, say) needs the evidence, not a silent drop.
+    * columns under `outputPath/<valid|quarantine>/batch=s<id>/`,
+    * exactly-once as [[eachBatch]] states it. Quarantined transcripts
+    * are KEPT, flags attached — the fix-and-replay loop (truncated JSON
+    * from an upstream exporter, say) needs the evidence, not a silent
+    * drop.
     *
     * Stateless: no models, no seen-set — each batch pays one parse
     * projection and one validate aggregation of itself, so throughput
@@ -624,9 +591,8 @@ object Streams {
       jsonCol: String,
       outputPath: String,
       checkpoint: Option[String] = None,
-      tools: Boolean = false): org.apache.spark.sql.streaming.StreamingQuery = {
-    import org.apache.spark.sql.functions._
-    import graft.operators.{Caches, Conversations}
+      tools: Boolean = false): StreamingQuery = {
+    import graft.operators.Conversations
     val flagCols =
       if (tools) Seq("n_turns", "parse_ok", "starts_ok", "role_legal",
         "transitions_ok", "no_empty", "ends_assistant", "valid")
@@ -636,26 +602,18 @@ object Streams {
     for (c <- flagCols)
       require(!stream.columns.contains(c),
         s"input stream already has a '$c' column")
-    val writer = stream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val label = BatchTable.streamLabel(batchId)
-        val spark = batch.sparkSession
-        val scope = Caches.newScope()
-        try Caches.inScope(scope) {
-          // pin the batch: it feeds the turn explode AND the join back
-          val pinned = Caches.pin(batch.toDF())
-          val turns = Conversations.parseTurns(pinned, idCol, jsonCol)
-          val audit =
-            if (tools) Conversations.validateWithTools(turns, idCol)
-            else Conversations.validate(turns, idCol)
-          val routed = Caches.pin(pinned.join(audit, Seq(idCol)))
-          for ((name, keep) <- Seq("valid" -> true, "quarantine" -> false))
-            BatchTable(spark, s"$outputPath/$name")
-              .commitOnce(label, routed.where(col("valid") === keep))
-        } finally scope.release()
-      }
-    checkpoint.fold(writer)(writer.option("checkpointLocation", _)).start()
+    eachBatch(stream, checkpoint) { (batch, label) =>
+      // pin the batch: it feeds the turn explode AND the join back
+      val pinned = Caches.pin(batch)
+      val turns = Conversations.parseTurns(pinned, idCol, jsonCol)
+      val audit =
+        if (tools) Conversations.validateWithTools(turns, idCol)
+        else Conversations.validate(turns, idCol)
+      val routed = Caches.pin(pinned.join(audit, Seq(idCol)))
+      for ((name, keep) <- Seq("valid" -> true, "quarantine" -> false))
+        BatchTable(batch.sparkSession, s"$outputPath/$name")
+          .commitOnce(label, routed.where(col("valid") === keep))
+    }
   }
 
   /** Continuous canonical-URL dedup — the crawl-frontier face of the
@@ -665,11 +623,8 @@ object Streams {
     * the batch (minimum `idCol`), anti-joins against the persisted
     * seen-set at `indexPath`, lands ONLY first-sightings under
     * `outputPath/batch=s<id>/`, and appends their canonicals to the
-    * seen-set — same exactly-once composition as [[nearDupIngest]]
-    * (exists-guarded atomic renames; a crash-replayed micro-batch from a
-    * replayable source re-lands nothing and re-appends nothing, and the
-    * seen-set append is the commit marker, so the half-landed window
-    * re-runs identically).
+    * seen-set, exactly-once as [[eachBatch]] states it (the seen-set
+    * append is the commit marker).
     *
     * Scale shape: the anti-join is the one honest cost of EXACT identity
     * dedup — a hash join keyed on the canonical string against a
@@ -689,70 +644,62 @@ object Streams {
       checkpoint: Option[String] = None,
       bloomProbe: Boolean = true,
       bloomExpectedItems: Long = 1000000L,
-      bloomNumBits: Long = 8388608L): org.apache.spark.sql.streaming.StreamingQuery = {
-    import org.apache.spark.sql.functions._
-    import graft.operators.{BloomJoin, Caches, Urls}
-    val writer = stream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val label = BatchTable.streamLabel(batchId)
-        val spark = batch.sparkSession
-        val scope = Caches.newScope()
-        try Caches.inScope(scope) {
-          // loud on collision (the clusterBalancedSample convention): a
-          // stream already carrying one of these columns would silently
-          // lose it to the recomputed value
-          require(!batch.columns.contains("canonical_url"),
-            "input stream already has a 'canonical_url' column")
-          val canon = batch.toDF()
-            .withColumn("canonical_url", Urls.canonicalize(col(urlCol)))
-            .where(col("canonical_url").isNotNull)
-          // one row per in-batch canonical identity — the min-id keeper
-          // (idCol unique by contract), in ONE exchange: min_by carries
-          // the whole keeper row through the same aggregate that picks
-          // it, where a groupBy + join-back would shuffle twice
-          val payload = canon.columns.filter(_ != "canonical_url")
-          // pinned: consumed by the bloom build AND the anti-join probe
-          val keepers = Caches.pin(canon
-            .groupBy("canonical_url")
-            .agg(min_by(struct(payload.map(col): _*), col(idCol)).as("__r"))
-            .select(col("canonical_url") +: payload.map(c => col(s"__r.$c").as(c)): _*))
-          val seenSet = BatchTable(spark, indexPath)
-          // "seen-set exists" means a COMMITTED batch= child, not a bare
-          // directory: a crashed first append leaves staging debris (or
-          // nothing visible) behind, and reading that as a parquet table
-          // throws on every replay — wedging the stream permanently on
-          // its own crash window
-          val hasSeen = seenSet.committed.nonEmpty
-          val accepted = Caches.pin(
-            if (!hasSeen) keepers
-            else {
-              val seen = spark.read.parquet(indexPath).select("canonical_url")
-              // steady-crawl shape: the seen-set dwarfs the batch, and a
-              // plain anti-join would SHUFFLE the whole index every
-              // micro-batch. Bloom the BATCH's keys (one tiny aggregate),
-              // test the index at scan (BloomFilterMightContain — no
-              // exchange for the non-matching bulk, which is most of a
-              // steady crawl), and anti-join only the survivors. Blooms
-              // have no false negatives, so no seen URL is ever re-
-              // accepted; false positives only ride into the (now tiny)
-              // anti-join and are dropped there — result identical to
-              // the plain probe (StreamsSpec pins both paths; the q99d
-              // gate runs this default one).
-              val probed =
-                if (bloomProbe)
-                  BloomJoin.prefilter(seen, keepers.select("canonical_url"),
-                    "canonical_url", bloomExpectedItems, bloomNumBits)
-                else seen
-              keepers.join(probed, Seq("canonical_url"), "left_anti")
-            })
-          BatchTable(spark, outputPath).commitOnce(label, accepted)
-          // seen-set append LAST = the commit marker (nearDupIngest order)
-          seenSet.commitOnce(label,
-            accepted.select(col("canonical_url"), col(idCol).as("keeper_id")))
-        } finally scope.release()
-      }
-    checkpoint.fold(writer)(writer.option("checkpointLocation", _)).start()
+      bloomNumBits: Long = 8388608L): StreamingQuery = {
+    import graft.operators.{BloomJoin, Urls}
+    // loud on collision (the clusterBalancedSample convention), checked at
+    // START (the importanceRoutedIngest lesson): a stream already carrying
+    // this column would silently lose it to the recomputed value
+    require(!stream.columns.contains("canonical_url"),
+      "input stream already has a 'canonical_url' column")
+    eachBatch(stream, checkpoint) { (batch, label) =>
+      val spark = batch.sparkSession
+      val canon = batch
+        .withColumn("canonical_url", Urls.canonicalize(col(urlCol)))
+        .where(col("canonical_url").isNotNull)
+      // one row per in-batch canonical identity — the min-id keeper
+      // (idCol unique by contract), in ONE exchange: min_by carries
+      // the whole keeper row through the same aggregate that picks
+      // it, where a groupBy + join-back would shuffle twice
+      val payload = canon.columns.filter(_ != "canonical_url")
+      // pinned: consumed by the bloom build AND the anti-join probe
+      val keepers = Caches.pin(canon
+        .groupBy("canonical_url")
+        .agg(min_by(struct(payload.map(col): _*), col(idCol)).as("__r"))
+        .select(col("canonical_url") +: payload.map(c => col(s"__r.$c").as(c)): _*))
+      val seenSet = BatchTable(spark, indexPath)
+      // "seen-set exists" means a COMMITTED batch= child, not a bare
+      // directory: a crashed first append leaves staging debris (or
+      // nothing visible) behind, and reading that as a parquet table
+      // throws on every replay — wedging the stream permanently on
+      // its own crash window
+      val hasSeen = seenSet.committed.nonEmpty
+      val accepted = Caches.pin(
+        if (!hasSeen) keepers
+        else {
+          val seen = spark.read.parquet(indexPath).select("canonical_url")
+          // steady-crawl shape: the seen-set dwarfs the batch, and a
+          // plain anti-join would SHUFFLE the whole index every
+          // micro-batch. Bloom the BATCH's keys (one tiny aggregate),
+          // test the index at scan (BloomFilterMightContain — no
+          // exchange for the non-matching bulk, which is most of a
+          // steady crawl), and anti-join only the survivors. Blooms
+          // have no false negatives, so no seen URL is ever re-
+          // accepted; false positives only ride into the (now tiny)
+          // anti-join and are dropped there — result identical to
+          // the plain probe (StreamsSpec pins both paths; the q99d
+          // gate runs this default one).
+          val probed =
+            if (bloomProbe)
+              BloomJoin.prefilter(seen, keepers.select("canonical_url"),
+                "canonical_url", bloomExpectedItems, bloomNumBits)
+            else seen
+          keepers.join(probed, Seq("canonical_url"), "left_anti")
+        })
+      BatchTable(spark, outputPath).commitOnce(label, accepted)
+      // seen-set append LAST = the commit marker
+      seenSet.commitOnce(label,
+        accepted.select(col("canonical_url"), col(idCol).as("keeper_id")))
+    }
   }
 
   /** Continuous crawl ingestion straight off the WIRE FORMAT: watch a
@@ -776,7 +723,7 @@ object Streams {
       shardDir: String,
       indexPath: String,
       outputPath: String,
-      checkpoint: Option[String] = None): org.apache.spark.sql.streaming.StreamingQuery = {
+      checkpoint: Option[String] = None): StreamingQuery = {
     import spark.implicits._
     // the binaryFile source's schema is fixed by the format, but file
     // stream sources still demand it explicitly
@@ -812,9 +759,8 @@ object Streams {
     *     survives and every doc with a smaller near-neighbor drops);
     *  4. probes the committed band index for near-matches and drops
     *     hits; survivors land under `outputPath/batch=s<id>/` and their
-    *     band rows append to `indexPath` LAST (the commit marker — a
-    *     crash between the two lands re-runs into exists-guards, the
-    *     nearDupIngest order).
+    *     band rows append to `indexPath` LAST (the commit marker of
+    *     [[eachBatch]]).
     *
     * UNDECODABLE payloads are landed, never dropped (a row you cannot
     * fingerprint cannot be proven a duplicate) with NULL `dhash` — the
@@ -834,9 +780,8 @@ object Streams {
       checkpoint: Option[String] = None,
       bloomProbe: Boolean = true,
       bloomExpectedItems: Long = 1000000L,
-      bloomNumBits: Long = 8388608L): org.apache.spark.sql.streaming.StreamingQuery = {
-    import org.apache.spark.sql.functions._
-    import graft.operators.{BloomJoin, Caches, Dedup, Multimodal}
+      bloomNumBits: Long = 8388608L): StreamingQuery = {
+    import graft.operators.{BloomJoin, Dedup, Multimodal}
     require(maxHamming >= 0 && maxHamming <= 3,
       "4x16-bit banding guarantees exact recall only for maxHamming <= 3")
     // start-time validation (the importanceRoutedIngest lesson): the
@@ -861,76 +806,69 @@ object Streams {
       df.select(col(idCol), col("dhash"),
         explode(graft.operators.Dedup.bands64(col("dhash"))).as("bb"))
         .select(col(idCol), col("dhash"), col("bb.band").as("band"), col("bb.bucket").as("bucket"))
-    val writer = stream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val label = BatchTable.streamLabel(batchId)
-        val spark = batch.sparkSession
-        val scope = Caches.newScope()
-        try Caches.inScope(scope) {
-          val media = batch.toDF().select(
-            col(idCol).cast("long").as("media_id"),
-            lit("image").as("kind"),
-            col(bytesCol).cast("binary").as("bytes"))
-          // renamed join key: idCol may itself be "media_id"
-          val hashed = Caches.pin(batch.toDF().join(
-            Multimodal.dHashImages(spark, media).toDF()
-              .select(col("media_id").as("__mid"), col("dhash")),
-            col(idCol).cast("long") === col("__mid"))
-            .drop("__mid"))
-          val quarantined = hashed.where(col("dhash").isNull)
-          val decodable = hashed.where(col("dhash").isNotNull)
-          // in-batch exact collapse: min-id keeper per fingerprint
-          val payload = hashed.columns.filter(_ != "dhash")
-          val exactKeepers = Caches.pin(decodable
-            .groupBy("dhash")
-            .agg(min_by(struct(payload.map(col): _*), col(idCol)).as("__r"))
-            .select(col("dhash") +: payload.map(c => col(s"__r.$c").as(c)): _*))
-          // in-batch near suppression: greedy — any doc with a smaller-id
-          // near-neighbor drops (id_a < id_b by the pair contract)
-          val nearDupIds = Dedup.hammingPairs64(
-            exactKeepers.select(col(idCol), col("dhash")), idCol, "dhash", maxHamming)
-            .select(col("id_b").cast(hashed.schema(idCol).dataType).as(idCol)).distinct()
-          val batchKeepers = Caches.pin(
-            exactKeepers.join(nearDupIds, Seq(idCol), "left_anti"))
-          // cross-batch near probe against the COMMITTED band index
-          val seenIndex = BatchTable(spark, indexPath)
-          val hasSeen = seenIndex.committed.nonEmpty
-          val accepted = Caches.pin(
-            if (!hasSeen) batchKeepers
-            else {
-              // pinned: consumed by the bloom build AND the probe join
-              val br = Caches.pin(bandRows(batchKeepers))
-              val seenIdx = spark.read.parquet(indexPath)
-                .select(col("band"), col("bucket"), col("dhash").as("__seen"))
-              // steady-state shape (the urlDedupIngest move): the band
-              // index dwarfs the batch, so bloom the batch's (band,
-              // bucket) keys and test the index AT SCAN — only buckets
-              // the batch actually touches enter the join. No false
-              // negatives ⇒ identical drops; StreamsSpec pins both paths.
-              val probedIdx =
-                if (bloomProbe)
-                  BloomJoin.prefilter(
-                    seenIdx.withColumn("__bbk", xxhash64(col("band"), col("bucket"))),
-                    br.select(xxhash64(col("band"), col("bucket")).as("__bbk")),
-                    "__bbk", bloomExpectedItems, bloomNumBits).drop("__bbk")
-                else seenIdx
-              val hits = br
-                .join(probedIdx, Seq("band", "bucket"))
-                .where(bit_count(col("dhash").bitwiseXOR(col("__seen"))) <= maxHamming)
-                .select(col(idCol)).distinct()
-              batchKeepers.join(hits, Seq(idCol), "left_anti")
-            })
-          val landed = accepted.unionByName(quarantined)
-          BatchTable(spark, outputPath).commitOnce(label, landed)
-          // index append LAST = the commit marker (nearDupIngest order);
-          // quarantined rows have no fingerprint and never enter the index
-          seenIndex.commitOnce(label,
-            bandRows(accepted).select(
-              col("band"), col("bucket"), col("dhash"), col(idCol).as("keeper_id")))
-        } finally scope.release()
-      }
-    checkpoint.fold(writer)(writer.option("checkpointLocation", _)).start()
+    eachBatch(stream, checkpoint) { (batch, label) =>
+      val spark = batch.sparkSession
+      val media = batch.select(
+        col(idCol).cast("long").as("media_id"),
+        lit("image").as("kind"),
+        col(bytesCol).cast("binary").as("bytes"))
+      // renamed join key: idCol may itself be "media_id"
+      val hashed = Caches.pin(batch.join(
+        Multimodal.dHashImages(spark, media).toDF()
+          .select(col("media_id").as("__mid"), col("dhash")),
+        col(idCol).cast("long") === col("__mid"))
+        .drop("__mid"))
+      val quarantined = hashed.where(col("dhash").isNull)
+      val decodable = hashed.where(col("dhash").isNotNull)
+      // in-batch exact collapse: min-id keeper per fingerprint
+      val payload = hashed.columns.filter(_ != "dhash")
+      val exactKeepers = Caches.pin(decodable
+        .groupBy("dhash")
+        .agg(min_by(struct(payload.map(col): _*), col(idCol)).as("__r"))
+        .select(col("dhash") +: payload.map(c => col(s"__r.$c").as(c)): _*))
+      // in-batch near suppression: greedy — any doc with a smaller-id
+      // near-neighbor drops (id_a < id_b by the pair contract)
+      val nearDupIds = Dedup.hammingPairs64(
+        exactKeepers.select(col(idCol), col("dhash")), idCol, "dhash", maxHamming)
+        .select(col("id_b").cast(hashed.schema(idCol).dataType).as(idCol)).distinct()
+      val batchKeepers = Caches.pin(
+        exactKeepers.join(nearDupIds, Seq(idCol), "left_anti"))
+      // cross-batch near probe against the COMMITTED band index
+      val seenIndex = BatchTable(spark, indexPath)
+      val hasSeen = seenIndex.committed.nonEmpty
+      val accepted = Caches.pin(
+        if (!hasSeen) batchKeepers
+        else {
+          // pinned: consumed by the bloom build AND the probe join
+          val br = Caches.pin(bandRows(batchKeepers))
+          val seenIdx = spark.read.parquet(indexPath)
+            .select(col("band"), col("bucket"), col("dhash").as("__seen"))
+          // steady-state shape (the urlDedupIngest move): the band
+          // index dwarfs the batch, so bloom the batch's (band,
+          // bucket) keys and test the index AT SCAN — only buckets
+          // the batch actually touches enter the join. No false
+          // negatives ⇒ identical drops; StreamsSpec pins both paths.
+          val probedIdx =
+            if (bloomProbe)
+              BloomJoin.prefilter(
+                seenIdx.withColumn("__bbk", xxhash64(col("band"), col("bucket"))),
+                br.select(xxhash64(col("band"), col("bucket")).as("__bbk")),
+                "__bbk", bloomExpectedItems, bloomNumBits).drop("__bbk")
+            else seenIdx
+          val hits = br
+            .join(probedIdx, Seq("band", "bucket"))
+            .where(bit_count(col("dhash").bitwiseXOR(col("__seen"))) <= maxHamming)
+            .select(col(idCol)).distinct()
+          batchKeepers.join(hits, Seq(idCol), "left_anti")
+        })
+      val landed = accepted.unionByName(quarantined)
+      BatchTable(spark, outputPath).commitOnce(label, landed)
+      // index append LAST = the commit marker;
+      // quarantined rows have no fingerprint and never enter the index
+      seenIndex.commitOnce(label,
+        bandRows(accepted).select(
+          col("band"), col("bucket"), col("dhash"), col(idCol).as("keeper_id")))
+    }
   }
 
   /** Continuous duplicate-CLUSTER maintenance: each micro-batch carries
@@ -962,45 +900,39 @@ object Streams {
       idACol: String,
       idBCol: String,
       statePath: String,
-      checkpoint: Option[String] = None): org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.operators.{Caches, Graphs}
-    val writer = pairs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val spark = batch.sparkSession
-        val scope = Caches.newScope()
-        try Caches.inScope(scope) {
-          val b = Caches.pin(batch.toDF()
-            .select(col(idACol).cast("long").as("__u"), col(idBCol).cast("long").as("__v"))
-            .where(col("__u").isNotNull && col("__v").isNotNull && col("__u") =!= col("__v"))
-            .distinct())
-          if (!b.isEmpty) {
-            val root = new org.apache.hadoop.fs.Path(statePath)
-            val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-            // committed state = _SUCCESS present; a crashed first swap
-            // leaves staging debris that must not be read as a table
-            // (the urlDedupIngest crash-window lesson)
-            val hasState = fs.exists(new org.apache.hadoop.fs.Path(root, "_SUCCESS"))
-            val state = Caches.pin(
-              if (hasState) spark.read.parquet(statePath).select("id", "component")
-              else spark.range(0).select(col("id"), col("id").as("component")))
-            val nodes = b.select(col("__u").as("id"))
-              .unionByName(b.select(col("__v").as("id"))).distinct()
-            val touched = state.join(nodes, Seq("id"), "left_semi")
-              .select("component").distinct()
-            val starEdges = state.join(touched, Seq("component"), "left_semi")
-              .where(col("id") =!= col("component"))
-              .select(col("id").as("__u"), col("component").as("__v"))
-            val merged = Graphs.connectedComponents(
-              starEdges.unionByName(b), "__u", "__v")
-            val newState = state.join(touched, Seq("component"), "left_anti")
-              .select("id", "component")
-              .unionByName(merged.select("id", "component"))
-            graft.sources.Sinks.writePartitionedAtomic(newState, statePath, Nil)
-          }
-        } finally scope.release()
+      checkpoint: Option[String] = None): StreamingQuery = {
+    import graft.operators.Graphs
+    eachBatch(pairs, checkpoint) { (batch, _) =>
+      val spark = batch.sparkSession
+      val b = Caches.pin(batch
+        .select(col(idACol).cast("long").as("__u"), col(idBCol).cast("long").as("__v"))
+        .where(col("__u").isNotNull && col("__v").isNotNull && col("__u") =!= col("__v"))
+        .distinct())
+      if (!b.isEmpty) {
+        val root = new org.apache.hadoop.fs.Path(statePath)
+        val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        // committed state = _SUCCESS present; a crashed first swap
+        // leaves staging debris that must not be read as a table
+        // (the urlDedupIngest crash-window lesson)
+        val hasState = fs.exists(new org.apache.hadoop.fs.Path(root, "_SUCCESS"))
+        val state = Caches.pin(
+          if (hasState) spark.read.parquet(statePath).select("id", "component")
+          else spark.range(0).select(col("id"), col("id").as("component")))
+        val nodes = b.select(col("__u").as("id"))
+          .unionByName(b.select(col("__v").as("id"))).distinct()
+        val touched = state.join(nodes, Seq("id"), "left_semi")
+          .select("component").distinct()
+        val starEdges = state.join(touched, Seq("component"), "left_semi")
+          .where(col("id") =!= col("component"))
+          .select(col("id").as("__u"), col("component").as("__v"))
+        val merged = Graphs.connectedComponents(
+          starEdges.unionByName(b), "__u", "__v")
+        val newState = state.join(touched, Seq("component"), "left_anti")
+          .select("id", "component")
+          .unionByName(merged.select("id", "component"))
+        graft.sources.Sinks.writePartitionedAtomic(newState, statePath, Nil)
       }
-    checkpoint.fold(writer)(writer.option("checkpointLocation", _)).start()
+    }
   }
 
   /** Continuous DATASET CARD — [[graft.operators.Quality.datasetCard]]'s
@@ -1014,10 +946,10 @@ object Streams {
     * (`batch=sNNNN`) of `(section, metric, value)` rows — its own counts,
     * sums, and mix histograms, plus a `distinct_texts` delta = the
     * batch's fingerprints NOT yet in the persisted seen-set. The
-    * seen-set append is LAST and is the commit marker (the
-    * [[urlDedupIngest]] order): a crash between delta and marker replays
-    * the batch against the UNCHANGED seen-set, recomputes the identical
-    * delta, finds its dir already present, and only lands the marker —
+    * seen-set append is LAST and is the commit marker ([[eachBatch]]):
+    * a crash between delta and marker replays the batch against the
+    * UNCHANGED seen-set, recomputes the identical delta, finds its dir
+    * already present, and only lands the marker —
     * exactly-once without a transaction log. `exact_dup_docs` is derived
     * at READ time (`n_docs − distinct_texts`) so deltas stay purely
     * additive.
@@ -1037,66 +969,59 @@ object Streams {
       fpIndexPath: String,
       shortTokens: Long = 10L,
       highPunct: Double = 0.05,
-      checkpoint: Option[String] = None): org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.operators.{Caches, Quality}
+      checkpoint: Option[String] = None): StreamingQuery = {
+    import graft.operators.Quality
     // start-time schema validation (round-12 advice): a stream missing a
     // card column must be rejected before .start(), not at first batch
     Seq(idCol, textCol, sourceCol).foreach { c =>
       require(stream.columns.contains(c),
         s"document stream has no '$c' column (columns: ${stream.columns.mkString(", ")})")
     }
-    val writer = stream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val label = BatchTable.streamLabel(batchId)
-        val spark = batch.sparkSession
-        val scope = Caches.newScope()
-        try Caches.inScope(scope) {
-          val prep = Caches.pin(Quality.cardPrep(batch.toDF(), textCol, sourceCol))
-          def cnt(pred: org.apache.spark.sql.Column) = sum(when(pred, 1L).otherwise(0L))
-          val corpus = prep.agg(
-            count(lit(1)).as("n_docs"),
-            coalesce(sum(col("n_chars")), lit(0L)).as("total_chars"),
-            coalesce(sum(col("n_tokens")), lit(0L)).as("total_tokens"),
-            cnt(col("punct") > highPunct).as("high_punct_docs"),
-            cnt(col("stopr") === 0.0 && col("n_tokens") > 0L).as("no_stopword_docs"),
-            cnt(col("n_tokens") < shortTokens).as("short_docs"))
-            .selectExpr(
-              """stack(6,
-                 'corpus', 'n_docs', n_docs,
-                 'corpus', 'total_chars', total_chars,
-                 'corpus', 'total_tokens', total_tokens,
-                 'flags', 'high_punct_docs', high_punct_docs,
-                 'flags', 'no_stopword_docs', no_stopword_docs,
-                 'flags', 'short_docs', short_docs) AS (section, metric, value)""")
-          val fpIndex = BatchTable(spark, fpIndexPath)
-          // committed batch= child, not a bare directory (urlDedupIngest's
-          // crash-window lesson)
-          val hasSeen = fpIndex.committed.nonEmpty
-          val batchFps = prep.select("fp").distinct()
-          val newFps = Caches.pin(
-            if (!hasSeen) batchFps
-            else batchFps.join(
-              spark.read.parquet(fpIndexPath).select("fp"), Seq("fp"), "left_anti"))
-          val distinctRow = newFps
-            .agg(count(lit(1)).as("value"))
-            .select(lit("corpus").as("section"),
-              lit("distinct_texts").as("metric"), col("value"))
-          def mix(section: String, c: String) = prep.groupBy(col(c))
-            .agg(count(lit(1)).as("value"))
-            .select(lit(section).as("section"),
-              coalesce(col(c), lit("__null__")).as("metric"), col("value"))
-          val delta = corpus
-            .unionByName(distinctRow)
-            .unionByName(mix("lang", "lang"))
-            .unionByName(mix("script", "script"))
-            .unionByName(mix("source", "source"))
-          BatchTable(spark, cardPath).commitOnce(label, delta)
-          // seen-set append LAST = the commit marker
-          fpIndex.commitOnce(label, newFps)
-        } finally scope.release()
-      }
-    checkpoint.fold(writer)(writer.option("checkpointLocation", _)).start()
+    eachBatch(stream, checkpoint) { (batch, label) =>
+      val spark = batch.sparkSession
+      val prep = Caches.pin(Quality.cardPrep(batch, textCol, sourceCol))
+      def cnt(pred: org.apache.spark.sql.Column) = sum(when(pred, 1L).otherwise(0L))
+      val corpus = prep.agg(
+        count(lit(1)).as("n_docs"),
+        coalesce(sum(col("n_chars")), lit(0L)).as("total_chars"),
+        coalesce(sum(col("n_tokens")), lit(0L)).as("total_tokens"),
+        cnt(col("punct") > highPunct).as("high_punct_docs"),
+        cnt(col("stopr") === 0.0 && col("n_tokens") > 0L).as("no_stopword_docs"),
+        cnt(col("n_tokens") < shortTokens).as("short_docs"))
+        .selectExpr(
+          """stack(6,
+             'corpus', 'n_docs', n_docs,
+             'corpus', 'total_chars', total_chars,
+             'corpus', 'total_tokens', total_tokens,
+             'flags', 'high_punct_docs', high_punct_docs,
+             'flags', 'no_stopword_docs', no_stopword_docs,
+             'flags', 'short_docs', short_docs) AS (section, metric, value)""")
+      val fpIndex = BatchTable(spark, fpIndexPath)
+      // committed batch= child, not a bare directory (urlDedupIngest's
+      // crash-window lesson)
+      val hasSeen = fpIndex.committed.nonEmpty
+      val batchFps = prep.select("fp").distinct()
+      val newFps = Caches.pin(
+        if (!hasSeen) batchFps
+        else batchFps.join(
+          spark.read.parquet(fpIndexPath).select("fp"), Seq("fp"), "left_anti"))
+      val distinctRow = newFps
+        .agg(count(lit(1)).as("value"))
+        .select(lit("corpus").as("section"),
+          lit("distinct_texts").as("metric"), col("value"))
+      def mix(section: String, c: String) = prep.groupBy(col(c))
+        .agg(count(lit(1)).as("value"))
+        .select(lit(section).as("section"),
+          coalesce(col(c), lit("__null__")).as("metric"), col("value"))
+      val delta = corpus
+        .unionByName(distinctRow)
+        .unionByName(mix("lang", "lang"))
+        .unionByName(mix("script", "script"))
+        .unionByName(mix("source", "source"))
+      BatchTable(spark, cardPath).commitOnce(label, delta)
+      // seen-set append LAST = the commit marker
+      fpIndex.commitOnce(label, newFps)
+    }
   }
 
   /** The current card from [[datasetCardIngest]]'s delta partitions:
@@ -1130,27 +1055,23 @@ object Streams {
     * this join be RIGHT NOW" from KB of counters — the stream is never
     * rescanned and never re-keyed.
     *
-    * State: NONE beyond the store itself (stateless foreachBatch); the
-    * store grows one depth×width-bounded partition per batch — compact
-    * by re-sketching or summing partitions when batch count matters.
+    * State: NONE beyond the store itself ([[eachBatch]]); the store
+    * grows one depth×width-bounded partition per batch — compact by
+    * re-sketching or summing partitions when batch count matters.
     */
   def joinSketchIngest(
       stream: DataFrame,
       keyCol: String,
       params: graft.operators.JoinAdvisor.CmParams,
       storePath: String,
-      checkpoint: Option[String] = None): org.apache.spark.sql.streaming.StreamingQuery = {
+      checkpoint: Option[String] = None): StreamingQuery = {
     require(stream.columns.contains(keyCol),
       s"stream has no '$keyCol' column (columns: ${stream.columns.mkString(", ")})")
-    val writer = stream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val label = BatchTable.streamLabel(batchId)
-        BatchTable(batch.sparkSession, storePath).commitOnce(label,
-          graft.operators.JoinAdvisor.cmSketch(batch.toDF(), keyCol, params)
-            .withColumn("width", lit(params.width))
-            .withColumn("depth", lit(params.depth)))
-      }
-    checkpoint.fold(writer)(writer.option("checkpointLocation", _)).start()
+    eachBatch(stream, checkpoint) { (batch, label) =>
+      BatchTable(batch.sparkSession, storePath).commitOnce(label,
+        graft.operators.JoinAdvisor.cmSketch(batch, keyCol, params)
+          .withColumn("width", lit(params.width))
+          .withColumn("depth", lit(params.depth)))
+    }
   }
 }

@@ -6,6 +6,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.sources.BatchTable
 import graft.streaming.Streams
 import graft.streaming.Streams.{ClosedSession, Evt}
 
@@ -635,6 +636,69 @@ class StreamsSpec extends AnyFunSuite {
     graft.operators.Caches.release()
   }
 
+  /** Drains every pin and cached plan so a case can assert that a stream
+    * left none behind.
+    */
+  private def clearPins(): Unit = {
+    graft.operators.Caches.release(blocking = true)
+    spark.catalog.clearCache()
+    assert(spark.sharedState.cacheManager.isEmpty)
+  }
+
+  private def cachedRdds: Seq[String] =
+    spark.sparkContext.getRDDStorageInfo.toSeq
+      .filter(_.numCachedPartitions > 0).map(i => s"${i.id}:${i.name}")
+
+  test("textIngest: every micro-batch releases its pins before the batch ends") {
+    implicit val sqlCtx = spark.sqlContext
+    clearPins()
+    val root = java.nio.file.Files.createTempDirectory("stream-pins").toString
+    val indexPath = s"$root/index"
+    val outputPath = s"$root/landed"
+    graft.operators.TextIndex.init(spark, indexPath)
+    val input = MemoryStream[(Long, String)]
+    val query = Streams.textIngest(
+      input.toDF().toDF("doc_id", "text"), "doc_id", "text", indexPath, outputPath)
+    try {
+      input.addData((1L, "spark pins the batch"), (2L, "the batch lands twice"))
+      query.processAllAvailable()
+      input.addData((3L, "a second batch pins again"))
+      query.processAllAvailable()
+      assert(BatchTable(spark, outputPath).committed === Seq("s00000000", "s00000001"))
+      assert(cachedRdds.isEmpty, s"cached blocks outlived their batch: $cachedRdds")
+      assert(spark.sharedState.cacheManager.isEmpty,
+        "a batch's pinned frames must leave the cache manager with the batch")
+    } finally query.stop()
+  }
+
+  test("textIngest: a batch body that pins and then throws leaves nothing pinned") {
+    implicit val sqlCtx = spark.sqlContext
+    clearPins()
+    val root = java.nio.file.Files.createTempDirectory("stream-pins-throw").toString
+    val indexPath = s"$root/index"
+    val outputPath = s"$root/landed"
+    graft.operators.TextIndex.init(spark, indexPath)
+    val input = MemoryStream[(Long, String)]
+    // the batch is pinned and lands in the output, then the index append
+    // fails to resolve the text column
+    val query = Streams.textIngest(
+      input.toDF().toDF("doc_id", "text"), "doc_id", "no_such_col", indexPath, outputPath)
+    try {
+      input.addData((1L, "spark pins the batch"), (2L, "the batch lands once"))
+      intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+        query.processAllAvailable()
+      }
+      assert(!query.isActive)
+      assert(query.exception.exists(_.getMessage.contains("no_such_col")),
+        s"the query must report the body's exception: ${query.exception}")
+      assert(BatchTable(spark, outputPath).committed === Seq("s00000000"),
+        "the pinned batch must have been materialized by the output land")
+      assert(cachedRdds.isEmpty, s"cached blocks outlived the failed batch: $cachedRdds")
+      assert(spark.sharedState.cacheManager.isEmpty,
+        "the failed batch's pinned frame must leave the cache manager")
+    } finally query.stop()
+  }
+
   test("importanceRoutedIngest: batches score under the FIXED models and route both ways") {
     implicit val sqlCtx = spark.sqlContext
     import graft.operators.Importance
@@ -767,6 +831,21 @@ class StreamsSpec extends AnyFunSuite {
         "an already-seen canonical may never land again")
     } finally query.stop()
     graft.operators.Caches.release()
+  }
+
+  test("urlDedupIngest: a stream that already has canonical_url is rejected at the call") {
+    implicit val sqlCtx = spark.sqlContext
+    val root = java.nio.file.Files.createTempDirectory("stream-url-bad").toString
+    val bad = MemoryStream[(Long, String, String)]
+    val activeBefore = spark.streams.active.map(_.id).toSet
+    val ex = intercept[IllegalArgumentException] {
+      Streams.urlDedupIngest(
+        bad.toDF().toDF("doc_id", "url", "canonical_url"),
+        "url", "doc_id", s"$root/seen", s"$root/landed")
+    }
+    assert(ex.getMessage.contains("canonical_url"))
+    assert(spark.streams.active.map(_.id).toSet === activeBefore,
+      "a rejected stream must not start a query")
   }
 
   test("urlDedupIngest: the plain (bloomProbe=false) index probe lands the identical set") {
