@@ -15,23 +15,18 @@ import graft.sources.Sinks
   */
 object GoldPipeline {
 
-  /** Bronze → Silver for every entity (reference: bronze_to_silver.py:175-207).
-    * The merge reads the existing silver path and rewrites the same path, so
-    * the write goes through the staging-and-swap sink — a plain overwrite
-    * would throw "Cannot overwrite a path that is also being read from" on
-    * every run after the initial load. (The reference's merge_full_history
-    * has that exact flaw; this one is idempotent for real.)
+  /** Bronze → Silver for every entity (reference: bronze_to_silver.py:175-207):
+    * each entity's bronze batch lands through [[CdcMerge.mergeInto]], which
+    * states the recovery and the two routes. Over standing silver only the
+    * `p_ym` months the batch touches are rewritten. The merge reads the
+    * silver path it rewrites, so every route swaps staged output in — a
+    * plain overwrite throws "Cannot overwrite a path that is also being
+    * read from" (the reference's merge_full_history has that exact flaw).
     */
   def bronzeToSilver(spark: SparkSession, bronzeDir: String, silverDir: String): Unit =
     Ingest.entities.foreach { e =>
-      val fresh = Ingest.readBronze(spark, bronzeDir, e)
-      val existing = CdcMerge.readIfExists(spark, s"$silverDir/${e.name}")
-      // Each partition column is a function of the merge keys (p_ym =
-      // ym(date), date a key), so the merge clusters on the partition
-      // columns and the sink's own repartition is already satisfied: one
-      // exchange per table.
-      val merged = CdcMerge.mergeFullHistory(existing, fresh, e.mergeKeys, e.partitionCols)
-      Sinks.writePartitionedAtomic(merged, s"$silverDir/${e.name}", e.partitionCols)
+      CdcMerge.mergeInto(s"$silverDir/${e.name}",
+        Ingest.readBronze(spark, bronzeDir, e), e.mergeKeys, e.partitionCols)
     }
 
   final case class GoldTables(

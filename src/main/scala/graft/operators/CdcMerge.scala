@@ -1,7 +1,9 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, count, lit}
+
+import graft.sources.Sinks
 
 /** Full-history batch CDC merge (reference: bronze_to_silver.py:94-108).
   *
@@ -42,7 +44,7 @@ object CdcMerge {
       else old.columns.exists(_.equalsIgnoreCase(name))
     old.select(fresh.schema.fields.toIndexedSeq.map { f =>
       if (has(f.name)) col(f.name).as(f.name)
-      else org.apache.spark.sql.functions.lit(null).cast(f.dataType).as(f.name)
+      else lit(null).cast(f.dataType).as(f.name)
     }: _*)
   }
 
@@ -89,84 +91,79 @@ object CdcMerge {
       .select((keys.map(col) ++ others.map(c => col(s"__w.$c").as(c))): _*)
   }
 
-  /** PARTITION-SCOPED full-history merge into a hive-partitioned silver
-    * table: only the partitions present in `fresh` are read
-    * (partition-pruned scan), merged, and atomically swapped — untouched
-    * partition directories are never listed or rewritten, so cost is
-    * O(touched partitions), not O(table history). Shared by the batch API
-    * and every `cdcMergeStream` micro-batch — ONE merge code path.
+  /** Land `fresh` in the silver table at `silverPath`: existing ∪ fresh,
+    * one row per key. Every way into silver goes through here: the batch
+    * pipeline ([[graft.banking.GoldPipeline.bronzeToSilver]]) and each
+    * [[graft.streaming.Streams.cdcMergeStream]] micro-batch.
     *
-    * Contract: a merge key must not move between partition values across
-    * deliveries, or the old copy in the untouched partition survives (the
-    * same contract hive-partitioned upserts have everywhere). The merge is
-    * clustered on the partition columns ([[mergeFullHistory]]'s
-    * invariant), so a key that moves keeps one copy per partition value.
+    * Recover before reading: [[graft.sources.Sinks.recover]] first restores
+    * whatever a crashed swap stranded (whole table or partition), so the
+    * merge never reads a half-table or a `__retired_*` directory as a
+    * partition.
+    *
+    * Then one of two routes:
+    *  - '''Partition-scoped''', when the table exists, `partitionCols` is
+    *    non-empty and the column sets match (case-insensitively). Only the
+    *    partitions present in `fresh` are read (partition-pruned scan),
+    *    merged and swapped ([[graft.sources.Sinks.writePartitionsAtomic]]);
+    *    untouched partition directories are not rewritten, so the write is
+    *    O(touched partitions), not O(table history). A key must not move
+    *    between partition values across deliveries, or its old copy in the
+    *    untouched partition survives (the contract hive-partitioned
+    *    upserts have everywhere); [[mergeFullHistory]]'s invariant makes
+    *    that hold for every `Ingest.Entity`.
+    *  - '''Whole-table''', every other case: a new table, a flat one, or a
+    *    column-set change (rewriting only the touched partitions would
+    *    leave files with heterogeneous schemas, and a plain read picks one
+    *    file's footer). The whole history is merged and swapped in
+    *    ([[graft.sources.Sinks.writePartitionedAtomic]]).
+    *
+    * Both routes publish `graft.cdc.fresh` (rows_in) and `graft.cdc.merge`
+    * (rows_out) as observe() aggregates of the write itself, and
+    * `graft.cdc.partitions`: the touched partitions, or on the whole-table
+    * route the partition directories the swap wrote.
     */
-  def mergeIntoPartitioned(
+  def mergeInto(
       silverPath: String,
       fresh: DataFrame,
       keys: Seq[String],
       partitionCols: Seq[String]): Unit = {
-    import org.apache.spark.sql.functions.{col, count, lit}
-    require(partitionCols.nonEmpty, "partition-scoped merge needs partition columns")
     val spark = fresh.sparkSession
     Metrics.register(spark)
-    // persist: fresh feeds both the touched-partition probe and the union.
-    val b0 = fresh.persist()
-    // rows_in/rows_out ride the merge action itself as observe() aggregates
-    // (no extra pass); the monitorable numbers silver_check re-scans for.
-    val b = b0.observe("graft.cdc.fresh", count(lit(1)).as("rows_in"))
-    def observed(df: DataFrame): DataFrame =
-      df.observe("graft.cdc.merge", count(lit(1)).as("rows_out"))
-    try {
-      // A previous swap may have crashed mid-rename; restore BEFORE
-      // building the read plan so the merge never sees a half-table.
-      graft.sources.Sinks.recoverStrandedPartitions(spark, silverPath)
-      val touched = b0.select(partitionCols.map(col): _*).distinct().collect()
-      Metrics.put("graft.cdc.partitions", "touched" -> touched.length.toLong)
-      if (touched.nonEmpty) {
-        val p = new org.apache.hadoop.fs.Path(silverPath)
-        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (!fs.exists(p)) {
-          graft.sources.Sinks.writePartitionsAtomic(
-            observed(mergeFullHistory(None, b, keys, partitionCols)), silverPath, partitionCols)
-        } else {
-          // Schema evolution must not go through the scoped path: rewriting
-          // only touched partitions would leave partition files with
-          // HETEROGENEOUS schemas, and a later plain read (mergeSchema off,
-          // the default) picks ONE file's footer schema — an added column
-          // can silently vanish table-wide, a dropped column
-          // nondeterministically survives-with-nulls or disappears
-          // depending on which file gets sampled. So ANY column-set
-          // difference — addition OR removal — routes through one
-          // full-table merge+rewrite that keeps every file homogeneous.
-          val existCols = spark.read.parquet(silverPath)
-            .schema.fieldNames.map(_.toLowerCase).toSet
-          val freshCols = b.schema.fieldNames.map(_.toLowerCase).toSet
-          if (freshCols != existCols) {
-            val existing = Some(spark.read.option("mergeSchema", "true").parquet(silverPath))
-            val merged = observed(mergeFullHistory(existing, b, keys, partitionCols))
-            graft.sources.Sinks.writePartitionedAtomic(merged, silverPath, partitionCols)
-          } else {
-            // Read the existing table with the FRESH frame's schema
-            // supplied: a user schema disables partition-column type
-            // inference (dir values cast to the supplied types), so the
-            // typed pruning predicate reaches PartitionFilters — without
-            // flipping session-global conf, which would race concurrent
-            // queries.
-            val pred = touched.map { r =>
-              partitionCols.zipWithIndex
-                .map { case (c, i) => col(c) <=> lit(r.get(i)) }
-                .reduce(_ && _)
-            }.reduce(_ || _)
-            val existingScoped =
-              Some(spark.read.schema(b.schema).parquet(silverPath).where(pred))
-            val merged = observed(mergeFullHistory(existingScoped, b, keys, partitionCols))
-            graft.sources.Sinks.writePartitionsAtomic(merged, silverPath, partitionCols)
-          }
-        }
+    def merged(existing: Option[DataFrame], batch: DataFrame): DataFrame =
+      mergeFullHistory(existing,
+        batch.observe("graft.cdc.fresh", count(lit(1)).as("rows_in")), keys, partitionCols)
+        .observe("graft.cdc.merge", count(lit(1)).as("rows_out"))
+    def touched(n: Long): Unit = Metrics.put("graft.cdc.partitions", "touched" -> n)
+
+    Sinks.recover(spark, silverPath)
+    val existing = readIfExists(spark, silverPath)
+    def columnSet(df: DataFrame) = df.columns.map(_.toLowerCase).toSet
+    if (partitionCols.isEmpty || !existing.exists(old => columnSet(old) == columnSet(fresh))) {
+      Sinks.writePartitionedAtomic(merged(existing, fresh), silverPath, partitionCols)
+      val p = new org.apache.hadoop.fs.Path(silverPath)
+      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      touched(Sinks.partitionDirs(fs, p, partitionCols.length).size.toLong)
+    } else Caches.scoped {
+      // fresh feeds both the touched-partition probe and the union
+      val batch = Caches.pin(fresh)
+      val parts = batch.select(partitionCols.map(col): _*).distinct().collect()
+      touched(parts.length.toLong)
+      if (parts.nonEmpty) {
+        // Read with the FRESH frame's schema supplied: a user schema
+        // disables partition-column type inference (directory values cast
+        // to the supplied types), so the typed pruning predicate reaches
+        // PartitionFilters — without flipping session-global conf, which
+        // would race concurrent queries.
+        val pred = parts.map { r =>
+          partitionCols.zipWithIndex
+            .map { case (c, i) => col(c) <=> lit(r.get(i)) }
+            .reduce(_ && _)
+        }.reduce(_ || _)
+        val scoped = spark.read.schema(batch.schema).parquet(silverPath).where(pred)
+        Sinks.writePartitionsAtomic(merged(Some(scoped), batch), silverPath, partitionCols)
       }
-    } finally b0.unpersist()
+    }
   }
 
   /** Probe-or-none scan for the merge target (reference: bronze_to_silver.py:66-68).

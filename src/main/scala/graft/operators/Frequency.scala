@@ -53,8 +53,8 @@ object Frequency {
     * free. A nondeterministic source (fresh `rand()`, a re-rolled sample, a
     * table overwritten between the two actions) silently breaks it: a
     * candidate found by pass 1 is then counted against DIFFERENT data in
-    * pass 2. For such frames, pin first: `pinned = Caches.pin(df)` (or
-    * `df.persist()`), run heavyHitters on the pinned frame, release after.
+    * pass 2. For such frames, pin first: `pinned = Caches.pin(df)` (or a
+    * plain persist), run heavyHitters on the pinned frame, release after.
     * This is deliberately NOT done internally — on the 100 TB scan-shaped
     * inputs this operator exists for, an implicit full-corpus cache would
     * cost more than both passes combined.

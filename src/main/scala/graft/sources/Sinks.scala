@@ -68,81 +68,11 @@ object Sinks {
   def writePartitionedAtomic(df: DataFrame, path: String, partitionCols: Seq[String]): Unit =
     atomicSwap(df.sparkSession, path)(staging => writePartitioned(df, staging, partitionCols))
 
-  /** Atomic overwrite that RETAINS the last `keepVersions` pre-overwrite
-    * snapshots as `path.__v_<millis>` siblings — the rename-based cousin of
-    * a table format's version log. A bad batch is then one [[rollback]]
-    * away instead of a restore-from-backup. Retained versions are whole
-    * table copies: keep the count small (1–2) and let [[rollback]]/pruning
-    * manage them. Versioned siblings are deliberately NOT `__retired_*`
-    * (that namespace means "crashed mid-swap" to the recovery preamble,
-    * which deletes superseded ones).
-    */
-  def writePartitionedAtomicVersioned(
-      df: DataFrame,
-      path: String,
-      partitionCols: Seq[String],
-      keepVersions: Int = 1): Unit =
-    atomicSwap(df.sparkSession, path, keepVersions)(staging =>
-      writePartitioned(df, staging, partitionCols))
-
-  /** Retained version paths of a versioned table, newest first. */
-  def versions(spark: org.apache.spark.sql.SparkSession, path: String): Seq[String] = {
-    import org.apache.hadoop.fs.Path
-    val target = new Path(path)
-    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val parent = target.getParent
-    if (parent == null || !fs.exists(parent)) Nil
-    else fs.listStatus(parent)
-      .map(_.getPath)
-      .filter(_.getName.startsWith(s"${target.getName}.__v_"))
-      .sortBy(p => versionStamp(p.getName))(Ordering[(Long, Long)].reverse)
-      .map(_.toString)
-      .toSeq
-  }
-
-  // Version dirs are `<table>.__v_<millis>_<seq>`: wall-clock first (orders
-  // across JVM restarts), a JVM-monotonic sequence second (orders same-
-  // millisecond writes — e.g. rollback immediately after rollback).
-  private val versionSeq = new java.util.concurrent.atomic.AtomicLong()
-
-  private def versionStamp(name: String): (Long, Long) = {
-    val s = name.substring(name.lastIndexOf("__v_") + 4)
-    val parts = s.split("_")
-    (parts(0).toLong, if (parts.length > 1) parts(1).toLong else 0L)
-  }
-
-  private def versionPath(path: String): org.apache.hadoop.fs.Path =
-    new org.apache.hadoop.fs.Path(
-      s"$path.__v_${System.currentTimeMillis()}_${versionSeq.incrementAndGet()}")
-
-  /** Swap the newest retained version back in. The displaced current table
-    * becomes a retained version itself, so a rollback is reversible (a
-    * second rollback returns to the batch that was just rolled back —
-    * LIFO). Fails loudly if no retained version exists.
-    */
-  def rollback(spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val target = new Path(path)
-    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val prev = versions(spark, path).headOption.map(new Path(_)).getOrElse(
-      throw new java.io.IOException(s"no retained __v_* version to roll back to for $path"))
-    val displaced = versionPath(path)
-    if (fs.exists(target) && !fs.rename(target, displaced))
-      throw new java.io.IOException(s"could not displace current $target")
-    if (!fs.rename(prev, target)) {
-      // restore what we displaced; a half-done rollback must not be silent
-      if (fs.exists(displaced) && !fs.rename(displaced, target))
-        throw new java.io.IOException(
-          s"rollback failed AND could not restore $displaced to $target")
-      throw new java.io.IOException(s"could not promote $prev to $target (current restored)")
-    }
-  }
-
   /** Does this failure look like a reader racing [[atomicSwap]]'s
     * sub-millisecond absent-path window (old dir renamed out, new dir not
     * yet renamed in), or a scan task opening files the swap renamed away
     * after the listing? Both are transient by construction — the swap
-    * completes or the crash-recovery preamble restores the retired copy —
+    * completes or [[recover]] restores the retired copy —
     * so readers of swap-managed artifacts absorb them with a bounded
     * retry (see [[graft.operators.Similarity.IvfIndex.load]] and
     * [[ZoneMaps]]). Anything else propagates.
@@ -185,46 +115,20 @@ object Sinks {
   /** The whole-table staging-and-swap protocol, factored so any writer
     * (plain partitioned, z-ordered, a future format) can be made atomic:
     * `writeTo(stagingPath)` runs while the target is untouched, then the
-    * result swaps in via renames. Includes the crash-window recovery
-    * preamble (commented in the body). With `keepVersions > 0` the
-    * displaced table is retained as a `__v_<millis>` sibling (pruned to
-    * the newest `keepVersions`) instead of deleted.
+    * result swaps in via renames. A [[recover]] that repairs anything
+    * fails the call loudly: the caller's plan was built against the
+    * pre-recovery table and must be re-planned.
     */
   private def atomicSwap(
       spark: org.apache.spark.sql.SparkSession,
-      path: String,
-      keepVersions: Int = 0)(writeTo: String => Unit): Unit = {
+      path: String)(writeTo: String => Unit): Unit = {
     import org.apache.hadoop.fs.Path
     val target = new Path(path)
     val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // Crash-window detection. The swap below has a window between
-    // target→retired and staging→target where the target path is absent; a
-    // driver crash there leaves the merged history stranded under
-    // __retired_* while the NEXT merge's exists-probe read silently
-    // rebuilds from fresh data only — permanent silent loss. So: if the
-    // target is missing but a retired sibling exists, restore the newest
-    // retired copy and fail this call loudly — the caller's plan was built
-    // against the (empty) pre-recovery target and must be re-planned.
-    val parent = target.getParent
-    val name = target.getName
-    if (!fs.exists(target) && parent != null && fs.exists(parent)) {
-      val stranded = fs.listStatus(parent)
-        .map(_.getPath)
-        .filter(_.getName.startsWith(s"$name.__retired_"))
-        .sortBy(p => fs.getFileStatus(p).getModificationTime)
-      stranded.lastOption.foreach { newest =>
-        if (!fs.rename(newest, target))
-          throw new java.io.IOException(
-            s"found stranded pre-swap data at $newest but could not restore it to $target")
-        // Older retired siblings are superseded by definition (each swap
-        // retires the then-current table); left behind, repeated
-        // crash/retry cycles would accrete one full-table copy per attempt.
-        stranded.init.foreach(old => fs.delete(old, true))
-        throw new java.io.IOException(
-          s"restored $target from stranded $newest (a previous swap crashed mid-rename); " +
-            "re-run this write so its plan reads the recovered data")
-      }
-    }
+    if (recover(spark, path))
+      throw new java.io.IOException(
+        s"restored $path from data a previous swap stranded mid-rename; " +
+          "re-run this write so its plan reads the recovered data")
     // Unique suffixes: two concurrent writers must not clobber each
     // other's staging output (last promote still wins the target — serialize
     // writers externally if that matters).
@@ -244,12 +148,7 @@ object Sinks {
               s"previous data is stranded at $retired")
         throw new java.io.IOException(s"could not promote $staging to $target (rolled back)")
       }
-      if (keepVersions > 0 && fs.exists(retired)) {
-        if (!fs.rename(retired, versionPath(path)))
-          throw new java.io.IOException(s"could not retain displaced version of $path")
-        versions(spark, path).drop(keepVersions)
-          .foreach(old => fs.delete(new Path(old), true))
-      } else fs.delete(retired, true)
+      fs.delete(retired, true)
       graft.operators.Metrics.put("graft.sink.write",
         "path" -> path, "files" -> parquetFiles(fs, target)._1)
     } finally {
@@ -259,6 +158,18 @@ object Sinks {
       if (fs.exists(staging)) fs.delete(staging, true)
     }
   }
+
+  /** The hive partition directories `depth` levels below `dir` (`dir`
+    * itself at depth 0).
+    */
+  private[graft] def partitionDirs(
+      fs: org.apache.hadoop.fs.FileSystem,
+      dir: org.apache.hadoop.fs.Path,
+      depth: Int): Seq[org.apache.hadoop.fs.Path] =
+    if (depth == 0) Seq(dir)
+    else fs.listStatus(dir).toSeq
+      .filter(st => st.isDirectory && st.getPath.getName.contains("="))
+      .flatMap(st => partitionDirs(fs, st.getPath, depth - 1))
 
   /** PARTITION-scoped atomic overwrite: `df` must contain only the
     * partitions being replaced; each hive partition directory it produces
@@ -277,12 +188,6 @@ object Sinks {
     val staging = fs.makeQualified(new Path(s"$path.__staging_$token"))
     writePartitioned(df, staging.toString, partitionCols)
 
-    def leaves(dir: Path, depth: Int): Seq[Path] =
-      if (depth == 0) Seq(dir)
-      else fs.listStatus(dir).toSeq
-        .filter(st => st.isDirectory && st.getPath.getName.contains("="))
-        .flatMap(st => leaves(st.getPath, depth - 1))
-
     val stagingRoot = staging.toUri.getPath
     try {
       // The metric counts files under the PROMOTED leaves only — a full
@@ -290,7 +195,7 @@ object Sinks {
       // O(touched partitions) contract this sink exists for (a streaming
       // micro-batch touching 3 of 5000 partitions must not list 5000).
       var promotedFiles = 0L
-      leaves(staging, partitionCols.length).foreach { leaf =>
+      partitionDirs(fs, staging, partitionCols.length).foreach { leaf =>
         val rel = leaf.toUri.getPath.stripPrefix(stagingRoot).stripPrefix("/")
         val dst = new Path(target, rel)
         val retired = new Path(dst.getParent, s"${dst.getName}.__retired_$token")
@@ -317,17 +222,42 @@ object Sinks {
     }
   }
 
-  /** Auto-restore partitions stranded by a crashed [[writePartitionsAtomic]]
-    * swap (retired sibling present, base directory missing). Unlike the
-    * whole-table variant — which must FAIL because its caller already built
-    * a plan over the broken target — this runs BEFORE the caller reads, so
-    * restoring silently is safe. Superseded `__retired_*` leftovers whose
-    * base exists are deleted.
+  /** Crash recovery for a swap-managed table, run before anything
+    * reads it. Both swaps have a window where a crash strands data under
+    * a `__retired_*` sibling: [[atomicSwap]] between retiring the table
+    * and promoting staging, [[writePartitionsAtomic]] the same per
+    * partition directory. Left alone, the next exists-probe read rebuilds
+    * the table from fresh data only, and a whole-table read lists a
+    * stranded partition as a bogus partition value. So:
+    *  - target absent: the newest `path.__retired_*` sibling is restored
+    *    and older ones, superseded by it, are deleted;
+    *  - every `k=v.__retired_*` directory whose base is absent is
+    *    restored, and one whose base exists is deleted.
+    * Returns whether anything was restored or deleted.
     */
-  def recoverStrandedPartitions(spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
+  def recover(spark: org.apache.spark.sql.SparkSession, path: String): Boolean = {
     import org.apache.hadoop.fs.Path
-    val root = new Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val target = new Path(path)
+    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    var repaired = false
+    def restore(from: Path, to: Path): Unit = {
+      if (!fs.rename(from, to))
+        throw new java.io.IOException(s"found stranded data at $from but could not restore it to $to")
+      repaired = true
+    }
+    val parent = target.getParent
+    if (!fs.exists(target) && parent != null && fs.exists(parent)) {
+      val stranded = fs.listStatus(parent)
+        .map(_.getPath)
+        .filter(_.getName.startsWith(s"${target.getName}.__retired_"))
+        .sortBy(p => fs.getFileStatus(p).getModificationTime)
+      stranded.lastOption.foreach { newest =>
+        restore(newest, target)
+        // left behind, repeated crash/retry cycles would accrete one
+        // full-table copy per attempt
+        stranded.init.foreach(old => fs.delete(old, true))
+      }
+    }
     def walk(dir: Path): Unit =
       fs.listStatus(dir).foreach { st =>
         if (st.isDirectory) {
@@ -335,15 +265,13 @@ object Sinks {
           val idx = n.indexOf(".__retired_")
           if (idx > 0) {
             val base = new Path(dir, n.substring(0, idx))
-            if (!fs.exists(base)) {
-              if (!fs.rename(st.getPath, base))
-                throw new java.io.IOException(
-                  s"found stranded partition ${st.getPath} but could not restore to $base")
-            } else fs.delete(st.getPath, true)
+            if (!fs.exists(base)) restore(st.getPath, base)
+            else { fs.delete(st.getPath, true); repaired = true }
           } else if (n.contains("=")) walk(st.getPath)
         }
       }
-    if (fs.exists(root)) walk(root)
+    if (fs.exists(target)) walk(target)
+    repaired
   }
 
   /** Bucketed managed table: rows are hash-clustered into `numBuckets`
@@ -527,8 +455,8 @@ object Sinks {
     * enforce at write time; partition values round-trip through Spark's
     * inferred representation). Flat tables rewrite into
     * ceil(bytes / targetFileBytes) files from a METADATA-only size
-    * listing. Crash-stranded `__retired_*` partition dirs are restored
-    * FIRST so their stale rows cannot be baked into the compacted output.
+    * listing. [[recover]] runs FIRST so stranded `__retired_*` rows are
+    * neither lost nor baked into the compacted output.
     */
   def compact(spark: org.apache.spark.sql.SparkSession, path: String,
       targetFileBytes: Long = 128L * 1024 * 1024,
@@ -536,7 +464,7 @@ object Sinks {
     import org.apache.hadoop.fs.Path
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverStrandedPartitions(spark, path)
+    recover(spark, path)
     // ONE pre-walk serves both the before-count metric and the flat-table
     // byte total (compact targets many-small-file tables — the listings
     // are exactly what must not be repeated).

@@ -121,25 +121,13 @@ object Streams {
 
   /** Streaming CDC merge: the streaming upgrade of the reference's batch
     * full-history merge (SURVEY.md §2.9 — the reference re-reads and
-    * re-merges everything per run). Each micro-batch is merged into the
-    * silver path through the same CdcMerge + atomic swap sinks the batch
-    * pipeline uses, so batch and streaming ingestion are ONE code path and
-    * the target is always a complete, deduplicated parquet table.
-    * Re-deliveries across micro-batches dedup against the existing table.
-    *
-    * With `partitionCols` set, the merge is PARTITION-SCOPED: only the
-    * partitions present in the micro-batch are read (partition-pruned
-    * scan), merged, and swapped — untouched partition directories are not
-    * rewritten, so per-batch I/O is O(touched partitions), not
-    * O(table history). The keys-must-colocate-with-partitions caveat
-    * applies: a merge key must not move between partition values across
-    * deliveries, or the old copy in the untouched partition survives
-    * (the same contract hive-partitioned upserts have everywhere).
-    * Without `partitionCols` the whole table is re-merged (the reference's
-    * exact semantics).
-    *
-    * Replaying a crashed micro-batch re-merges the same rows into the same
-    * table, so the swap is idempotent and the batch label goes unused.
+    * re-merges everything per run). Each micro-batch lands in the silver
+    * path through [[graft.operators.CdcMerge.mergeInto]], the one landing
+    * the batch pipeline uses too, which states the crash recovery and the
+    * partition-scoped and whole-table routes. Re-deliveries across
+    * micro-batches dedup against the existing table, and replaying a
+    * crashed micro-batch re-merges the same rows into the same table, so
+    * the batch label goes unused.
     *
     * The returned query must be awaited/stopped by the caller.
     */
@@ -150,13 +138,7 @@ object Streams {
       partitionCols: Seq[String] = Nil,
       checkpoint: Option[String] = None): StreamingQuery =
     eachBatch(stream, checkpoint) { (batch, _) =>
-      if (partitionCols.isEmpty) {
-        val existing = graft.operators.CdcMerge.readIfExists(batch.sparkSession, silverPath)
-        val merged = graft.operators.CdcMerge.mergeFullHistory(existing, batch, mergeKeys)
-        graft.sources.Sinks.writePartitionedAtomic(merged, silverPath, partitionCols)
-      } else {
-        graft.operators.CdcMerge.mergeIntoPartitioned(silverPath, batch, mergeKeys, partitionCols)
-      }
+      graft.operators.CdcMerge.mergeInto(silverPath, batch, mergeKeys, partitionCols)
     }
 
   /** The one micro-batch skeleton every ingest in this object runs on: an

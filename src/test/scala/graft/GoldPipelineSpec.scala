@@ -300,10 +300,119 @@ class GoldPipelineSpec extends AnyFunSuite {
     // the partition-scoped merge: into a new table, then into its own output
     val accounts = Ingest.readBronze(spark, bronze.toString, Ingest.accounts)
     Seq("new", "existing").foreach { state =>
-      val writes = writeShuffles(silver)(CdcMerge.mergeIntoPartitioned(
+      val writes = writeShuffles(silver)(CdcMerge.mergeInto(
         s"$silver/accounts_scoped", accounts, Ingest.accounts.mergeKeys, Ingest.accounts.partitionCols))
       assert(writes.size == 1 && writes.head._2 == 1,
-        s"mergeIntoPartitioned into a $state table: $writes")
+        s"mergeInto into a $state table: $writes")
+    }
+  }
+
+  /** Every row of one silver table, columns in name order, sorted. */
+  private def silverRows(silver: java.nio.file.Path, e: Ingest.Entity): Seq[String] = {
+    val df = spark.read.parquet(s"$silver/${e.name}")
+    df.select(df.columns.sorted.map(col).toIndexedSeq: _*)
+      .collect().map(_.toSeq.mkString("|")).sorted.toSeq
+  }
+
+  test("bronze→silver restores a partition a crashed scoped swap stranded") {
+    val bronze = Files.createTempDirectory("graft-bronze-strand")
+    val clean = Files.createTempDirectory("graft-silver-clean")
+    val crashed = Files.createTempDirectory("graft-silver-strand")
+    writeFixtures(bronze)
+    Seq(clean, crashed).foreach(s => GoldPipeline.bronzeToSilver(spark, bronze.toString, s.toString))
+    // a crash inside a scoped swap: one month retired, its staged
+    // replacement never promoted
+    val accounts = new java.io.File(s"$crashed/accounts")
+    val month = accounts.listFiles().filter(_.getName.startsWith("p_ym=")).minBy(_.getName)
+    assert(month.renameTo(new java.io.File(accounts, s"${month.getName}.__retired_deadbeef")))
+
+    GoldPipeline.bronzeToSilver(spark, bronze.toString, crashed.toString)
+    Ingest.entities.foreach { e =>
+      assert(silverRows(crashed, e) == silverRows(clean, e), s"${e.name} differs from the uncrashed silver")
+    }
+    val yms = spark.read.parquet(accounts.toString).select("p_ym").distinct()
+      .collect().map(_.get(0).toString)
+    assert(!yms.exists(_.contains("__retired_")), s"stranded month read as a partition: ${yms.mkString(",")}")
+  }
+
+  test("bronze→silver over seeded increments equals one run over all rows; a one-month increment rewrites one month") {
+    val rnd = new scala.util.Random(20220301L)
+    val refFormat = java.time.format.DateTimeFormatter.ofPattern("dd-MMM-yy", java.util.Locale.ENGLISH)
+    def render(d: java.time.LocalDate, iso: Boolean): String =
+      if (iso) d.toString else d.format(refFormat).toLowerCase
+    def pick(prefix: String, n: Int): String = s"$prefix${rnd.nextInt(n)}"
+    // one delivered bronze row: its month (0 when undated) and its CSV
+    // line, with the date written in the reference or the ISO format
+    final case class Delivery(month: Int, line: Boolean => String, iso: Boolean)
+    def dated(month: Int)(line: String => String): Delivery = {
+      val d = java.time.LocalDate.of(2022, month, 1 + rnd.nextInt(28))
+      Delivery(month, iso => line(render(d, iso)), rnd.nextBoolean())
+    }
+    val entities: Seq[(String, String, Int => Delivery)] = Seq(
+      ("accounts", "Acc no,Date,Status",
+        m => { val a = pick("A", 8); val s = pick("S", 3); dated(m)(d => s"$a,$d,$s") }),
+      ("account_details", "Acc no,Date,type",
+        m => { val a = pick("A", 8); val t = pick("T", 3); dated(m)(d => s"$a,$d,$t") }),
+      ("person", "Acc no,Person",
+        _ => { val l = s"${pick("A", 8)},${pick("P", 6)}"; Delivery(0, _ => l, iso = false) }),
+      ("person_profile", "Person,Name,Date",
+        m => { val p = pick("P", 6); val n = pick("N", 4); dated(m)(d => s"$p,$n,$d") }),
+      ("person_iden", "Person,Id,Date",
+        m => { val p = pick("P", 6); val i = pick("I", 4); dated(m)(d => s"$p,$i,$d") }))
+    val onlyMonth = 3
+    val delivered = entities.map(_._1 -> scala.collection.mutable.ArrayBuffer.empty[Delivery]).toMap
+    // three increments over months 1-5 in random order, the later two with
+    // exact and re-formatted re-deliveries; then one that touches March only
+    val increments: Seq[Map[String, Seq[String]]] = (0 to 3).map { k =>
+      entities.map { case (name, _, gen) =>
+        val seen = delivered(name).toIndexedSeq
+        val fresh =
+          if (k < 3) Seq.fill(10)(gen(1 + rnd.nextInt(5)))
+          else Seq.fill(4)(gen(if (name == "person") 0 else onlyMonth))
+        val again = rnd.shuffle(seen.filter(d => k < 3 || d.month == 0 || d.month == onlyMonth))
+          .take(if (k == 0) 0 else 4)
+        delivered(name) ++= fresh
+        name -> rnd.shuffle(
+          fresh.map(d => d.line(d.iso)) ++
+            again.zipWithIndex.map { case (d, i) => d.line(if (i % 2 == 0) d.iso else !d.iso) })
+      }.toMap
+    }
+    def bronzeOf(prefix: String, lines: Map[String, Seq[String]]): String = {
+      val dir = Files.createTempDirectory(prefix)
+      entities.foreach { case (name, header, _) =>
+        Files.writeString(dir.resolve(s"$name.csv"), (header +: lines(name)).mkString("", "\n", "\n"))
+      }
+      dir.toString
+    }
+    val incremental = Files.createTempDirectory("graft-silver-inc")
+    val whole = Files.createTempDirectory("graft-silver-whole")
+    val partitioned = Ingest.entities.filter(_.partitionCols.nonEmpty)
+    def monthFiles(): Map[(String, String), Set[String]] = partitioned.flatMap { e =>
+      new java.io.File(s"$incremental/${e.name}").listFiles().filter(_.isDirectory).map { d =>
+        (e.name, d.getName) -> d.list().filter(_.endsWith(".parquet")).toSet
+      }
+    }.toMap
+
+    increments.init.zipWithIndex.foreach { case (inc, k) =>
+      GoldPipeline.bronzeToSilver(spark, bronzeOf(s"graft-bronze-inc$k", inc), incremental.toString)
+    }
+    val before = monthFiles()
+    val march = f"p_ym=2022$onlyMonth%02d"
+    partitioned.foreach(e => assert(before.contains(e.name -> march), s"fixture: ${e.name} has no $march"))
+    GoldPipeline.bronzeToSilver(spark, bronzeOf("graft-bronze-inc3", increments.last), incremental.toString)
+    val after = monthFiles()
+    GoldPipeline.bronzeToSilver(spark,
+      bronzeOf("graft-bronze-all", entities.map(en => en._1 -> increments.flatMap(_(en._1))).toMap),
+      whole.toString)
+
+    Ingest.entities.foreach { e =>
+      assert(silverRows(incremental, e) == silverRows(whole, e),
+        s"${e.name}: incremental silver differs from one merge over all rows")
+    }
+    assert(after.keySet == before.keySet)
+    before.foreach { case (key @ (name, month), files) =>
+      if (month == march) assert(after(key) != files, s"$name/$month: the touched month was not rewritten")
+      else assert(after(key) == files, s"$name/$month was rewritten by a March-only increment")
     }
   }
 

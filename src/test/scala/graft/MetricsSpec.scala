@@ -15,7 +15,7 @@ class MetricsSpec extends AnyFunSuite {
     Metrics.reset()
     val silver = Files.createTempDirectory("metrics-cdc").toString + "/t"
     val d1 = Seq((1L, "a", "p1"), (2L, "b", "p2"), (3L, "c", "p2")).toDF("k", "v", "p")
-    graft.operators.CdcMerge.mergeIntoPartitioned(silver, d1, Seq("k"), Seq("p"))
+    graft.operators.CdcMerge.mergeInto(silver, d1, Seq("k"), Seq("p"))
     assert(Metrics.await("graft.cdc.merge").map(_.getAs[Long]("rows_out")).contains(3L))
     assert(Metrics.await("graft.cdc.fresh").map(_.getAs[Long]("rows_in")).contains(3L))
     assert(Metrics.get("graft.cdc.partitions").map(_.getAs[Long](0)).contains(2L))
@@ -23,7 +23,7 @@ class MetricsSpec extends AnyFunSuite {
     // second increment: one re-delivery + one new key, single partition
     Metrics.reset()
     val d2 = Seq((3L, "c", "p2"), (4L, "d", "p2")).toDF("k", "v", "p")
-    graft.operators.CdcMerge.mergeIntoPartitioned(silver, d2, Seq("k"), Seq("p"))
+    graft.operators.CdcMerge.mergeInto(silver, d2, Seq("k"), Seq("p"))
     assert(Metrics.await("graft.cdc.fresh").map(_.getAs[Long]("rows_in")).contains(2L))
     assert(Metrics.await("graft.cdc.merge").map(_.getAs[Long]("rows_out")).contains(3L),
       "scoped merge output = existing p2 keys (2,3) + new key 4, deduped")

@@ -120,7 +120,7 @@ class PlanAuditSpec extends AnyFunSuite {
   }
 
   test("partition-scoped CDC read: pruning predicate reaches PartitionFilters") {
-    // the same read shape mergeIntoPartitioned builds per increment: the
+    // the read shape mergeInto builds per partition-scoped increment: the
     // fresh frame's schema supplied (disables partition type inference
     // without touching session conf), typed equality on the partition col
     import org.apache.spark.sql.functions._

@@ -123,13 +123,13 @@ class SinksSpec extends AnyFunSuite {
     assert(merged.head.schema("extra").dataType.typeName == "integer")
   }
 
-  test("mergeIntoPartitioned: a new column triggers one homogeneous full rewrite") {
+  test("mergeInto: a new column triggers one homogeneous full rewrite") {
     val silver = Files.createTempDirectory("evolve-part").toString + "/t"
     val d1 = Seq((1L, "a", "p1"), (2L, "b", "p2")).toDF("k", "v", "p")
-    graft.operators.CdcMerge.mergeIntoPartitioned(silver, d1, Seq("k"), Seq("p"))
+    graft.operators.CdcMerge.mergeInto(silver, d1, Seq("k"), Seq("p"))
     // evolution batch touches ONLY p2 but carries a new column
     val d2 = Seq((3L, "c", 7, "p2")).toDF("k", "v", "extra", "p")
-    graft.operators.CdcMerge.mergeIntoPartitioned(silver, d2, Seq("k"), Seq("p"))
+    graft.operators.CdcMerge.mergeInto(silver, d2, Seq("k"), Seq("p"))
     // a PLAIN read (no mergeSchema) must see the new column everywhere —
     // i.e. the untouched partition's files were rewritten too
     val out = spark.read.parquet(silver)
@@ -140,13 +140,13 @@ class SinksSpec extends AnyFunSuite {
     assert(out.where(col("extra").isNull).count() == 2, "history rows carry typed null")
   }
 
-  test("mergeIntoPartitioned: a DROPPED column also triggers one homogeneous full rewrite") {
+  test("mergeInto: a DROPPED column also triggers one homogeneous full rewrite") {
     val silver = Files.createTempDirectory("evolve-drop").toString + "/t"
     val d1 = Seq((1L, "a", 5, "p1"), (2L, "b", 6, "p2")).toDF("k", "v", "extra", "p")
-    graft.operators.CdcMerge.mergeIntoPartitioned(silver, d1, Seq("k"), Seq("p"))
+    graft.operators.CdcMerge.mergeInto(silver, d1, Seq("k"), Seq("p"))
     // narrowing batch touches ONLY p2 and no longer carries `extra`
     val d2 = Seq((3L, "c", "p2")).toDF("k", "v", "p")
-    graft.operators.CdcMerge.mergeIntoPartitioned(silver, d2, Seq("k"), Seq("p"))
+    graft.operators.CdcMerge.mergeInto(silver, d2, Seq("k"), Seq("p"))
     // every file must agree on the narrow layout: a plain read must neither
     // nondeterministically resurrect `extra` nor depend on footer sampling
     val out = spark.read.parquet(silver)
@@ -158,17 +158,34 @@ class SinksSpec extends AnyFunSuite {
       "even a mergeSchema read must not find stale wide files")
   }
 
-  test("mergeIntoPartitioned (batch API): dedups against existing, touches only its partitions") {
+  test("mergeInto (batch API): dedups against existing, touches only its partitions") {
     val silver = Files.createTempDirectory("batch-scoped").toString + "/t"
     val d1 = Seq((1L, "a", "p1"), (2L, "b", "p2")).toDF("k", "v", "p")
-    graft.operators.CdcMerge.mergeIntoPartitioned(silver, d1, Seq("k"), Seq("p"))
+    graft.operators.CdcMerge.mergeInto(silver, d1, Seq("k"), Seq("p"))
     // second increment: re-delivery of k=2 plus a new key, both in p2
     val d2 = Seq((2L, "b", "p2"), (3L, "c", "p2")).toDF("k", "v", "p")
-    graft.operators.CdcMerge.mergeIntoPartitioned(silver, d2, Seq("k"), Seq("p"))
+    graft.operators.CdcMerge.mergeInto(silver, d2, Seq("k"), Seq("p"))
     val out = spark.read.parquet(silver)
     assert(out.count() == 3, "re-delivered key must dedup")
     assert(out.where(col("p") === "p1").count() == 1, "untouched partition preserved")
     assert(out.where(col("k") === 2L).count() == 1)
+  }
+
+  test("mergeInto restores a table a crashed whole-table swap stranded, then merges into it") {
+    import org.apache.hadoop.fs.Path
+    val silver = Files.createTempDirectory("crash-whole").toString + "/t"
+    val d1 = Seq((1L, "a", "p1"), (2L, "b", "p2"), (3L, "c", "p2")).toDF("k", "v", "p")
+    graft.operators.CdcMerge.mergeInto(silver, d1, Seq("k"), Seq("p"))
+    // a crash between the swap's two renames: the table was retired and
+    // the staged output never promoted
+    val fs = new Path(silver).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(fs.rename(new Path(silver), new Path(silver + ".__retired_deadbeef")))
+    val d2 = Seq((4L, "d", "p2")).toDF("k", "v", "p")
+    graft.operators.CdcMerge.mergeInto(silver, d2, Seq("k"), Seq("p"))
+    val out = spark.read.parquet(silver).select("k").collect().map(_.getLong(0)).sorted
+    assert(out.toSeq == Seq(1L, 2L, 3L, 4L), s"history plus the new key, got ${out.mkString(",")}")
+    val siblings = fs.listStatus(new Path(silver).getParent).map(_.getPath.getName)
+    assert(!siblings.exists(_.contains("__retired_")), s"stranded copy left: ${siblings.mkString(",")}")
   }
 
   test("compact: many small files collapse to the byte-target count, data intact") {
@@ -241,36 +258,6 @@ class SinksSpec extends AnyFunSuite {
       s"z-ordering must narrow per-file ranges on BOTH columns: ok=$okFrac pk=$pkFrac")
     // round-trip intact
     assert(spark.read.parquet(s"$dir/z").count() == li.count())
-  }
-
-  test("versioned overwrite retains N snapshots; rollback undoes a bad batch, reversibly") {
-    val dir = Files.createTempDirectory("versioned").toString + "/t"
-    def write(v: Int): Unit = Sinks.writePartitionedAtomicVersioned(
-      spark.range(v * 10).toDF("id"), dir, Nil, keepVersions = 2)
-    def rows(): Long = spark.read.parquet(dir).count()
-
-    write(1); write(2); write(3); write(4)
-    assert(rows() == 40)
-    // retention pruned to the newest 2 (v3, v2); v1 is gone
-    val vs = Sinks.versions(spark, dir)
-    assert(vs.size == 2, s"expected 2 retained versions, got $vs")
-
-    Sinks.rollback(spark, dir)
-    assert(rows() == 30, "rollback must restore the previous batch")
-    // reversible: the displaced current became a version — LIFO undo
-    Sinks.rollback(spark, dir)
-    assert(rows() == 40, "a second rollback undoes the first")
-
-    // crash recovery is untouched by retained versions: __v_* siblings are
-    // not __retired_* and must not confuse the preamble
-    Sinks.writePartitionedAtomic(spark.range(7).toDF("id"), dir, Nil)
-    assert(rows() == 7)
-
-    intercept[java.io.IOException] {
-      val empty = Files.createTempDirectory("versioned-none").toString + "/t"
-      Sinks.writePartitioned(spark.range(3).toDF("id"), empty, Nil)
-      Sinks.rollback(spark, empty)
-    }
   }
 
   test("compact with zOrderBy: one rewrite both collapses files and restores clustering") {

@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Scaladoc attaches to the definition directly below it, so a doc
   * comment followed at once by another doc comment documents nothing:
   * the first block is dropped and the def reads only the second. Also
-  * guards two decisions the main sources make in one place only.
+  * guards four decisions the main sources make in one place only.
   */
 class SourceDocsSpec extends AnyFunSuite {
 
@@ -56,5 +56,19 @@ class SourceDocsSpec extends AnyFunSuite {
     val batches = matches(root, raw"\.foreachBatch\b".r)
     assert(batches.map(_.takeWhile(_ != ':')) === Seq("graft/streaming/Streams.scala"),
       s"one foreachBatch skeleton, in Streams; found:\n${batches.mkString("\n")}")
+  }
+
+  test("raw persists only in Caches, silver merges only in CdcMerge") {
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"run from the project root: ${root.toAbsolutePath}")
+    val persists = matches(root, raw"\.persist\(".r)
+      .filterNot(_.startsWith("graft/operators/Caches.scala:"))
+    if (persists.nonEmpty)
+      fail(s"${persists.size} raw persists outside Caches (use Caches.pin):\n${persists.mkString("\n")}")
+    // q08's catalog face merges two in-memory extracts and lands nothing
+    val merges = matches(root, raw"mergeFullHistory\(".r)
+      .filterNot(_.startsWith("graft/operators/CdcMerge.scala:"))
+    assert(merges.map(_.takeWhile(_ != ':')) === Seq("graft/Queries.scala"),
+      s"silver is reached only through CdcMerge.mergeInto; found:\n${merges.mkString("\n")}")
   }
 }
