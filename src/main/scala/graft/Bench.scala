@@ -1,8 +1,10 @@
 package graft
 
 /** Benchmark main: times each [[BenchEntry.all]] entry at
-  * SPARK_GRAFT_SF_DIR and prints ONE JSON line, the BENCH_r{N}.json
-  * record. Probes run against ONE standing index built (untimed) per
+  * SPARK_GRAFT_SF_DIR: three cold and three warm passes per entry. It
+  * prints the raw passes as one JSON line (also written to
+  * SPARK_GRAFT_BENCH_OUT), then its one summary, `min_cold`, as the last
+  * line. Probes run against ONE standing index built (untimed) per
   * scale factor; builds land in a fresh scratch dir per pass.
   */
 object Bench {
@@ -24,42 +26,29 @@ object Bench {
     BenchEntry.standingIndexes.foreach(bench.standingPath(_, sfDir))
     bench.clearCaches()
 
-    // Three timed passes per query, cold cache each, MEDIAN of the three: a
-    // single pass conflates the query with GC/scheduling noise (the round-2
-    // q01 4.6x phantom regression), and min-of-2 still let one background
-    // stall leak through when both passes landed during sibling load (the
-    // round-8 uniform +26% ambiguity — identical binaries, every query
-    // slower). The median of three is robust to one outlier in either
-    // direction. Three WARM passes (no cache clear, repeated immediately,
-    // median) separate steady-state query cost from first-touch overhead
-    // (scan/codegen/JIT): a cold-warm gap with a small warm number means
-    // fixed overhead, not a plan problem — the round-3 q30 question.
+    // Three timed passes per query, cold cache each: a single pass
+    // conflates the query with GC/scheduling noise, and the spread of
+    // three tells noise from a regression. Three WARM passes (no cache
+    // clear, repeated immediately) separate steady-state query cost from
+    // first-touch overhead (scan/codegen/JIT): a cold-warm gap with a
+    // small warm time means fixed overhead, not a plan problem.
     def timed(e: BenchEntry): Double = {
       val t0 = System.nanoTime()
       try bench.run(e, sfDir)
       catch { case ex: Throwable => System.err.println(s"[bench] ${e.name}: ${ex.getMessage}") }
       (System.nanoTime() - t0) / 1e9
     }
-    def median(xs: Seq[Double]): Double = xs.sorted.apply(xs.size / 2)
-    case class R(name: String, passes: Seq[Double], warmPasses: Seq[Double]) {
-      def cold: Double = median(passes)
-      def warm: Double = median(warmPasses)
-    }
+    case class R(name: String, passes: Seq[Double], warmPasses: Seq[Double])
     val results = entries.map { e =>
       val passes = (1 to 3).map { _ => bench.clearCaches(); val t = timed(e); bench.dropScratch(); t }
       val warmPasses = (1 to 3).map { _ => val t = timed(e); bench.dropScratch(); t }
       R(e.name, passes, warmPasses)
     }
-    def json(f: R => Double) =
-      results.map(r => "\"" + r.name + "\":" + f(r)).mkString("{", ",", "}")
-    // Both raw cold passes per query: one field distinguishes run-to-run
-    // noise from a real regression (the r4 q03/q05 +0.2s question needed
-    // exactly this and didn't have it).
-    val passesJson = results
-      .map(r => "\"" + r.name + "\":[" + r.passes.mkString(",") + "]")
+    // The raw passes per query: their spread distinguishes run-to-run
+    // noise from a real regression.
+    def passesJson(f: R => Seq[Double]) = results
+      .map(r => "\"" + r.name + "\":[" + f(r).mkString(",") + "]")
       .mkString("{", ",", "}")
-    val total = results.map(_.cold).sum
-    val totalWarm = results.map(_.warm).sum
     // Per-entry executed-scan IO (files/bytes/rows actually read), from one
     // UNTIMED cold pass after the timing samples: every round-over-round
     // timing delta now carries its IO denominator, so a testdata
@@ -88,9 +77,8 @@ object Bench {
       }
     }.mkString("{", ",", "}")
     val fullLine =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":${json(_.cold)},""" +
-        s""""total_warm":$totalWarm,"queries_warm":${json(_.warm)},""" +
-        s""""queries_cold_passes":$passesJson,"scan_io":$scanIoJson,"sf":"$sfDir"}"""
+      s"""{"queries_cold_passes":${passesJson(_.passes)},""" +
+        s""""queries_warm_passes":${passesJson(_.warmPasses)},"scan_io":$scanIoJson,"sf":"$sfDir"}"""
     println(fullLine)
     // The driver's BENCH_r{N}.json records only a ~2,000-char tail of
     // stdout; the per-pass arrays that adjudicate noise-vs-regression

@@ -128,7 +128,8 @@ object GoldPipeline {
 
   /** The Postgres-dialect CREATE TABLE statements for the five gold
     * tables under the reference's `gold` schema — what the reference's
-    * overwrite-with-truncate load relies on existing server-side. Spec-
+    * overwrite-with-truncate load (reference: gold_sql_to_postgres.py)
+    * relies on existing server-side. Spec-
     * pinned (no live Postgres in tests; [[Sinks.jdbcDdl]] runs Spark's
     * own PostgresDialect type mapping).
     */

@@ -288,11 +288,10 @@ object text {
     c.rlike("^[0-9]{13,19}$") && total % 10 === 0
   }
 
-  /** The ONE prefix ladder shared by card detection and redaction: for
-    * a raw candidate `x`, the prefixes that end at a SEPARATOR GROUP
-    * boundary (split on `[ -]`), longest first, each as (digit prefix,
-    * raw span covering it) — both NULL unless the prefix is Luhn-valid
-    * 13–19 digits ([[luhnValid]] embeds the length bounds).
+  /** The card-detection prefix ladder: over a candidate's separator
+    * `groups` (split on `[ -]`), the digit prefixes that end at a group
+    * boundary, longest first — each NULL unless the prefix is
+    * Luhn-valid 13–19 digits ([[luhnValid]] embeds the length bounds).
     *
     * Boundary windows close the card+CVV adjacency leak the greedy
     * [[cardCandidatePattern]] creates — '4111-1111-1111-1111-123' is
@@ -303,8 +302,7 @@ object text {
     * never-false-positive guarantee. The residual, irreducible gap: a
     * card concatenated DIRECTLY with extra digits (no separator) is
     * arithmetically indistinguishable from a long id and still leaks;
-    * the trade-off is documented, not silent. Sharing the ladder keeps
-    * detection and redaction drift-free by construction.
+    * the trade-off is documented, not silent.
     *
     * PRECISION on separated runs (documented, round-15 advice): each
     * boundary prefix of 13–19 digits is an independent ~1/10 chance of
@@ -318,7 +316,7 @@ object text {
     * ladder; (b) group widths
     * quantize prefix lengths, so e.g. an all-4s run (spaced IBAN
     * digits) exposes exactly one proper-prefix length (16) in range —
-    * ~2 trials, ~19% over-redaction odds on a random such run, vs the
+    * ~2 trials, ~19% false-detection odds on a random such run, vs the
     * unconstrained ladder's worst-case ~50%. The whole-run rung stays
     * UNCONDITIONAL — whole-candidate recall and the unseparated
     * guarantee are unchanged; no IIN/MII first-digit filter, because
@@ -327,7 +325,7 @@ object text {
     * LEAKS for modest precision.
     */
   private def cardPrefixLadder(
-      x: Column, groups: Column, firstWide: Column): Seq[(Column, Column)] = {
+      groups: Column, firstWide: Column): Seq[Column] = {
     (19 to 1 by -1).map { g =>
       val pfx = array_join(slice(groups, 1, g), "")
       // && short-circuits, so rungs beyond the group count cost one
@@ -338,14 +336,11 @@ object text {
       val plausible =
         if (g == 1) lit(true)
         else size(groups) === g || firstWide.isNull || firstWide > g
-      val ok = size(groups) >= g && plausible && luhnValid(pfx)
-      (when(ok, pfx),
-        // raw-text span covering exactly the first g groups
-        when(ok, regexp_extract(x, s"^[0-9]+(?:[ -][0-9]+){${g - 1}}", 0)))
+      when(size(groups) >= g && plausible && luhnValid(pfx), pfx)
     }
   }
 
-  /** Candidates paired with their split groups, MATERIALIZED once per
+  /** Candidates' split groups, MATERIALIZED once per
     * candidate: interpreted lambdas have no CSE, so referencing
     * `split(x, …)` in each of the ladder's 19 rungs would re-run the
     * regex split 19× per candidate — this struct hop evaluates it once
@@ -361,7 +356,7 @@ object text {
         // ladder's proper-prefix rungs read; materialized once here
         // like the split itself (interpreted lambdas have no CSE)
         val fw = array_min(transform(g, (grp, i) => when(length(grp) > 6, i + lit(1))))
-        struct(x.as("x"), g.as("g"), fw.as("fw"))
+        struct(g.as("g"), fw.as("fw"))
       })
 
   /** Luhn-valid payment-card numbers appearing in the text, separator-
@@ -376,24 +371,8 @@ object text {
     */
   def detectPaymentCards(c: Column): Column = {
     val found = transform(cardCandidatesWithGroups(c), s =>
-      coalesce(cardPrefixLadder(s.getField("x"), s.getField("g"), s.getField("fw")).map(_._1): _*))
+      coalesce(cardPrefixLadder(s.getField("g"), s.getField("fw")): _*))
     array_sort(array_distinct(filter(found, d => d.isNotNull)))
-  }
-
-  /** Scrub Luhn-VALID card numbers (as matched, separators included)
-    * with a typed placeholder, leaving invalid digit runs — order IDs,
-    * timestamps, hashes — untouched (unseparated runs are tested
-    * whole-only; see [[cardPrefixLadder]]). When a separator-boundary
-    * PREFIX of a candidate validates (card+CVV adjacency), exactly the
-    * raw span covering it is scrubbed — the trailing groups stay. The
-    * fold over detected candidates is a per-row `aggregate` HOF: no
-    * UDF, no join, no shuffle.
-    */
-  def redactPaymentCards(c: Column): Column = {
-    val rawValid = transform(cardCandidatesWithGroups(c), s =>
-      coalesce(cardPrefixLadder(s.getField("x"), s.getField("g"), s.getField("fw")).map(_._2): _*))
-    aggregate(filter(rawValid, x => x.isNotNull), c,
-      (acc, x) => replace(acc, x, lit("<CARD>")))
   }
 
   // --- Gopher-style rule signals (Rae et al. 2021, "Scaling Language

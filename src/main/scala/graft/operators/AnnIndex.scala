@@ -71,8 +71,7 @@ import graft.sources.BatchTable
 object AnnIndex {
 
   /** Probe-width specification for the serving calls ([[crossNeighbors]],
-    * [[crossNeighborsPq]], [[topNeighbors]], [[topNeighborsPq]],
-    * [[dedupBatch]], [[dedupBatchPq]], and
+    * [[crossNeighborsPq]], [[dedupBatch]], [[dedupBatchPq]], and
     * [[graft.streaming.Streams.annIngest]]). IVF recall is governed by
     * nprobe/nlist, so a caller holding a raw `nprobe = 16` across a
     * [[rebuildAuto]] that scales nlist 16 → 160 silently drops to 10%
@@ -251,11 +250,11 @@ object AnnIndex {
 
   /** [[init]] + a PQ codebook: every subsequent [[append]] also lands an
     * `m`-byte [[Pq]] code and the exact vector norm per posting, and
-    * probes can run the [[crossNeighborsPq]]/[[topNeighborsPq]] path —
-    * candidate screening over code bytes, raw vectors read only for the
-    * screened survivors' exact re-rank. Same refuse-to-retrain contract
-    * as the coarse quantizer, for the same reason: landed codes were
-    * assigned by THIS codebook.
+    * probes can run the [[crossNeighborsPq]] path — candidate screening
+    * over code bytes, raw vectors read only for the screened survivors'
+    * exact verify. Same refuse-to-retrain contract as the coarse
+    * quantizer, for the same reason: landed codes were assigned by THIS
+    * codebook.
     */
   def initPq(spark: SparkSession, path: String, index: IvfIndex, codebook: Pq.Codebook): Unit = {
     require(codebook.dim == index.dim,
@@ -360,24 +359,6 @@ object AnnIndex {
       batch: String = "00000001"): Unit = {
     init(emb.sparkSession, path,
       Similarity.trainIvf(emb, idCol, vecCol, nlist, sampleRows, kmeansIters))
-    append(emb, idCol, vecCol, path, batch)
-  }
-
-  /** [[build]] with the quantizer trained over the FULL corpus
-    * (distributed Lloyd, [[Similarity.trainIvfFull]]) instead of a
-    * driver-side sample — the variant for corpora whose distribution a
-    * 512-point sample misrepresents. Same lifecycle afterwards.
-    */
-  def buildFullTrain(
-      emb: DataFrame,
-      idCol: String,
-      vecCol: String,
-      path: String,
-      nlist: Int = 16,
-      kmeansIters: Int = 5,
-      batch: String = "00000001"): Unit = {
-    init(emb.sparkSession, path,
-      Similarity.trainIvfFull(emb, idCol, vecCol, nlist, kmeansIters))
     append(emb, idCol, vecCol, path, batch)
   }
 
@@ -1138,42 +1119,7 @@ object AnnIndex {
       probe: Probe,
       maxCell: Int,
       margin: Double,
-      scoreWithLut: Boolean): DataFrame =
-    crossNeighborsPqImpl(batchDf, idCol, vecCol, path, threshold, probe, maxCell,
-      margin, scoreWithLut, broadcastProbes = true)
-
-  /** [[crossNeighborsPq]] for CORPUS-SCALE batches — the PQ face of
-    * [[crossNeighborsBulk]]: identical semantics (spec-pinned equality),
-    * but only the distinct probed-cell set is broadcast (≤ nlist ints);
-    * the screen, keeper, and exact-verify joins shuffle by their keys
-    * instead of shipping the batch × nprobe probes table (query vectors
-    * included) to every task. `scoreWithLut` is deliberately absent:
-    * the per-probe-row ADC table is the SERVING trade (few queries,
-    * many candidates each) and is exactly wrong at bulk batch sizes.
-    */
-  def crossNeighborsPqBulk(
-      batchDf: DataFrame,
-      idCol: String,
-      vecCol: String,
-      path: String,
-      threshold: Double = 0.95,
-      probe: Probe = Probe.Cells(4),
-      maxCell: Int = Int.MaxValue,
-      margin: Double = 0.1): DataFrame =
-    crossNeighborsPqImpl(batchDf, idCol, vecCol, path, threshold, probe, maxCell,
-      margin, scoreWithLut = false, broadcastProbes = false)
-
-  private def crossNeighborsPqImpl(
-      batchDf: DataFrame,
-      idCol: String,
-      vecCol: String,
-      path: String,
-      threshold: Double,
-      probe: Probe,
-      maxCell: Int,
-      margin: Double,
-      scoreWithLut: Boolean,
-      broadcastProbes: Boolean): DataFrame = {
+      scoreWithLut: Boolean): DataFrame = {
     val spark = batchDf.sparkSession
     val index = coarse(spark, path)
     val cb = pqCodebook(spark, path)
@@ -1191,10 +1137,7 @@ object AnnIndex {
         .where(lit(false))
 
     // micro-batch serving: the probes table is small → broadcast it past
-    // every join. Bulk: hint nothing and let the joins shuffle by their
-    // keys (cell for the screen/keepers, batch_id for the verify) — the
-    // broadcast ceiling stops binding the batch size ([[crossNeighborsBulk]]).
-    def probesSide(df: DataFrame): DataFrame = if (broadcastProbes) broadcast(df) else df
+    // every join
     val probedCells = probes.select("cell").distinct()
     // pass 1: screening columns only — `vec` stays on disk
     val codes = Caches.pin(
@@ -1214,13 +1157,13 @@ object AnnIndex {
         .where(col("__occ") > maxCell))
     val cold = hot.fold(codes)(h => codes.join(h.select("cell"), Seq("cell"), "left_anti"))
     val screened = cold
-      .join(probesSide(probes), Seq("cell"))
+      .join(broadcast(probes), Seq("cell"))
       .where(approxDot >= (lit(threshold - margin) * col("__qnorm") * col("norm")))
       .select(col("cell"), col("batch_id"), col("corpus_id"))
     // over-cap cells: keeper only, NO screen — true cosine decides below
     val survivors = hot.fold(screened)(h => screened.unionByName(
       h.select("cell", "corpus_id")
-        .join(probesSide(probes.select("cell", "batch_id")), Seq("cell"))
+        .join(broadcast(probes.select("cell", "batch_id")), Seq("cell"))
         .select(col("cell"), col("batch_id"), col("corpus_id"))))
     // pass 2: raw vectors for survivors only (cell prune map-side, then
     // id-keyed join — survivor-sized, not corpus-sized)
@@ -1230,207 +1173,13 @@ object AnnIndex {
       .join(survivors, Seq("cell", "corpus_id"))
     // pass 3: exact verify
     fetched
-      .join(probesSide(probes.select("batch_id", "__qvec").distinct()), Seq("batch_id"))
+      .join(broadcast(probes.select("batch_id", "__qvec").distinct()), Seq("batch_id"))
       .select(
         col("batch_id"), col("corpus_id"),
         vectors.cosine(col("vec"), col("__qvec")).as("cosine"))
       .where(col("cosine") >= threshold)
       .groupBy("batch_id", "corpus_id")
       .agg(max("cosine").as("cosine"))
-  }
-
-  /** Top-k corpus neighbors per batch vector through the PQ screen:
-    * coarse top-(k·rerank) per batch vector by approximate (ADC) cosine,
-    * exact re-rank of those survivors on fetched raw vectors, emit the
-    * true top k — (batch_id, corpus_id, cosine, rank). The standard
-    * IVF-PQ serving shape: `rerank` is the accuracy/IO dial (screened
-    * candidates whose true rank belongs in the top k but whose ADC rank
-    * fell outside k·rerank are the loss mode).
-    */
-  def topNeighborsPq(
-      batchDf: DataFrame,
-      idCol: String,
-      vecCol: String,
-      path: String,
-      k: Int,
-      nprobe: Int = 4,
-      maxCell: Int = Int.MaxValue,
-      rerank: Int = 4): DataFrame =
-    topNeighborsPq(batchDf, idCol, vecCol, path, k, Probe.Cells(nprobe), maxCell, rerank)
-
-  /** [[topNeighborsPq]] with a [[Probe]]-typed width — see
-    * [[crossNeighbors]]'s Probe overload for the rebuild-stability
-    * rationale.
-    */
-  def topNeighborsPq(
-      batchDf: DataFrame,
-      idCol: String,
-      vecCol: String,
-      path: String,
-      k: Int,
-      probe: Probe,
-      maxCell: Int,
-      rerank: Int): DataFrame =
-    topNeighborsPqImpl(batchDf, idCol, vecCol, path, k, probe, maxCell, rerank,
-      broadcastProbes = true)
-
-  /** [[topNeighborsPq]] for CORPUS-SCALE batches — the PQ-screened
-    * top-k through [[crossNeighborsBulk]]'s physical shape: only the
-    * probed-cell set is broadcast; the screen, keeper, and verify joins
-    * shuffle by their keys. The coarse top-(k·rerank) cut and the final
-    * window already ran per batch vector, so the emitted contract is
-    * [[topNeighborsPq]]'s verbatim (spec-pinned equality).
-    */
-  def topNeighborsPqBulk(
-      batchDf: DataFrame,
-      idCol: String,
-      vecCol: String,
-      path: String,
-      k: Int,
-      probe: Probe = Probe.Cells(4),
-      maxCell: Int = Int.MaxValue,
-      rerank: Int = 4): DataFrame =
-    topNeighborsPqImpl(batchDf, idCol, vecCol, path, k, probe, maxCell, rerank,
-      broadcastProbes = false)
-
-  private def topNeighborsPqImpl(
-      batchDf: DataFrame,
-      idCol: String,
-      vecCol: String,
-      path: String,
-      k: Int,
-      probe: Probe,
-      maxCell: Int,
-      rerank: Int,
-      broadcastProbes: Boolean): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    require(k > 0 && rerank > 0, "k and rerank must be positive")
-    val spark = batchDf.sparkSession
-    val index = coarse(spark, path)
-    val cb = pqCodebook(spark, path)
-    def probesSide(df: DataFrame): DataFrame = if (broadcastProbes) broadcast(df) else df
-    val probes = Caches.pin(
-      batchDf.select(
-        col(idCol).as("batch_id"),
-        col(vecCol).as("__qvec"),
-        vectors.norm(col(vecCol)).as("__qnorm"),
-        explode(index.cells(col(vecCol), Probe.resolve(probe, index.nlist)))
-          .as("cell")))
-    if (batches(spark, path).isEmpty)
-      return probes
-        .select(col("batch_id"), col("batch_id").as("corpus_id"),
-          lit(0.0).as("cosine"), lit(1).as("rank"))
-        .where(lit(false))
-    val probedCells = probes.select("cell").distinct()
-    val codes = Caches.pin(
-      spark.read.parquet(vectorsDir(path))
-        .select(col("cell"), col("id").as("corpus_id"), col("code"), col("norm"))
-        .join(broadcast(probedCells), Seq("cell"), "left_semi")
-        .distinct())
-    staleGuard.check(path, codes)
-    // hot/cold split without the full-frame window — see crossNeighborsImpl
-    val hot =
-      if (maxCell == Int.MaxValue) None
-      else Some(codes.groupBy("cell")
-        .agg(count(lit(1)).as("__occ"), min(col("corpus_id")).as("corpus_id"))
-        .where(col("__occ") > maxCell))
-    val cold = hot.fold(codes)(h => codes.join(h.select("cell"), Seq("cell"), "left_anti"))
-    val screenCands = cold
-      .join(probesSide(probes), Seq("cell"))
-      .select(col("cell"), col("batch_id"), col("corpus_id"),
-        (pqAdcDot(cb, col("code"), col("__qvec")) /
-          (col("__qnorm") * col("norm"))).as("__approx"))
-    val withKeepers = hot.fold(screenCands)(h => screenCands.unionByName(
-      h.select("cell", "corpus_id")
-        .join(probesSide(probes.select("cell", "batch_id")), Seq("cell"))
-        // keepers bypass the coarse cut: +infinity approx pins them in
-        .select(col("cell"), col("batch_id"), col("corpus_id"),
-          lit(Double.MaxValue).as("__approx"))))
-    val survivors = graft.plans.TopK.perKey(
-      withKeepers, Seq("batch_id"),
-      Seq(col("__approx").desc, col("corpus_id").asc), k * rerank)
-      .select("cell", "batch_id", "corpus_id")
-    val fetched = spark.read.parquet(vectorsDir(path))
-      .select(col("cell"), col("id").as("corpus_id"), col("vec"))
-      .join(broadcast(probedCells), Seq("cell"), "left_semi")
-      .join(survivors, Seq("cell", "corpus_id"))
-    fetched
-      .join(probesSide(probes.select("batch_id", "__qvec").distinct()), Seq("batch_id"))
-      .select(col("batch_id"), col("corpus_id"),
-        vectors.cosine(col("vec"), col("__qvec")).as("cosine"))
-      .groupBy("batch_id", "corpus_id")
-      .agg(max("cosine").as("cosine"))
-      .withColumn("rank",
-        row_number().over(
-          Window.partitionBy("batch_id").orderBy(col("cosine").desc, col("corpus_id"))))
-      .where(col("rank") <= k)
-  }
-
-  /** Top-k corpus neighbors per batch vector: (batch_id, corpus_id,
-    * cosine, rank), rank 1 = nearest, ties broken by corpus_id. Same
-    * probe machinery as [[crossNeighbors]] without a threshold — the
-    * ANN-search face of the index ([[Similarity.ivfSearch]] without the
-    * corpus rescan).
-    */
-  def topNeighbors(
-      batchDf: DataFrame,
-      idCol: String,
-      vecCol: String,
-      path: String,
-      k: Int,
-      nprobe: Int = 4,
-      maxCell: Int = Int.MaxValue): DataFrame =
-    topNeighbors(batchDf, idCol, vecCol, path, k, Probe.Cells(nprobe), maxCell)
-
-  /** [[topNeighbors]] with a [[Probe]]-typed width — see
-    * [[crossNeighbors]]'s Probe overload for the rebuild-stability
-    * rationale.
-    */
-  def topNeighbors(
-      batchDf: DataFrame,
-      idCol: String,
-      vecCol: String,
-      path: String,
-      k: Int,
-      probe: Probe,
-      maxCell: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val scored = crossNeighbors(
-      batchDf, idCol, vecCol, path, threshold = -1.0, probe, maxCell)
-    scored
-      .withColumn("rank",
-        row_number().over(
-          Window.partitionBy("batch_id").orderBy(col("cosine").desc, col("corpus_id"))))
-      .where(col("rank") <= k)
-  }
-
-  /** [[topNeighbors]] for CORPUS-SCALE batches — [[crossNeighborsBulk]]
-    * underneath, and the per-vector top-k cut through the native
-    * bounded-heap plan ([[graft.plans.TopK.perKey]]) BEFORE the rank
-    * window: the candidate set per batch vector is nprobe cells wide,
-    * and a rank-then-filter window over that at bulk batch sizes sorts
-    * every candidate per key, where the heap keeps k. The window that
-    * assigns the emitted `rank` column then runs on the ≤ k-per-key
-    * remainder. Same output contract as [[topNeighbors]] (spec-pinned
-    * equality): rank 1 = nearest, ties to the lower corpus id.
-    */
-  def topNeighborsBulk(
-      batchDf: DataFrame,
-      idCol: String,
-      vecCol: String,
-      path: String,
-      k: Int,
-      probe: Probe = Probe.Cells(4),
-      maxCell: Int = Int.MaxValue): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    require(k > 0, "k must be positive")
-    val scored = crossNeighborsBulk(
-      batchDf, idCol, vecCol, path, threshold = -1.0, probe, maxCell)
-    graft.plans.TopK.perKey(
-      scored, Seq("batch_id"), Seq(col("cosine").desc, col("corpus_id").asc), k)
-      .withColumn("rank",
-        row_number().over(
-          Window.partitionBy("batch_id").orderBy(col("cosine").desc, col("corpus_id"))))
   }
 
   /** Audit view of the index cells the probe cap short-circuits for this
@@ -1471,95 +1220,12 @@ object AnnIndex {
       idCol: String,
       vecCol: String,
       path: String,
-      threshold: Double = 0.95,
-      nprobe: Int = 4,
-      maxCell: Int = Int.MaxValue,
-      dim: Int = 64): DataFrame =
-    dedupBatch(batchDf, idCol, vecCol, path, threshold, Probe.Cells(nprobe), maxCell, dim)
-
-  /** [[dedupBatch]] with a [[Probe]]-typed width — see
-    * [[crossNeighbors]]'s Probe overload for the rebuild-stability
-    * rationale.
-    */
-  def dedupBatch(
-      batchDf: DataFrame,
-      idCol: String,
-      vecCol: String,
-      path: String,
       threshold: Double,
       probe: Probe,
       maxCell: Int,
-      dim: Int): DataFrame = {
-    val inCorpus = crossNeighbors(batchDf, idCol, vecCol, path, threshold, probe, maxCell)
-      .select(col("batch_id").as(idCol))
-      .distinct()
-    val fresh = batchDf.join(inCorpus, Seq(idCol), "left_anti")
-    val pairs = Similarity.cosineNearDupPairs(
-      fresh, idCol, vecCol, threshold, dim = dim,
-      maxBucket = maxCell)
-    val dropped = Dedup.duplicateClusters(pairs)
-      .where(col("id") =!= col("cluster"))
-      .select(col("id").as(idCol))
-    fresh.join(dropped, Seq(idCol), "left_anti")
-  }
-
-  /** [[dedupBatch]] for CORPUS-SCALE batches — the acceptance face a
-    * bulk backfill actually calls: the against-corpus pass runs
-    * [[crossNeighborsBulk]] (no batch-sized broadcast), and the
-    * within-batch near-dedup is [[Similarity.cosineNearDupPairs]]'s
-    * LSH-bucketed pass, which was batch-scale-shaped already. Same
-    * acceptance semantics as [[dedupBatch]], spec-pinned equal.
-    */
-  def dedupBatchBulk(
-      batchDf: DataFrame,
-      idCol: String,
-      vecCol: String,
-      path: String,
-      threshold: Double = 0.95,
-      probe: Probe = Probe.Cells(4),
-      maxCell: Int = Int.MaxValue,
-      dim: Int = 64): DataFrame = {
-    val inCorpus = crossNeighborsBulk(batchDf, idCol, vecCol, path, threshold, probe, maxCell)
-      .select(col("batch_id").as(idCol))
-      .distinct()
-    val fresh = batchDf.join(inCorpus, Seq(idCol), "left_anti")
-    val pairs = Similarity.cosineNearDupPairs(
-      fresh, idCol, vecCol, threshold, dim = dim,
-      maxBucket = maxCell)
-    val dropped = Dedup.duplicateClusters(pairs)
-      .where(col("id") =!= col("cluster"))
-      .select(col("id").as(idCol))
-    fresh.join(dropped, Seq(idCol), "left_anti")
-  }
-
-  /** [[dedupBatchPq]] for CORPUS-SCALE batches — the PQ acceptance face
-    * through [[crossNeighborsPqBulk]]'s shuffle shape; the within-batch
-    * LSH near-dedup is batch-scale-shaped already. Spec-pinned equal to
-    * [[dedupBatchPq]].
-    */
-  def dedupBatchPqBulk(
-      batchDf: DataFrame,
-      idCol: String,
-      vecCol: String,
-      path: String,
-      threshold: Double = 0.95,
-      probe: Probe = Probe.Cells(4),
-      maxCell: Int = Int.MaxValue,
-      margin: Double = 0.1,
-      dim: Int = 64): DataFrame = {
-    val inCorpus = crossNeighborsPqBulk(
-      batchDf, idCol, vecCol, path, threshold, probe, maxCell, margin)
-      .select(col("batch_id").as(idCol))
-      .distinct()
-    val fresh = batchDf.join(inCorpus, Seq(idCol), "left_anti")
-    val pairs = Similarity.cosineNearDupPairs(
-      fresh, idCol, vecCol, threshold, dim = dim,
-      maxBucket = maxCell)
-    val dropped = Dedup.duplicateClusters(pairs)
-      .where(col("id") =!= col("cluster"))
-      .select(col("id").as(idCol))
-    fresh.join(dropped, Seq(idCol), "left_anti")
-  }
+      dim: Int): DataFrame =
+    acceptFresh(batchDf, idCol, vecCol, threshold, maxCell, dim,
+      crossNeighbors(batchDf, idCol, vecCol, path, threshold, probe, maxCell))
 
   /** [[dedupBatch]] with the corpus probe on the PQ screening path
     * ([[crossNeighborsPq]]) — the batch-acceptance shape for PQ-enabled
@@ -1572,34 +1238,28 @@ object AnnIndex {
       idCol: String,
       vecCol: String,
       path: String,
-      threshold: Double = 0.95,
-      nprobe: Int = 4,
-      maxCell: Int = Int.MaxValue,
-      margin: Double = 0.1,
-      dim: Int = 64): DataFrame =
-    dedupBatchPq(batchDf, idCol, vecCol, path, threshold, Probe.Cells(nprobe),
-      maxCell, margin, dim)
-
-  /** [[dedupBatchPq]] with a [[Probe]]-typed width — see
-    * [[crossNeighbors]]'s Probe overload for the rebuild-stability
-    * rationale.
-    */
-  def dedupBatchPq(
-      batchDf: DataFrame,
-      idCol: String,
-      vecCol: String,
-      path: String,
       threshold: Double,
       probe: Probe,
       maxCell: Int,
       margin: Double,
-      dim: Int): DataFrame = {
-    val inCorpus = crossNeighborsPq(
-      batchDf, idCol, vecCol, path, threshold, probe, maxCell, margin,
-      scoreWithLut = false)
-      .select(col("batch_id").as(idCol))
-      .distinct()
-    val fresh = batchDf.join(inCorpus, Seq(idCol), "left_anti")
+      dim: Int): DataFrame =
+    acceptFresh(batchDf, idCol, vecCol, threshold, maxCell, dim,
+      crossNeighborsPq(batchDf, idCol, vecCol, path, threshold, probe, maxCell, margin,
+        scoreWithLut = false))
+
+  /** The rows of `batchDf` that no corpus pair in `inCorpus` names, with
+    * each within-batch near-duplicate cluster cut to its min id.
+    */
+  private def acceptFresh(
+      batchDf: DataFrame,
+      idCol: String,
+      vecCol: String,
+      threshold: Double,
+      maxCell: Int,
+      dim: Int,
+      inCorpus: DataFrame): DataFrame = {
+    val fresh = batchDf.join(
+      inCorpus.select(col("batch_id").as(idCol)).distinct(), Seq(idCol), "left_anti")
     val pairs = Similarity.cosineNearDupPairs(
       fresh, idCol, vecCol, threshold, dim = dim,
       maxBucket = maxCell)

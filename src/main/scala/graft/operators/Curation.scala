@@ -100,9 +100,8 @@ object Curation {
       // compressibility window: below lo is boilerplate loops, above hi
       // is noise/base64 — both ends cut; judges the CLEANED text like
       // every quality signal, and fuses into the scan as a plain where.
-      // coalesce(false): NULL text is unscorable and always fails — a
-      // bare `where(NULL)` would drop it too, but the audited twin must
-      // ledger it, so both paths share one explicit rule
+      // coalesce(false): NULL text is unscorable and fails explicitly,
+      // not through three-valued logic
       cur = cur.where(coalesce(
         Quality.deflateRatio(col(cfg.textCol)).between(lo, hi), lit(false)))
     }
@@ -154,123 +153,5 @@ object Curation {
         .drop("__score")
     }
     cur
-  }
-
-  /** [[run]] with a drop ledger: returns (kept, ledger) where `ledger`
-    * is one row per DROPPED document — (idCol, stage, reason) — naming
-    * the stage that killed it (`gopher` rows carry the failing rule
-    * names; the rest carry the stage name). Rewrite stages (boilerplate,
-    * span strip) drop nothing and appear only through their audit
-    * columns on `kept`. The operations answer to "where did my corpus
-    * go": Σ ledger per stage + kept = input, provable per run.
-    *
-    * Cost contract: each filtering stage pays ONE extra id-keyed
-    * anti/semi join over [[run]] (the audit is a real dataflow, not a
-    * log); the gopher stage reuses its report scan for both verdicts and
-    * reasons. Null ids are not supported here — the id is the ledger
-    * key ([[run]] itself has no such restriction).
-    */
-  def runAudited(docs: DataFrame, cfg: CurationConfig = CurationConfig()): (DataFrame, DataFrame) = {
-    var cur = docs
-    var ledgers = List.empty[DataFrame]
-    def drops(before: DataFrame, after: DataFrame, stage: String): DataFrame =
-      before.select(col(cfg.idCol))
-        .join(after.select(col(cfg.idCol)), Seq(cfg.idCol), "left_anti")
-        .select(col(cfg.idCol), lit(stage).as("stage"), lit(stage).as("reason"))
-
-    cfg.boilerplateMinDf.foreach { minDf =>
-      cur = Boilerplate
-        .stripCommonLines(cur, cfg.textCol, minDf)
-        .withColumn(cfg.textCol, col("text_clean"))
-        .drop("text_clean")
-    }
-    if (cfg.collapseTokenRuns)
-      cur = cur.withColumn(cfg.textCol, text.collapseRunsText(col(cfg.textCol)))
-    cfg.spanStripWindow.foreach { l =>
-      val stripped = SpanDedup
-        .stripRepeatedSpans(cur, cfg.idCol, cfg.textCol, l, cfg.spanStripMinDf)
-        .select(
-          col("doc_id").as("__sd_id"),
-          col("clean_text"),
-          col("n_dropped").as("n_span_tokens_dropped"))
-      cur = cur
-        .join(stripped, cur(cfg.idCol) <=> col("__sd_id"))
-        .drop("__sd_id")
-        .withColumn(cfg.textCol, col("clean_text"))
-        .drop("clean_text")
-    }
-    cfg.gopher.foreach { th =>
-      // ONE report scan yields both the verdict and the failing-rule list
-      val rep = Filtering.gopherReport(cur, cfg.idCol, cfg.textCol, th)
-      val ruleNames = Filtering.rules(th, col).map(_._1)
-      val failed = concat_ws(",",
-        ruleNames.map(n => when(!col(n), lit(n))): _*)
-      ledgers ::= rep.where(!col("passes"))
-        .select(col(cfg.idCol), lit("gopher").as("stage"), failed.as("reason"))
-      cur = cur.join(
-        rep.where(col("passes")).select(col(cfg.idCol)), Seq(cfg.idCol), "left_semi")
-    }
-    cfg.compressionBounds.foreach { case (lo, hi) =>
-      // evaluation-count note: ProjectCollapse inlines __cr into every
-      // use site (2 in each filter, +1 in the reason), so the audit path
-      // pays a few DEFLATE passes per row — acceptable for the opt-in
-      // ledger (BEST_SPEED deflate is microseconds per doc); the run()
-      // path's single `where` stays at ~2 per row. A persist barrier
-      // here would cost more than it saves at stage granularity.
-      // `ok` is coalesced so NULL-text rows fail EXPLICITLY and land in
-      // the ledger as unscorable — a bare !between(NULL) is NULL, which
-      // skipped them in BOTH filters and broke the kept + dropped =
-      // input invariant (review, round 12)
-      val withRatio = cur.withColumn(
-        "__cr", Quality.deflateRatio(col(cfg.textCol)))
-      val ok = coalesce(col("__cr").between(lo, hi), lit(false))
-      ledgers ::= withRatio.where(!ok)
-        .select(col(cfg.idCol), lit("compression").as("stage"),
-          when(col("__cr").isNull, lit("unscorable"))
-            .when(col("__cr") < lo, lit("too_compressible"))
-            .otherwise(lit("incompressible")).as("reason"))
-      cur = withRatio.where(ok).drop("__cr")
-    }
-    if (cfg.exactDedup) {
-      val before = cur
-      cur = Dedup.exactDedup(cur, cfg.textCol, cfg.idCol)
-      ledgers ::= drops(before, cur, "exact_dup")
-    }
-    cfg.benchmark.foreach { bench =>
-      val before = cur
-      cur = Decontaminate.clean(
-        cur, cfg.textCol, cfg.idCol, bench, cfg.benchTextCol,
-        cfg.contaminationN, cfg.maxContamination)
-      ledgers ::= drops(before, cur, "contaminated")
-    }
-    cfg.fluencyModel.foreach { model =>
-      val before = cur
-      val scored = NgramLm
-        .pooledLikelihood(cur, model, cfg.idCol, cfg.textCol, 1L, 1L)
-        .select(
-          col("doc_id").as("__fl_id"),
-          (col("num_mass").cast("double") / col("den_mass").cast("double")).as("__fl_score"))
-      cur = Filtering
-        .scoreBucketsBySource(
-          cur.join(scored, cur(cfg.idCol) <=> col("__fl_id")).drop("__fl_id"),
-          cfg.sourceCol, cfg.idCol, "__fl_score",
-          cfg.fluencyHeadFraction, cfg.fluencyMiddleFraction)
-        .where(col("bucket") =!= "tail")
-        .drop("bucket", "__fl_score")
-      ledgers ::= drops(before, cur, "fluency_tail")
-    }
-    cfg.keepTopFraction.foreach { f =>
-      val before = cur
-      cur = Filtering
-        .topFractionBySource(
-          cur.withColumn("__score", text.tokenCount(col(cfg.textCol)).cast("long")),
-          cfg.sourceCol, cfg.idCol, "__score", f)
-        .drop("__score")
-      ledgers ::= drops(before, cur, "quota_cut")
-    }
-    val emptyLedger = docs
-      .select(col(cfg.idCol), lit("").as("stage"), lit("").as("reason"))
-      .where(lit(false))
-    (cur, ledgers.foldLeft(emptyLedger)(_ unionByName _))
   }
 }

@@ -505,31 +505,6 @@ object Dedup {
       .where(col("jaccard_w") >= threshold)
   }
 
-  /** Exact word-shingle Jaccard verification over candidate pairs only.
-    * `pairs` must have (id_a, id_b); texts are joined back in, so this is
-    * two broadcast-able equi-joins + a per-row set computation.
-    */
-  def jaccardVerify(
-      pairs: DataFrame,
-      docs: DataFrame,
-      textCol: String,
-      idCol: String,
-      shingleK: Int = 3,
-      threshold: Double = 0.7): DataFrame = {
-    val sh = Partitioning.spread(docs)
-      .select(col(idCol).as("id"), array_distinct(text.shingles(col(textCol), shingleK)).as("sh"))
-      .transform(pin)
-    val withA = pairs.join(sh.withColumnRenamed("id", "id_a").withColumnRenamed("sh", "sh_a"), "id_a")
-    val withB = withA.join(sh.withColumnRenamed("id", "id_b").withColumnRenamed("sh", "sh_b"), "id_b")
-    withB
-      .withColumn(
-        "jaccard",
-        size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
-          size(array_union(col("sh_a"), col("sh_b"))).cast("double"))
-      .where(col("jaccard") >= threshold)
-      .select("id_a", "id_b", "jaccard")
-  }
-
   // --- Clustering: pairs → duplicate groups ---
 
   /** Connected components over near-dup pairs: pairwise similarity is not

@@ -48,9 +48,6 @@ object Expectations {
     // range expectation loudly, not slip through three-valued logic
     Rule(s"range_$c", col(c).isNull || col(c) < lo || col(c) > hi)
 
-  def matchesRegex(c: String, regex: String, name: String): Rule =
-    Rule(name, !col(c).rlike(regex))
-
   /** Evaluate every row-predicate rule in ONE pass over `df`. */
   def check(df: DataFrame, rules: Seq[Rule]): DataFrame = {
     require(rules.nonEmpty, "empty ruleset")
@@ -125,16 +122,6 @@ object Expectations {
     spark.read.parquet(path)
       .where(col("__quarantined") === "false")
       .drop("__quarantined", violatedCol)
-
-  /** The quarantine side of a [[route]] output — each row with the rule
-    * names it broke, for triage/replay after upstream fixes.
-    */
-  def routedQuarantined(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String): DataFrame =
-    spark.read.parquet(path)
-      .where(col("__quarantined") === "true")
-      .drop("__quarantined")
 
   /** Key-uniqueness expectation: violations = rows beyond the first of
     * each key group (0 ⇔ the key is unique).

@@ -107,18 +107,6 @@ object Frequency {
     }
   }
 
-  /** One-pass Count-Min summary of `item` over `df`. `width` sets the error
-    * budget (overestimate <= e·n/width w.h.p.), `depth` the failure
-    * probability (e^−depth). The default 2048×5 is ~80 KB for ±0.13%·n.
-    */
-  def cmSummary(df: DataFrame, item: Column, width: Int = 2048, depth: Int = 5): CmSummary = {
-    val agg = graft.expressions.CountMinAgg(ColumnBridge.eagerExpression(item), width, depth)
-      .toAggregateExpression()
-    val row = df.agg(ColumnBridge.column(agg).as("cm")).head.getStruct(0)
-    CmSummary(row.getLong(0), row.getInt(1), row.getInt(2),
-      row.getSeq[Long](3).toArray)
-  }
-
   /** Single-pass APPROXIMATE heavy hitters: both sketches ride ONE scan
     * (one agg computes MG and CM together), so unlike [[heavyHitters]]
     * there is no second exact-count job — the answer for when the corpus

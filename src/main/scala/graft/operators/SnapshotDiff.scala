@@ -101,38 +101,4 @@ object SnapshotDiff {
           tracked.map(c => col(s"__old.$c").as(s"old_$c")) ++
           tracked.map(c => col(s"__new.$c").as(s"new_$c")): _*)
   }
-
-  /** Replay a [[diff]] result onto the snapshot it was computed FROM,
-    * reproducing the target snapshot: drop deleted/updated keys, append
-    * the `new_` image of inserts/updates. Anti-join + union — the same
-    * single-shuffle shape as the diff itself. Column order follows
-    * `oldDf`; columns of `oldDf` not tracked by the diff must not exist
-    * (they could not be replayed — apply the diff at the granularity it
-    * was taken).
-    */
-  def apply_(oldDf: DataFrame, diffDf: DataFrame, keys: Seq[String]): DataFrame = {
-    // A tracked column is one the diff carries BOTH images of — the
-    // paired check keeps a key (or business column) whose own name
-    // happens to start with "new_" from being scraped as tracked.
-    val tracked = diffDf.columns.collect {
-      case c if c.startsWith("new_") && !keys.contains(c) &&
-        diffDf.columns.contains("old_" + c.stripPrefix("new_")) =>
-        c.stripPrefix("new_")
-    }
-    val untracked = oldDf.columns.filterNot(keys.contains).toSeq.diff(tracked.toSeq)
-    require(untracked.isEmpty,
-      s"oldDf carries columns the diff does not track: ${untracked.mkString(", ")}")
-    val idx = keys.indices
-    val touched = diffDf.select(idx.map(i => col(keys(i)).as(s"__tk_$i")): _*)
-    val incoming = diffDf
-      .where(col("change_type").isin("insert", "update"))
-      .select(keys.map(col) ++ tracked.map(c => col(s"new_$c").as(c)): _*)
-    oldDf
-      // <=> anti-join: a null-keyed touched row must still suppress the
-      // old image (plain equality would keep it and then duplicate it)
-      .join(touched,
-        idx.map(i => col(keys(i)) <=> col(s"__tk_$i")).reduce(_ && _),
-        "left_anti")
-      .unionByName(incoming.select(oldDf.columns.map(col): _*))
-  }
 }

@@ -518,12 +518,14 @@ object Sinks {
       .filter(_.getAs[String](0) == path)
       .map(_.getAs[Long](1))
 
-  /** Single-file export; only for small (gold/BI) outputs — coalesce(1)
-    * funnels everything through one task by design.
+  /** Single-file export, the reference's gold CSV/parquet export step
+    * (reference: README.md:188-191); only for small (gold/BI) outputs —
+    * coalesce(1) funnels everything through one task by design.
     */
   def exportSingleCsv(df: DataFrame, path: String): Unit =
     df.coalesce(1).write.mode(SaveMode.Overwrite).option("header", "true").csv(path)
 
+  /** The same single-file export as parquet (reference: README.md:188-191). */
   def exportSingleParquet(df: DataFrame, path: String): Unit =
     df.coalesce(1).write.mode(SaveMode.Overwrite).parquet(path)
 

@@ -62,17 +62,6 @@ class AnnIndexSpec extends AnyFunSuite {
     Caches.release()
   }
 
-  test("buildFullTrain: distributed-Lloyd quantizer serves the same probe answers") {
-    val path = tmp()
-    AnnIndex.buildFullTrain(corpus, "id", "vec", path, nlist = 2, kmeansIters = 5)
-    val pairs = AnnIndex.crossNeighbors(batch, "id", "vec", path, threshold = 0.95, nprobe = 2)
-      .select(col("corpus_id"), col("batch_id"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(pairs === Set((1L, 11L), (3L, 13L)),
-      s"full-train index must find the planted copies: $pairs")
-    Caches.release()
-  }
-
   test("free-form batch labels: accepted, serving is label-order-insensitive (pinned)") {
     // VERDICT r18 item 7, pinned as INTENDED here: ANN batches union
     // additively (the label is an identifier, never an order), so any
@@ -192,24 +181,11 @@ class AnnIndexSpec extends AnyFunSuite {
     Caches.release()
   }
 
-  test("topNeighbors ranks probed candidates by cosine, k-bounded") {
-    val path = tmp()
-    buildSmall(path)
-    val top = AnnIndex.topNeighbors(
-      Seq((11L, Seq(1.0f, 0.1f, 0.0f, 0.0f))).toDF("id", "vec"),
-      "id", "vec", path, k = 2, nprobe = 2)
-      .orderBy("rank")
-      .collect().map(r => (r.getAs[Long]("corpus_id"), r.getAs[Int]("rank")))
-    // nearest is 1 ([1,0,0,0]), then 2 ([0.7,0.7,0,0] at cos ~0.79)
-    assert(top.toSeq == Seq((1L, 1), (2L, 2)), s"top = ${top.toSeq}")
-    Caches.release()
-  }
-
   test("dedupBatch drops corpus dups, keeps one of each internal near-dup group") {
     val path = tmp()
     buildSmall(path)
     val accepted = AnnIndex.dedupBatch(
-      batch, "id", "vec", path, threshold = 0.95, nprobe = 2, dim = 4)
+      batch, "id", "vec", path, 0.95, AnnIndex.Probe.Cells(2), Int.MaxValue, dim = 4)
       .select("id").as[Long].collect().toSet
     // 11 and 13 duplicate the corpus; 12 ≈ 14 keep the min id 12
     assert(accepted == Set(12L), s"accepted = $accepted")
@@ -269,18 +245,6 @@ class AnnIndexSpec extends AnyFunSuite {
     assert(pq == flat, s"pq = $pq, flat = $flat")
     assert(pq.keySet == Set((11L, 1L), (13L, 3L)))
     assert(pq((11L, 1L)) > 0.999, "emitted cosine must be the EXACT one, not the ADC estimate")
-    Caches.release()
-  }
-
-  test("topNeighborsPq re-ranks by exact cosine, k-bounded") {
-    val path = tmp()
-    buildSmallPq(path)
-    val top = AnnIndex.topNeighborsPq(
-      Seq((11L, Seq(1.0f, 0.1f, 0.0f, 0.0f))).toDF("id", "vec"),
-      "id", "vec", path, k = 2, nprobe = 2, rerank = 2)
-      .orderBy("rank")
-      .collect().map(r => (r.getAs[Long]("corpus_id"), r.getAs[Int]("rank")))
-    assert(top.toSeq == Seq((1L, 1), (2L, 2)), s"top = ${top.toSeq}")
     Caches.release()
   }
 
@@ -377,10 +341,10 @@ class AnnIndexSpec extends AnyFunSuite {
     val path = tmp()
     buildSmallPq(path)
     val pq = AnnIndex.dedupBatchPq(
-      batch, "id", "vec", path, threshold = 0.95, nprobe = 2, margin = 0.02, dim = 4)
+      batch, "id", "vec", path, 0.95, AnnIndex.Probe.Cells(2), Int.MaxValue, margin = 0.02, dim = 4)
       .select("id").as[Long].collect().toSet
     val flat = AnnIndex.dedupBatch(
-      batch, "id", "vec", path, threshold = 0.95, nprobe = 2, dim = 4)
+      batch, "id", "vec", path, 0.95, AnnIndex.Probe.Cells(2), Int.MaxValue, dim = 4)
       .select("id").as[Long].collect().toSet
     assert(pq == flat && pq == Set(12L), s"pq = $pq, flat = $flat")
     Caches.release()
@@ -455,75 +419,6 @@ class AnnIndexSpec extends AnyFunSuite {
       assert("""BroadcastHashJoin""".r.findAllIn(bcPlan).size >= 2,
         s"the per-micro-batch path keeps its hinted probes broadcast:\n$bcPlan")
     } finally spark.conf.set(thresholdKey, saved)
-    Caches.release()
-  }
-
-  test("topNeighborsBulk and dedupBatchBulk equal their per-micro-batch twins") {
-    val path = tmp()
-    buildSmall(path)
-    // topNeighbors: full row equality — ids, cosine, AND the rank column
-    for (np <- Seq(1, 2); k <- Seq(1, 3)) {
-      val micro = AnnIndex.topNeighbors(
-        batch, "id", "vec", path, k, AnnIndex.Probe.Cells(np), Int.MaxValue)
-        .collect().map(r => (r.getAs[Long]("batch_id"), r.getAs[Long]("corpus_id"),
-          r.getAs[Double]("cosine"), r.getAs[Int]("rank"))).toSet
-      val bulk = AnnIndex.topNeighborsBulk(
-        batch, "id", "vec", path, k, AnnIndex.Probe.Cells(np), Int.MaxValue)
-        .collect().map(r => (r.getAs[Long]("batch_id"), r.getAs[Long]("corpus_id"),
-          r.getAs[Double]("cosine"), r.getAs[Int]("rank"))).toSet
-      assert(bulk == micro, s"np=$np k=$k: bulk=$bulk micro=$micro")
-    }
-    // dedupBatch: the accepted set must be identical
-    val acceptedMicro = AnnIndex.dedupBatch(
-      batch, "id", "vec", path, 0.95, AnnIndex.Probe.Cells(2), Int.MaxValue, dim = 8)
-      .select("id").collect().map(_.getLong(0)).toSet
-    val acceptedBulk = AnnIndex.dedupBatchBulk(
-      batch, "id", "vec", path, 0.95, AnnIndex.Probe.Cells(2), Int.MaxValue, dim = 8)
-      .select("id").collect().map(_.getLong(0)).toSet
-    assert(acceptedBulk == acceptedMicro,
-      s"bulk acceptance must equal the micro-batch path: $acceptedBulk vs $acceptedMicro")
-    assert(acceptedMicro.nonEmpty && acceptedMicro != batch.select("id")
-      .collect().map(_.getLong(0)).toSet,
-      "the fixture must actually drop someone for the equality to mean anything")
-    Caches.release()
-  }
-
-  test("crossNeighborsPqBulk: identical pairs to the broadcast PQ path") {
-    val path = tmp()
-    buildSmallPq(path)
-    def pairs(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getAs[Long]("batch_id"), r.getAs[Long]("corpus_id"))).toSet
-    for (np <- Seq(1, 2)) {
-      val bc = pairs(AnnIndex.crossNeighborsPq(
-        batch, "id", "vec", path, 0.95, AnnIndex.Probe.Cells(np),
-        Int.MaxValue, margin = 0.2, scoreWithLut = false))
-      val bulk = pairs(AnnIndex.crossNeighborsPqBulk(
-        batch, "id", "vec", path, 0.95, AnnIndex.Probe.Cells(np),
-        Int.MaxValue, margin = 0.2))
-      assert(bulk == bc, s"nprobe=$np: bulk=$bulk broadcast=$bc")
-    }
-    // the PQ top-k and acceptance bulk twins, same equality law
-    for (k <- Seq(1, 3)) {
-      val micro = AnnIndex.topNeighborsPq(
-        batch, "id", "vec", path, k, AnnIndex.Probe.Cells(2), Int.MaxValue, rerank = 4)
-        .collect().map(r => (r.getAs[Long]("batch_id"), r.getAs[Long]("corpus_id"),
-          r.getAs[Double]("cosine"), r.getAs[Int]("rank"))).toSet
-      val bulk = AnnIndex.topNeighborsPqBulk(
-        batch, "id", "vec", path, k, AnnIndex.Probe.Cells(2), Int.MaxValue, rerank = 4)
-        .collect().map(r => (r.getAs[Long]("batch_id"), r.getAs[Long]("corpus_id"),
-          r.getAs[Double]("cosine"), r.getAs[Int]("rank"))).toSet
-      assert(bulk == micro, s"k=$k: pq top-k bulk=$bulk micro=$micro")
-    }
-    val acceptedMicro = AnnIndex.dedupBatchPq(
-      batch, "id", "vec", path, 0.95, AnnIndex.Probe.Cells(2),
-      Int.MaxValue, margin = 0.2, dim = 8)
-      .select("id").collect().map(_.getLong(0)).toSet
-    val acceptedBulk = AnnIndex.dedupBatchPqBulk(
-      batch, "id", "vec", path, 0.95, AnnIndex.Probe.Cells(2),
-      Int.MaxValue, margin = 0.2, dim = 8)
-      .select("id").collect().map(_.getLong(0)).toSet
-    assert(acceptedBulk == acceptedMicro,
-      s"PQ bulk acceptance must equal the micro-batch path: $acceptedBulk vs $acceptedMicro")
     Caches.release()
   }
 

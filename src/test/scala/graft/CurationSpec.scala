@@ -122,70 +122,14 @@ class CurationSpec extends AnyFunSuite {
       "static crackled through the old shortwave at midnight",
       "the bakery sells out of rye loaves by eight most mornings",
       "engineers rerouted the cooling loop around the damaged pump").mkString(" ")
-    val docs = Seq((1L, "A", loops), (2L, "A", noise), (3L, "A", normal))
+    val docs = Seq((1L, "A", Option(loops)), (2L, "A", Option(noise)), (3L, "A", Option(normal)),
+      (4L, "A", None: Option[String]), (5L, "A", Option("")))
       .toDF("doc_id", "source", "text")
     val keepCfg = CurationConfig(gopher = None, exactDedup = false,
       compressionBounds = Some((0.2, 0.75)))
     val kept = Curation.run(docs, keepCfg).select("doc_id").as[Long].collect().toSet
-    assert(kept === Set(3L), "both the loop and the noise must fall outside the window")
-    val (kept2, ledger) = Curation.runAudited(docs, keepCfg)
-    assert(kept2.select("doc_id").as[Long].collect().toSet === Set(3L))
-    val reasons = ledger.collect().map(r => r.getLong(0) -> r.getString(2)).toMap
-    assert(reasons === Map(1L -> "too_compressible", 2L -> "incompressible"))
-  }
-
-  test("compression stage: NULL and empty text are ledgered, never silently vanished") {
-    val docs = Seq(
-      (1L, "A", Option("the weather over the harbor turned sour before noon and " +
-        "a freight train rattled past the empty platform while engineers " +
-        "rerouted the cooling loop around the damaged pump near the bakery")),
-      (2L, "A", None: Option[String]),   // NULL text: unscorable
-      (3L, "A", Option("")))             // empty: ratio 0 by convention
-      .toDF("doc_id", "source", "text")
-    val cfg = CurationConfig(gopher = None, exactDedup = false,
-      compressionBounds = Some((0.2, 0.95)))
-    val (kept, ledger) = Curation.runAudited(docs, cfg)
-    val keptIds = kept.select("doc_id").as[Long].collect().toSet
-    val reasons = ledger.collect().map(r => r.getLong(0) -> r.getString(2)).toMap
-    assert(keptIds === Set(1L))
-    assert(reasons === Map(2L -> "unscorable", 3L -> "too_compressible"),
-      "kept + ledgered must partition the input — NULL ratios may not skip both filters")
-    assert(Curation.run(docs, cfg).select("doc_id").as[Long].collect().toSet === keptIds,
-      "run() and runAudited() must drop the same rows")
-  }
-
-  test("runAudited: ledger names the killing stage, kept + dropped partition the input") {
-    val (kept, ledger) = Curation.runAudited(corpus, cfg)
-    val keptIds = kept.select("doc_id").as[Long].collect().toSet
-    val dropped = ledger.select("doc_id", "stage", "reason")
-      .as[(Long, String, String)].collect()
-    // same survivors as the unaudited chain
-    assert(keptIds === Curation.run(corpus, cfg).select("doc_id").as[Long].collect().toSet)
-    // partition: every input doc is kept or has exactly one ledger row
-    assert(dropped.map(_._1).distinct.length === dropped.length, "one ledger row per doc")
-    assert(keptIds ++ dropped.map(_._1).toSet ===
-      corpus.select("doc_id").as[Long].collect().toSet)
-    assert(keptIds.intersect(dropped.map(_._1).toSet).isEmpty)
-    val stageOf = dropped.map(d => d._1 -> d._2).toMap
-    assert(stageOf(3L) === "gopher", s"doc 3 is too short: $stageOf")
-    assert(stageOf(2L) === "exact_dup")
-    assert(stageOf(5L) === "contaminated")
-    assert(stageOf(6L) === "quota_cut")
-    // gopher reasons carry the failing rule names
-    val reason3 = dropped.find(_._1 == 3L).get._3
-    assert(reason3.contains("ok_tokens"), s"expected failing rules in reason: $reason3")
-    graft.operators.Caches.release()
-  }
-
-  test("runAudited: fluency stage drops land in the ledger as fluency_tail") {
-    val model = graft.operators.NgramLm.trainBigramStats(corpus, "text", minCount = 1L)
-    val (kept, ledger) = Curation.runAudited(corpus, CurationConfig(
-      gopher = None, exactDedup = false,
-      fluencyModel = Some(model), fluencyHeadFraction = 0.4, fluencyMiddleFraction = 0.4))
-    val stages = ledger.select("stage").distinct().as[String].collect().toSet
-    assert(stages === Set("fluency_tail"))
-    assert(kept.count() + ledger.count() === corpus.count())
-    graft.operators.Caches.release()
+    assert(kept === Set(3L),
+      "the loop, the noise, NULL text (unscorable) and empty text (ratio 0) fall outside the window")
   }
 
   test("span-strip stage rewrites text, audits drops, and later stages see the cleaned text") {

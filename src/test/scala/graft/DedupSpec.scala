@@ -278,10 +278,13 @@ class DedupSpec extends AnyFunSuite {
       .collect()
       .map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b")) -> r.getAs[Double]("jaccard"))
       .toMap
-    // brute force over the tiny corpus via jaccardVerify on ALL pairs
-    val ids = corpus.select("id").as[Long].collect().sorted
-    val allPairs = (for { a <- ids; b <- ids if a < b } yield (a, b)).toSeq.toDF("id_a", "id_b")
-    val brute = Dedup.jaccardVerify(allPairs, corpus, "text", "id", threshold = 0.5)
+    // brute force over the tiny corpus: set Jaccard of every pair's distinct shingles
+    val sh = corpus.select(col("id"), array_distinct(graft.functions.text.shingles(col("text"), 3)).as("sh"))
+    val brute = sh.as("a").join(sh.as("b"), col("a.id") < col("b.id"))
+      .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
+        (size(array_intersect(col("a.sh"), col("b.sh"))).cast("double") /
+          size(array_union(col("a.sh"), col("b.sh"))).cast("double")).as("jaccard"))
+      .where(col("jaccard") >= 0.5)
       .collect()
       .map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b")) -> r.getAs[Double]("jaccard"))
       .toMap
@@ -532,13 +535,6 @@ class DedupSpec extends AnyFunSuite {
     val nullRow = Seq((1L, null: String)).toDF("id", "text")
       .select(Dedup.shingleHashes(col("text"), 3)).head
     assert(nullRow.isNullAt(0))
-  }
-
-  test("jaccardVerify on explicit candidate pairs") {
-    val cand = Seq((1L, 2L), (1L, 4L)).toDF("id_a", "id_b")
-    val verified = Dedup.jaccardVerify(cand, corpus, "text", "id", threshold = 0.5).collect()
-    assert(verified.length == 1)
-    assert(verified.head.getAs[Double]("jaccard") == 1.0)
   }
 
   test("re-invoking the dedup pipeline compiles ZERO new codegen classes (the rounds-4-6 warm anomaly)") {

@@ -27,7 +27,7 @@ class ExpectationsSpec extends AnyFunSuite {
     val got = score(Seq(
       Expectations.notNull("id"),
       Expectations.inRange("amt", 0, 100),
-      Expectations.matchesRegex("email", "^[^@]+@[^@]+$", "email_shape")))
+      Rule("email_shape", !col("email").rlike("^[^@]+@[^@]+$"))))
     assert(got("not_null_id") === ((4L, 1L, false)))
     assert(got("range_amt") === ((4L, 2L, false))) // 200 out of range, null fails
     assert(got("email_shape") === ((4L, 1L, false)))
@@ -42,7 +42,7 @@ class ExpectationsSpec extends AnyFunSuite {
     val plan = Expectations.check(df, Seq(
       Expectations.notNull("id"),
       Expectations.inRange("amt", 0, 100),
-      Expectations.matchesRegex("email", "@", "has_at")))
+      Rule("has_at", !col("email").rlike("@"))))
       .queryExecution.executedPlan.toString
     assert("Exchange".r.findAllIn(plan).size <= 1,
       s"n rules must not mean n jobs/exchanges:\n$plan")
@@ -87,7 +87,7 @@ class ExpectationsSpec extends AnyFunSuite {
     val rules = Seq(
       Expectations.notNull("id"),
       Expectations.inRange("amt", 0, 100),
-      Expectations.matchesRegex("email", "^[^@]+@[^@]+$", "email_shape"))
+      Rule("email_shape", !col("email").rlike("^[^@]+@[^@]+$")))
     val got = Expectations.annotate(df, rules)
       .select("email", "violated").as[(String, Seq[String])].collect().toMap
     assert(got("a@x.io") === Seq.empty)
@@ -125,7 +125,7 @@ class ExpectationsSpec extends AnyFunSuite {
     assert("PartitionFilters: \\[[^\\]]*__quarantined".r.findFirstIn(plan).isDefined,
       s"quarantine flag must be a partition filter, not a data filter:\n$plan")
 
-    val quarantined = Expectations.routedQuarantined(spark, dir)
+    val quarantined = spark.read.parquet(dir).where(col("__quarantined") === "true")
     val reasons = quarantined.select("email", "violated")
       .as[(String, Seq[String])].collect().toMap
     assert(reasons.keySet === Set("nope", "b@y.io", "c@z.io"))

@@ -66,9 +66,17 @@ object FrequencyProperties extends Properties("graft.frequency") {
   private val genGeometry: Gen[(Int, Int)] =
     for { w <- Gen.choose(16, 256); d <- Gen.choose(2, 6) } yield (w, d)
 
+  /** The Count-Min sketch of `df`'s `term` column: one `graft_cm_sketch`
+    * aggregate, decoded on the driver.
+    */
+  private def cmOf(df: org.apache.spark.sql.DataFrame, w: Int, d: Int): Frequency.CmSummary = {
+    val r = df.agg(expr(s"graft_cm_sketch(term, $w, $d)")).head.getStruct(0)
+    Frequency.CmSummary(r.getLong(0), r.getInt(1), r.getInt(2), r.getSeq[Long](3).toArray)
+  }
+
   property("count-min never underestimates, for every item in the stream") =
     forAll(genStream, genGeometry) { case (items, (w, d)) =>
-      val cm = Frequency.cmSummary(items.toDF("term").repartition(5), col("term"), w, d)
+      val cm = cmOf(items.toDF("term").repartition(5), w, d)
       val exact = items.groupBy(identity).map { case (s, xs) => s -> xs.size.toLong }
       cm.n == items.size.toLong &&
         exact.forall { case (item, c) => cm.estimate(item) >= c }
@@ -76,15 +84,15 @@ object FrequencyProperties extends Properties("graft.frequency") {
 
   property("count-min merge is LOSSLESS: sketch(A ++ B) == merge(sketch(A), sketch(B))") =
     forAll(genStream, genStream, genGeometry) { case (a, b, (w, d)) =>
-      val whole = Frequency.cmSummary((a ++ b).toDF("term").repartition(3), col("term"), w, d)
-      val merged = Frequency.cmSummary(a.toDF("term"), col("term"), w, d)
-        .merge(Frequency.cmSummary(b.toDF("term").repartition(4), col("term"), w, d))
+      val whole = cmOf((a ++ b).toDF("term").repartition(3), w, d)
+      val merged = cmOf(a.toDF("term"), w, d)
+        .merge(cmOf(b.toDF("term").repartition(4), w, d))
       whole.n == merged.n && whole.counters.sameElements(merged.counters)
     }
 
   property("count-min error stays within the e·n/width bound for most items (CM guarantee)") =
     forAll(genStream, genGeometry) { case (items, (w, d)) =>
-      val cm = Frequency.cmSummary(items.toDF("term"), col("term"), w, d)
+      val cm = cmOf(items.toDF("term"), w, d)
       val exact = items.groupBy(identity).map { case (s, xs) => s -> xs.size.toLong }
       val bound = (math.E * cm.n / w).ceil.toLong
       // per-item failure probability is e^-d; with d as low as 2 allow a
